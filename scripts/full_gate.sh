@@ -2,7 +2,7 @@
 # Full verification gate: sbt test, Verify dump at sf0.01, DuckDB oracle compare.
 # Run via: setsid nohup scripts/full_gate.sh > /tmp/full_gate.log 2>&1 &
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 echo "=== sbt test ==="
 sbt -batch test
 echo "=== Verify sf0.01 ==="

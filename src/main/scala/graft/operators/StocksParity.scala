@@ -120,10 +120,13 @@ object StocksParity {
       val t = Tables.stocksParquet(s)
       val series = Seq(col("date"), col("close"), col("volume"),
         col("open"), col("high"), col("low"))
-      // UNCACHED (r18): one-pass blockRolling leaves the ordinal a
-      // single consumer, so the 140 MB cache (built only for the old
-      // base+carry double read) is gone — the ordinal streams straight
-      // into the block window's spread exchange.
+      // NO OUTER CACHE (r18): one-pass blockRolling leaves the ordinal a
+      // single consumer, so the 140 MB cache of the slimmed ordinal
+      // (built only for the old base+carry double read) is gone — the
+      // ordinal streams straight into the block window's spread
+      // exchange. globalOrdinal itself still caches its range-partitioned
+      // base (Par.rangeWithOffsets pins one boundary sampling; see
+      // Windows.globalOrdinal), freed by the harness's clearCache.
       // SLIMMED to the four columns the rolling window touches (guide
       // §2.3 project-before-the-exchange): date/volume/open end their
       // life at the ordinal sort.

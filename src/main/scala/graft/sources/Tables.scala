@@ -82,8 +82,11 @@ object Tables {
       val tmp = new java.io.File(StocksParquetDir + ".tmp")
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       org.apache.commons.io.FileUtils.deleteQuietly(dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File("/root/repo/target/stocks-parquet")) // pre-v2 layout
+      // superseded layouts: the unversioned base name and any other -vN
+      val base = java.util.regex.Pattern.quote(dir.getName.replaceAll("-v\\d+$", ""))
+      Option(dir.getParentFile.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.getName != dir.getName && f.getName.matches(s"$base(-v\\d+)?"))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       stocksCsv(spark, ensureStocksCsv())
         .repartition(64) // round-robin: equal-row files; coalesce(64)
                          // can't exceed the CSV read's own split count

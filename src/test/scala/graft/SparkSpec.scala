@@ -20,9 +20,17 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** A fresh table root `<tag>-<nanoTime>` in the build's target
+    * directory (the one the stocks fixture lives in). */
+  def freshRoot(tag: String): String =
+    s"${SparkSpec.targetDir}/$tag-${System.nanoTime()}"
 }
 
 object SparkSpec {
+  val targetDir: String =
+    new java.io.File(graft.sources.Tables.StocksParquetDir).getParent
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -14,13 +14,10 @@ import org.apache.spark.sql.functions._
   * diff (`cdc_full`). Only unmarked pre-attribution history refuses. */
 class CdfSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/cdf-$tag-${System.nanoTime()}"
-
   private def docs = Tables.documents(spark, sf).select("doc_id", "text")
 
   test("append-only range: every appended row surfaces as an insert") {
-    val root = freshRoot("append")
+    val root = freshRoot("cdf-append")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     val b1 = Seq((2000001L, "x"), (2000002L, "y")).toDF("doc_id", "text")
@@ -36,7 +33,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("MoR delete: exactly the victim ROWS surface as deletes") {
-    val root = freshRoot("delete")
+    val root = freshRoot("cdf-delete")
     TxLog.init(spark, root, docs.repartition(4))
     TxLog.deleteMoR(spark, root, col("doc_id") % 7 === 0)
     val feed = TxLog.readChanges(spark, root, 1L)
@@ -54,7 +51,7 @@ class CdfSpec extends SparkSpec {
   test("replaceKeysMoR: ONE commit reads as pre-image deletes + " +
       "post-image inserts (textbook CDC, no attribution marker needed)") {
     import spark.implicits._
-    val root = freshRoot("replace")
+    val root = freshRoot("cdf-replace")
     TxLog.init(spark, root, docs.repartition(4))
     // atomically re-state every %5 doc with edited text + mint one new id
     val keys = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
@@ -85,7 +82,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("mixed range: appends then a delete hitting both vintages") {
-    val root = freshRoot("mixed")
+    val root = freshRoot("cdf-mixed")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     val ins = docs.filter(col("doc_id") < 50)
@@ -106,7 +103,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("full-file MoR drop surfaces the file's live rows as deletes") {
-    val root = freshRoot("drop")
+    val root = freshRoot("cdf-drop")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1))
@@ -121,7 +118,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("restore across a MoR delete surfaces resurrected rows as inserts") {
-    val root = freshRoot("restore")
+    val root = freshRoot("cdf-restore")
     TxLog.init(spark, root, docs.repartition(4))
     TxLog.deleteMoR(spark, root, col("doc_id") % 11 === 0)
     TxLog.restore(spark, root, 1L)
@@ -137,7 +134,7 @@ class CdfSpec extends SparkSpec {
 
   test("COW rewrite WITHOUT change_feed attributes coarsely (cdc_full): " +
       "exact events incl. survivor churn, never a refusal") {
-    val root = freshRoot("coarse")
+    val root = freshRoot("cdf-coarse")
     TxLog.init(spark, root, docs.repartition(4))
     TxLog.setProperties(root, Map("owner" -> "cdf-test"))
     assert(TxLog.readChanges(spark, root, 1L).count() === 0L)
@@ -159,9 +156,46 @@ class CdfSpec extends SparkSpec {
     } finally feed.unpersist()
   }
 
+  test("precise feed rows and change files stay flat as the table grows " +
+      "8×; the coarse cdc_full feed grows with the rewritten files") {
+    val nFiles = 4
+    // one matched row per file (id % rowsPerFile == 0): the same matched
+    // count in every file at both sizes. Returns (precise feed rows,
+    // change files written, coarse feed rows).
+    def feeds(rowsPerFile: Long): (Long, Int, Long) = {
+      def table(tag: String): String = {
+        val root = freshRoot(s"cdf-scale-$tag-$rowsPerFile")
+        TxLog.init(spark, root, spark.range(0L, nFiles * rowsPerFile, 1L, nFiles)
+          .toDF("id").withColumn("s", concat(lit("v"), col("id").cast("string"))))
+        root
+      }
+      def update(root: String): Unit = TxLog.updateWhere(spark, root,
+        col("id") % rowsPerFile === 0, Seq("s" -> lit("U")))
+      val precise = table("precise")
+      TxLog.setProperties(precise, Map("change_feed" -> "true")) // v2
+      update(precise)                                              // v3
+      val coarse = table("coarse")
+      update(coarse)                                               // v2
+      val changeFiles = new java.io.File(s"$precise/data").listFiles()
+        .filter(d => d.isDirectory && d.getName.startsWith("cdc-"))
+        .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
+      (TxLog.readChanges(spark, precise, 2L, 3L).count(), changeFiles,
+        TxLog.readChanges(spark, coarse, 1L, 2L).count())
+    }
+    val rows = 250L
+    val (preciseRows, changeFiles, coarseRows) = feeds(rows)
+    val (preciseRows8, changeFiles8, coarseRows8) = feeds(8 * rows)
+    // pre + post image of each matched row, at both sizes
+    assert(preciseRows === 2L * nFiles && preciseRows8 === preciseRows)
+    assert(changeFiles >= 1 && changeFiles8 === changeFiles)
+    // coarse: pre + post image of every row of every rewritten file
+    assert(coarseRows === 2L * nFiles * rows)
+    assert(coarseRows8 === 8L * coarseRows)
+  }
+
   test("change_feed=true: COW UPDATE/DELETE write exact commit-time " +
       "change files — only the changed rows surface") {
-    val root = freshRoot("precise")
+    val root = freshRoot("cdf-precise")
     TxLog.init(spark, root, docs.repartition(4))
     TxLog.setProperties(root, Map("change_feed" -> "true"))
     TxLog.updateWhere(spark, root, col("doc_id") % 10 === 0,
@@ -197,7 +231,7 @@ class CdfSpec extends SparkSpec {
 
   test("change files age out with their manifest: carried-forward marker " +
       "copies are stripped, pruneHistory + vacuum reclaims the dir") {
-    val root = freshRoot("age")
+    val root = freshRoot("cdf-age")
     import spark.implicits._
     TxLog.init(spark, root, (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s"))
     TxLog.setProperties(root, Map("change_feed" -> "true"))
@@ -226,7 +260,7 @@ class CdfSpec extends SparkSpec {
 
   test("maintenance rewrites (compact / OPTIMIZE z-order) are INVISIBLE " +
       "to the change feed") {
-    val root = freshRoot("noop")
+    val root = freshRoot("cdf-noop")
     TxLog.init(spark, root, docs.repartition(8))
     TxLog.deleteMoR(spark, root, col("doc_id") % 7 === 0) // v2: real deletes
     TxLog.compact(spark, root, 2)                          // v3: purges dvs
@@ -243,7 +277,7 @@ class CdfSpec extends SparkSpec {
 
   test("upsert with change_feed: replaced rows are pre-image deletes, " +
       "the batch post-image inserts") {
-    val root = freshRoot("upsert")
+    val root = freshRoot("cdf-upsert")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
@@ -259,7 +293,7 @@ class CdfSpec extends SparkSpec {
 
   test("conditional MERGE on a change_feed table: exactly the fired " +
       "clauses' rows surface, no carried-row churn") {
-    val root = freshRoot("cmerge")
+    val root = freshRoot("cdf-cmerge")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "s"))
@@ -283,7 +317,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("unmarked pre-attribution mixed commits still refuse loudly") {
-    val root = freshRoot("legacy")
+    val root = freshRoot("cdf-legacy")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     TxLog.updateWhere(spark, root, col("id") === 1L, Seq("s" -> lit("A")))
@@ -304,7 +338,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("column mapping: the feed speaks logical names across a rename") {
-    val root = freshRoot("mapping")
+    val root = freshRoot("cdf-mapping")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     TxLog.renameColumn(spark, root, "text", "body")
@@ -320,7 +354,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("empty range returns a schema-correct empty feed") {
-    val root = freshRoot("empty")
+    val root = freshRoot("cdf-empty")
     TxLog.init(spark, root, docs)
     val feed = TxLog.readChanges(spark, root, 1L, 1L)
     assert(feed.count() === 0L)
@@ -330,7 +364,7 @@ class CdfSpec extends SparkSpec {
 
   test("stale-marker strip matches the four exact marker keys only: a " +
       "user property in the cdc_ namespace survives later commits") {
-    val root = freshRoot("cdcns")
+    val root = freshRoot("cdf-cdcns")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     // a numeric-leading user value under a cdc_-prefixed key — NOT one

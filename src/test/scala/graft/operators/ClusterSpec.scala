@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   * clustered column, not just one range key. */
 class ClusterSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/cluster-$tag-${System.nanoTime()}"
-
   /** doc_id plus an independent second dimension m = doc_id % 97 — a
     * doc_id range cluster leaves every file's m-interval wide, z-order
     * tightens both. */
@@ -25,7 +22,7 @@ class ClusterSpec extends SparkSpec {
       .head().toSeq
 
   test("cluster is content-neutral: rows, schema, and checksums unchanged") {
-    val root = freshRoot("neutral")
+    val root = freshRoot("cluster-neutral")
     TxLog.init(spark, root, fixture)
     val before = checksum(TxLog.read(spark, root))
     val v0 = TxLog.snapshot(root).get.version
@@ -43,8 +40,8 @@ class ClusterSpec extends SparkSpec {
     val big = spark.range(4000).toDF("doc_id")
       .select(col("doc_id"), (col("doc_id") % 97).as("m"),
         md5(col("doc_id").cast("string").cast("binary")).as("text"))
-    val zRoot = freshRoot("z")
-    val rRoot = freshRoot("r")
+    val zRoot = freshRoot("cluster-z")
+    val rRoot = freshRoot("cluster-r")
     TxLog.init(spark, zRoot, big)
     TxLog.init(spark, rRoot, big)
     TxLog.cluster(spark, zRoot, Seq("doc_id", "m"), targetFiles = 16)
@@ -74,7 +71,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("OPTIMIZE ... ZORDER BY routes through the SQL surface") {
-    val root = freshRoot("sql")
+    val root = freshRoot("cluster-sql")
     TxLog.init(spark, root, fixture)
     val v = SqlSurface.TxSql.sql(spark,
       s"OPTIMIZE txlog.`$root` TARGET 16 ZORDER BY (doc_id, m)")
@@ -92,7 +89,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("clustering a partitioned table clusters WITHIN partitions") {
-    val root = freshRoot("part")
+    val root = freshRoot("cluster-part")
     val docs = fixture.withColumn("lang",
       concat(lit("l"), (col("doc_id") % 3).cast("string")))
     docs.write.partitionBy("lang").parquet(root)
@@ -113,7 +110,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("cluster rejects bad keys loudly") {
-    val root = freshRoot("bad")
+    val root = freshRoot("cluster-bad")
     TxLog.init(spark, root, fixture)
     intercept[IllegalArgumentException] {
       TxLog.cluster(spark, root, Seq("nope"))
@@ -121,7 +118,7 @@ class ClusterSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TxLog.cluster(spark, root, Seq.empty)
     }
-    val pRoot = freshRoot("badpart")
+    val pRoot = freshRoot("cluster-badpart")
     val docs = fixture.withColumn("lang", lit("en"))
     docs.write.partitionBy("lang").parquet(pRoot)
     TxLog.adopt(spark, pRoot, Some("lang"))
@@ -132,7 +129,7 @@ class ClusterSpec extends SparkSpec {
 
   test("clusterIncremental folds ONLY the unsorted tail into a new " +
       "sorted generation; sorted generations carry byte-identical") {
-    val root = freshRoot("inc")
+    val root = freshRoot("cluster-inc")
     val big = spark.range(4000).toDF("doc_id")
       .select(col("doc_id"), (col("doc_id") % 97).as("m"),
         md5(col("doc_id").cast("string").cast("binary")).as("text"))
@@ -183,9 +180,43 @@ class ClusterSpec extends SparkSpec {
     assert(checksum(TxLog.read(spark, root)) === before)
   }
 
+  test("clusterIncremental restages only a fixed tail at 4 and 32 " +
+      "sorted files, every sorted file carrying; a full cluster restages " +
+      "every file") {
+    val rowsPerFile = 500L
+    def frame(a: Long, b: Long) = spark.range(a, b).toDF("doc_id")
+      .select(col("doc_id"), (col("doc_id") % 97).as("m"),
+        md5(col("doc_id").cast("string").cast("binary")).as("text"))
+    def ids(s: TxLog.Snapshot) = s.entries.map(e => (e.path, e.size)).toSet
+    // Returns (files the full cluster restaged, files the fold restaged).
+    def restaged(nFiles: Int): (Int, Int) = {
+      val root = freshRoot(s"cluster-scale-$nFiles")
+      TxLog.init(spark, root,
+        frame(0L, nFiles * rowsPerFile).repartition(nFiles, col("doc_id")))
+      val loaded = TxLog.snapshot(root).get
+      assert(loaded.entries.size === nFiles)
+      TxLog.cluster(spark, root, Seq("doc_id", "m"), targetFiles = nFiles)
+      val sorted = ids(TxLog.snapshot(root).get)
+      // the same 400-row tail at both sizes
+      TxLog.appendOnce(spark, root, "tail", frame(1000000L, 1000400L))
+      val pre = TxLog.snapshot(root).get
+      TxLog.clusterIncremental(spark, root, Seq("doc_id", "m"), targetFiles = 2)
+      val after = ids(TxLog.snapshot(root).get)
+      assert(sorted.subsetOf(after),
+        "every sorted-generation file must carry byte-identical")
+      assert(TxLog.read(spark, root).count() === nFiles * rowsPerFile + 400L)
+      (loaded.entries.count(e => !sorted((e.path, e.size))),
+        pre.entries.count(e => !after((e.path, e.size))))
+    }
+    val (full, fold) = restaged(4)
+    val (full8, fold8) = restaged(32)
+    assert(full === 4 && full8 === 32)
+    assert(fold >= 1 && fold8 === fold, s"fold restaged $fold / $fold8")
+  }
+
   test("clusterIncremental is the bootstrap too, composes with column " +
       "mapping, and routes through OPTIMIZE ... INCREMENTAL") {
-    val root = freshRoot("inc-map")
+    val root = freshRoot("cluster-inc-map")
     TxLog.init(spark, root, fixture)
     // bootstrap: never fully clustered → the whole table is the tail
     val v1 = TxLog.clusterIncremental(spark, root, Seq("doc_id", "m"),
@@ -218,7 +249,7 @@ class ClusterSpec extends SparkSpec {
 
   test("clusterIncremental on a partitioned table: partition tags " +
       "survive the fold and compose with clustered-column pruning") {
-    val root = freshRoot("inc-part")
+    val root = freshRoot("cluster-inc-part")
     val docs = fixture.withColumn("lang",
       concat(lit("l"), (col("doc_id") % 3).cast("string")))
     docs.write.partitionBy("lang").parquet(root)
@@ -256,7 +287,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("cluster handles null-bearing and string keys") {
-    val root = freshRoot("nulls")
+    val root = freshRoot("cluster-nulls")
     val df = fixture
       .withColumn("maybe", when(col("doc_id") % 7 === 0, lit(null).cast("long"))
         .otherwise(col("doc_id") * 31 % 1000))
@@ -281,7 +312,7 @@ class ClusterSpec extends SparkSpec {
 
   test("clusterIncremental folds a sorted-generation file that acquired " +
       "a deletion vector (DV purged, dead rows reclaimed, no full rewrite)") {
-    val root = freshRoot("inc-dv")
+    val root = freshRoot("cluster-inc-dv")
     TxLog.init(spark, root, fixture)
     TxLog.cluster(spark, root, Seq("doc_id", "m"), targetFiles = 6)
     // a MoR delete lands ON a sorted file: the layout is untouched but
@@ -310,7 +341,7 @@ class ClusterSpec extends SparkSpec {
 
   test("maxGenerations bounds the LSM shape: the fold that would exceed " +
       "it promotes to a full cluster (major compaction), exactly at the bound") {
-    val root = freshRoot("inc-gen")
+    val root = freshRoot("cluster-inc-gen")
     def batch(a: Long, b: Long) = spark.range(a, b).toDF("doc_id")
       .select(col("doc_id"), (col("doc_id") % 97).as("m"),
         md5(col("doc_id").cast("string").cast("binary")).as("text"))

@@ -13,13 +13,10 @@ import org.apache.spark.sql.functions._
   * log (time travel sees each version's own). */
 class ConstraintSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/chk-$tag-${System.nanoTime()}"
-
   private def docs = Tables.documents(spark, sf).select("doc_id", "text")
 
   test("addConstraint validates the existing table; violating adds refuse") {
-    val root = freshRoot("add")
+    val root = freshRoot("chk-add")
     TxLog.init(spark, root, docs)
     assert(TxLog.addConstraint(spark, root, "pos_id", "doc_id >= 0") === 2L)
     val ex = intercept[IllegalArgumentException] {
@@ -34,7 +31,7 @@ class ConstraintSpec extends SparkSpec {
   }
 
   test("appends: violating batches refuse atomically, valid ones land") {
-    val root = freshRoot("append")
+    val root = freshRoot("chk-append")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     TxLog.addConstraint(spark, root, "pos_id", "doc_id >= 0")
@@ -52,7 +49,7 @@ class ConstraintSpec extends SparkSpec {
   }
 
   test("SQL CHECK NULL semantics: NULL expressions pass, FALSE refuses") {
-    val root = freshRoot("nulls")
+    val root = freshRoot("chk-nulls")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, Some(10)), (2L, None)).toDF("id", "score"))
@@ -70,7 +67,7 @@ class ConstraintSpec extends SparkSpec {
   }
 
   test("UPDATE assignments and upserts are gated; survivors untouched") {
-    val root = freshRoot("update")
+    val root = freshRoot("chk-update")
     TxLog.init(spark, root, docs)
     TxLog.addConstraint(spark, root, "has_text", "length(text) > 0")
     val ex = intercept[IllegalArgumentException] {
@@ -92,7 +89,7 @@ class ConstraintSpec extends SparkSpec {
   }
 
   test("rename/drop of a constrained column refused until the constraint drops") {
-    val root = freshRoot("rename")
+    val root = freshRoot("chk-rename")
     TxLog.init(spark, root, docs)
     TxLog.addConstraint(spark, root, "has_text", "length(text) > 0")
     val ex = intercept[IllegalArgumentException] {
@@ -111,7 +108,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("unparseable stored constraint fails the gate LOUDLY; nested refs " +
       "gate their top-level column") {
-    val root = freshRoot("loud")
+    val root = freshRoot("chk-loud")
     TxLog.init(spark, root, docs)
     // inject a corrupt constraint below addConstraint's validation (the
     // note surface is just kv properties) — the gate must refuse to
@@ -127,7 +124,7 @@ class ConstraintSpec extends SparkSpec {
     // a nested-field reference (`meta.id`) gates the actual TOP-LEVEL
     // column `meta` — leaf-only matching would let it rename/drop away
     // and strand the constraint
-    val sroot = freshRoot("nestedgate")
+    val sroot = freshRoot("chk-nestedgate")
     TxLog.init(spark, sroot,
       docs.select(struct(col("doc_id").as("id")).as("meta"), col("text")))
     TxLog.addConstraint(spark, sroot, "meta_id", "meta.id >= 0")
@@ -140,7 +137,7 @@ class ConstraintSpec extends SparkSpec {
   }
 
   test("SQL surface: ADD/DROP CONSTRAINT; streaming-shaped appendOnceMonotone gated") {
-    val root = freshRoot("sql")
+    val root = freshRoot("chk-sql")
     import spark.implicits._
     TxLog.init(spark, root, docs)
     val v = TxSql.sql(spark,
@@ -162,7 +159,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("RESTORE is an entry point: resurrected rows are gated by the " +
       "carried constraints (no uncertified rows through a rollback)") {
-    val root = freshRoot("restore-gate")
+    val root = freshRoot("chk-restore-gate")
     import spark.implicits._
     TxLog.init(spark, root, Seq((-1L, "bad"), (5L, "ok")).toDF("id", "s")) // v1
     TxLog.delete(spark, root, col("id") < 0) // v2: the violator is gone

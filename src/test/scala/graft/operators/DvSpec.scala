@@ -13,14 +13,11 @@ import org.apache.spark.sql.functions._
   * routing are all pinned here. */
 class DvSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/dv-$tag-${System.nanoTime()}"
-
   private def docs = Tables.documents(spark, sf)
     .select("doc_id", "text", "lang")
 
   test("deleteMoR: COW-identical results, zero data files rewritten") {
-    val root = freshRoot("basic")
+    val root = freshRoot("dv-basic")
     TxLog.init(spark, root, docs.repartition(4))
     val before = TxLog.snapshot(root).get
     val v = TxLog.deleteMoR(spark, root, col("doc_id") % 7 === 0)
@@ -44,8 +41,46 @@ class DvSpec extends SparkSpec {
       s"expected broadcast anti-join in:\n$plan")
   }
 
+  test("MoR delete writes O(victims) at R and 8R rows per file; a COW " +
+      "delete restages every candidate file, its bytes growing with R") {
+    val nFiles = 4
+    def bytesUnder(f: java.io.File): Long =
+      if (f.isFile) f.length()
+      else Option(f.listFiles()).getOrElse(Array.empty).map(bytesUnder).sum
+    // one victim per file (id % rowsPerFile == 0): a fixed victim count
+    // in every file, unprunable by footer stats. Returns (restaged data
+    // files, bytes written under data/).
+    def delete(rowsPerFile: Long, mor: Boolean): (Int, Long) = {
+      val root = freshRoot(s"dv-scale-$rowsPerFile")
+      val data = new java.io.File(s"$root/data")
+      TxLog.init(spark, root,
+        spark.range(0L, nFiles * rowsPerFile, 1L, nFiles).toDF("id")
+          .withColumn("payload", md5(col("id").cast("string").cast("binary"))))
+      val before = TxLog.snapshot(root).get.entries.map(e => (e.path, e.size))
+      val bytes0 = bytesUnder(data)
+      val victim = col("id") % rowsPerFile === 0
+      if (mor) TxLog.deleteMoR(spark, root, victim)
+      else TxLog.delete(spark, root, victim)
+      val kept = TxLog.snapshot(root).get.entries.map(e => (e.path, e.size)).toSet
+      assert(TxLog.read(spark, root).count() === nFiles * (rowsPerFile - 1))
+      (before.count(e => !kept(e)), bytesUnder(data) - bytes0)
+    }
+    val rows = 250L
+    val (morRestaged, morBytes) = delete(rows, mor = true)
+    val (morRestaged8, morBytes8) = delete(8 * rows, mor = true)
+    val (cowRestaged, cowBytes) = delete(rows, mor = false)
+    val (cowRestaged8, cowBytes8) = delete(8 * rows, mor = false)
+    // MoR: only the sidecar, under a bound independent of table size
+    assert(morRestaged === 0 && morRestaged8 === 0)
+    assert(morBytes <= 4096L && morBytes8 <= 4096L,
+      s"sidecar bytes $morBytes / $morBytes8")
+    // COW: every candidate file rewritten, bytes growing with the files
+    assert(cowRestaged === nFiles && cowRestaged8 === nFiles)
+    assert(cowBytes8 >= 4L * cowBytes, s"COW bytes $cowBytes / $cowBytes8")
+  }
+
   test("NULL-predicate rows survive a MoR delete (SQL DELETE semantics)") {
-    val root = freshRoot("nullpred")
+    val root = freshRoot("dv-nullpred")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, Some(1)), (2L, None), (3L, Some(3))).toDF("id", "v"))
@@ -55,7 +90,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("repeated MoR deletes accumulate exactly; fully-deleted files drop") {
-    val root = freshRoot("accum")
+    val root = freshRoot("dv-accum")
     TxLog.init(spark, root, docs.repartitionByRange(4, col("doc_id")))
     val hi = docs.agg(max("doc_id")).head().getLong(0)
     TxLog.deleteMoR(spark, root, col("doc_id") % 2 === 0)
@@ -77,7 +112,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("compaction purges vectors: rewritten survivors, dv-free manifest") {
-    val root = freshRoot("purge")
+    val root = freshRoot("dv-purge")
     TxLog.init(spark, root, docs.repartition(2))
     TxLog.deleteMoR(spark, root, col("doc_id") % 5 === 0)
     val want = docs.filter(col("doc_id") % 5 =!= 0)
@@ -97,7 +132,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("MoR delete on a (lang, day) partitioned table; census stays exact") {
-    val root = freshRoot("part")
+    val root = freshRoot("dv-part")
     val d = docs.withColumn("day", (col("doc_id") % 3).cast("int"))
     TxLog.initPartitioned(spark, root, d, Seq("lang", "day"), "")
     val lang = d.select("lang").distinct().collect().map(_.getString(0)).min
@@ -122,7 +157,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("time travel: pre-delete versions keep their rows; restore works") {
-    val root = freshRoot("travel")
+    val root = freshRoot("dv-travel")
     TxLog.init(spark, root, docs)
     val full = docs.count()
     TxLog.deleteMoR(spark, root, col("doc_id") % 2 === 0)
@@ -141,7 +176,7 @@ class DvSpec extends SparkSpec {
     // carrying S1's A-rows) had them double-counted by d3 (prior =
     // {A→S2, B→S1}), and the inflated count reaching stats.rows dropped
     // file A with a live row still in it — silent data loss
-    val root = freshRoot("overlap")
+    val root = freshRoot("dv-overlap")
     import spark.implicits._
     TxLog.init(spark, root,
       (0L to 3L).map(i => (i, s"a$i")).toDF("id", "s").repartition(1))
@@ -178,7 +213,7 @@ class DvSpec extends SparkSpec {
 
   test("deleteMoRKeys: DataFrame-held victims, semi-join delete, " +
       "key-range file pruning") {
-    val root = freshRoot("keys")
+    val root = freshRoot("dv-keys")
     import spark.implicits._
     TxLog.init(spark, root,
       (0L to 3L).map(i => (i, s"a$i")).toDF("id", "s").repartition(1))
@@ -202,7 +237,7 @@ class DvSpec extends SparkSpec {
 
   test("updateMoR over overlapping prior sidecars: exact positions, " +
       "no double-count") {
-    val root = freshRoot("overlapupd")
+    val root = freshRoot("dv-overlapupd")
     import spark.implicits._
     TxLog.init(spark, root,
       (0L to 3L).map(i => (i, s"a$i")).toDF("id", "s").repartition(1))
@@ -224,7 +259,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("readAppended refuses ranges containing a MoR delete") {
-    val root = freshRoot("feed")
+    val root = freshRoot("dv-feed")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1))
@@ -267,7 +302,7 @@ class DvSpec extends SparkSpec {
     // rewritten file is in NEITHER endpoint manifest, so an endpoint
     // diff would silently deliver the survivor file's rows while the
     // delete vanished. The per-version walk refuses.
-    val root = freshRoot("feed-cow")
+    val root = freshRoot("dv-feed-cow")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
     TxLog.appendOnce(spark, root, "b1",
@@ -291,7 +326,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("column mapping composes: rename, MoR delete via the new name, drop") {
-    val root = freshRoot("mapping")
+    val root = freshRoot("dv-mapping")
     TxLog.init(spark, root, docs)
     TxLog.renameColumn(spark, root, "lang", "language")
     TxLog.deleteMoR(spark, root, col("language") === "en")
@@ -305,7 +340,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("delete_mode=mor property routes delete(); SQL surface end-to-end") {
-    val root = freshRoot("sqlmode")
+    val root = freshRoot("dv-sqlmode")
     TxLog.init(spark, root, docs)
     val v = TxSql.sql(spark,
       s"ALTER TABLE txlog.`$root` SET TBLPROPERTIES ('delete_mode' = 'mor')")
@@ -331,7 +366,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("updateMoR: COW-identical results; O(changed rows) written, files untouched") {
-    val root = freshRoot("upd")
+    val root = freshRoot("dv-upd")
     TxLog.init(spark, root, docs.repartition(4))
     val before = TxLog.snapshot(root).get
     TxLog.updateMoR(spark, root, col("doc_id") % 10 === 3,
@@ -361,7 +396,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("updateMoR feeds CDC: pre-image deletes + post-image inserts, incl. full-file turnover") {
-    val root = freshRoot("updcdc")
+    val root = freshRoot("dv-updcdc")
     import spark.implicits._
     // one 2-row file + one 3-row file; the update hits ALL rows of file A
     // (its entry DROPS — adds+removes in one commit, accepted via the
@@ -387,7 +422,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("update_mode=mor routes updateWhere and SQL UPDATE; partition moves work") {
-    val root = freshRoot("updmode")
+    val root = freshRoot("dv-updmode")
     val d = docs.withColumn("day", (col("doc_id") % 3).cast("int"))
     TxLog.initPartitioned(spark, root, d, Seq("day"), "")
     TxLog.setProperties(root, Map("update_mode" -> "mor"))
@@ -419,7 +454,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("beyond the broadcast budget the anti-join falls back to a shuffle join, still exact") {
-    val root = freshRoot("shuffle")
+    val root = freshRoot("dv-shuffle")
     TxLog.init(spark, root, docs.repartition(4))
     TxLog.deleteMoR(spark, root, col("doc_id") % 6 === 0)
     val want = docs.filter(col("doc_id") % 6 =!= 0)
@@ -454,7 +489,7 @@ class DvSpec extends SparkSpec {
 
   test("WRITE-TIME sidecar budget: an above-budget MoR delete refuses " +
       "(no single-task sidecar write); property-routed delete() lands COW") {
-    val root = freshRoot("dvbudget")
+    val root = freshRoot("dv-dvbudget")
     TxLog.init(spark, root, docs.repartition(4))
     val total = docs.count()
     def dvDirs() = Option(new java.io.File(s"$root/data").listFiles())
@@ -500,7 +535,7 @@ class DvSpec extends SparkSpec {
 
   test("aborted MoR attempts strand only vacuumable orphans: " +
       "listing-then-vacuum leaves exactly the manifest-referenced dirs") {
-    val root = freshRoot("dvorphan")
+    val root = freshRoot("dv-dvorphan")
     import spark.implicits._
     val base = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "s")
     TxLog.init(spark, root, base.repartition(3))
@@ -561,7 +596,7 @@ class DvSpec extends SparkSpec {
 
   test("delete_mode=mor on a pre-manifest (adopted) table falls back to " +
       "copy-on-write; direct deleteMoR refuses with the typed exception") {
-    val root = freshRoot("adoptfb")
+    val root = freshRoot("dv-adoptfb")
     import spark.implicits._
     (1L to 50L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1)
       .write.mode("overwrite").parquet(root)
@@ -578,7 +613,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("update_mode=mor: a retyping SET falls back to copy-on-write instead of stranding") {
-    val root = freshRoot("retypefb")
+    val root = freshRoot("dv-retypefb")
     import spark.implicits._
     val base = (1L to 100L).map(i => (i, i.toInt)).toDF("id", "v")
     TxLog.init(spark, root, base.repartition(3))
@@ -608,7 +643,7 @@ class DvSpec extends SparkSpec {
   }
 
   test("COW update after MoR delete: no resurrection, vectors purge on rewrite") {
-    val root = freshRoot("cowafter")
+    val root = freshRoot("dv-cowafter")
     TxLog.init(spark, root, docs.repartition(3))
     TxLog.deleteMoR(spark, root, col("doc_id") % 4 === 0)
     // an UPDATE whose rewrite touches dv'd files must apply the vectors
@@ -627,7 +662,7 @@ class DvSpec extends SparkSpec {
 
   test("replaceKeysMoR: keyed delete + append land in ONE version, equal to the two-commit form") {
     import spark.implicits._
-    val root = freshRoot("replace")
+    val root = freshRoot("dv-replace")
     TxLog.init(spark, root, docs.repartition(4))
     val v0 = TxLog.currentVersion(root)
     // re-state docs %5==0 with edited text, and mint one brand-new id
@@ -643,7 +678,7 @@ class DvSpec extends SparkSpec {
     assert(TxLog.currentVersion(root) === v0 + 1)
     assert(TxLog.kvOf(TxLog.snapshot(root).get.notes).get("mark") === Some("1"))
     // content: identical to delete-then-append run on a twin table
-    val twin = freshRoot("replace-twin")
+    val twin = freshRoot("dv-replace-twin")
     TxLog.init(spark, twin, docs.repartition(4))
     TxLog.deleteMoRKeys(spark, twin, "doc_id", keys)
     TxLog.commitAppend(spark, twin, adds, TxLog.currentVersion(twin))

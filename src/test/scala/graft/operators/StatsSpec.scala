@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   * clustered column it must actually skip files. */
 class StatsSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/stats-$tag-${System.nanoTime()}"
-
   /** A typed fixture with every prune domain, clustered by doc_id so
     * file ranges are tight and disjoint: ints, longs, doubles (with
     * NaNs and nulls), short strings, oversize strings, dates,
@@ -36,7 +33,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("footer stats ride the manifest: rows exact, typed bounds present") {
-    val root = freshRoot("ride")
+    val root = freshRoot("stats-ride")
     TxLog.init(spark, root, fixture)
     val snap = TxLog.snapshot(root).get
     assert(snap.entries.forall(_.stats.isDefined))
@@ -57,7 +54,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("readWhere == read.filter on every predicate shape (safety sweep)") {
-    val root = freshRoot("sweep")
+    val root = freshRoot("stats-sweep")
     TxLog.init(spark, root, fixture)
     val hi = fixture.agg(max("doc_id")).head().getLong(0)
     val preds = Seq(
@@ -88,7 +85,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("clustered column skips files; the scan reads only survivors") {
-    val root = freshRoot("skip")
+    val root = freshRoot("stats-skip")
     TxLog.init(spark, root, fixture)
     val snap = TxLog.snapshot(root).get
     val hi = fixture.agg(max("doc_id")).head().getLong(0)
@@ -120,7 +117,7 @@ class StatsSpec extends SparkSpec {
     val bigDbl = 9223372036854774784L.toDouble // exactly representable
     val x0 = 9223372036854774784L - 500L       // x0.toDouble == bigDbl
     assert(x0.toDouble === bigDbl)
-    val rootL = freshRoot("hugelong")
+    val rootL = freshRoot("stats-hugelong")
     TxLog.init(spark, rootL,
       Seq(x0, 1L, 2L).toDF("x").repartitionByRange(2, col("x")))
     val predL = "x = 9.223372036854774784E18"
@@ -129,7 +126,7 @@ class StatsSpec extends SparkSpec {
     assert(gotL === 1L, "huge-magnitude double literal wrongly pruned the long file")
 
     // the mirror: double column vs integral literal that casts onto it
-    val rootD = freshRoot("hugedbl")
+    val rootD = freshRoot("stats-hugedbl")
     TxLog.init(spark, rootD,
       Seq(bigDbl, 1.0, 2.0).toDF("d").repartitionByRange(2, col("d")))
     val predD = s"d = ${9223372036854774784L - 500L}L"
@@ -144,7 +141,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("timestamp columns never prune against bare numeric literals") {
-    val root = freshRoot("tsunit")
+    val root = freshRoot("stats-tsunit")
     TxLog.init(spark, root, fixture)
     val snap = TxLog.snapshot(root).get
     // Spark's long->timestamp cast is SECONDS, footer stats are MICROS:
@@ -158,7 +155,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("stats survive delta manifests, checkpoints, and compaction") {
-    val root = freshRoot("delta")
+    val root = freshRoot("stats-delta")
     val base = fixture
     TxLog.init(spark, root, base.filter(col("doc_id") % 4 === 0))
     // 12 appends cross the checkpoint interval; each is a delta manifest
@@ -180,7 +177,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("partition pruning flows through readWhere (tuple point stats)") {
-    val root = freshRoot("part")
+    val root = freshRoot("stats-part")
     val df = fixture.withColumn("bucket", (col("doc_id") % 5).cast("int"))
     TxLog.initPartitioned(spark, root, df, "bucket")
     val snap = TxLog.snapshot(root).get
@@ -201,7 +198,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("automatic skipping: plain read + filter scans fewer files (no opt-in)") {
-    val root = freshRoot("auto")
+    val root = freshRoot("stats-auto")
     TxLog.init(spark, root, fixture)
     val snap = TxLog.snapshot(root).get
     val hi = fixture.agg(max("doc_id")).head().getLong(0)
@@ -227,7 +224,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("pruned delete rewrites only candidate files, carries the rest") {
-    val root = freshRoot("pdel")
+    val root = freshRoot("stats-pdel")
     val base = fixture
     TxLog.init(spark, root, base)
     val before = TxLog.snapshot(root).get
@@ -250,7 +247,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("delete with no possible victim is a metadata-only commit") {
-    val root = freshRoot("ndel")
+    val root = freshRoot("stats-ndel")
     TxLog.init(spark, root, fixture)
     val before = TxLog.snapshot(root).get
     val hi = fixture.agg(max("doc_id")).head().getLong(0)
@@ -262,7 +259,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("delete with an unprunable predicate still deletes exactly") {
-    val root = freshRoot("udel")
+    val root = freshRoot("stats-udel")
     TxLog.init(spark, root, fixture)
     TxLog.delete(spark, root, col("doc_id") % 13 === 0)
     val got = TxLog.read(spark, root).select("doc_id")
@@ -273,7 +270,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("pruned delete on a partitioned table respects layout and mapping") {
-    val root = freshRoot("pdelpart")
+    val root = freshRoot("stats-pdelpart")
     val df = fixture.withColumn("bucket", (col("doc_id") % 5).cast("int"))
     TxLog.initPartitioned(spark, root, df, "bucket")
     TxLog.renameColumn(spark, root, "small_i", "renamed_i")
@@ -295,7 +292,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("pruned update rewrites only candidate files; retypes fall back") {
-    val root = freshRoot("pupd")
+    val root = freshRoot("stats-pupd")
     val base = fixture.select("doc_id", "small_i", "text")
     TxLog.init(spark, root, base)
     val before = TxLog.snapshot(root).get
@@ -327,7 +324,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("column mapping: a renamed column still prunes under its new name") {
-    val root = freshRoot("rename")
+    val root = freshRoot("stats-rename")
     TxLog.init(spark, root, fixture.select("doc_id", "small_i", "text"))
     TxLog.renameColumn(spark, root, "small_i", "bucketed")
     val snap = TxLog.snapshot(root).get
@@ -347,7 +344,7 @@ class StatsSpec extends SparkSpec {
       "footers compare in one integral domain, floats and doubles in " +
       "one fractional domain") {
     import spark.implicits._
-    val root = freshRoot("widen")
+    val root = freshRoot("stats-widen")
     // v1: int ids 0..999, float scores — footer bounds recorded from
     // int32/float pages
     TxLog.init(spark, root,
@@ -381,7 +378,7 @@ class StatsSpec extends SparkSpec {
   test("ANALYZE TABLE: one metadata commit stores exact rows/nulls/min/max " +
       "+ HLL ndv, DESCRIBE STATS reads them back, re-analyze replaces") {
     import spark.implicits._
-    val root = freshRoot("analyze")
+    val root = freshRoot("stats-analyze")
     TxLog.init(spark, root,
       (Seq((1, "a"), (2, "b"), (3, "b")) :+ ((4, null.asInstanceOf[String])))
         .toDF("id", "s"))
@@ -422,7 +419,7 @@ class StatsSpec extends SparkSpec {
 
   test("fresh ANALYZE stats shrink the relation's size estimate: the " +
       "DataFrame path flips a dim-fact join to broadcast, data commits revert it") {
-    val root = freshRoot("szhint")
+    val root = freshRoot("stats-szhint")
     import spark.implicits._
     // on-disk bytes over the (test-scale) threshold — incompressible
     // payload — while rows x defaultSize width sits under it

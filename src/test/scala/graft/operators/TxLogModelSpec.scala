@@ -16,9 +16,6 @@ class TxLogModelSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/txlog-model-$tag-${System.nanoTime()}"
-
   /** One modeled version: the keyed contents plus the LOGICAL name of
     * the value column (exercising column mapping composed with every
     * other op). */
@@ -43,7 +40,7 @@ class TxLogModelSpec extends SparkSpec {
 
   private def runSequence(seed: Long, ops: Int): Unit = {
     val rnd = new scala.util.Random(seed)
-    val root = freshRoot(s"s$seed")
+    val root = freshRoot(s"txlog-model-s$seed")
     val model = new Model
     def kv(n: Int): Map[Long, String] =
       (0 until n).map(_ => rnd.nextInt(40).toLong -> s"v${rnd.nextInt(1000)}").toMap
@@ -249,7 +246,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("seeded op sequences on a (lang, day) two-column table") {
     val rnd = new scala.util.Random(4242L)
-    val root = freshRoot("twocol")
+    val root = freshRoot("txlog-model-twocol")
     def kv(n: Int): Map[Long, String] =
       (0 until n).map(_ => rnd.nextInt(40).toLong -> s"v${rnd.nextInt(1000)}").toMap
     var history = Vector.empty[Map[Long, String]]
@@ -349,7 +346,7 @@ class TxLogModelSpec extends SparkSpec {
     *    under a fresh physical name: pre-drop rows surface NULL — the
     *    resurrection guard — and the stream keeps flowing. */
   test("column mapping interleaved with streaming-sink appends: refuse stale, never fork, never resurrect") {
-    val root = freshRoot("mapstream")
+    val root = freshRoot("txlog-model-mapstream")
     assert(TxLog.appendOnceMonotone(spark, root, "batch", 0L,
       toDf(Map(1L -> "a"), "s")))
     val v1 = TxLog.currentVersion(root)
@@ -402,7 +399,7 @@ class TxLogModelSpec extends SparkSpec {
     * restaged files. */
   test("concurrent deleteMoR/updateMoR/append/compact CAS races: " +
       "serializable outcome, no DV position lost") {
-    val root = freshRoot("morconc")
+    val root = freshRoot("txlog-model-morconc")
     TxLog.init(spark, root,
       (0L until 400L).map(k => (k, s"v$k")).toDF("id", "s").repartition(4))
     import scala.concurrent.{Await, Future}
@@ -477,7 +474,7 @@ class TxLogModelSpec extends SparkSpec {
     * loss backs off instead of spinning. And the budget is a hard wall:
     * exactly maxAttempts attempts run before the CME escapes. */
   test("withRetry outlasts a long CAS-loss streak and walls at the budget") {
-    val root = freshRoot("retrylive")
+    val root = freshRoot("txlog-model-retrylive")
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s"))
     // 8 straight losses (old cap was 5) then success — must commit
     var calls = 0
@@ -512,7 +509,7 @@ class TxLogModelSpec extends SparkSpec {
     * writes exact change files — the rebase must RE-PIN the version
     * marker without rewriting the dir. Returns the root (v3 current). */
   private def clusteredTable(tag: String): String = {
-    val root = freshRoot(tag)
+    val root = freshRoot(s"txlog-model-$tag")
     val lo = (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s").coalesce(1)
     val hi = (1000L until 1100L).map(k => (k, s"v$k")).toDF("id", "s").coalesce(1)
     TxLog.init(spark, root, lo)
@@ -651,7 +648,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("CAS loss on a partition-scoped upsert: an interleaved commit to " +
       "ANOTHER partition rebases; the SAME partition recomputes") {
-    val root = freshRoot("rebase-part")
+    val root = freshRoot("txlog-model-rebase-part")
     TxLog.initPartitioned(spark, root,
       Seq((1L, "a", "p1"), (2L, "b", "p1"), (10L, "c", "p2"), (11L, "d", "p2"))
         .toDF("id", "s", "part"), Seq("part"), "")
@@ -697,7 +694,7 @@ class TxLogModelSpec extends SparkSpec {
   test("concurrent mergeInto/upsertPartitioned/delete writers on disjoint " +
       "partitions: serializable outcome through REAL races (rebase or " +
       "recompute, never corruption)") {
-    val root = freshRoot("rebase-conc")
+    val root = freshRoot("txlog-model-rebase-conc")
     TxLog.initPartitioned(spark, root,
       ((0L until 100L).map(k => (k, s"v$k", "p1")) ++
         (1000L until 1100L).map(k => (k, s"v$k", "p2")))
@@ -764,7 +761,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("CAS loss on compact: ANY disjoint interleaved commit rebases — " +
       "the maintenance rewrite runs once, mapping and cdc_noop survive") {
-    val root = freshRoot("rebase-compact")
+    val root = freshRoot("txlog-model-rebase-compact")
     TxLog.init(spark, root,
       (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s").repartition(8))
     // column mapping in play: the physical-level compact must CARRY it
@@ -797,7 +794,7 @@ class TxLogModelSpec extends SparkSpec {
   test("CAS loss on z-order cluster: a disjoint append rebases on a " +
       "modern layout; a mapped table recomputes (carried physical names " +
       "would misread)") {
-    val root = freshRoot("rebase-cluster")
+    val root = freshRoot("txlog-model-rebase-cluster")
     TxLog.init(spark, root,
       (0L until 1000L).map(k => (k, k % 7, s"v$k")).toDF("id", "m", "s")
         .repartition(8))
@@ -819,7 +816,7 @@ class TxLogModelSpec extends SparkSpec {
     assert(TxLog.readChanges(spark, root, 2L, 3L).count() === 0L)
     // MAPPED table: the cluster overwrite materializes logical names, so
     // a carried physical-named interloper would misread — must recompute
-    val root2 = freshRoot("rebase-cluster-map")
+    val root2 = freshRoot("txlog-model-rebase-cluster-map")
     TxLog.init(spark, root2,
       (0L until 200L).map(k => (k, s"v$k")).toDF("id", "s").repartition(4))
     TxLog.renameColumn(spark, root2, "s", "body")
@@ -897,7 +894,7 @@ class TxLogModelSpec extends SparkSpec {
   test("CAS loss on clusterIncremental: ANY interleaved commit leaving " +
       "the tail untouched rebases; the interloper's file is simply the " +
       "NEXT run's tail") {
-    val root = freshRoot("rebase-cluster-inc")
+    val root = freshRoot("txlog-model-rebase-cluster-inc")
     TxLog.init(spark, root,
       (0L until 1000L).map(k => (k, k % 7, s"v$k")).toDF("id", "m", "s")
         .repartition(4))
@@ -934,7 +931,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("append CAS loser reuses its staged batch: stage-once retry, " +
       "manifest work only") {
-    val root = freshRoot("append-rebase")
+    val root = freshRoot("txlog-model-append-rebase")
     TxLog.init(spark, root,
       (0L until 50L).map(k => (k, s"v$k")).toDF("id", "s"))
     // interleave a winning append between the loser's staging and its
@@ -967,7 +964,7 @@ class TxLogModelSpec extends SparkSpec {
     // violating batch: staged BEFORE the constraint existed, so a naive
     // reuse would publish rows the constraint never validated — the
     // retry must restage and the stage-time gate must refuse loudly
-    val bad = freshRoot("append-chk-bad")
+    val bad = freshRoot("txlog-model-append-chk-bad")
     TxLog.init(spark, bad,
       (0L until 20L).map(k => (k, s"v$k")).toDF("id", "s"))
     TxLog.testRacePublishHook = Some { r =>
@@ -989,7 +986,7 @@ class TxLogModelSpec extends SparkSpec {
     // satisfying batch: same race, the restage re-validates clean and
     // the append commits — two stagings (the constraint commit is
     // metadata + an aggregate pass, it stages no data)
-    val ok = freshRoot("append-chk-ok")
+    val ok = freshRoot("txlog-model-append-chk-ok")
     TxLog.init(spark, ok,
       (0L until 20L).map(k => (k, s"v$k")).toDF("id", "s"))
     TxLog.testRacePublishHook = Some { r =>
@@ -1009,7 +1006,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("a pre-staged batch staged before an ADD CONSTRAINT never " +
       "publishes unchecked rows (the SigIndex preStaged path)") {
-    val root = freshRoot("prestage-chk")
+    val root = freshRoot("txlog-model-prestage-chk")
     TxLog.init(spark, root,
       (0L until 10L).map(k => (k, s"v$k")).toDF("id", "s"))
     val snap = TxLog.snapshot(root).get
@@ -1069,7 +1066,7 @@ class TxLogModelSpec extends SparkSpec {
 
   private def runEvolutionSequence(seed: Long, ops: Int): Unit = {
     val rnd = new scala.util.Random(seed)
-    val root = freshRoot(s"evo$seed")
+    val root = freshRoot(s"txlog-model-evo$seed")
     var history = Vector.empty[EState]
     def cur = history.last
     var fresh = 1000L
@@ -1178,7 +1175,7 @@ class TxLogModelSpec extends SparkSpec {
 
   test("a narrow append racing a WIDENING interloper: the CAS loser's " +
       "stale-width stage is invalidated, the retry lands upcast") {
-    val root = freshRoot("widen-race")
+    val root = freshRoot("txlog-model-widen-race")
     TxLog.init(spark, root,
       Seq((1, "a"), (2, "b")).toDF("id", "s")) // int id
     TxLog.setProperties(root, Map("type_widening" -> "true"))

@@ -11,13 +11,10 @@ import org.apache.spark.sql.functions._
   * and vacuum sweeping only unreachable data. */
 class TxLogSpec extends SparkSpec {
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/txlog-$tag-${System.nanoTime()}"
-
   private def docs = Tables.documents(spark, sf).select("doc_id", "text")
 
   test("init/read roundtrip and version pinning (time travel)") {
-    val root = freshRoot("pin")
+    val root = freshRoot("txlog-pin")
     val v1 = TxLog.init(spark, root, docs)
     assert(v1 === 1L)
     val n = docs.count()
@@ -37,7 +34,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("upsert merges by key transactionally") {
-    val root = freshRoot("upsert")
+    val root = freshRoot("txlog-upsert")
     TxLog.init(spark, root, docs)
     val batch = docs.filter(col("doc_id") < 10)
       .withColumn("text", lit("REPLACED"))
@@ -51,7 +48,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("exactly one CAS winner per version; loser's data is vacuum-able") {
-    val root = freshRoot("cas")
+    val root = freshRoot("txlog-cas")
     TxLog.init(spark, root, docs.limit(100))
     val snap = TxLog.snapshot(root).get
     // writer A wins version 2
@@ -76,7 +73,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("reader concurrent with a storm of commits sees one version, never a mix") {
-    val root = freshRoot("race")
+    val root = freshRoot("txlog-race")
     // every version's rows all carry that version's tag: a mixed read
     // would surface as >1 distinct tag or a count/tag mismatch
     def tagged(tag: Long) = spark.range(200).select(
@@ -105,7 +102,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("foldOnce is effectively-once, including under concurrent folders") {
-    val root = freshRoot("fold")
+    val root = freshRoot("txlog-fold")
     def foldBatch(tag: String, rows: Long): Boolean =
       TxLog.foldOnce(spark, root, tag, {
         case None => spark.range(rows).select(col("id").as("v"))
@@ -126,7 +123,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("delete keeps NULL-predicate rows (SQL DELETE semantics)") {
-    val root = freshRoot("delnull")
+    val root = freshRoot("txlog-delnull")
     // score: 1, 2, NULL — DELETE WHERE score > 1 removes only the 2;
     // the NULL row is not matched, so it SURVIVES
     val t = spark.sql(
@@ -139,7 +136,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("vacuum racing an in-flight commit: grace window protects the staging") {
-    val root = freshRoot("vacrace")
+    val root = freshRoot("txlog-vacrace")
     TxLog.init(spark, root, docs.limit(20))
     // writer whose stageData is artificially slow: each row sleeps, so the
     // data/c-* dir exists unreferenced for ~a second before publish
@@ -164,7 +161,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("concurrent initializers: loser gets retryable CME, withRetry absorbs it") {
-    val root = freshRoot("initrace")
+    val root = freshRoot("txlog-initrace")
     TxLog.init(spark, root, docs.limit(5))
     // direct re-init now fails RETRYABLY (CME, not IllegalArgument) so a
     // withRetry writer that raced another initializer re-reads instead of dying
@@ -172,7 +169,7 @@ class TxLogSpec extends SparkSpec {
       TxLog.init(spark, root, docs.limit(5))
     }
     // the real path: two upserters race an uninitialized table — both land
-    val root2 = freshRoot("initrace2")
+    val root2 = freshRoot("txlog-initrace2")
     def batch(tag: String) = spark.range(3)
       .select(concat(lit(tag), col("id")).as("doc_id"), lit(tag).as("text"))
     val ts = Seq("a", "b").map(t => new Thread(() =>
@@ -183,7 +180,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("appendOnce is effectively-once; streamingSink lands each micro-batch exactly once") {
-    val root = freshRoot("sink")
+    val root = freshRoot("txlog-sink")
     // appendOnce: the replay ledger rides the manifest
     assert(TxLog.appendOnce(spark, root, "b0", spark.range(5).toDF("v")))
     assert(!TxLog.appendOnce(spark, root, "b0", spark.range(5).toDF("v")))
@@ -193,7 +190,7 @@ class TxLogSpec extends SparkSpec {
 
     // streamingSink: one staged file per micro-batch through a real
     // file-source stream; final table = every row exactly once
-    val root2 = freshRoot("sink2")
+    val root2 = freshRoot("txlog-sink2")
     val inDir = s"$root2-in"
     new java.io.File(inDir).mkdirs()
     (0 until 4).foreach { b =>
@@ -226,7 +223,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("monotone ledger: O(1) high-water note, replays no-op, legacy per-tag ledgers interop") {
-    val root = freshRoot("hw")
+    val root = freshRoot("txlog-hw")
     (0 until 15).foreach { k =>
       assert(TxLog.appendOnceMonotone(spark, root, "s", k.toLong,
         spark.range(k * 10, k * 10 + 10).toDF("v")))
@@ -241,7 +238,7 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.appendOnceMonotone(spark, root, "other", 0L, spark.range(1000, 1005).toDF("v")))
     assert(TxLog.snapshot(root).get.notes === Set("hw:s:14", "hw:other:0"))
     // legacy interop: a log whose ledger was written per-tag (appendOnce)
-    val root2 = freshRoot("hw-legacy")
+    val root2 = freshRoot("txlog-hw-legacy")
     (0 to 2).foreach { k =>
       TxLog.appendOnce(spark, root2, s"batch-$k", spark.range(k * 5, k * 5 + 5).toDF("v"))
     }
@@ -258,7 +255,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("checkpoint bounds metadata cost: snapshot reads checkpoint + suffix, not the whole log") {
-    val root = freshRoot("ckpt")
+    val root = freshRoot("txlog-ckpt")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     (2 to 25).foreach { k =>
@@ -314,7 +311,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("versionAt is exact and portable: a copied log (fresh mtimes) still time-travels") {
-    val root = freshRoot("tsexact")
+    val root = freshRoot("txlog-tsexact")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     val t1 = System.currentTimeMillis()
@@ -324,7 +321,7 @@ class TxLogSpec extends SparkSpec {
 
     // copy the whole table WITHOUT preserving file dates — a restored
     // backup; mtime-based timestampAsOf would see every version as "now"
-    val copy = freshRoot("tsexact-copy")
+    val copy = freshRoot("txlog-tsexact-copy")
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(root), new java.io.File(copy), false)
     Thread.sleep(20L)
@@ -337,7 +334,7 @@ class TxLogSpec extends SparkSpec {
   test("partition column type round-trips: int and date read back typed, not stringified") {
     import spark.implicits._
     // int partition
-    val rootI = freshRoot("ptype-int")
+    val rootI = freshRoot("txlog-ptype-int")
     val dfI = Seq((1L, 10, "a"), (2L, 10, "b"), (3L, 20, "c"))
       .toDF("id", "bucket", "text")
     TxLog.initPartitioned(spark, rootI, dfI, "bucket")
@@ -362,7 +359,7 @@ class TxLogSpec extends SparkSpec {
     }
 
     // date partition
-    val rootD = freshRoot("ptype-date")
+    val rootD = freshRoot("txlog-ptype-date")
     val dfD = Seq((1L, "2024-01-01"), (2L, "2024-01-02"))
       .toDF("id", "day").withColumn("day", col("day").cast("date"))
     TxLog.initPartitioned(spark, rootD, dfD, "day")
@@ -371,7 +368,7 @@ class TxLogSpec extends SparkSpec {
     assert(backD.filter(col("day") === lit("2024-01-02").cast("date")).count() === 1)
 
     // adopted hive layouts have no committed type — string, as documented
-    val rootA = freshRoot("ptype-adopt")
+    val rootA = freshRoot("txlog-ptype-adopt")
     dfI.write.partitionBy("bucket").parquet(rootA)
     TxLog.adopt(spark, rootA, Some("bucket"))
     assert(TxLog.read(spark, rootA).schema("bucket").dataType ===
@@ -380,7 +377,7 @@ class TxLogSpec extends SparkSpec {
 
   test("partitioned compact: per-partition target, untouched partitions carried by reference") {
     import spark.implicits._
-    val root = freshRoot("pcompact")
+    val root = freshRoot("txlog-pcompact")
     // partition "a" fragmented to 8 files, partition "b" written compact
     val partA = spark.range(64).select(col("id"), lit("a").as("p")).repartition(8)
     TxLog.initPartitioned(spark, root, partA, "p")
@@ -409,7 +406,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("versionAt resolves the version live at a timestamp (mtime-based timestampAsOf)") {
-    val root = freshRoot("tsasof")
+    val root = freshRoot("txlog-tsasof")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     val t1 = System.currentTimeMillis()
@@ -423,7 +420,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("committed schema evolves additively on append; drops and retypes are rejected") {
-    val root = freshRoot("schema")
+    val root = freshRoot("txlog-schema")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))
     assert(TxLog.snapshot(root).get.schemaJson.isDefined)
@@ -459,7 +456,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("column mapping: rename and drop are metadata-only; dropped names cannot resurrect") {
-    val root = freshRoot("colmap")
+    val root = freshRoot("txlog-colmap")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"))
     val dataDirs = () => Option(new java.io.File(s"$root/data").listFiles())
@@ -522,7 +519,7 @@ class TxLogSpec extends SparkSpec {
     // guards: partition column / unknown / duplicate / last column
     intercept[IllegalArgumentException](TxLog.renameColumn(spark, root, "nope", "x"))
     intercept[IllegalArgumentException](TxLog.renameColumn(spark, root, "body", "doc_id"))
-    val rootP = freshRoot("colmap-part")
+    val rootP = freshRoot("txlog-colmap-part")
     TxLog.initPartitioned(spark, rootP,
       Seq((1L, "a", "en")).toDF("doc_id", "text", "lang"), "lang")
     intercept[IllegalArgumentException](TxLog.renameColumn(spark, rootP, "lang", "l2"))
@@ -530,7 +527,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("column mapping survives partition-scoped upsert; overwrite rewrites it away") {
-    val root = freshRoot("colmap-upsert")
+    val root = freshRoot("txlog-colmap-upsert")
     import spark.implicits._
     TxLog.initPartitioned(spark, root,
       Seq((1L, "one", "en"), (2L, "zwei", "de")).toDF("doc_id", "text", "lang"),
@@ -558,7 +555,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("concurrent monotone streams on one table: CAS retry lands both, ledgers stay O(1)") {
-    val root = freshRoot("hw-race")
+    val root = freshRoot("txlog-hw-race")
     TxLog.init(spark, root, spark.range(5).toDF("v"))
     // two independent streams racing appends into the same table: every
     // commit must land exactly once and each stream keeps ONE high-water
@@ -578,7 +575,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("compact packs files; pruneHistory + vacuum release old versions") {
-    val root = freshRoot("compact")
+    val root = freshRoot("txlog-compact")
     TxLog.init(spark, root, docs.limit(64).repartition(16))
     val dataDirs = () => Option(new java.io.File(s"$root/data").listFiles())
       .getOrElse(Array.empty).count(_.isDirectory)
@@ -601,7 +598,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("incremental manifests: per-commit bytes are O(batch), not O(table files)") {
-    val root = freshRoot("delta")
+    val root = freshRoot("txlog-delta")
     import spark.implicits._
     def manifestBytes(v: Long): Long =
       java.nio.file.Files.size(
@@ -641,14 +638,59 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("checkpoint chain thins exponentially; every retained version still time-travels") {
-    val root = freshRoot("thin")
+    val root = freshRoot("txlog-thin")
     import spark.implicits._
     TxLog.init(spark, root, Seq((0L, "v0")).toDF("id", "s"))
-    (1L to 119L).foreach { k =>
+    def append(ks: Seq[Long]): Unit = ks.foreach { k =>
       assert(TxLog.appendOnceMonotone(spark, root, "mb", k,
         Seq((k, s"v$k")).toDF("id", "s")))
     }
+    // metadata cost sampled at two log lengths 6× apart, both at a
+    // checkpoint version (the same phase of the checkpoint interval)
+    case class Sample(listings: Long, parses: Long, manifestBytes: Long,
+        ckBytes: Long, historyParses: Long, logFiles: Int, maintainedLogFiles: Int)
+    def logFiles(r: String): Int = Option(new java.io.File(s"$r/_txlog").listFiles())
+      .getOrElse(Array.empty).count(_.isFile)
+    def sample(v: Long): Sample = {
+      TxLog.logListings.set(0L); TxLog.manifestParses.set(0L)
+      assert(TxLog.snapshot(root).get.version === v)
+      val (listings, parses) = (TxLog.logListings.get.longValue,
+        TxLog.manifestParses.get.longValue)
+      // the contrast: a full-log walk's parse count grows with commits
+      TxLog.manifestParses.set(0L)
+      assert(TxLog.history(root).size.toLong === v)
+      val historyParses = TxLog.manifestParses.get.longValue
+      // production upkeep on a copy, so the sampled log gains no commit
+      val maintained = freshRoot("txlog-thin-maint")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(root), new java.io.File(maintained))
+      TxLog.compact(spark, maintained, targetFiles = 2)
+      TxLog.pruneHistory(maintained, keepLast = 5)
+      TxLog.vacuum(maintained, graceMs = 0L)
+      assert(TxLog.read(spark, maintained).count() === v)
+      def bytes(name: String) =
+        java.nio.file.Files.size(java.nio.file.Paths.get(root, "_txlog", name))
+      Sample(listings, parses, bytes(f"v-$v%020d"), bytes(f"ck-$v%020d"),
+        historyParses, logFiles(root), logFiles(maintained))
+    }
+    append(1L to 19L)
+    val at20 = sample(20L)
+    append(20L to 119L)
     assert(TxLog.currentVersion(root) === 120L)
+    val at120 = sample(120L)
+    val both = s"v20 $at20 vs v120 $at120"
+    // resolution is flat in commits: no listing, the same parses
+    assert(at120.listings === 0L && at20.listings === 0L, both)
+    assert(at120.parses === at20.parses, both)
+    // a 1-row commit's manifest is O(batch) while the checkpoint, a
+    // full file list, grows with the table
+    assert(at120.manifestBytes <= at20.manifestBytes + 64L, both)
+    assert(at120.ckBytes >= 4L * at20.ckBytes, both)
+    assert(at120.historyParses >= 4L * at20.historyParses, both)
+    // maintained, the retained _txlog is the same size at both lengths;
+    // unmaintained, it grows with commits
+    assert(at120.maintainedLogFiles === at20.maintainedLogFiles, both)
+    assert(at120.logFiles >= 4 * at20.logFiles, both)
     // without thinning a 120-commit log holds 12 full-file-list
     // checkpoints (one per interval) — cumulative _txlog bytes
     // quadratic-ish on long streams. Retention: newest ~3 intervals
@@ -676,7 +718,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("pruneHistory rewrites a delta floor manifest as full; no checkpoint is load-bearing") {
-    val root = freshRoot("fullfloor")
+    val root = freshRoot("txlog-fullfloor")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "v1")).toDF("id", "s"))
     (2L to 25L).foreach { k =>
@@ -709,7 +751,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("vacuum stale-floor guard: a checkpoint whose floor manifest is gone falls back to the full parse") {
-    val root = freshRoot("staleck")
+    val root = freshRoot("txlog-staleck")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     (2 to 12).foreach { k =>
@@ -735,7 +777,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("pruneHistory rebuilds the checkpoint BEFORE deleting manifests (no stale-floor window)") {
-    val root = freshRoot("pruneorder")
+    val root = freshRoot("txlog-pruneorder")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     (2 to 12).foreach { k =>
@@ -757,7 +799,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("resurrection guard mints PAST occupied suffixed names (c__vN literally taken)") {
-    val root = freshRoot("mintloop")
+    val root = freshRoot("txlog-mintloop")
     import spark.implicits._
     // a user column literally named note__v3 occupies the name the naive
     // mint would pick after dropping `note` at v2 and re-adding it at v3
@@ -787,7 +829,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("pre-staged append: same result as inline; stale vintage restages") {
-    val root = freshRoot("prestage")
+    val root = freshRoot("txlog-prestage")
     TxLog.init(spark, root, docs)
     val n0 = docs.count()
     val batch = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))

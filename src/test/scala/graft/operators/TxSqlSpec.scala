@@ -12,11 +12,8 @@ class TxSqlSpec extends SparkSpec {
 
   import SqlSurface.TxSql
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/txsql-$tag-${System.nanoTime()}"
-
   test("DELETE is the transactional delete: versioned, NULL-predicate rows survive") {
-    val root = freshRoot("del")
+    val root = freshRoot("txsql-del")
     val t = spark.sql(
       "SELECT * FROM VALUES (1L, 1), (2L, 2), (3L, CAST(NULL AS INT)) AS t(doc_id, score)")
     TxLog.init(spark, root, t)
@@ -31,7 +28,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("time travel: VERSION AS OF and TIMESTAMP AS OF hit the pinned snapshots; bad pins throw") {
-    val root = freshRoot("tt")
+    val root = freshRoot("txsql-tt")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     val t1 = System.currentTimeMillis()
@@ -51,7 +48,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("UPDATE: assignments see the ORIGINAL row; NULL-predicate rows survive unchanged") {
-    val root = freshRoot("upd")
+    val root = freshRoot("txsql-upd")
     val t = spark.sql(
       """SELECT * FROM VALUES (1L, 10L, 100L, 1), (2L, 20L, 200L, 2),
         |(3L, 30L, 300L, CAST(NULL AS INT)) AS t(id, a, b, flag)""".stripMargin)
@@ -71,7 +68,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("MERGE is the keyed upsert; its USING subquery time-travels into the same table") {
-    val root = freshRoot("merge")
+    val root = freshRoot("txsql-merge")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     TxSql.sql(spark, s"DELETE FROM txlog.`$root` WHERE id = 3") // v2
@@ -89,7 +86,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("conditional MERGE: every clause category, first-true-wins order, " +
       "src-alias scoping") {
-    val root = freshRoot("cmerge")
+    val root = freshRoot("txsql-cmerge")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30), (4L, "d", 40),
@@ -120,7 +117,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("conditional MERGE plan shape: ONE full-outer join on the key, " +
       "no cartesian product, no driver-side row movement") {
-    val root = freshRoot("cmplan")
+    val root = freshRoot("txsql-cmplan")
     import spark.implicits._
     TxLog.init(spark, root,
       (1L to 2000L).map(k => (k, s"v$k")).toDF("id", "s"))
@@ -158,7 +155,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("conditional MERGE prunes by the source key range: files outside " +
       "it carry by reference; a BY SOURCE clause forces the full pass") {
-    val root = freshRoot("cmprune")
+    val root = freshRoot("txsql-cmprune")
     import spark.implicits._
     TxLog.init(spark, root,
       (0L until 1000L).map(k => (k, s"v$k")).toDF("id", "s").coalesce(1))
@@ -196,9 +193,43 @@ class TxSqlSpec extends SparkSpec {
     assert(TxLog.read(spark, root).count() === 2000L)
   }
 
+  test("conditional MERGE cost tracks the touched key range: a " +
+      "key-clustered table restages one file at 2 and at 16 files; a " +
+      "hash-partitioned one restages every file at both") {
+    val rowsPerFile = 200L
+    // the same merge at every size: update every key of the first
+    // rowsPerFile ids, insert [-10, 0) — one range-clustered file's keys.
+    // Returns the restaged files: those whose (path, size) does not
+    // survive the merge.
+    def restaged(nFiles: Int, clustered: Boolean): Int = {
+      val root = freshRoot(s"txsql-cmscale-$nFiles")
+      val n = nFiles * rowsPerFile
+      // spark.range slices are contiguous: one disjoint key range per file
+      val t = spark.range(0L, n, 1L, nFiles).toDF("id")
+        .withColumn("s", concat(lit("v"), col("id").cast("string")))
+      TxLog.init(spark, root,
+        if (clustered) t else t.repartition(nFiles, col("id")))
+      val before = TxLog.snapshot(root).get
+      assert(before.entries.size === nFiles)
+      TxLog.mergeInto(spark, root,
+        spark.range(-10L, rowsPerFile).toDF("id").withColumn("s", lit("U")),
+        "id",
+        matched = Seq(TxLog.MergeClause(None, TxLog.MergeUpdate())),
+        notMatched = Seq(TxLog.MergeClause(None, TxLog.MergeInsert)))
+      val kept = TxLog.snapshot(root).get.entries.map(e => (e.path, e.size)).toSet
+      assert(TxLog.read(spark, root).filter(col("s") === "U").count() ===
+        rowsPerFile + 10L)
+      before.entries.count(e => !kept((e.path, e.size)))
+    }
+    assert(restaged(2, clustered = true) === 1)
+    assert(restaged(16, clustered = true) === 1)
+    assert(restaged(2, clustered = false) === 2)
+    assert(restaged(16, clustered = false) === 16)
+  }
+
   test("scoped MERGE (ON key AND scope): BY-SOURCE reconciliation only " +
       "inspects in-scope files; out-of-scope files carry byte-identical") {
-    val root = freshRoot("cmscope")
+    val root = freshRoot("txsql-cmscope")
     import spark.implicits._
     TxLog.init(spark, root,
       (0L until 1000L).map(k => (k, s"v$k")).toDF("id", "s").coalesce(1))
@@ -255,7 +286,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("MERGE column-list INSERT: INSERT (cols) VALUES (exprs) casts to " +
       "target types, defaults unlisted columns to NULL, validates arity") {
-    val root = freshRoot("cmins")
+    val root = freshRoot("txsql-cmins")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "s", "n"))
@@ -295,7 +326,7 @@ class TxSqlSpec extends SparkSpec {
   test("MERGE WITH SCHEMA EVOLUTION: additive source columns evolve the " +
       "target in the same commit; without the opt-in the committed " +
       "schema stays authoritative; constraints gate the evolved images") {
-    val root = freshRoot("emerge")
+    val root = freshRoot("txsql-emerge")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     // WITHOUT the opt-in: the extra source column is out of scope — the
@@ -354,7 +385,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("conditional MERGE on a PARTITIONED table: partial path restages " +
       "hive partitions, partition columns survive") {
-    val root = freshRoot("cmpart")
+    val root = freshRoot("txsql-cmpart")
     import spark.implicits._
     // keys CLUSTER by partition (l0: 0..99, l1: 100..199, l2: 200..299),
     // so per-file footer stats have disjoint key ranges and the source's
@@ -394,7 +425,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("conditional MERGE: NOT MATCHED BY SOURCE DELETE (reconciliation) " +
       "and NULL-condition rows carry unchanged") {
-    val root = freshRoot("recon")
+    val root = freshRoot("txsql-recon")
     import spark.implicits._
     TxLog.init(spark, root,
       Seq((1L, Some(1)), (2L, None), (3L, Some(3))).toDF("id", "v"))
@@ -441,7 +472,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("OPTIMIZE and VACUUM statements: compaction with metadata no-op, grace-windowed sweep") {
-    val root = freshRoot("opt")
+    val root = freshRoot("txsql-opt")
     import spark.implicits._
     TxLog.init(spark, root, spark.range(64).select(col("id")).repartition(16))
     assert(TxLog.snapshot(root).get.files.size === 16)
@@ -457,7 +488,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("RESTORE is metadata-only: content rolls back, history and the note ledger do not") {
-    val root = freshRoot("restore")
+    val root = freshRoot("txsql-restore")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     TxLog.foldOnce(spark, root, "batch-7", {
@@ -483,7 +514,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("RESTORE across a rename brings the old logical schema back") {
-    val root = freshRoot("restore-map")
+    val root = freshRoot("txsql-restore-map")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a")).toDF("doc_id", "text"))
     TxLog.renameColumn(spark, root, "text", "body")
@@ -493,7 +524,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("readAppended: manifest-resolved increments; rewrite ranges refuse; mapping applies") {
-    val root = freshRoot("incr")
+    val root = freshRoot("txsql-incr")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"))
     TxLog.appendOnceMonotone(spark, root, "b", 1L, Seq((3L, "c")).toDF("doc_id", "text"))
@@ -523,7 +554,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("DESCRIBE HISTORY: retained commits newest first with exact timestamps") {
-    val root = freshRoot("hist")
+    val root = freshRoot("txsql-hist")
     import spark.implicits._
     TxLog.init(spark, root, Seq(1L).toDF("v"))
     TxLog.commitAppend(spark, root, Seq(2L).toDF("v"), expected = 1L, note = "load")
@@ -540,7 +571,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("DESCRIBE CHANGES: the row-level feed as a statement (FROM, FROM..TO)") {
-    val root = freshRoot("changes")
+    val root = freshRoot("txsql-changes")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     TxLog.appendOnce(spark, root, "b1", Seq((3L, "c")).toDF("id", "s"))
@@ -556,7 +587,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("DESCRIBE DETAIL: one-row manifest summary, exact sizes and rows") {
-    val root = freshRoot("detail")
+    val root = freshRoot("txsql-detail")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     TxLog.renameColumn(spark, root, "s", "label")
@@ -570,7 +601,7 @@ class TxSqlSpec extends SparkSpec {
     // fields surface LOGICAL names (the mapping applied)
     assert(d.getAs[scala.collection.Seq[String]]("fields").toSet === Set("id", "label"))
     // partitioned: part_cols ride through
-    val pRoot = freshRoot("detailp")
+    val pRoot = freshRoot("txsql-detailp")
     val docs = Seq((1L, "x", "en"), (2L, "y", "fr")).toDF("id", "t", "lang")
     docs.write.partitionBy("lang").parquet(pRoot)
     TxLog.adopt(spark, pRoot, Some("lang"))
@@ -588,7 +619,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("two versions of the same table join in one statement; no catalog residue") {
-    val root = freshRoot("join")
+    val root = freshRoot("txsql-join")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     TxLog.commitOverwrite(spark, root,
@@ -606,7 +637,7 @@ class TxSqlSpec extends SparkSpec {
   }
 
   test("statement scanning is blind to string literals (commas, WHERE, txlog refs inside quotes)") {
-    val root = freshRoot("quotes")
+    val root = freshRoot("txsql-quotes")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1L, "x"), (2L, "y")).toDF("id", "s"))
 
@@ -646,7 +677,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("CREATE TABLE AS / INSERT INTO: the SQL ingest path — versioned " +
       "appends, loud refusals on existing/missing tables") {
-    val root = freshRoot("ctas")
+    val root = freshRoot("txsql-ctas")
     val v1 = TxSql.sql(spark,
       s"CREATE TABLE txlog.`$root` AS SELECT id AS doc_id, id % 7 AS m " +
         "FROM range(100)").head.getLong(0)
@@ -676,7 +707,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("CREATE TABLE ... PARTITIONED BY lands a partitioned table whose " +
       "tags prune") {
-    val root = freshRoot("ctas-part")
+    val root = freshRoot("txsql-ctas-part")
     TxSql.sql(spark,
       s"CREATE TABLE txlog.`$root` PARTITIONED BY (lang) AS " +
         "SELECT id AS doc_id, concat('l', CAST(id % 3 AS STRING)) AS lang " +
@@ -692,7 +723,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("INSERT OVERWRITE carries the table's metadata life (constraints " +
       "enforced, properties kept); CREATE OR REPLACE resets it") {
-    val root = freshRoot("over")
+    val root = freshRoot("txsql-over")
     TxSql.sql(spark,
       s"CREATE TABLE txlog.`$root` AS SELECT id AS doc_id FROM range(10)")
     TxSql.sql(spark, s"ALTER TABLE txlog.`$root` ADD CONSTRAINT nonneg " +
@@ -726,7 +757,7 @@ class TxSqlSpec extends SparkSpec {
       "CREATE OR REPLACE must reset constraints")
     assert(TxLog.read(spark, root).count() === 3L)
     // OR REPLACE on a missing root is a plain create
-    val root2 = freshRoot("over2")
+    val root2 = freshRoot("txsql-over2")
     TxSql.sql(spark, s"CREATE OR REPLACE TABLE txlog.`$root2` AS " +
       "SELECT 1 AS doc_id")
     assert(TxLog.read(spark, root2).count() === 1L)
@@ -734,7 +765,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("CREATE OR REPLACE at multi-column partition arity: same layout " +
       "replaces, a different layout refuses") {
-    val root = freshRoot("over-mc")
+    val root = freshRoot("txsql-over-mc")
     def sel(n: Int) =
       s"SELECT id AS doc_id, concat('l', CAST(id % 2 AS STRING)) AS lang, " +
         s"CAST(id % 3 AS INT) AS day FROM range($n)"
@@ -759,7 +790,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("CHECK constraints gate type-WIDENED post-images (append and upsert)") {
     import spark.implicits._
-    val root = freshRoot("widen-chk")
+    val root = freshRoot("txsql-widen-chk")
     TxLog.init(spark, root, Seq((1, "en")).toDF("id", "lang"))
     TxLog.setProperties(root, Map("type_widening" -> "true"))
     TxLog.addConstraint(spark, root, "id_cap", "id < 4000000000")
@@ -780,7 +811,7 @@ class TxSqlSpec extends SparkSpec {
     assert(TxLog.read(spark, root).schema("id").dataType ===
       org.apache.spark.sql.types.LongType)
     // same gate through the keyed-upsert path on a partitioned twin
-    val root2 = freshRoot("widen-chk-up")
+    val root2 = freshRoot("txsql-widen-chk-up")
     TxLog.initPartitioned(spark, root2,
       Seq((1, "x", "en")).toDF("id", "v", "lang"), "lang")
     TxLog.setProperties(root2, Map("type_widening" -> "true"))
@@ -802,7 +833,7 @@ class TxSqlSpec extends SparkSpec {
 
   test("ANALYZE stats drive the plan: fresh stats flip a dim-fact join " +
       "to broadcast, metadata commits keep them fresh, data commits stale them") {
-    val root = freshRoot("statsbc")
+    val root = freshRoot("txsql-statsbc")
     import spark.implicits._
     // dim whose ON-DISK bytes exceed the (test-scale) broadcast
     // threshold — incompressible md5-derived payload — while its exact

@@ -14,11 +14,8 @@ class UpsertSpec extends SparkSpec {
 
   private def src = Tables.documents(spark, sf).select("doc_id", "text", "lang")
 
-  private def freshRoot(tag: String) =
-    s"/root/repo/target/upsert-test-$tag-${System.nanoTime()}"
-
   test("adopted hive table: upsert replaces by key, inserts, leaves the rest") {
-    val root = freshRoot("merge")
+    val root = freshRoot("upsert-test-merge")
     src.coalesce(2).write.partitionBy("lang").parquet(root)
     TxLog.adopt(spark, root, Some("lang"))
     val n = src.count()
@@ -39,7 +36,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsert into a never-seen partition mints it instead of throwing") {
-    val root = freshRoot("mint")
+    val root = freshRoot("upsert-test-mint")
     val fresh = src.select("lang").head().getString(0)
     src.filter(col("lang") =!= fresh).write.partitionBy("lang").parquet(root)
     TxLog.adopt(spark, root, Some("lang"))
@@ -52,7 +49,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("partition-scoped upsert rewrites ONLY touched partitions (kept files by reference)") {
-    val root = freshRoot("scope")
+    val root = freshRoot("upsert-test-scope")
     src.write.partitionBy("lang").parquet(root)
     TxLog.adopt(spark, root, Some("lang"))
     val langs = TxLog.snapshot(root).get.entries.flatMap(_.part).distinct.sorted
@@ -86,7 +83,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("a partition filter prunes the plan to one file group") {
-    val root = freshRoot("prune")
+    val root = freshRoot("upsert-test-prune")
     src.write.partitionBy("lang").parquet(root)
     TxLog.adopt(spark, root, Some("lang"))
     val langs = TxLog.snapshot(root).get.entries.flatMap(_.part).distinct.sorted
@@ -103,7 +100,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("two-column table: upsert rewrites only the touched (lang, day) tuple; readPruned scans exactly its files") {
-    val root = freshRoot("twocol")
+    val root = freshRoot("upsert-test-twocol")
     val docs = src.withColumn("day", (col("doc_id") % 3).cast("int"))
     TxLog.initPartitioned(spark, root, docs, Seq("lang", "day"), "")
     val before = TxLog.snapshot(root).get
@@ -155,7 +152,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("delete that empties a (lang, day) tuple leaves the manifest decodable everywhere") {
-    val root = freshRoot("emptytuple")
+    val root = freshRoot("upsert-test-emptytuple")
     val docs = src.withColumn("day", (col("doc_id") % 3).cast("int"))
     TxLog.initPartitioned(spark, root, docs, Seq("lang", "day"), "")
     val before = TxLog.snapshot(root).get
@@ -187,7 +184,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("empty init of a two-column table publishes a decodable all-null placeholder") {
-    val root = freshRoot("emptyinit")
+    val root = freshRoot("upsert-test-emptyinit")
     val docs = src.withColumn("day", (col("doc_id") % 3).cast("int"))
     TxLog.initPartitioned(spark, root, docs.filter(lit(false)),
       Seq("lang", "day"), "")
@@ -206,7 +203,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("hive-escaped and NULL partition values merge into the writer's partitions") {
-    val root = freshRoot("esc")
+    val root = freshRoot("upsert-test-esc")
     import spark.implicits._
     // partition values a partitioned writer escapes (space is literal in
     // hive naming, '/' and '%' are not) plus a NULL (default partition)
@@ -232,7 +229,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("empty-string partition values merge into the hive default partition") {
-    val root = freshRoot("empty")
+    val root = freshRoot("upsert-test-empty")
     import spark.implicits._
     // Spark's partitioned writer stores BOTH null and "" under
     // __HIVE_DEFAULT_PARTITION__ (and reads them back as null)
@@ -254,7 +251,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("generic ops on a partitioned table preserve partition metadata (delete/append/compact/full upsert)") {
-    val root = freshRoot("generic")
+    val root = freshRoot("upsert-test-generic")
     src.write.partitionBy("lang").parquet(root)
     TxLog.adopt(spark, root, Some("lang"))
     val n = src.count()
@@ -288,7 +285,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("concurrent partition-scoped upserts both land (CAS retry on the partitioned path)") {
-    val root = freshRoot("race")
+    val root = freshRoot("upsert-test-race")
     import spark.implicits._
     val base = Seq((1L, "a", "x"), (2L, "b", "y")).toDF("doc_id", "text", "lang")
     base.write.partitionBy("lang").parquet(root)
@@ -306,7 +303,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("partition-scoped merge: additive batch columns land, old rows surface NULL; retypes rejected") {
-    val root = freshRoot("evolve")
+    val root = freshRoot("upsert-test-evolve")
     import spark.implicits._
     val base = Seq((1L, "a", "x"), (2L, "b", "y")).toDF("doc_id", "text", "lang")
     base.write.partitionBy("lang").parquet(root)
@@ -340,13 +337,13 @@ class UpsertSpec extends SparkSpec {
     val batch = Seq((1L, "a", java.sql.Timestamp.valueOf("2026-08-14 00:00:00")))
       .toDF("doc_id", "text", "ts")
     val e = intercept[IllegalArgumentException] {
-      TxLog.upsertPartitioned(spark, freshRoot("unstable"), batch, "doc_id", "ts")
+      TxLog.upsertPartitioned(spark, freshRoot("upsert-test-unstable"), batch, "doc_id", "ts")
     }
     assert(e.getMessage.contains("not"))
   }
 
   test("upsertPartitioned on an uninitialized root creates the table") {
-    val root = freshRoot("create")
+    val root = freshRoot("upsert-test-create")
     val batch = src.limit(20)
     val stats = TxLog.upsertPartitioned(spark, root, batch, "doc_id", "lang")
     assert(stats.forall(s => s.rowsBefore === 0L && s.rowsAfter === s.batchRows))
