@@ -1,7 +1,7 @@
 #!/bin/bash
 # Two full-suite Bench reps at sf0.1 (noisy-host min-of-2 protocol).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 for i in 1 2; do
   echo "=== rep $i ==="
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness (replaces the reference's chrono/cudaEvent timing at
   * stockify.cu:214-246). Runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -13,19 +11,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build("graft-bench", cpus)
 
     // Warm the JVM + file-listing caches once (JIT, codegen compiler, parquet
     // footers) so per-query numbers measure the queries, not session startup.
@@ -52,7 +40,7 @@ object Bench {
     // as suspect and re-run on a quiet host before adjudicating.
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 4000000000L, 1L, cpus.toInt)
+      spark.range(0L, 4000000000L, 1L, cpus)
         .selectExpr("sum((id * 31) % 1000003) AS s") // ANSI-safe: no overflow
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
@@ -60,7 +48,7 @@ object Bench {
     canaryOnce() // JIT warm; discarded
     val canaryStart = (1 to 3).map(_ => canaryOnce()).min
 
-    val warmDir = "/root/testdata/sf0.001"
+    val warmDir = Paths.sf("sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       defs.foreach { d =>
         try d.run(spark, warmDir).write.mode("overwrite").format("noop").save()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve harness for the dedup + ANN tier (dev/diagnostic main,
@@ -79,16 +79,8 @@ object ScalingBench {
     "g2_triangle_count", "g3_bfs_hops")
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+    val spark = GraftSession.build("graft-scaling-bench")
 
     def replicate(df: DataFrame, idCol: String, k: Int,
         perturb: Boolean): DataFrame =
@@ -101,7 +93,7 @@ object ScalingBench {
       }.reduce(_ unionByName _)
 
     def ensureCorpus(k: Int): String = {
-      val dir = s"/root/repo/target/scaling/x$k"
+      val dir = s"${Paths.work}/scaling/x$k"
       val marker = new java.io.File(s"$dir/documents.parquet/_SUCCESS")
       if (!marker.exists()) {
         replicate(sources.Tables.documents(spark, base), "doc_id", k, perturb = true)
@@ -115,7 +107,7 @@ object ScalingBench {
     /** Fact corpus ×k: orderkeys/users shifted per replica into disjoint
       * ranges, dims copied once. */
     def ensureFactCorpus(k: Int): String = {
-      val dir = s"/root/repo/target/scaling/fact-x$k"
+      val dir = s"${Paths.work}/scaling/fact-x$k"
       val marker = new java.io.File(s"$dir/lineitem.parquet/_SUCCESS")
       if (!marker.exists()) {
         def shifted(t: DataFrame, keys: Seq[String]): DataFrame =
@@ -188,7 +180,7 @@ object ScalingBench {
     /** Graph corpus ×k: disjoint subgraph copies — node ids shift WITH
       * the orderkeys (unlike the fact corpus, which keeps dims fixed). */
     def ensureGraphCorpus(k: Int): String = {
-      val dir = s"/root/repo/target/scaling/graph-x$k"
+      val dir = s"${Paths.work}/scaling/graph-x$k"
       val marker = new java.io.File(s"$dir/lineitem.parquet/_SUCCESS")
       if (!marker.exists()) {
         def shifted(t: DataFrame, keys: Seq[String]): DataFrame =

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7 at the repo root.
   *
   * Every operator family registers its queries as [[QueryDef]]s; this object
   * flattens them into the `queries` / `oracleSql` maps the driver consumes.
@@ -57,10 +57,10 @@ object SparkEntry {
     operators.IvfIndex.rawDefs ++
     operators.Quantization.rawDefs
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** Flagship query on the sf0.001 test tables; driver smoke-checks rows>0.
     * TPC-H Q1 shape: scan → grouped partial/final agg → tiny sort. */
   def entry(spark: SparkSession): DataFrame =
-    operators.Aggregates.q1TpchStyle(spark, "/root/testdata/sf0.001")
+    operators.Aggregates.q1TpchStyle(spark, Paths.sf("sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

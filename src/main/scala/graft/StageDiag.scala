@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -12,7 +11,7 @@ import scala.collection.mutable.ArrayBuffer
   * (disabled in this sandbox's harness runs).
   *
   * Usage: runMain graft.StageDiag <name> [<name> ...]
-  *   env SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+  *   env SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all cores),
   *   SPARK_GRAFT_DIAG_REPS (default 2; stages printed for the LAST rep so
   *   codegen/JIT warmup does not pollute the read).
   */
@@ -21,19 +20,9 @@ object StageDiag {
     inputMb: Double, shReadMb: Double, shWriteMb: Double, spillMb: Double)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
     val reps = sys.env.getOrElse("SPARK_GRAFT_DIAG_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stagediag")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-stagediag")
 
     val stages = ArrayBuffer.empty[St]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -60,7 +49,7 @@ object StageDiag {
         case None => println(s"(unknown query: $name)")
         case Some(run) =>
           // warm at the smallest sf (codegen cache), like Bench
-          try run(spark, "/root/testdata/sf0.001")
+          try run(spark, Paths.sf("sf0.001"))
             .write.mode("overwrite").format("noop").save()
           catch { case _: Throwable => () }
           spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,16 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object StocksBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stocks-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver memory cannot be set here (local mode = this JVM,
-      // -Xmx is fixed at launch); size the launcher's heap via SBT_OPTS
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // driver memory cannot be set here (local mode = this JVM, -Xmx is
+    // fixed at launch); size the launcher's heap via SBT_OPTS
+    val spark = GraftSession.build("graft-stocks-bench")
 
     val csvPath = sources.Tables.ensureStocksCsv()
     // load once; materialize the cache BEFORE timing (the reference times
@@ -104,7 +97,7 @@ object StocksBench {
     val syn = sources.Tables.syntheticStocks(spark, 10000000L)
       .withColumn("rid", monotonically_increasing_id()).cache()
     results("synthetic_10m_materialize") = time(syn.count())
-    val sortedLayout = "/root/repo/target/stocks-bench-index/sorted"
+    val sortedLayout = s"${Paths.work}/stocks-bench-index/sorted"
     results("index_build_sorted") = time {
       syn.repartitionByRange(32, col("volume"))
         .sortWithinPartitions("volume")
@@ -117,7 +110,7 @@ object StocksBench {
     results("linear_scan_volume_ge_1_8m") = time(
       syn.filter(col("volume") >= 1800000)
         .agg(count(lit(1)), sum("close")).collect())
-    val mapLayout = "/root/repo/target/stocks-bench-index/map"
+    val mapLayout = s"${Paths.work}/stocks-bench-index/map"
     results("map_index_build") = time {
       val lastPerKey = Window.partitionBy("volume").orderBy(col("rid").desc)
       syn.withColumn("rn", row_number().over(lastPerKey))

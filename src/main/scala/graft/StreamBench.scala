@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -73,22 +73,13 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // micro-batch frames are tiny; AQE coalesces their 32-way shuffles
-      // down to the handful of partitions the data justifies (foreachBatch
-      // bodies run as ordinary batch jobs, so AQE applies to sig_ingest)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = s"/root/repo/target/stream-bench-${System.nanoTime()}"
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+    // micro-batch frames are tiny; AQE (on by default) coalesces their
+    // per-core shuffles down to the handful of partitions the data
+    // justifies (foreachBatch bodies run as ordinary batch jobs, so AQE
+    // applies to sig_ingest)
+    val spark = GraftSession.build("graft-stream-bench")
+    val base = s"${Paths.work}/stream-bench-${System.nanoTime()}"
 
     // ---- funnel FSM over the events stream, one file per micro-batch
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

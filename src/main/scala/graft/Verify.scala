@@ -1,23 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // MICROS (not the INT96 default) so parquet footers carry valid
-      // timestamp statistics the txlog's data skipping can use — the
-      // Delta/Iceberg interop choice (INT96 stats are invalid per spec)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev subset filter (same contract as Bench): comma-separated names;
     // unset = the full registry (what the driver runs)
@@ -46,7 +33,7 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    java.nio.file.Files.writeString(java.nio.file.Path.of(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

@@ -133,7 +133,7 @@ object Compaction {
   private val FixtureFiles = 64
   private val TargetFiles = 4
   private def ensureFixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"/root/repo/target/compact-fixture-${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val out = s"${graft.Paths.work}/compact-fixture-${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     if (!new java.io.File(s"$out/_SUCCESS").exists()) {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       Tables.documents(s, dir).select("doc_id", "text")

@@ -35,7 +35,7 @@ object IndexPath {
   /** Sorted-layout cache dir, one per scale factor (build artifacts live
     * under target/, never in the read-only testdata). */
   def layoutDir(dir: String): String =
-    s"/root/repo/target/graft-idx/${new java.io.File(dir).getName}"
+    s"${graft.Paths.work}/graft-idx/${new java.io.File(dir).getName}"
 
   /** I1 (stockify.cu:658-669): build the ordered layout — global sort on
     * the probe column, written with small row groups so min/max pruning has
@@ -216,7 +216,7 @@ object IndexPath {
     * a keep flag, written and read back as parquet so the dim is opaque
     * to constant folding. Idempotent per sf dir. */
   def buildPartitionedOrders(s: SparkSession, dir: String): String = synchronized {
-    val out = s"/root/repo/target/graft-part/${new java.io.File(dir).getName}"
+    val out = s"${graft.Paths.work}/graft-part/${new java.io.File(dir).getName}"
     if (!new java.io.File(s"$out/years/_SUCCESS").exists()) {
       val o = Tables.orders(s, dir)
         .withColumn("o_year", year(col("o_orderdate").cast("date")))

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * data collect.
   *
   * The registered sim3/sim6 queries build lazily into
-  * /root/repo/target/graft-index/<kind>-<sf> on first use and rebuild
+  * `target/graft-index/<kind>-<sf>` on first use and rebuild
   * only when the corpus row count changes — the testdata is regenerated
   * deterministically per scale factor, so count is a sufficient staleness
   * key here; a production index would carry a snapshot/version id.
@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
 object IvfIndex {
 
   /** Root for the lazily-built per-scale-factor indexes (gitignored). */
-  val DefaultRoot = "/root/repo/target/graft-index"
+  val DefaultRoot = s"${graft.Paths.work}/graft-index"
 
   private def pathFor(kind: String, sfDir: String): String =
     s"$DefaultRoot/$kind-" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")

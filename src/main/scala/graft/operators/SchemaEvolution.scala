@@ -40,11 +40,11 @@ object SchemaEvolution {
       .collect()(0)
     val tag = java.lang.Long.toHexString(fp.getLong(0) * 1000003L + fp.getLong(1))
     val prefix = s"evolve-fixture-${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val out = s"/root/repo/target/$prefix-$tag"
+    val out = s"${graft.Paths.work}/$prefix-$tag"
     // stale-tag fixtures from earlier testdata generations are full
     // staged document tables — drop them so regenerations don't accrete
     // unbounded disk under target/
-    Option(new java.io.File("/root/repo/target").listFiles())
+    Option(new java.io.File(graft.Paths.work).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(prefix) && f.getName != s"$prefix-$tag" &&
         !f.getName.startsWith(s"$prefix-$tag."))

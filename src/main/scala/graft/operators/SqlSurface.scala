@@ -898,7 +898,7 @@ object SqlSurface {
         |       CAST(sum((doc_id + 1) * octet_length(encode(text))) AS BIGINT) AS ck
         |FROM documents WHERE doc_id % 3 <> 1
         |GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-      val out = "/root/repo/target/orc-docs-" +
+      val out = s"${graft.Paths.work}/orc-docs-" +
         dir.replaceAll("[^A-Za-z0-9.]", "_")
       this.synchronized {
         if (!new java.io.File(s"$out/_SUCCESS").isFile) {

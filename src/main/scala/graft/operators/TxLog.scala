@@ -551,10 +551,12 @@ object TxLog {
       }
     }
     if (base == null) base = Seq.empty // chain bottoms out below version 1
-    deltas.foldLeft(base) { (acc, d) =>
-      acc.filterNot(e => d.removes(e.path)) ++ d.adds
-    }
+    deltas.foldLeft(base)(applyDelta)
   }
+
+  /** The file list after delta manifest `d`, given its parent's list. */
+  private def applyDelta(parent: Seq[FileEntry], d: Manifest): Seq[FileEntry] =
+    parent.filterNot(e => d.removes(e.path)) ++ d.adds
 
   /** Latest COMPLETE version, 0 when the table has no log yet. With a
     * checkpoint present this is O(versions-since-checkpoint): probe
@@ -604,14 +606,25 @@ object TxLog {
       nFiles: Int, notes: Set[String])
 
   /** Commit history over the RETAINED versions, newest first (Delta's
-    * `DESCRIBE HISTORY`). Deliberately a full-listing walk: history is
-    * an audit operation over exactly the manifests that still exist, not
-    * a hot-path resolution (those go through the checkpoint). */
-  def history(root: String): Seq[HistoryEntry] =
-    allVersions(root).reverse.flatMap { v =>
-      parseManifest(manifestPath(root, v)).map(m =>
-        HistoryEntry(v, m.timestampMs, resolveEntries(root, v, m).size, m.notes))
-    }
+    * `DESCRIBE HISTORY`). A full-listing audit over exactly the manifests
+    * that still exist, folded forward once: the oldest retained version
+    * resolves through its base, and each later delta applies to its
+    * parent's file list, so every manifest is parsed once — O(versions),
+    * not a walk back to a checkpoint per version. A version whose parent
+    * is torn resolves on its own, as a snapshot would. */
+  def history(root: String): Seq[HistoryEntry] = {
+    var parent: Option[(Long, Seq[FileEntry])] = None
+    allVersions(root).flatMap { v =>
+      parseManifest(manifestPath(root, v)).map { m =>
+        val entries = parent match {
+          case Some((u, es)) if m.delta && u == v - 1 => applyDelta(es, m)
+          case _ => resolveEntries(root, v, m)
+        }
+        parent = Some(v -> entries)
+        HistoryEntry(v, m.timestampMs, entries.size, m.notes)
+      }
+    }.reverse
+  }
 
   /** Pin a snapshot of version `v` (default: latest). None for a table
     * with no committed version. */
@@ -4759,7 +4772,7 @@ object TxLog {
     * mutate their fixture, so each run must start clean). Shared by the
     * s7/s8/s10/s11/s12 defs. */
   private[operators] def freshRoot(dir: String, tag: String): String = {
-    val root = s"/root/repo/target/graft-maint/${new java.io.File(dir).getName}/$tag"
+    val root = s"${graft.Paths.work}/graft-maint/${new java.io.File(dir).getName}/$tag"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     // this path's next incarnation restarts version numbering — stale
     // append-step verdicts must not certify the new log's ranges

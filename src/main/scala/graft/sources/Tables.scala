@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Paths
+
 /** Sources (reference S1-S4, stockify.cu:32-71, 209-212, 647-657).
   *
   * The reference's one table is a fixed-schema in-memory row vector loaded
@@ -37,12 +39,12 @@ object Tables {
     * into place, so an interrupted run can never leave a partial file
     * that the exists() fast-path would silently reuse. */
   def ensureStocksCsv(): String = synchronized {
-    val out = new java.io.File("/root/repo/target/stocks-csv")
+    val out = new java.io.File(s"${Paths.work}/stocks-csv")
     val f = new java.io.File(out, "stocks.csv")
     if (!f.exists()) {
       out.mkdirs()
       val tmp = new java.io.File(out, "stocks.csv.tmp")
-      val zip = new java.util.zip.ZipFile("/root/reference/stocks.csv.zip")
+      val zip = new java.util.zip.ZipFile(Paths.stocksZip)
       try {
         val entry = zip.getEntry("stocks.csv")
         java.nio.file.Files.copy(zip.getInputStream(entry), tmp.toPath,
@@ -55,7 +57,7 @@ object Tables {
   }
 
   /** Materialize the reference's 5,613,300-row stocks table as Parquet
-    * at a STABLE absolute path, once per machine — the columnar twin of
+    * at an absolute path under [[Paths.work]], once per checkout — the columnar twin of
     * [[ensureStocksCsv]] that both the Spark stk-queries and the DuckDB
     * oracle (via read_parquet on the same path) consume, so the
     * reference's literal dataset becomes differentially hash-checkable.
@@ -71,11 +73,11 @@ object Tables {
   // dataset), not a local core count — the table never scales, so the
   // right quantum is rows-per-task, and a session of any width ≤ 64
   // decodes at full parallelism. NOT defaultParallelism: the fixture is
-  // created once per machine, and a narrow session (Verify at 8 cores)
+  // created once per checkout, and a narrow session (Verify at 8 cores)
   // would freeze a narrow layout for every later wide session. The path
-  // bump forces stale 8-file fixtures on any machine to regenerate (the
+  // bump forces stale 8-file fixtures in any checkout to regenerate (the
   // _SUCCESS fast-path can't see layout).
-  val StocksParquetDir = "/root/repo/target/stocks-parquet-v2"
+  val StocksParquetDir = s"${Paths.work}/stocks-parquet-v2"
   def ensureStocksParquet(spark: SparkSession): String = synchronized {
     val dir = new java.io.File(StocksParquetDir)
     if (!new java.io.File(dir, "_SUCCESS").exists()) {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 class RegistrySpec extends SparkSpec {
 
   test("registered query names are unique and snake_case") {
@@ -101,5 +103,24 @@ class RegistrySpec extends SparkSpec {
       intercept[IllegalStateException] { plans.PlanAudit.assertScaleSafe(df) }
       plans.PlanAudit.assertScaleSafe(df, allowSinglePartitionWindows = true)
     }
+  }
+
+  test("every fixed path comes from graft.Paths: no absolute literal elsewhere in src") {
+    // a hard-coded root would make a checkout elsewhere write into this
+    // one; the needle is split so this file does not match itself
+    val needle = "\"/" + "root/"
+    val src = new java.io.File(new java.io.File(Paths.work).getParentFile, "src")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val files = scalaFiles(src)
+    assert(files.exists(_.getName == "Paths.scala"), s"no sources scanned under $src")
+    val offenders = for {
+      f <- files if f.getName != "Paths.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if line.contains(needle)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SparkSession.builder.getOrCreate` dedups across suites). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  val sf: String = "/root/testdata/sf0.001"
+  val sf: String = Paths.sf("sf0.001")
 
   /** Run `f` with the given SQL confs set, restoring prior values after —
     * the session is JVM-shared across suites, so tests must not leak confs. */
@@ -21,25 +21,14 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** A fresh table root `<tag>-<nanoTime>` in the build's target
-    * directory (the one the stocks fixture lives in). */
+  /** A fresh scratch root `<tag>-<nanoTime>` under [[Paths.work]]. */
   def freshRoot(tag: String): String =
-    s"${SparkSpec.targetDir}/$tag-${System.nanoTime()}"
+    s"${Paths.work}/$tag-${System.nanoTime()}"
 }
 
 object SparkSpec {
-  val targetDir: String =
-    new java.io.File(graft.sources.Tables.StocksParquetDir).getParent
-
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

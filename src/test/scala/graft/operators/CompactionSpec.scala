@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class CompactionSpec extends SparkSpec {
 
   private def stage(n: Int): String = {
-    val dir = s"/root/repo/target/compact-test-${System.nanoTime()}"
+    val dir = freshRoot("compact-test")
     Tables.documents(spark, sf).select("doc_id", "text")
       .repartition(n).write.parquet(dir)
     dir
@@ -85,7 +85,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("partitioned compaction merges within partitions, keeps the scheme") {
-    val root = s"/root/repo/target/compact-part-${System.nanoTime()}"
+    val root = freshRoot("compact-part")
     Tables.documents(spark, sf).select("doc_id", "text", "lang")
       .repartition(12).write.partitionBy("lang").parquet(root)
     val partsBefore = new java.io.File(root).listFiles()

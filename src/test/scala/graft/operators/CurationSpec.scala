@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
@@ -83,7 +83,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("cur3 quota binds: no source exceeds K, ranks are dense, runs repeat") {
-    val out = q("cur3_source_quota").run(spark, "/root/testdata/sf0.01")
+    val out = q("cur3_source_quota").run(spark, Paths.sf("sf0.01"))
     val perSrc = out.groupBy("source").agg(count(lit(1)).as("n"), max("rn").as("mx"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(perSrc.nonEmpty)
@@ -93,7 +93,7 @@ class CurationSpec extends SparkSpec {
     }
     // the quota must actually bind somewhere at sf0.01 (en sources have >10 docs)
     assert(perSrc.exists(_._2 === 10L), "quota never bound — test corpus too small")
-    val again = q("cur3_source_quota").run(spark, "/root/testdata/sf0.01").collect()
+    val again = q("cur3_source_quota").run(spark, Paths.sf("sf0.01")).collect()
     assert(out.collect().toSeq === again.toSeq)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import graft.operators.Filters._
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -51,7 +51,7 @@ class FilterSpec extends SparkSpec {
     // sf0.01 path: the sf0.001 relation is cached by this suite, and an
     // InMemoryTableScan (correctly) has no parquet PushedFilters.
     val plan = filterRows(
-      Tables.lineitem(spark, "/root/testdata/sf0.01"), Pred("l_quantity", Ge, 45))
+      Tables.lineitem(spark, Paths.sf("sf0.01")), Pred("l_quantity", Ge, 45))
       .queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThanOrEqual(l_quantity,45"),
       s"expected pushed filter in plan:\n$plan")

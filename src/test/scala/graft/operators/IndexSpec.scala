@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * uniform in [1.2e6, 2.9e6] — probing the reference cutoff region. */
 class IndexSpec extends SparkSpec {
 
-  private val base = "/root/repo/target/graft-idx-test"
+  private val base = s"${Paths.work}/graft-idx-test"
 
   private def scanOutputRows(df: DataFrame): Long = {
     df.collect()

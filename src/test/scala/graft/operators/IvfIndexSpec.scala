@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -25,7 +25,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("IVF probe scans only the probed lists (partition pruning) and matches the inline result") {
-    val base = "/root/repo/target/graft-ivfidx-test/ivf"
+    val base = s"${Paths.work}/graft-ivfidx-test/ivf"
     IvfIndex.buildIvf(emb, base)
     val n = emb.count()
     val q = broadcast(emb.filter(col("vec_id") === 0)
@@ -51,7 +51,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("incremental append folds new vectors into the persisted lists without a rebuild") {
-    val base = "/root/repo/target/graft-ivfidx-test/ivf-append"
+    val base = s"${Paths.work}/graft-ivfidx-test/ivf-append"
     val n = emb.count()
     val oldHalf = emb.filter(col("vec_id") % 2 === 0)
     val newHalf = emb.filter(col("vec_id") % 2 =!= 0)
@@ -92,7 +92,7 @@ class IvfIndexSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val base = "/root/repo/target/graft-ivfidx-test/ivf-concurrent"
+    val base = s"${Paths.work}/graft-ivfidx-test/ivf-concurrent"
     val n = emb.count()
     // build on a third of the corpus, then race two disjoint batches
     IvfIndex.buildIvf(emb.filter(col("vec_id") % 3 === 0), base)
@@ -109,7 +109,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendIvf rejects a batch whose vec_ids overlap the index (disjoint-id contract)") {
-    val base = "/root/repo/target/graft-ivfidx-test/ivf-overlap"
+    val base = s"${Paths.work}/graft-ivfidx-test/ivf-overlap"
     IvfIndex.buildIvf(emb.filter(col("vec_id") < 30), base)
     val before = IvfIndex.lists(spark, base).count()
     val vBefore = TxLog.currentVersion(s"$base/lists")
@@ -123,7 +123,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("IVF-PQ probe prunes the code scan and matches the inline result") {
-    val base = "/root/repo/target/graft-ivfidx-test/ivfpq"
+    val base = s"${Paths.work}/graft-ivfidx-test/ivfpq"
     IvfIndex.buildIvfPq(emb, base)
     val n = emb.count()
 

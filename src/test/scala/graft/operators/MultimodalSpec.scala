@@ -24,7 +24,7 @@ class MultimodalSpec extends SparkSpec {
     // under target/ like the suite's other artifacts (cleaned with the
     // build), not an ever-accreting /tmp directory
     val dir = java.nio.file.Paths.get(
-      s"/root/repo/target/binfiles-${System.nanoTime()}")
+      freshRoot("binfiles"))
     java.nio.file.Files.createDirectories(dir)
     val media = Multimodal.syntheticMedia(spark, sf).collect().take(8)
     media.foreach { m =>

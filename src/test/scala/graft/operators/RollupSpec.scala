@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class RollupSpec extends SparkSpec {
 
   private def freshStore(tag: String): String = {
-    val p = s"/root/repo/target/graft-maint-test/$tag"
+    val p = s"${Paths.work}/graft-maint-test/$tag"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     p
   }

@@ -28,7 +28,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       "(old vintages upcast at scan), a narrower batch upcasts at " +
       "stage time, unsafe retypes still refuse") {
     import org.apache.spark.sql.types.{IntegerType, LongType, DoubleType, FloatType}
-    val root = s"/root/repo/target/widen-${System.nanoTime()}"
+    val root = freshRoot("widen")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1, 1.5f), (2, 2.5f)).toDF("id", "score")) // v1
     assert(TxLog.read(spark, root).schema("id").dataType === IntegerType)
@@ -83,7 +83,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       "the property, untouched partitions' narrow files upcast at scan, " +
       "default still refuses") {
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val root = s"/root/repo/target/widen-upsert-${System.nanoTime()}"
+    val root = freshRoot("widen-upsert")
     import spark.implicits._
     TxLog.initPartitioned(spark, root,
       Seq((1, "a", "en"), (2, "b", "de"), (3, "c", "fr"))
@@ -126,7 +126,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   test("type widening composes with column mapping: a RENAMED column " +
       "widens (the physical field retypes under its mapped name)") {
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val root = s"/root/repo/target/widen-map-${System.nanoTime()}"
+    val root = freshRoot("widen-map")
     import spark.implicits._
     TxLog.init(spark, root, Seq((1, "a")).toDF("id", "s")) // v1: int id
     TxLog.setProperties(root, Map("type_widening" -> "true")) // v2: opt-in

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,8 @@ class SigIndexSpec extends SparkSpec {
     val b1 = docs.filter(col("doc_id") % 3 === 0)
     val b2 = docs.filter(col("doc_id") % 3 === 1)
     val probeBatch = docs.filter(col("doc_id") % 3 === 2)
-    val incDir = s"/root/repo/target/sigidx-inc-${System.nanoTime()}"
-    val fullDir = s"/root/repo/target/sigidx-full-${System.nanoTime()}"
+    val incDir = freshRoot("sigidx-inc")
+    val fullDir = freshRoot("sigidx-full")
     SigIndex.build(b1, incDir)
     SigIndex.append(b2, incDir)
     SigIndex.build(b1.unionByName(b2), fullDir)
@@ -31,9 +31,9 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("sync follows the corpus change feed: appends, MoR deletes, MoR updates — sync == rebuild") {
-    val corpus = s"/root/repo/target/sigidx-corpus-${System.nanoTime()}"
-    val idxDir = s"/root/repo/target/sigidx-sync-${System.nanoTime()}"
-    val rebuildDir = s"/root/repo/target/sigidx-syncfull-${System.nanoTime()}"
+    val corpus = freshRoot("sigidx-corpus")
+    val idxDir = freshRoot("sigidx-sync")
+    val rebuildDir = freshRoot("sigidx-syncfull")
     val base = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
     TxLog.init(spark, corpus, base.repartition(4))
     assert(SigIndex.buildFrom(spark, corpus, idxDir) === 1L)
@@ -69,10 +69,10 @@ class SigIndexSpec extends SparkSpec {
 
   test("syncStream: the index follows the corpus as a CONTINUOUS stream " +
       "(stream == sync == rebuild), resumable from the checkpoint") {
-    val corpus = s"/root/repo/target/sigidx-scorpus-${System.nanoTime()}"
-    val idxDir = s"/root/repo/target/sigidx-stream-${System.nanoTime()}"
-    val rebuildDir = s"/root/repo/target/sigidx-sfull-${System.nanoTime()}"
-    val ckpt = s"/root/repo/target/sigidx-sckpt-${System.nanoTime()}"
+    val corpus = freshRoot("sigidx-scorpus")
+    val idxDir = freshRoot("sigidx-stream")
+    val rebuildDir = freshRoot("sigidx-sfull")
+    val ckpt = freshRoot("sigidx-sckpt")
     val base = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
     TxLog.init(spark, corpus, base.repartition(4))
     assert(SigIndex.buildFrom(spark, corpus, idxDir) === 1L)
@@ -110,7 +110,7 @@ class SigIndexSpec extends SparkSpec {
 
   test("append with overlapping doc_ids is rejected before any commit") {
     val b1 = docs.filter(col("doc_id") < 50)
-    val dir = s"/root/repo/target/sigidx-ovl-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-ovl")
     SigIndex.build(b1, dir)
     val before = SigIndex.indexedCount(dir)
     val vBefore = TxLog.currentVersion(SigIndex.tableRoot(dir))
@@ -127,7 +127,7 @@ class SigIndexSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = s"/root/repo/target/sigidx-race-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-race")
     SigIndex.build(docs.filter(col("doc_id") % 3 === 0), dir)
     // two disjoint batches race: the CAS loser re-reads the fresh
     // snapshot and re-derives its count — no lost update
@@ -140,7 +140,7 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("a crashed append (staged data, no manifest) is invisible and vacuumable") {
-    val dir = s"/root/repo/target/sigidx-crash-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-crash")
     SigIndex.build(docs.filter(col("doc_id") < 100), dir)
     val root = SigIndex.tableRoot(dir)
     val vBefore = TxLog.currentVersion(root)
@@ -162,8 +162,8 @@ class SigIndexSpec extends SparkSpec {
       "(AQE empty-relation guard), and its overlap gate still fires") {
     import spark.implicits._
     val tag = System.nanoTime()
-    val idx = s"/root/repo/target/sigidx-short-$tag"
-    val sink = s"/root/repo/target/sigidx-short-pairs-$tag"
+    val idx = s"${Paths.work}/sigidx-short-$tag"
+    val sink = s"${Paths.work}/sigidx-short-pairs-$tag"
     val b0 = docs.filter(col("doc_id") < 100).select("doc_id", "text")
     SigIndex.ingestBatch(spark, idx, sink, b0, 0L) // bootstrap
     val n0 = SigIndex.indexedCount(idx).get
@@ -195,7 +195,7 @@ class SigIndexSpec extends SparkSpec {
 
   test("a batch sharing no shingles with the corpus probes to empty") {
     import spark.implicits._
-    val dir = s"/root/repo/target/sigidx-disj-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-disj")
     SigIndex.build(docs.filter(col("doc_id") < 100), dir)
     val alien = Seq((100000L, (1 to 20).map(i => s"alien$i").mkString(" ")))
       .toDF("doc_id", "text")
@@ -204,7 +204,7 @@ class SigIndexSpec extends SparkSpec {
 
   test("past the shingle-broadcast budget the probe falls back to the " +
       "shuffled exactJaccard plan — identical pairs either way") {
-    val dir = s"/root/repo/target/sigidx-shguard-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-shguard")
     SigIndex.build(docs.filter(col("doc_id") % 3 =!= 2), dir)
     val probeBatch = docs.filter(col("doc_id") % 3 === 2)
     def run() = SigIndex.probe(spark, dir, probeBatch)
@@ -225,7 +225,7 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("probe plan prunes the postings scan behind a semi join (non-candidates never leave the index)") {
-    val dir = s"/root/repo/target/sigidx-plan-${System.nanoTime()}"
+    val dir = freshRoot("sigidx-plan")
     SigIndex.build(docs.filter(col("doc_id") % 5 =!= 0), dir)
     val plan = SigIndex.probe(spark, dir, docs.filter(col("doc_id") % 5 === 0))
       .queryExecution.executedPlan.toString
@@ -234,7 +234,7 @@ class SigIndexSpec extends SparkSpec {
 
   test("streaming ingest: micro-batches probe-then-append; emitted pairs cover the cross-batch near-dups") {
     val tag = System.nanoTime()
-    val stage = s"/root/repo/target/sigidx-stream-src-$tag"
+    val stage = s"${Paths.work}/sigidx-stream-src-$tag"
     new java.io.File(stage).mkdirs()
     val b1 = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val b2 = docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
@@ -248,10 +248,10 @@ class SigIndexSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$stage/*.parquet")
-    val idx = s"/root/repo/target/sigidx-stream-idx-$tag"
-    val sink = s"/root/repo/target/sigidx-stream-pairs-$tag"
+    val idx = s"${Paths.work}/sigidx-stream-idx-$tag"
+    val sink = s"${Paths.work}/sigidx-stream-pairs-$tag"
     val q = SigIndex.streamingIngest(stream, idx,
-      sink, s"/root/repo/target/chk/sig-$tag")
+      sink, s"${Paths.work}/chk/sig-$tag")
     q.awaitTermination(180000)
     assert(!q.isActive, "ingest stream did not finish")
     // emitted pairs, as an UNORDERED id-pair set (batch order is the file
@@ -278,8 +278,8 @@ class SigIndexSpec extends SparkSpec {
 
   test("ingest batches replay idempotently (at-least-once foreachBatch)") {
     val tag = System.nanoTime()
-    val idx = s"/root/repo/target/sigidx-replay-idx-$tag"
-    val sink = s"/root/repo/target/sigidx-replay-pairs-$tag"
+    val idx = s"${Paths.work}/sigidx-replay-idx-$tag"
+    val sink = s"${Paths.work}/sigidx-replay-pairs-$tag"
     val b1 = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val b2 = docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
 

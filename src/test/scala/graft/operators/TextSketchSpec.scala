@@ -51,7 +51,7 @@ class TextSketchSpec extends SparkSpec {
     // identical length and df contribution; doc 1 has tf(table)=3 vs
     // doc 2's tf=1 -> strictly higher score. doc 3 has no query terms and
     // must be absent.
-    val dir = s"/root/repo/target/bm25-fixture-${System.nanoTime()}"
+    val dir = freshRoot("bm25-fixture")
     Seq(
       (1L, "table table table x1 x2 x3 x4 x5 x6 x7"),
       (2L, "table y1 y2 y3 y4 y5 y6 y7 y8 y9"),
@@ -71,7 +71,7 @@ class TextSketchSpec extends SparkSpec {
     // (normalized distance 3), doc 4 is doc 1 re-punctuated (normalized
     // distance 0). Docs 100..169 share one 12-char prefix — the block is
     // hot (70 > EditBlockCap) and contributes NO pairs (C(70,2) avoided).
-    val dir = s"/root/repo/target/t11-fixture-${System.nanoTime()}"
+    val dir = freshRoot("t11-fixture")
     (Seq(
       (1L, "the quick brown fox jumps over dog"),
       (2L, "the quick brown fox jumps over cat"),

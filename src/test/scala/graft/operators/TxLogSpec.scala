@@ -658,8 +658,15 @@ class TxLogSpec extends SparkSpec {
         TxLog.manifestParses.get.longValue)
       // the contrast: a full-log walk's parse count grows with commits
       TxLog.manifestParses.set(0L)
-      assert(TxLog.history(root).size.toLong === v)
+      val hist = TxLog.history(root)
       val historyParses = TxLog.manifestParses.get.longValue
+      assert(hist.size.toLong === v)
+      // ...but only linearly: one forward fold parses each manifest once
+      assert(historyParses <= v + 2, s"history at v$v parsed $historyParses manifests")
+      hist.foreach { h =>
+        assert(h.nFiles === TxLog.snapshot(root, h.version).get.entries.size,
+          s"history nFiles diverges from the snapshot at v${h.version}")
+      }
       // production upkeep on a copy, so the sampled log gains no commit
       val maintained = freshRoot("txlog-thin-maint")
       org.apache.commons.io.FileUtils.copyDirectory(

@@ -81,7 +81,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("extensions wiring: txlog relations resolve natively in spark.sql, with time travel") {
     val old = spark
-    val root = s"/root/repo/target/ext-txlog-${System.nanoTime()}"
+    val root = freshRoot("ext-txlog")
     import old.implicits._
     graft.operators.TxLog.init(old, root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     val t1 = System.currentTimeMillis()

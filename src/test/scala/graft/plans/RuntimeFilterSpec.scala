@@ -57,7 +57,7 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("parquet layout carries bloom filters for the enabled column only") {
-    val dir = s"/root/repo/target/bloom-layout-${System.nanoTime()}"
+    val dir = freshRoot("bloom-layout")
     // UNSORTED layout: min/max stats are useless for point lookups here —
     // the bloom is what a reader would probe
     Tables.lineitem(spark, sf)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Data-layout pipeline utilities a 100 TB corpus needs around the engine:
@@ -32,8 +32,8 @@ class LayoutSpec extends SparkSpec {
 
   test("compaction: many small files rewritten to target file count, content identical") {
     val li = Tables.lineitem(spark, sf)
-    val fragmented = "/root/repo/target/compact-in"
-    val compacted = "/root/repo/target/compact-out"
+    val fragmented = s"${Paths.work}/compact-in"
+    val compacted = s"${Paths.work}/compact-out"
     li.repartition(64).write.mode("overwrite").parquet(fragmented)
 
     def parquetFiles(p: String): Int =

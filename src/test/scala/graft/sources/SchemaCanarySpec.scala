@@ -1,10 +1,10 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Paths, SparkSpec}
 
 /** Canary for driver-side testdata drift.
   *
-  * The generated tables under /root/testdata are regenerated by the harness
+  * The generated tables under `Paths.testData` are regenerated by the harness
   * and their physical schemas have drifted between rounds (events.ts shipped
   * first as parquet TIMESTAMP(NANOS), later as TIMESTAMP(MICROS)); a drift
   * otherwise surfaces as dozens of scattered query failures. This suite
@@ -66,7 +66,7 @@ class SchemaCanarySpec extends SparkSpec {
   }
 
   test("events normalization yields the documented contract at every sf") {
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+    for (dir <- Seq(Paths.sf("sf0.001"), Paths.sf("sf0.01"))) {
       val ev = Tables.events(spark, dir)
       assert(ev.schema("ts").dataType.typeName === "timestamp", dir)
       assert(ev.schema("ts_us").dataType.typeName === "long", dir)

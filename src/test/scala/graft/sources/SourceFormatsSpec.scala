@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 class SourceFormatsSpec extends SparkSpec {
 
   test("JSON-lines round-trip preserves the documents table exactly") {
-    val dir = s"/root/repo/target/jsonl-${System.nanoTime()}"
+    val dir = freshRoot("jsonl")
     val docs = Tables.documents(spark, sf)
     docs.write.json(dir)
     val schema = StructType(Seq(
@@ -27,7 +27,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("CSV sink round-trip preserves documents (header + explicit schema read-back)") {
-    val dir = s"/root/repo/target/csvsink-${System.nanoTime()}"
+    val dir = freshRoot("csvsink")
     val docs = Tables.documents(spark, sf)
     docs.write.option("header", "true").csv(dir)
     val schema = StructType(Seq(
@@ -41,7 +41,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves the documents table exactly (predicate pushdown intact)") {
-    val dir = s"/root/repo/target/orc-${System.nanoTime()}"
+    val dir = freshRoot("orc")
     val docs = Tables.documents(spark, sf)
     docs.write.orc(dir)
     val back = spark.read.orc(dir)
@@ -59,7 +59,7 @@ class SourceFormatsSpec extends SparkSpec {
 
   test("dynamic partition overwrite backfills ONE partition, leaves the rest") {
     withSQLConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      val dir = s"/root/repo/target/backfill-${System.nanoTime()}"
+      val dir = freshRoot("backfill")
       val ev = Tables.events(spark, sf)
         .select(col("event_id"), col("value"),
           to_date(col("ts")).cast("string").as("day"))
@@ -92,7 +92,7 @@ class SourceFormatsSpec extends SparkSpec {
     // the current testdata is and pin that the loader yields identical
     // normalized columns for both.
     val native = Tables.events(spark, sf)
-    val dir = s"/root/repo/target/ns-vintage-${System.nanoTime()}"
+    val dir = freshRoot("ns-vintage")
     native
       .select(col("event_id"), (col("ts_us") * 1000).as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))

@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSpec {
   /** The file stream source wants a directory of arriving files; stage the
     * read-only single-file testdata into one. */
   private lazy val stageDir: String = {
-    val d = new java.io.File(s"/root/repo/target/stream-events-${System.nanoTime()}")
+    val d = new java.io.File(freshRoot("stream-events"))
     d.mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
@@ -26,7 +26,7 @@ class StreamingSpec extends SparkSpec {
       mode: String): Unit = {
     val q = df.writeStream
       .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", s"/root/repo/target/chk/$name-${System.nanoTime()}")
+      .option("checkpointLocation", freshRoot(s"chk/$name"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
@@ -186,7 +186,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dedup (dropDuplicatesWithinWatermark) == batch distinct") {
     // duplicate the staged file so the stream sees every event twice across
     // two source files; dedup state keyed on event_id within the watermark
-    val dupDir = new java.io.File(s"/root/repo/target/stream-dup-${System.nanoTime()}")
+    val dupDir = new java.io.File(freshRoot("stream-dup"))
     dupDir.mkdirs()
     for (i <- 0 to 1)
       java.nio.file.Files.copy(
@@ -338,7 +338,7 @@ class StreamingSpec extends SparkSpec {
 
   test("parquet sink + checkpoint: restart recovers exactly-once (no dupes, no losses)") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = s"/root/repo/target/eo-${System.nanoTime()}"
+    val base = freshRoot("eo")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val chk = s"$base/chk"
     new java.io.File(inDir).mkdirs()
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark survives restart: re-delivered events emit once") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = s"/root/repo/target/sdedup-${System.nanoTime()}"
+    val base = freshRoot("sdedup")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val chk = s"$base/chk"
     new java.io.File(inDir).mkdirs()
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -505,7 +505,7 @@ class StreamingSpec extends SparkSpec {
     // (dimension-bounded, never event-bounded) and touch per batch at
     // most as many state rows as the batch has events — the property
     // that keeps a long-running ingest's state flat at 100 TB of traffic.
-    val d = s"/root/repo/target/stream-state-${System.nanoTime()}"
+    val d = freshRoot("stream-state")
     new java.io.File(d).mkdirs()
     val raw = spark.read.parquet(s"$sf/events.parquet")
     (0 until 4).foreach { b =>
@@ -573,8 +573,8 @@ class StreamingSpec extends SparkSpec {
       "table, offsets are versions, checkpoint resumes exactly") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-txlog-${System.nanoTime()}"
-    val ckpt = s"/root/repo/target/stream-txlog-ck-${System.nanoTime()}"
+    val root = freshRoot("stream-txlog")
+    val ckpt = freshRoot("stream-txlog-ck")
     TxLog.init(spark, root,
       (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s").repartition(2))
     TxLog.appendOnce(spark, root,
@@ -640,7 +640,7 @@ class StreamingSpec extends SparkSpec {
     assert(!got2.exists(_._4 == 4L), "the compact version must be invisible")
     // appends-only mode (readAppended semantics: pure-append ranges —
     // the right source shape for an append-only event table)
-    val root2 = s"/root/repo/target/stream-txlog-app-${System.nanoTime()}"
+    val root2 = freshRoot("stream-txlog-app")
     TxLog.init(spark, root2,
       (0L until 50L).map(k => (k, s"v$k")).toDF("id", "s"))
     TxLog.appendOnce(spark, root2, "a1",
@@ -706,8 +706,8 @@ class StreamingSpec extends SparkSpec {
       "under the pinned schema; a rename raises the typed restart error") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-evo-${System.nanoTime()}"
-    val ckpt = s"/root/repo/target/stream-evo-ck-${System.nanoTime()}"
+    val root = freshRoot("stream-evo")
+    val ckpt = freshRoot("stream-evo-ck")
     TxLog.init(spark, root,
       (0L until 10L).map(k => (k, s"v$k")).toDF("id", "s"))
     // a CONTINUOUSLY RUNNING query — the pin predates every evolution
@@ -784,8 +784,8 @@ class StreamingSpec extends SparkSpec {
       "there too — additive flows projected, a rename refuses typed") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-evo-app-${System.nanoTime()}"
-    val ckpt = s"/root/repo/target/stream-evo-app-ck-${System.nanoTime()}"
+    val root = freshRoot("stream-evo-app")
+    val ckpt = freshRoot("stream-evo-app-ck")
     TxLog.init(spark, root,
       (0L until 5L).map(k => (k, s"v$k")).toDF("id", "s"))
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
@@ -823,7 +823,7 @@ class StreamingSpec extends SparkSpec {
       "bound each micro-batch, soft-capped at one version minimum") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-bytes-${System.nanoTime()}"
+    val root = freshRoot("stream-bytes")
     TxLog.init(spark, root,
       (0L until 10L).map(k => (k, s"v$k")).toDF("id", "s"))
     // two tiny appends (a few KB each) and one large one (hundreds of KB)
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
             batchVersions.add(rows.map(_._2).toSet)
             ()
         }.option("checkpointLocation",
-          s"/root/repo/target/stream-bytes-ck-$tag-${System.nanoTime()}")
+          freshRoot(s"stream-bytes-ck-$tag"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
       assert(!q.isActive)
@@ -883,7 +883,7 @@ class StreamingSpec extends SparkSpec {
       "latest delivers only new commits") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-kw-${System.nanoTime()}"
+    val root = freshRoot("stream-kw")
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s"))
     TxLog.appendOnce(spark, root, "b1", Seq((2L, "b")).toDF("id", "s"))
     def drainKw(kw: String, appendFirst: Boolean): Seq[Long] = {
@@ -898,7 +898,7 @@ class StreamingSpec extends SparkSpec {
               .foreach(v => buf.add(java.lang.Long.valueOf(v)))
             ()
         }.option("checkpointLocation",
-          s"/root/repo/target/stream-kw-ck-$kw-${System.nanoTime()}")
+          freshRoot(s"stream-kw-ck-$kw"))
         .start()
       try {
         // force source creation (the anchor resolves in createSource on
@@ -922,7 +922,7 @@ class StreamingSpec extends SparkSpec {
       "over a pruned range raises the typed error, never a silent stall") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-bytes-ret-${System.nanoTime()}"
+    val root = freshRoot("stream-bytes-ret")
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s"))
     TxLog.appendOnce(spark, root, "b1", Seq((2L, "b")).toDF("id", "s"))
     TxLog.appendOnce(spark, root, "b2", Seq((3L, "c")).toDF("id", "s"))
@@ -947,8 +947,8 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.TxLog
     import spark.implicits._
     def build(tag: String): (String, String) = {
-      val root = s"/root/repo/target/stream-ret-$tag-${System.nanoTime()}"
-      val ckpt = s"/root/repo/target/stream-ret-ck-$tag-${System.nanoTime()}"
+      val root = freshRoot(s"stream-ret-$tag")
+      val ckpt = freshRoot(s"stream-ret-ck-$tag")
       TxLog.init(spark, root,
         (0L until 10L).map(k => (k, s"v$k")).toDF("id", "s"))
       TxLog.appendOnce(spark, root, "b1",
@@ -994,7 +994,7 @@ class StreamingSpec extends SparkSpec {
       "synthesizes the earliest snapshot as inserts, later commits flow") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-earliest-pruned-${System.nanoTime()}"
+    val root = freshRoot("stream-earliest-pruned")
     TxLog.init(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v1
     TxLog.appendOnce(spark, root, "b1", Seq((3L, "c")).toDF("id", "s")) // v2
     TxLog.delete(spark, root, col("id") === 1L) // v3 (COW rewrite)
@@ -1008,7 +1008,7 @@ class StreamingSpec extends SparkSpec {
             .as[(Long, String, Long)].collect().foreach(buf.add)
           ()
       }.option("checkpointLocation",
-        s"/root/repo/target/stream-earliest-pruned-ck-${System.nanoTime()}")
+        freshRoot("stream-earliest-pruned-ck"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     // snapshot v3 = {2, 3}, delivered as inserts tagged with v3 itself —
@@ -1027,7 +1027,7 @@ class StreamingSpec extends SparkSpec {
             .as[(Long, String, Long)].collect().foreach(buf2.add)
           ()
       }.option("checkpointLocation",
-        s"/root/repo/target/stream-earliest-pruned-ck2-${System.nanoTime()}")
+        freshRoot("stream-earliest-pruned-ck2"))
       .trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination(120000)
     assert(buf2.toArray(Array.empty[(Long, String, Long)]).toSeq.sorted ===
@@ -1056,7 +1056,7 @@ class StreamingSpec extends SparkSpec {
       "intra-range COW rewrite refuses loudly (no silent survivor rows)") {
     import graft.operators.TxLog
     import spark.implicits._
-    val root = s"/root/repo/target/stream-straddle-${System.nanoTime()}"
+    val root = freshRoot("stream-straddle")
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
     TxLog.appendOnce(spark, root, "b1",
       Seq((2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1)) // v2
@@ -1070,7 +1070,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.foreachBatch {
         (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => ()
       }.option("checkpointLocation",
-        s"/root/repo/target/stream-straddle-ck-${System.nanoTime()}")
+        freshRoot("stream-straddle-ck"))
       .trigger(Trigger.AvailableNow()).start()
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.awaitTermination(120000)
@@ -1087,7 +1087,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.TxLog
     import org.apache.spark.sql.types.LongType
     import spark.implicits._
-    val root = s"/root/repo/target/widen-stream-${System.nanoTime()}"
+    val root = freshRoot("widen-stream")
     TxLog.init(spark, root, Seq((1, "a")).toDF("id", "s")) // v1: int id
     TxLog.setProperties(root, Map("type_widening" -> "true")) // v2: opt-in
     TxLog.commitAppend(spark, root,
@@ -1104,14 +1104,14 @@ class StreamingSpec extends SparkSpec {
             .foreach(v => buf.add(java.lang.Long.valueOf(v)))
           ()
       }.option("checkpointLocation",
-        s"/root/repo/target/widen-stream-ck-${System.nanoTime()}")
+        freshRoot("widen-stream-ck"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     assert(buf.toArray(Array.empty[java.lang.Long]).map(_.longValue)
       .sorted.toSeq === Seq(1L, 3000000000L))
     // the inverse cannot be represented (wide rows under a narrow pin
     // would truncate): the typed restart contract, unchanged
-    val root2 = s"/root/repo/target/widen-stream2-${System.nanoTime()}"
+    val root2 = freshRoot("widen-stream2")
     TxLog.init(spark, root2, Seq((1, "a")).toDF("id", "s")) // v1
     TxLog.setProperties(root2, Map("type_widening" -> "true")) // v2
     val src2 = new TxLogFeedSource(spark,
@@ -1135,7 +1135,7 @@ class StreamingSpec extends SparkSpec {
     // a post-pin NARROWING (overwrite retypes bigint → int) refuses the
     // same way — an upcast could read it, but a post-pin width change is
     // a schema change the pinned consumer must learn about loudly
-    val root3 = s"/root/repo/target/widen-stream3-${System.nanoTime()}"
+    val root3 = freshRoot("widen-stream3")
     TxLog.init(spark, root3, Seq((3000000000L, "a")).toDF("id", "s"))
     val src3 = new TxLogFeedSource(spark,
       TxLogFeedSource.Opts(root3, "changes", Some(0L), None, None))
@@ -1158,7 +1158,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val allAvail =
       org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
-    val root = s"/root/repo/target/stream-synthfloor-${System.nanoTime()}"
+    val root = freshRoot("stream-synthfloor")
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
     TxLog.appendOnce(spark, root, "b2", Seq((2L, "b")).toDF("id", "s")) // v2
     TxLog.appendOnce(spark, root, "b3", Seq((3L, "c")).toDF("id", "s")) // v3
@@ -1177,7 +1177,7 @@ class StreamingSpec extends SparkSpec {
     }
     // end-to-end: a checkpointed earliest stream RESTARTS from its
     // committed offset — no re-synthesis, no duplicates
-    val ckpt = s"/root/repo/target/stream-synthfloor-ck-${System.nanoTime()}"
+    val ckpt = freshRoot("stream-synthfloor-ck")
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     def drainOnce(): Unit = {
       val q = spark.readStream.format("graft.streaming.TxLogFeedProvider")
