@@ -73,18 +73,18 @@ object Curation {
   val PackBudget = 512L
 
   /** Sequence-packing core (cur6, pipe1): global token prefix sum over
-    * (doc_id, n_tok) rows WITHOUT a global sort — range-repartition, per-
-    * partition windowed cumsum, driver-side exclusive prefix over the
-    * ≤ #partitions per-partition totals (bounded collect), broadcast
-    * offsets back. Returns one row per 512-token training bin. */
+    * (doc_id, n_tok) rows WITHOUT a global sort — range-partition, per-
+    * partition windowed cumsum, plus the driver-side exclusive prefix
+    * over the ≤ #partitions per-partition totals (bounded collect),
+    * shipped back as a literal. The window reads the shared prefix
+    * kernel's pinned range shuffle (Par.rangeWithOffsets), the same
+    * execution the totals came from. Returns one row per 512-token
+    * training bin. */
   def packSequences(toks: DataFrame): DataFrame = {
-    // shared distributed-prefix kernel (Par.rangeWithOffsets); its cache
-    // pins one boundary sampling — load-bearing, see the helper's scaladoc
-    val (base, offDf) = Par.rangeWithOffsets(
+    val (base, off) = Par.rangeWithOffsets(
       toks.select(col("doc_id"), col("n_tok")), Seq(col("doc_id")), col("n_tok"))
     val w = Window.partitionBy("__pid").orderBy("doc_id")
-    base.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("cb", sum("n_tok").over(w) - col("n_tok") + col("__off"))
+    base.withColumn("cb", sum("n_tok").over(w) - col("n_tok") + off)
       .withColumn("bin", (col("cb") / lit(PackBudget)).cast("long"))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("total_tokens"),
@@ -351,8 +351,8 @@ object Curation {
     // once — sampling WITH multiplicity, as weighted mixtures need).
     // The global cumulative weight comes from the SAME distributed
     // prefix machinery as sequence packing (Par.rangeWithOffsets with a
-    // weight column: per-partition cumsum + broadcast exclusive partition
-    // offsets — no single-partition window). All arithmetic is
+    // weight column: per-partition cumsum + exclusive partition offsets
+    // — no single-partition window). All arithmetic is
     // non-negative integer division (the pick-count formula is guarded
     // to x > offset before subtracting, so Spark's truncating `div` and
     // DuckDB's flooring `//` never see a negative operand).
@@ -381,10 +381,9 @@ object Curation {
       val tw = d.agg(sum("w")).collect()(0).getLong(0) // ONE scalar to the driver
       val step = math.max(tw / 100, 1L)
       val off = step / 2
-      val (p, offDf) = Par.rangeWithOffsets(d, Seq(col("doc_id")), col("w"))
+      val (p, pOff) = Par.rangeWithOffsets(d, Seq(col("doc_id")), col("w"))
       val win = Window.partitionBy("__pid").orderBy("doc_id")
-      p.join(broadcast(offDf), Seq("__pid"))
-        .withColumn("cum_incl", sum("w").over(win) + col("__off"))
+      p.withColumn("cum_incl", sum("w").over(win) + pOff)
         .withColumn("mult",
           when(col("cum_incl") <= off, 0L)
             .otherwise(expr(s"(cum_incl - $off + $step - 1) div $step")) -

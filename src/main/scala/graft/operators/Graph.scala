@@ -358,7 +358,7 @@ object Graph {
       // node rank WITHOUT a single-partition window: the node set is the
       // supplier co-supply graph and suppliers scale with the fact tier,
       // so the degree-order rank goes through Windows.globalOrdinal
-      // (range-repartition + per-partition row_number + offset fold) —
+      // (range-partition + per-partition position + offset fold) —
       // same dense rank, full parallelism at any node count
       val rk = Windows.globalOrdinal(deg, Seq(col("deg"), col("s")))
         .withColumn("rk", col("__ord") + 1L)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, graftbridge}
 import org.apache.spark.sql.functions._
 
 /** CPU-parallel repartition for "cheap bytes, expensive rows" stages.
@@ -59,10 +59,13 @@ object Par {
     val cpu = 2 * s.sparkContext.defaultParallelism
     val target = s.conf.get(TargetBytesKey, (64L << 20).toString).toLong
     val cap = s.conf.get(MaxPartsKey, (1 << 18).toString).toInt
+    math.max(cpu, (leafBytes(df) / target).min(BigInt(cap)).toInt)
+  }
+
+  private def leafBytes(df: DataFrame): BigInt = {
     val unknown = BigInt(Long.MaxValue) / 2
-    val bytes = df.queryExecution.analyzed.collectLeaves()
+    df.queryExecution.analyzed.collectLeaves()
       .map(_.stats.sizeInBytes).filter(_ < unknown).sum
-    math.max(cpu, (bytes / target).min(BigInt(cap)).toInt)
   }
 
   def spread(df: DataFrame, keys: Column*): DataFrame =
@@ -98,68 +101,75 @@ object Par {
 
   /** The partition count [[rangeWithOffsets]] range-partitions into —
     * exposed so downstream per-`__pid` exchanges can pin the SAME count
-    * (more buckets than distinct pids is waste; fewer serializes).
-    * Callers pass the SAME frame to both sites, so the bytes-derived
-    * count agrees by construction (same plan → same leaves → same sum). */
+    * (more buckets than distinct pids is waste; fewer serializes). The
+    * pinned frame's leaf carries its input's analyzed leaf bytes, so the
+    * input and every frame derived from the pinned one give the same
+    * count. */
   def prefixParts(df: DataFrame): Int = parts(df)
 
   /** Distributed exclusive-prefix machinery shared by
-    * Curation.packSequences and Windows.globalOrdinal: range-repartition
-    * `df` on `order`, attach the partition id, and compute each
-    * partition's BASE OFFSET (exclusive prefix of per-partition
-    * sum(weight); weight = lit(1) gives row-count offsets).
+    * Windows.globalOrdinal / globalRunningMax and Curation's
+    * packSequences / cur11: range-partition `df` on `order`, attach the
+    * partition id `__pid`, and return, as a column over `__pid`, each
+    * partition's BASE OFFSET — the exclusive prefix of per-partition
+    * sum(weight); weight = lit(1) gives row-count offsets.
     *
-    * The partitioned frame is CACHED, and the cache is LOAD-BEARING, not
-    * a perf nicety: repartitionByRange samples its boundaries with an
-    * RDD-id-seeded RNG, so each independent execution of the exchange can
-    * place rows differently — the offsets (computed in one job) would
-    * then contradict the partition contents the caller's job sees.
-    * (Sharing the exchange inside one plan does not save this either:
-    * column pruning gives the counts branch a narrower scan, the
-    * canonical forms diverge, and exchange reuse does not fire — both
-    * failure modes were observed as non-dense ordinals in WindowSpec.)
-    * Pinning ONE materialization is the correctness contract. The cached
-    * handle is the RETURNED frame: harness paths are freed by the
-    * per-query clearCache; long-lived callers should unpersist it once
-    * their derived results are materialized.
+    * The offsets and the caller's job must see the SAME row placement,
+    * and repartitionByRange samples its bounds with an RDD-id-seeded RNG:
+    * two executions of the exchange can place rows differently, and two
+    * copies of it in one plan do not share (column pruning narrows the
+    * totals branch's scan, so exchange reuse does not fire — both were
+    * seen as non-dense ordinals). So the exchange runs ONCE: the returned
+    * frame is a leaf over that one execution's shuffle output
+    * ([[graftbridge.Bridge.pinned]]); the totals job and every caller
+    * job re-read the shuffle files with the map stage skipped. Nothing
+    * is cached — the shuffle output lives as long as the frame — and the
+    * leaf carries `df`'s analyzed leaf bytes, so [[parts]] gives the
+    * pinned frame and everything derived from it the count `df` gets.
     *
-    * @return (partitioned CACHED frame with `__pid`, tiny offsets frame
-    *         (`__pid`, `__off`)) */
+    * Order and weight columns resolve BY NAME against the pinned frame
+    * (`col("x")`, not a `df("x")` bound to the input's plan). The
+    * offsets travel as an array literal of ≤ #partitions longs, indexed
+    * by `__pid`; a partition with no rows has weight 0.
+    *
+    * @return (pinned range-partitioned frame with `__pid`, `__pid`'s
+    *         exclusive offset column) */
   def rangeWithOffsets(df: DataFrame, order: Seq[Column], weight: Column)
-      : (DataFrame, DataFrame) = {
-    val s = df.sparkSession
-    val parts = prefixParts(df)
-    val p = df.repartitionByRange(parts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    val totals = p.groupBy("__pid").agg(sum(weight).as("s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, tot)) =>
-      (pid, acc + tot)
-    }.tail.zip(totals).map { case ((pid, cumIncl), (_, tot)) => (pid, cumIncl - tot) }
-    (p, s.createDataFrame(offsets.toSeq).toDF("__pid", "__off"))
+      : (DataFrame, Column) = {
+    val (p, tot) = pinWithTotals(df, order, sum(weight))
+    (p, exclusive(tot, 1, 0L)(_ + _))
   }
 
-  /** [[rangeWithOffsets]] plus an exclusive prefix-MAX of `value` per
+  /** [[rangeWithOffsets]] plus the exclusive prefix-MAX of `value` per
     * partition, from ONE combined per-partition aggregation pass (the
     * separate max pass Windows.globalRunningMax first shipped doubled
-    * the whole-input jobs). Returns (cached partitioned frame with
-    * `__pid`, tiny frame (`__pid`, `__off`, `__premax`)); `__premax` is
-    * Long.MinValue for the first partition. Same cache contract as
-    * rangeWithOffsets. */
+    * the whole-input jobs). Returns (pinned frame with `__pid`, offset
+    * column, prefix-max column); the prefix max is Long.MinValue for the
+    * first partition. */
   def rangeWithOffsetsAndMax(df: DataFrame, order: Seq[Column], weight: Column,
-      value: Column): (DataFrame, DataFrame) = {
-    val s = df.sparkSession
-    val parts = prefixParts(df)
-    val p = df.repartitionByRange(parts, order: _*)
+      value: Column): (DataFrame, Column, Column) = {
+    val (p, tot) = pinWithTotals(df, order, sum(weight), max(value))
+    (p, exclusive(tot, 1, 0L)(_ + _), exclusive(tot, 2, Long.MinValue)(math.max))
+  }
+
+  /** The pinned range-partitioned frame and its per-`__pid` totals
+    * (`__pid`, aggs…) — one job over the pinned shuffle output. */
+  private def pinWithTotals(df: DataFrame, order: Seq[Column], aggs: Column*)
+      : (DataFrame, Map[Int, Row]) = {
+    val p = graftbridge.Bridge
+      .pinned(df.repartitionByRange(parts(df), order: _*), leafBytes(df))
       .withColumn("__pid", spark_partition_id())
-      .cache()
-    val totals = p.groupBy("__pid").agg(sum(weight).as("s"), max(value).as("m"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val offs = totals.map(_._2).scanLeft(0L)(_ + _).dropRight(1)
-    val premax = totals.map(_._3).scanLeft(Long.MinValue)(math.max).dropRight(1)
-    val rows = totals.map(_._1).zip(offs).zip(premax)
-      .map { case ((pid, off), pm) => (pid, off, pm) }
-    (p, s.createDataFrame(rows.toSeq).toDF("__pid", "__off", "__premax"))
+    val tot = p.groupBy("__pid").agg(aggs.head, aggs.tail: _*).collect()
+    (p, tot.map(r => r.getInt(0) -> r).toMap)
+  }
+
+  /** Column over `__pid`: the exclusive `op`-prefix, from `zero`, of
+    * total `i` over the partitions before it; a partition with no rows
+    * (absent from `tot`) contributes `zero`. */
+  private def exclusive(tot: Map[Int, Row], i: Int, zero: Long)(
+      op: (Long, Long) => Long): Column = {
+    val v = Array.tabulate(if (tot.isEmpty) 0 else tot.keys.max + 1)(
+      pid => tot.get(pid).map(_.getLong(i)).getOrElse(zero))
+    element_at(typedLit(v.scanLeft(zero)(op).dropRight(1).toSeq), col("__pid") + 1)
   }
 }

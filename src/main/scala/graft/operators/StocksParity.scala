@@ -124,9 +124,9 @@ object StocksParity {
       // single consumer, so the 140 MB cache of the slimmed ordinal
       // (built only for the old base+carry double read) is gone — the
       // ordinal streams straight into the block window's spread
-      // exchange. globalOrdinal itself still caches its range-partitioned
-      // base (Par.rangeWithOffsets pins one boundary sampling; see
-      // Windows.globalOrdinal), freed by the harness's clearCache.
+      // exchange. globalOrdinal caches nothing either: it pins one
+      // execution of its range shuffle (Par.rangeWithOffsets) and numbers
+      // the rows in a projection over the per-partition sort.
       // SLIMMED to the four columns the rolling window touches (guide
       // §2.3 project-before-the-exchange): date/volume/open end their
       // life at the ordinal sort.
@@ -185,7 +185,7 @@ object StocksParity {
     // fin2 indicator re-based onto the reference's literal data, and the
     // certification of a new scale-safe primitive: the UNBOUNDED running
     // max ([[Windows.globalRunningMax]]: range partition + per-partition
-    // prefix max + broadcast exclusive prefix of ≤ #partitions maxes —
+    // prefix max + exclusive prefix of ≤ #partitions maxes —
     // no SinglePartition anywhere), hash-matched against DuckDB's
     // genuine global unbounded window. Series order is the stk3
     // canonical total sort; its ties are full-row duplicates, so the

@@ -2804,10 +2804,15 @@ object TxLog {
     *    feed then reads the files and ignores the rewrite entirely.
     *
     * MoR commits need none of this: deleteMoR's grown vectors are exact,
-    * and updateMoR pins `cdc_rowlevel` (adds are pure post-images). */
+    * and updateMoR pins `cdc_rowlevel` (adds are pure post-images).
+    *
+    * The change files are sized by bytes, not by the change frame's
+    * input partitions: a REBALANCE hint lets AQE coalesce the write to
+    * its advisory partition size, so a handful of changed rows is one
+    * file, not one per partition the rewrite happened to read. */
   private def writeCdcFiles(root: String, changes: DataFrame): String = {
     val dir = s"data/cdc-${java.util.UUID.randomUUID().toString.take(12)}"
-    changes.write.mode("overwrite").parquet(s"$root/$dir")
+    changes.hint("rebalance").write.mode("overwrite").parquet(s"$root/$dir")
     dir
   }
 

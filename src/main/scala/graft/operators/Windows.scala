@@ -57,17 +57,38 @@ object Windows {
   }
 
   /** Dense 0-based global ordinal over an arbitrary total order WITHOUT a
-    * single-partition sort: range-repartition on the order key, sort and
-    * row_number within each partition, then add each partition's base
-    * offset (exclusive prefix over ≤ #partitions per-partition counts —
-    * the same bounded driver-side collect as Curation.packSequences).
-    * The output column `__ord` is what [[blockRolling]] blocks on. */
+    * single-partition sort: range-partition on the order key
+    * ([[Par.rangeWithOffsets]], pinned to one execution of the range
+    * shuffle), sort within each range partition, and number the rows as
+    * the partition's base offset (exclusive prefix over ≤ #partitions
+    * per-partition counts — the same bounded driver-side collect as
+    * Curation.packSequences) plus the row's position in its partition.
+    * The position is `monotonically_increasing_id() − (pid << 33)`: the
+    * projection sits directly over the sort with no exchange between,
+    * so its task's partition index IS the range partition `__pid`. No
+    * `__pid` exchange, join or window. Output: the input's columns plus
+    * `__ord`, which [[blockRolling]] blocks on. `order` must be a total
+    * order over columns named in `df`. */
   def globalOrdinal(df: DataFrame, order: Seq[Column]): DataFrame = {
-    // the partitioned base stays CACHED (see Par.rangeWithOffsets: the
-    // cache pins ONE boundary sampling — correctness, not speed); freed
-    // by the harnesses' per-query clearCache, or unpersist the frame
-    // returned by rangeWithOffsets directly in long-lived sessions
-    val (p, offDf) = Par.rangeWithOffsets(df, order, lit(1L))
+    val (p, off) = Par.rangeWithOffsets(df, order, lit(1L))
+    p.sortWithinPartitions(order: _*)
+      .withColumn("__ord", off + monotonically_increasing_id() -
+        shiftleft(col("__pid").cast("long"), 33))
+      .drop("__pid")
+  }
+
+  /** GLOBAL running maximum over one total-ordered series WITHOUT a
+    * single-partition window — the unbounded-frame sibling of
+    * [[globalOrdinal]]: range-partition on the order, per-partition
+    * running max, then each partition folds in the EXCLUSIVE prefix-max
+    * of the partitions before it (≤ #partitions values through the
+    * driver, the rangeWithOffsets discipline). Emits the input columns
+    * plus `__ord` (dense 0-based ordinal) and `__runmax` (prefix max of
+    * `value` including the current row). Both per-partition folds come
+    * from ONE pass over the pinned range shuffle, the same execution the
+    * window reads, so the partition placement agrees by construction. */
+  def globalRunningMax(df: DataFrame, order: Seq[Column], value: Column): DataFrame = {
+    val (p, off, premax) = Par.rangeWithOffsetsAndMax(df, order, lit(1L), value)
     val w = Window.partitionBy("__pid").orderBy(order: _*)
     // EXPLICIT __pid exchange, pinned at the range-partition count: left
     // to EnsureRequirements the exchange lands at spark.sql.shuffle
@@ -76,38 +97,13 @@ object Windows {
     // table dictionary-encodes to ~0.6 B/row) that collapsed the window
     // sort to ~3 tasks, serializing a multi-million-row sort (guide §2.5:
     // cheap bytes, expensive rows — measured 1.6 s/3 tasks on stk5).
-    // Partition count beyond the number of distinct __pid values cannot
-    // help (hash on the key can't split one pid), so the pin equals the
-    // range partitioning's own count — scale-adaptive by construction.
-    p.repartition(Par.prefixParts(df), col("__pid"))
-      .join(broadcast(offDf), Seq("__pid"))
-      .withColumn("__ord", row_number().over(w).cast("long") + col("__off") - 1L)
-      .drop("__pid", "__off")
-  }
-
-  /** GLOBAL running maximum over one total-ordered series WITHOUT a
-    * single-partition window — the unbounded-frame sibling of
-    * [[globalOrdinal]]: range-repartition on the order, per-partition
-    * running max, then each partition folds in the EXCLUSIVE prefix-max
-    * of the partitions before it (≤ #partitions values through the
-    * driver, the rangeWithOffsets discipline). Emits the input columns
-    * plus `__ord` (dense 0-based ordinal) and `__runmax` (prefix max of
-    * `value` including the current row). The cache pinned inside
-    * rangeWithOffsets is what keeps the two jobs' partition placement
-    * consistent. */
-  def globalRunningMax(df: DataFrame, order: Seq[Column], value: Column): DataFrame = {
-    // ONE combined per-partition pass yields both the row-count offsets
-    // (for the ordinal) and the exclusive prefix max
-    val (p, offDf) = Par.rangeWithOffsetsAndMax(df, order, lit(1L), value)
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    // pinned __pid exchange — same rationale as globalOrdinal above
-    p.repartition(Par.prefixParts(df), col("__pid"))
-      .join(broadcast(offDf), Seq("__pid"))
-      .withColumn("__ord", row_number().over(w).cast("long") + col("__off") - 1L)
+    // More buckets than distinct __pid values cannot help (hash on the
+    // key can't split one pid), so the pin is the range count itself.
+    p.repartition(Par.prefixParts(p), col("__pid"))
+      .withColumn("__ord", row_number().over(w).cast("long") + off - 1L)
       .withColumn("__runmax", greatest(
-        max(value).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        col("__premax")))
-      .drop("__pid", "__off", "__premax")
+        max(value).over(w.rowsBetween(Window.unboundedPreceding, 0)), premax))
+      .drop("__pid")
   }
 
   /** EXACT distributed single-series forward rolling window via
@@ -279,8 +275,8 @@ object Windows {
       // the former cache existed only for the base+carry double read.
       // Slimmed to the consumed columns (stk3 discipline, guide §2.3).
       // slim BEFORE the ordinal call, not just before the select: the
-      // prefix kernel pins its own full-width cache internally, so a
-      // select above it still range-shipped all 16 columns
+      // prefix kernel runs its range shuffle when called, so a select
+      // above it would still range-ship all 16 columns
       val ord = globalOrdinal(li(s, dir).select(series: _*), series)
         .select("__ord", "l_orderkey", "l_linenumber", "l_extendedprice")
       val res = blockRolling(ord, "__ord", frameEnd = 9, blockSize = 4096) { (u, w) =>
@@ -348,7 +344,7 @@ object Windows {
       // UNCACHED: one-pass blockRolling leaves the ordinal a single
       // consumer (the cache served the old base+carry double read);
       // slimmed to the consumed columns (stk3 discipline, guide §2.3)
-      // slim before the ordinal call (its internal cache is full-width)
+      // slim before the ordinal call (its range shuffle runs full-width)
       val w8 = blockRolling(globalOrdinal(li(s, dir).select(series: _*), series)
           .select("__ord", "l_orderkey", "l_linenumber", "l_extendedprice"),
         "__ord",
@@ -533,7 +529,7 @@ object Windows {
     // O1: DISTRIBUTED TOTAL ORDER under the hash gate — the engine's
     // global-sort capability proven over ALL rows without ever forming a
     // single partition: the dense ordinal comes from `globalOrdinal`
-    // (range partition + per-partition row_number + broadcast offsets),
+    // (range partition + per-partition position + prefix offsets),
     // and the position-weighted checksum Σ ((ord mod 251)+1)·cents is
     // nonzero-sensitive to ANY transposition, so a hash match against
     // DuckDB's genuine global-sort row_number certifies the full
@@ -550,9 +546,9 @@ object Windows {
         |FROM o""".stripMargin
     }) { (s, dir) =>
       // slimmed to the order key + checksum column before the ordinal
-      // machinery (stk3 discipline): the range exchange, the pinned
-      // cache, and the __pid exchange otherwise ship all 16 lineitem
-      // columns for a query that consumes two
+      // machinery (stk3 discipline): the range exchange, run when the
+      // ordinal is built, otherwise ships all 16 lineitem columns for a
+      // query that consumes two
       val base = li(s, dir)
         .withColumn("c", round(col("l_extendedprice") * 100).cast("long"))
         .select((series :+ col("c")): _*)

@@ -8,7 +8,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * package — the standard extension-library pattern (Delta, Sedona, etc.
   * ship the same shim) is one forwarding object inside
   * `org.apache.spark.sql`. Nothing else in the engine lives outside
-  * `graft.*`. */
+  * `graft.*`. Besides `ofRows`, the frame builders here are
+  * [[asStreaming]] (a batch frame re-tagged as a stream),
+  * [[pinned]] (a frame over one execution of another frame's plan) and
+  * [[manifestParquetRelation]] (a parquet scan over a pre-listed file
+  * set). */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -24,6 +28,29 @@ object Bridge {
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = true)
+  }
+
+  /** A batch frame over ONE execution of `df`'s plan: its RDD is taken
+    * once (`queryExecution.toRdd` — under AQE this runs the plan's map
+    * stages; a range exchange samples its bounds here, once) and
+    * wrapped as a `LogicalRDD` leaf, so every later job over the
+    * returned frame re-reads the same shuffle output (map stage
+    * skipped) and sees the same row placement. Nothing is cached: the
+    * shuffle files live as long as the returned frame is reachable.
+    *
+    * `sizeInBytes` is the leaf's plan-time size estimate. A bare
+    * `internalCreateDataFrame` leaf reports Spark's defaultSizeInBytes
+    * sentinel, which size-driven planning (graft's `Par.parts`,
+    * broadcast thresholds) cannot use; callers pass the size of what
+    * the frame was computed from. */
+  def pinned(df: DataFrame, sizeInBytes: BigInt): DataFrame = {
+    val classic = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(df.schema)
+    ofRows(classic, org.apache.spark.sql.execution.LogicalRDD(
+      attrs, df.queryExecution.toRdd)(classic,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes))))
   }
 
   /** Parse a SQL expression string to a catalyst Expression (Spark 4's

@@ -112,6 +112,17 @@ class EdgeCaseSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Windows.blockRolling(one, "__ord", frameEnd = 9, blockSize = 9)((u, _) => u)
     }
+    // the other prefix-kernel users: running max and sequence packing
+    val ids = Seq(col("doc_id"))
+    assert(Windows.globalRunningMax(none, ids, col("n_chars")).count() === 0)
+    val rm = Windows.globalRunningMax(docs.limit(1), ids, col("n_chars"))
+      .select("__ord", "__runmax", "n_chars").collect()
+    assert(rm.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((0L, rm.head.getLong(2))))
+    val toks = docs.select(col("doc_id"), col("n_chars").as("n_tok"))
+    assert(Curation.packSequences(toks.filter(lit(false))).count() === 0)
+    val bins = Curation.packSequences(toks.limit(1)).collect()
+    assert(bins.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((0L, 1L)))
   }
 
   test("round-5 operators degrade gracefully on empty inputs") {

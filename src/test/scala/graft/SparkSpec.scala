@@ -21,12 +21,22 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** A fresh scratch root `<tag>-<nanoTime>` under [[Paths.work]]. */
-  def freshRoot(tag: String): String =
-    s"${Paths.work}/$tag-${System.nanoTime()}"
+  /** A fresh scratch root `<tag>-<nanoTime>` under [[Paths.work]],
+    * deleted when the test JVM exits. */
+  def freshRoot(tag: String): String = {
+    val root = s"${Paths.work}/$tag-${System.nanoTime()}"
+    SparkSpec.roots.add(root)
+    root
+  }
 }
 
 object SparkSpec {
+  /** Every scratch root handed out; one JVM shutdown hook removes them
+    * all (the test JVM is forked, so it exits after the run). */
+  private[graft] val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(roots.forEach(r =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r))))
+
   lazy val session: SparkSession = {
     val s = GraftSession.build("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")

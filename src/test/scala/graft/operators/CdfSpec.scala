@@ -187,7 +187,7 @@ class CdfSpec extends SparkSpec {
     val (preciseRows8, changeFiles8, coarseRows8) = feeds(8 * rows)
     // pre + post image of each matched row, at both sizes
     assert(preciseRows === 2L * nFiles && preciseRows8 === preciseRows)
-    assert(changeFiles >= 1 && changeFiles8 === changeFiles)
+    assert(changeFiles === 1 && changeFiles8 === 1)
     // coarse: pre + post image of every row of every rewritten file
     assert(coarseRows === 2L * nFiles * rows)
     assert(coarseRows8 === 8L * coarseRows)

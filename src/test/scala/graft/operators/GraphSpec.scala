@@ -77,9 +77,8 @@ class GraphSpec extends SparkSpec {
     // that reads the fact table — rk scales with the fact tier, so the
     // static plan keys the joins (AQE may still elect a broadcast at
     // runtime from MEASURED sizes; that size guard is exactly what a
-    // hard-coded hint would bypass). globalOrdinal's offset broadcast
-    // (a driver-computed ≤#partitions LocalRelation) is the documented
-    // result-bounded exception and carries no scan in its subtree.
+    // hard-coded hint would bypass). globalOrdinal's offsets travel as
+    // a driver-computed literal of ≤ #partitions values, not a join.
     val hintsOverScans = g2.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
           if h.child.collectFirst {

@@ -57,6 +57,25 @@ class ParSpec extends SparkSpec {
     }
   }
 
+  test("the pinned ordinal frame keeps its input's bytes-driven partition count") {
+    val li = graft.sources.Tables.lineitem(spark, sf)
+    val order = Seq(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
+      col("l_partkey"), col("l_extendedprice"))
+    withSQLConf("spark.graft.parts.targetBytes" -> "4096") {
+      val n = Par.prefixParts(li)
+      val cpu = 2 * spark.sparkContext.defaultParallelism
+      assert(n > cpu, s"the bytes term must dominate: $n vs the $cpu floor")
+      val ord = Windows.globalOrdinal(li, order)
+      assert(Par.prefixParts(ord) === n)
+      // blockRolling's __blk spread sizes from the ordinal frame's leaf
+      val blk = Windows.blockRolling(ord, "__ord", frameEnd = 9, blockSize = 64)(
+        (u, _) => u).queryExecution.analyzed.collect {
+        case r: RepartitionByExpression => r.optNumPartitions
+      }.flatten
+      assert(blk === Seq(n))
+    }
+  }
+
   test("prefixParts agrees across repeated calls on the same frame") {
     import spark.implicits._
     val df = (1 to 5000).map(i => (i.toLong, i * 2.0)).toDF("k", "v")

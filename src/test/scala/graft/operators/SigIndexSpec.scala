@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Paths, SparkSpec}
+import graft.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -161,9 +161,8 @@ class SigIndexSpec extends SparkSpec {
   test("ingest of a ZERO-SHINGLE batch neither hangs nor miscounts " +
       "(AQE empty-relation guard), and its overlap gate still fires") {
     import spark.implicits._
-    val tag = System.nanoTime()
-    val idx = s"${Paths.work}/sigidx-short-$tag"
-    val sink = s"${Paths.work}/sigidx-short-pairs-$tag"
+    val idx = freshRoot("sigidx-short")
+    val sink = freshRoot("sigidx-short-pairs")
     val b0 = docs.filter(col("doc_id") < 100).select("doc_id", "text")
     SigIndex.ingestBatch(spark, idx, sink, b0, 0L) // bootstrap
     val n0 = SigIndex.indexedCount(idx).get
@@ -233,8 +232,7 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("streaming ingest: micro-batches probe-then-append; emitted pairs cover the cross-batch near-dups") {
-    val tag = System.nanoTime()
-    val stage = s"${Paths.work}/sigidx-stream-src-$tag"
+    val stage = freshRoot("sigidx-stream-src")
     new java.io.File(stage).mkdirs()
     val b1 = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val b2 = docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
@@ -248,10 +246,10 @@ class SigIndexSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$stage/*.parquet")
-    val idx = s"${Paths.work}/sigidx-stream-idx-$tag"
-    val sink = s"${Paths.work}/sigidx-stream-pairs-$tag"
+    val idx = freshRoot("sigidx-stream-idx")
+    val sink = freshRoot("sigidx-stream-pairs")
     val q = SigIndex.streamingIngest(stream, idx,
-      sink, s"${Paths.work}/chk/sig-$tag")
+      sink, freshRoot("sigidx-stream-chk"))
     q.awaitTermination(180000)
     assert(!q.isActive, "ingest stream did not finish")
     // emitted pairs, as an UNORDERED id-pair set (batch order is the file
@@ -277,9 +275,8 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("ingest batches replay idempotently (at-least-once foreachBatch)") {
-    val tag = System.nanoTime()
-    val idx = s"${Paths.work}/sigidx-replay-idx-$tag"
-    val sink = s"${Paths.work}/sigidx-replay-pairs-$tag"
+    val idx = freshRoot("sigidx-replay-idx")
+    val sink = freshRoot("sigidx-replay-pairs")
     val b1 = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val b2 = docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
 

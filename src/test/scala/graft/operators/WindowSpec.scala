@@ -63,16 +63,38 @@ class WindowSpec extends SparkSpec {
       col("upper_band") =!= col("lower_band")).count() === 0)
   }
 
-  test("o1 total-order checksum: the ordinal window runs per __pid, not one partition") {
+  test("o1 total-order checksum: the ordinal needs no window and no __pid exchange") {
     // the whole point of o1: a GLOBAL permutation certified without a
-    // global single-partition SORT — the ordinal's window hash-partitions
-    // on __pid after the range partition; the only SinglePartition
-    // exchange allowed is the final one-row aggregate
+    // global single-partition SORT — the ordinal is numbered per range
+    // partition over the pinned range shuffle (a scan of its output, then
+    // a per-partition sort); the only SinglePartition exchange allowed is
+    // the final one-row aggregate
     val plan = graft.SparkEntry.queries("o1_total_order")(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("hashpartitioning(__pid"), s"plan:\n$plan")
+    assert(plan.contains("Scan ExistingRDD"), s"plan:\n$plan")
+    assert(!plan.contains("hashpartitioning(__pid"), s"plan:\n$plan")
+    assert(!plan.contains("Window ["), s"plan:\n$plan")
     val nSingle = "SinglePartition".r.findAllIn(plan).length
     assert(nSingle <= 1, s"$nSingle SinglePartition exchanges:\n$plan")
+  }
+
+  test("the prefix kernel pins its shuffle without a cache, __pid exchange or window") {
+    val li = Tables.lineitem(spark, sf)
+    val order = Seq(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
+      col("l_partkey"), col("l_extendedprice"))
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val ord = Windows.globalOrdinal(li, order)
+    val total = Windows.blockRolling(ord, "__ord", frameEnd = 9, blockSize = 64) {
+      (u, w) => u.withColumn("wn", count(lit(1)).over(w))
+    }.agg(sum("wn")).head().getLong(0)
+    // frames of 10 rows, shrinking to 9..1 over the last nine
+    assert(total === 10 * li.count() - 45)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
+    val plan = ord.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning(__pid"), s"plan:\n$plan")
+    assert(!plan.contains("Window ["), s"plan:\n$plan")
   }
 
   test("globalOrdinal is a dense 0..n-1 permutation honoring the total order") {
