@@ -7,7 +7,7 @@ echo "=== sbt test ==="
 sbt -batch test
 echo "=== Verify sf0.01 ==="
 rm -rf /tmp/vfy
-SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vfy"
+sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vfy"
 echo "=== check_oracle ==="
 python3 scripts/check_oracle.py /root/testdata/sf0.01 /tmp/vfy
 echo "=== GATE DONE ==="

@@ -4,8 +4,7 @@ set -e
 cd "$(dirname "$0")/.."
 for i in 1 2; do
   echo "=== rep $i ==="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' \
+  sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' \
     | sed 's/^\[info\] //' > /tmp/bench_rep$i.json
 done
 echo "=== REPS DONE ==="

@@ -1,7 +1,6 @@
 #!/bin/bash
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-export SPARK_GRAFT_CPUS=32
 exec java -Xmx24g -cp "$CP" \
   --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
   --add-opens java.base/java.nio=ALL-UNNAMED \

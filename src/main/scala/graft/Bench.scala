@@ -211,7 +211,7 @@ object Bench {
       .mkString("[", ",", "]")
     val canaryEnd = (1 to 3).map(_ => canaryOnce()).min
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","canary_sec":${fmt(canaryStart)},"canary_end_sec":${fmt(canaryEnd)},"queries":$qs,"failed":$failed,"budget_exceeded":$exceeded,"baseline_queries":${baseline.size},"anchor_ratio":${fmt(anchorRatio)},"anchor_queries":${shared.size},"anchor_drifters":$drifters,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","canary_sec":${fmt(canaryStart)},"canary_end_sec":${fmt(canaryEnd)},"queries":$qs,"failed":$failed,"budget_exceeded":$exceeded,"baseline_queries":${baseline.size},"anchor_ratio":${fmt(anchorRatio)},"anchor_queries":${shared.size},"anchor_drifters":$drifters,"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()
   }
 }

@@ -1159,27 +1159,50 @@ object TxLog {
     }
   }
 
-  /** Atomically publish version `expected + 1` with the given file list
-    * and notes. Throws ConcurrentModificationException — having published
+  /** Stage `df` to a table's layout — THE restage path of every writer:
+    * hive-partitioned on `partCols` ([[stagePartitioned]], whose
+    * `keepInFiles` / `placeholderIfEmpty` choices apply), or one plain
+    * directory ([[stageData]], which always keeps a schema-bearing file)
+    * when the table is unpartitioned. */
+  private def stage(spark: SparkSession, root: String, df: DataFrame,
+      partCols: Seq[String], keepInFiles: Boolean = true,
+      placeholderIfEmpty: Boolean = true, dirPrefix: String = "c-"): Seq[FileEntry] =
+    if (partCols.nonEmpty)
+      stagePartitioned(spark, root, df, partCols, keepInFiles, placeholderIfEmpty,
+        dirPrefix)
+    else stageData(spark, root, df, dirPrefix)
+
+  /** The parent of a table's first version: no files, no notes, no
+    * metadata. Publishing against it is the parent-less genesis form
+    * ([[init]], [[initPartitioned]], [[adopt]]): the CAS claims version 1
+    * and the manifest is full, since there is nothing to diff against. */
+  private val Genesis = Snapshot(0L, Seq.empty, Set.empty)
+
+  /** THE COMMIT SEAM: atomically publish version `parent.version + 1`.
+    * Every manifest field defaults to the parent's value, so a writer
+    * names only what its commit changes, and the CAS version and the
+    * delta base come from the one snapshot it read — they cannot
+    * disagree. Throws ConcurrentModificationException — having published
     * NOTHING — when another writer got there first. The manifest records
     * the publish time (`t` header, exact [[versionAt]] travel) and the
     * partition column's committed type (`p\tname\ttype` — [[read]] casts
     * the re-attached literal back). Every [[CheckpointInterval]]-th
     * version also refreshes the metadata checkpoint.
     *
-    * `parentEntries` — the expected version's COMPLETE file list (the
-    * caller holds it in its snapshot) — enables the DELTA encoding: when
+    * The parent's COMPLETE file list enables the DELTA encoding: when
     * `adds + removes` is the smaller representation the manifest carries
     * only the diff (`k delta` + `+f`/`-f` lines), making per-commit
-    * manifest bytes O(change), not O(table files). Passing None forces a
-    * full, self-contained manifest (v1, adopt). */
-  private def publish(root: String, expected: Long, entries: Seq[FileEntry],
-      partMeta: Seq[(String, org.apache.spark.sql.types.DataType)],
-      notes: Set[String], schemaJson: Option[String],
-      mapping: Map[String, String] = Map.empty,
-      retired: Set[String] = Set.empty,
-      parentEntries: Option[Seq[FileEntry]] = None): Long = {
+    * manifest bytes O(change), not O(table files); against [[Genesis]]
+    * the full list always wins. */
+  private def publish(root: String, parent: Snapshot)(
+      entries: Seq[FileEntry] = parent.entries,
+      notes: Set[String] = parent.notes,
+      partCols: Seq[(String, org.apache.spark.sql.types.DataType)] = parent.partCols,
+      schemaJson: Option[String] = parent.schemaJson,
+      mapping: Map[String, String] = parent.mapping,
+      retired: Set[String] = parent.retired): Long = {
     Files.createDirectories(logDir(root))
+    val expected = parent.version
     val next = expected + 1
     // a GENESIS publish means this root is a fresh (or re-created) log:
     // any append-step verdicts memoized for a previous incarnation of
@@ -1203,28 +1226,25 @@ object TxLog {
       }
     }
     def entryLine(prefix: String, e: FileEntry): String =
-      renderEntry(prefix, e, withPart = partMeta.nonEmpty)
-    val fLines: Seq[String] = parentEntries match {
-      case Some(pe) =>
-        val newPaths = entries.map(_.path).toSet
-        val oldByPath = pe.map(e => e.path -> e).toMap
-        // an entry counts as an ADD when its path is new OR its content
-        // changed in place (a deletion-vector update rewrites the entry
-        // under the same path) — a path-only diff would silently drop
-        // same-path changes from the delta; changed paths also emit a
-        // remove so the replay (filterNot removes ++ adds) replaces them
-        val adds = entries.filter(e => !oldByPath.get(e.path).contains(e))
-        val changed = adds.map(_.path).toSet
-        val removes = pe.map(_.path).filter(p => !newPaths(p) || changed(p))
-        if (adds.size + removes.size < entries.size)
-          "k\tdelta" +: (adds.map(entryLine("+f", _)) ++ removes.map("-f\t" + _))
-        else entries.map(entryLine("f", _))
-      case None => entries.map(entryLine("f", _))
-    }
+      renderEntry(prefix, e, withPart = partCols.nonEmpty)
+    val newPaths = entries.map(_.path).toSet
+    val oldByPath = parent.entries.map(e => e.path -> e).toMap
+    // an entry counts as an ADD when its path is new OR its content
+    // changed in place (a deletion-vector update rewrites the entry
+    // under the same path) — a path-only diff would silently drop
+    // same-path changes from the delta; changed paths also emit a
+    // remove so the replay (filterNot removes ++ adds) replaces them
+    val adds = entries.filter(e => !oldByPath.get(e.path).contains(e))
+    val changed = adds.map(_.path).toSet
+    val removes = parent.entries.map(_.path).filter(p => !newPaths(p) || changed(p))
+    val fLines: Seq[String] =
+      if (adds.size + removes.size < entries.size)
+        "k\tdelta" +: (adds.map(entryLine("+f", _)) ++ removes.map("-f\t" + _))
+      else entries.map(entryLine("f", _))
     // schema JSON is single-line by construction (JSON escapes control
     // characters), so it rides as one `s` header line
     // one `p` line per partition column, in hive nesting order
-    val body = (partMeta.map { case (pc, dt) => s"p\t$pc\t${dt.catalogString}" } ++
+    val body = (partCols.map { case (pc, dt) => s"p\t$pc\t${dt.catalogString}" } ++
       Seq(s"t\t${System.currentTimeMillis()}") ++
       schemaJson.map("s\t" + _).toSeq ++
       mapping.toSeq.sorted.map { case (p, l) => s"m\t$p\t$l" } ++
@@ -1266,22 +1286,33 @@ object TxLog {
     * the job's output logically depends on (a merge's key-range ∧ scope
     * conjuncts) — an interleaved file that could hold a matching row is
     * a conflict. None = the job read the whole table (only metadata-only
-    * interleavings rebase). `notesFn`/`cdcKv` re-derive the commit's
-    * note set against the WINNER's notes and the ACTUAL commit version —
-    * a version-pinned attribution marker re-pins without rewriting its
-    * change dir (the dir's rows are version-free; `_commit_version` is
-    * attached at read from the manifest pin). */
+    * interleavings rebase). `notesFn` re-derives the commit's note set
+    * against the WINNER's notes. `changes` — the commit's exact changed
+    * rows, built lazily; None marks a row-preserving maintenance rewrite
+    * — are attributed here, ONCE, by [[attribution]] (change files when
+    * the table opted in), and the marker re-pins to the ACTUAL commit
+    * version on every attempt without rewriting the change dir (the
+    * dir's rows are version-free; `_commit_version` is attached at read
+    * from the manifest pin). `gate` is the caller's pre-publish check
+    * ([[prePublish]]): it runs after the staging and the change files,
+    * strictly before the first CAS. Metadata fields default to the
+    * parent's (a rebase requires them unchanged in the winner). */
   private def publishRmw(root: String, parent: Snapshot,
       victims: Seq[FileEntry], staged: Seq[FileEntry],
       readConjuncts: Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]],
       notesFn: Set[String] => Set[String],
-      cdcKv: Long => Map[String, String],
-      schemaJson: Option[String],
-      mapping: Option[Map[String, String]] = None,
-      retired: Option[Set[String]] = None,
+      changes: Option[() => DataFrame],
       interloperHot: Option[FileEntry => Boolean] = None,
-      partCols: Option[Seq[(String, org.apache.spark.sql.types.DataType)]] = None,
-      maxRebases: Int = 5): Long = {
+      gate: () => Unit = () => (),
+      maxRebases: Int = 5)(
+      schemaJson: Option[String] = parent.schemaJson,
+      mapping: Map[String, String] = parent.mapping,
+      retired: Set[String] = parent.retired,
+      partCols: Seq[(String, org.apache.spark.sql.types.DataType)] =
+        parent.partCols): Long = {
+    val cdcKv = attribution(root, parent.notes, changes,
+      if (changes.isEmpty) "cdc_noop" else "cdc_full")
+    gate()
     val victimPaths = victims.map(_.path).toSet
     var snap = parent
     var rebases = 0
@@ -1292,12 +1323,10 @@ object TxLog {
           testRacePublishHook = None
           h(root)
         }
-        return publish(root, snap.version, carried ++ staged,
-          partCols.getOrElse(snap.partCols),
-          kvMerge(notesFn(snap.notes), cdcKv(snap.version + 1)),
-          schemaJson, mapping.getOrElse(snap.mapping),
-          retired.getOrElse(snap.retired),
-          parentEntries = Some(snap.entries))
+        return publish(root, snap)(entries = carried ++ staged,
+          notes = kvMerge(notesFn(snap.notes), cdcKv(snap.version + 1)),
+          partCols = partCols, schemaJson = schemaJson, mapping = mapping,
+          retired = retired)
       } catch {
         case e: java.util.ConcurrentModificationException =>
           rebases += 1
@@ -1314,6 +1343,38 @@ object TxLog {
       }
     }
     0L // unreachable
+  }
+
+  /** Change attribution for a rewrite commit, as the marker for whichever
+    * version it ends up publishing (see [[writeCdcFiles]] for the marker
+    * contract): when the table opted into `change_feed` and the commit
+    * knows its changed `rows`, they are written to change files HERE,
+    * once, and the marker is `cdc_files`; otherwise it is `fallback`
+    * (`cdc_full` for a rewrite, `cdc_noop` for row-preserving
+    * maintenance). */
+  private def attribution(root: String, notes: Set[String],
+      rows: Option[() => DataFrame], fallback: String): Long => Map[String, String] =
+    rows.filter(_ => wantsChangeFiles(notes)).map(r => writeCdcFiles(root, r())) match {
+      case Some(dir) => v => Map("cdc_files" -> s"$v:$dir")
+      case None => v => Map(fallback -> v.toString)
+    }
+
+  /** Start pre-publish work CONCURRENTLY with the commit's staging and
+    * return its await. The work may only depend on the pinned snapshot
+    * (change-file attribution, a MERGE multi-match check, staging the
+    * rows a commit adds, a caller's kv derivation); the writer awaits it
+    * after its own staging, strictly before the CAS, so a failure refuses
+    * the commit with nothing visible. An attempt that ends before the
+    * await (a refusal, a zero-victim bump, a CAS loss) abandons the
+    * future: its staged output is an unreferenced directory that
+    * [[vacuum]] reclaims like a CAS loser's, and its failure — no longer
+    * anyone's exception — is logged instead of swallowed. */
+  private def prePublish[T](root: String, what: String)(work: => T): () => T = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val f = scala.concurrent.Future(work)
+    f.failed.foreach(e => System.err.println(
+      s"graft.TxLog: pre-publish $what at $root failed: $e"))
+    () => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
   }
 
   /** Why the loser's staged commit CANNOT rebase onto `fresh` — None
@@ -1376,25 +1437,20 @@ object TxLog {
     * error (the publish CAS covers the narrower check-then-publish
     * window the same way). */
   def init(spark: SparkSession, root: String, df: DataFrame, note: String = ""): Long =
-    initWith(spark, root, df, Seq.empty,
-      if (note.isEmpty) Set.empty else Set(note))
+    initWith(spark, root, df, Seq.empty, noted(note)(Set.empty))
 
   /** [[init]]/[[initPartitioned]] with a full initial NOTE SET (tags plus
     * `kv:` properties in one v1 publish) — the create leg of
     * [[replaceTable]] and the kv-bearing effectively-once appends. */
   private def initWith(spark: SparkSession, root: String, df: DataFrame,
-      partCols: Seq[String], notes: Set[String]): Long = {
-    partCols.foreach(pc => requireStablePartType(df, pc, "init"))
+      partCols: Seq[String], notes: Set[String], op: String = "init"): Long = {
+    partCols.foreach(pc => requireStablePartType(df, pc, op))
     ensureUninitialized(root)
-    val entries =
-      if (partCols.nonEmpty)
-        stagePartitioned(spark, root, df, partCols, keepInFiles = true)
-      else stageData(spark, root, df)
     // new tables use the single-relation layout: partition columns ride
     // in the files, so the committed file schema keeps them
-    publish(root, 0L, entries,
-      partCols.map(pc => (pc, df.schema(pc).dataType)), notes,
-      Some(fileSchemaJson(df, Seq.empty)))
+    publish(root, Genesis)(entries = stage(spark, root, df, partCols),
+      notes = notes, partCols = partCols.map(pc => (pc, df.schema(pc).dataType)),
+      schemaJson = Some(fileSchemaJson(df, Seq.empty)))
   }
 
   /** Create-or-REPLACE in one commit, with an EXACT resulting note set —
@@ -1425,7 +1481,7 @@ object TxLog {
         .distinct.size == partCols.size,
       s"replaceTable: duplicate partition columns in $partCols")
     partCols.foreach(pc => requireStablePartType(df, pc, "replaceTable"))
-    val base = kvMerge(if (note.isEmpty) Set.empty[String] else Set(note), kv)
+    val base = kvMerge(noted(note)(Set.empty), kv)
     withRetry(root) {
       case None =>
         Some(initWith(spark, root, df, partCols, base))
@@ -1453,13 +1509,7 @@ object TxLog {
     require(partCols.nonEmpty, "initPartitioned: no partition columns")
     require(partCols.map(_.toLowerCase).distinct.size == partCols.size,
       s"initPartitioned: duplicate partition columns in $partCols")
-    partCols.foreach(pc => requireStablePartType(df, pc, "initPartitioned"))
-    ensureUninitialized(root)
-    val entries = stagePartitioned(spark, root, df, partCols, keepInFiles = true)
-    publish(root, 0L, entries,
-      partCols.map(pc => (pc, df.schema(pc).dataType)),
-      if (note.isEmpty) Set.empty else Set(note),
-      Some(fileSchemaJson(df, Seq.empty)))
+    initWith(spark, root, df, partCols, noted(note)(Set.empty), "initPartitioned")
   }
 
   /** Convert an EXISTING plain parquet directory (partCol = None) or
@@ -1494,10 +1544,9 @@ object TxLog {
     // Footer stats ARE collected (one metadata read per adopted file —
     // the only per-file cost of the zero-movement convert), so skipping
     // works from v1.
-    publish(root, 0L, Stats.attach(root, entries),
-      partCols.map(pc =>
-        (pc, org.apache.spark.sql.types.StringType: org.apache.spark.sql.types.DataType)),
-      Set(note), None)
+    publish(root, Genesis)(entries = Stats.attach(root, entries), notes = Set(note),
+      partCols = partCols.map(pc =>
+        (pc, org.apache.spark.sql.types.StringType: org.apache.spark.sql.types.DataType)))
   }
 
   private def ensureUninitialized(root: String): Unit =
@@ -1700,9 +1749,7 @@ object TxLog {
     * An adopted table upgrades to schema-pinned with this commit. */
   def renameColumn(spark: SparkSession, root: String, from: String, to: String,
       note: String = "rename"): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"renameColumn on uninitialized txlog $root"))
+    withTable(root, "renameColumn") { snap =>
       require(!snap.partCols.exists(p => p._1.equalsIgnoreCase(from) ||
           p._1.equalsIgnoreCase(to)),
         "renameColumn: cannot rename a partition column " +
@@ -1719,11 +1766,9 @@ object TxLog {
       val next =
         if (physName == to) snap.mapping - physName // renamed back to physical
         else snap.mapping - physName + (physName -> to)
-      Some(publish(root, snap.version, snap.entries,
-        snap.partCols, snap.notes + note,
-        Some(phys.json), next, snap.retired,
-        parentEntries = Some(snap.entries)))
-    }.get
+      publish(root, snap)(notes = snap.notes + note, schemaJson = Some(phys.json),
+        mapping = next)
+    }
 
   /** Metadata-only column DROP: the column leaves the logical schema;
     * its physical column stays in existing data files (never read — the
@@ -1733,9 +1778,7 @@ object TxLog {
     * ([[commitOverwrite]]/[[upsert]]/[[delete]]), same as Delta. */
   def dropColumn(spark: SparkSession, root: String, name: String,
       note: String = "drop"): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"dropColumn on uninitialized txlog $root"))
+    withTable(root, "dropColumn") { snap =>
       require(!snap.partCols.exists(_._1.equalsIgnoreCase(name)),
         s"dropColumn: cannot drop the partition column $name")
       requireUnconstrained(spark, snap.notes, name, "dropColumn")
@@ -1749,11 +1792,9 @@ object TxLog {
       val physName = phys.fields(idx).name
       val nextPhys = org.apache.spark.sql.types.StructType(
         phys.fields.patch(idx, Nil, 1))
-      Some(publish(root, snap.version, snap.entries,
-        snap.partCols, snap.notes + note,
-        Some(nextPhys.json), snap.mapping - physName, snap.retired + physName,
-        parentEntries = Some(snap.entries)))
-    }.get
+      publish(root, snap)(notes = snap.notes + note, schemaJson = Some(nextPhys.json),
+        mapping = snap.mapping - physName, retired = snap.retired + physName)
+    }
 
   /** Overwrite-commit: the new version's content is exactly `df`. CAS on
     * `expected`; notes accumulate (the new manifest carries the expected
@@ -1761,26 +1802,25 @@ object TxLog {
     * the hive writer, preserving the manifest partition metadata. */
   def commitOverwrite(spark: SparkSession, root: String, df: DataFrame,
       expected: Long, note: String = ""): Long =
-    commitOverwriteNotes(spark, root, df, expected,
-      ns => if (note.isEmpty) ns else ns + note)
+    commitOverwriteNotes(spark, root, df, expected, noted(note))
 
   /** [[commitOverwrite]] with a note-set TRANSFORM — the overwrite
     * sibling of [[commitAppendNotes]]; what lets [[replaceTable]] RESET
     * the accumulated tag ledger in the same atomic publish as the data
-    * it replaced. */
-  /** `cdcKv` — change-feed attribution for the publishing version
-    * (passed `expected + 1`): overwrite IS a full replace, so the
-    * default `cdc_full` marker is its exact attribution; callers with a
-    * more precise story (compact's `cdc_noop`, a COW DELETE's change
-    * files) override. */
+    * it replaced.
+    *
+    * `changes` — the commit's exact changed rows, built lazily — refine
+    * its change-feed attribution ([[attribution]]): overwrite IS a full
+    * replace, so the `cdc_full` marker is its exact attribution unless a
+    * `change_feed` table gets the rows as commit-time change files.
+    * `gate` is the caller's pre-publish check (mergeInto's concurrent
+    * multi-match refusal). */
   private def commitOverwriteNotes(spark: SparkSession, root: String,
       df: DataFrame, expected: Long, notesFn: Set[String] => Set[String],
-      cdcKv: Long => Map[String, String] =
-        v => Map("cdc_full" -> v.toString),
+      changes: Option[() => DataFrame] = None,
       gate: () => Unit = () => ()): Long = {
-    val snap0 = snapshot(root, expected)
-    val partCols = snap0.toSeq.flatMap(_.partCols.map(_._1))
-    val prevNotes = snap0.map(_.notes).getOrElse(Set.empty)
+    val parent = snapshot(root, expected).getOrElse(Genesis.copy(version = expected))
+    val partCols = parent.partCols.map(_._1)
     partCols.foreach(pc => requireStablePartType(df, pc, "commitOverwrite"))
     // CHECK constraints validate the replacing frame — against the
     // RESULTING note set, not the parent's: a caller whose notesFn drops
@@ -1789,50 +1829,37 @@ object TxLog {
     // commit itself removes; every carrying caller (upsert, whole-table
     // UPDATE, INSERT OVERWRITE, maintenance rewrites) enforces exactly
     // as before
-    enforceConstraints(spark, df, notesFn(prevNotes), "commitOverwrite")
+    enforceConstraints(spark, df, notesFn(parent.notes), "commitOverwrite")
     // the change-file attribution can be a real write job (change_feed
     // tables derive and write the precise pre/post-image rows); it
     // depends only on the parent snapshot, so it runs CONCURRENTLY with
-    // the staging write below instead of after it (r18). An abandoned
-    // cdc dir (gate refusal) is an unreferenced data/cdc-* orphan,
-    // reclaimed by vacuum like any CAS loser's.
-    val cdcF = {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val f = scala.concurrent.Future(cdcKv(expected + 1))
-      f.failed.foreach(e => System.err.println(
-        s"graft.TxLog: abandoned overwrite cdc attribution at $root failed: $e"))
-      f
-    }
+    // the staging write below instead of after it
+    val cdcKv = prePublish(root, "overwrite change attribution")(
+      attribution(root, parent.notes, changes, "cdc_full"))
     // overwrite replaces EVERY file — the upgrade point where a legacy
     // or adopted partitioned table flips to the single-relation layout
-    val entries =
-      if (partCols.nonEmpty)
-        stagePartitioned(spark, root, df, partCols, keepInFiles = true)
-      else stageData(spark, root, df)
-    // caller's pre-publish gate (mergeInto's concurrent multi-match
-    // refusal): fires after staging, strictly before anything is visible
+    val entries = stage(spark, root, df, partCols)
     gate()
     // CAS against exactly `expected` — anything else (e.g. latest-on-disk)
     // would publish OVER a concurrent writer's version this writer never
     // read: the textbook lost update. Overwrite replaces EVERY file, so
-    // the schema may change freely (no mixed vintage to protect). The
-    // partition type is re-derived from the OVERWRITING frame — it
-    // replaced every file, so its type is now the table's type (an
-    // adopted string-typed table upgrades to typed here).
-    publish(root, expected, entries,
-      partCols.map(pc => (pc, df.schema(pc).dataType)),
-      kvMerge(notesFn(prevNotes), scala.concurrent.Await.result(cdcF,
-        scala.concurrent.duration.Duration.Inf)),
-      Some(fileSchemaJson(df, Seq.empty)),
-      parentEntries = snap0.map(_.entries))
+    // the schema may change freely (no mixed vintage to protect) and the
+    // column-mapping layers reset. The partition type is re-derived from
+    // the OVERWRITING frame — it replaced every file, so its type is now
+    // the table's type (an adopted string-typed table upgrades to typed
+    // here).
+    publish(root, parent)(entries = entries,
+      notes = kvMerge(notesFn(parent.notes), cdcKv()(expected + 1)),
+      partCols = partCols.map(pc => (pc, df.schema(pc).dataType)),
+      schemaJson = Some(fileSchemaJson(df, Seq.empty)),
+      mapping = Map.empty, retired = Set.empty)
   }
 
   /** Append-commit: the new version is the expected snapshot's files plus
     * `df` staged as new files — no existing byte is read or rewritten. */
   def commitAppend(spark: SparkSession, root: String, df: DataFrame,
       expected: Long, note: String = ""): Long =
-    commitAppendNotes(spark, root, df, expected,
-      ns => if (note.isEmpty) ns else ns + note)
+    commitAppendNotes(spark, root, df, expected, noted(note))
 
   /** [[commitAppend]] carrying replaced `kv:` properties (and optionally
     * a tag) in the same publish — the version-PINNED form a
@@ -1869,8 +1896,7 @@ object TxLog {
   private def commitAppendNotes(spark: SparkSession, root: String, df: DataFrame,
       expected: Long, notesFn: Set[String] => Set[String],
       staged: Option[StagedBox] = None): Long = {
-    val snap = snapshot(root, expected).getOrElse(
-      throw new IllegalStateException(s"append to uninitialized txlog $root"))
+    val snap = initialized(root, "append", snapshot(root, expected))
     val st = staged.flatMap(_.st).filter(_.vintage == vintageOf(snap))
       .getOrElse {
         val s = stageAppend(spark, root, df, snap)
@@ -1884,11 +1910,9 @@ object TxLog {
       testRacePublishHook = None
       h(root)
     }
-    publish(root, expected, snap.entries ++ st.entries,
-      snap.partCols,
-      notesFn(snap.notes),
-      Some(st.nextPhysJson), st.nextMapping, snap.retired,
-      parentEntries = Some(snap.entries))
+    publish(root, snap)(entries = snap.entries ++ st.entries,
+      notes = notesFn(snap.notes), schemaJson = Some(st.nextPhysJson),
+      mapping = st.nextMapping)
   }
 
   /** Mutable staged-batch memo a retrying appender threads through its
@@ -1998,14 +2022,16 @@ object TxLog {
           case None => f
         }
       })
-    val entries =
-      if (snap.partCols.nonEmpty)
-        stagePartitioned(spark, root, physDf, snap.partCols.map(_._1),
-          keepInFiles = inFiles,
-          placeholderIfEmpty = snap.entries.isEmpty)
-      else stageData(spark, root, physDf)
+    val entries = stage(spark, root, physDf, snap.partCols.map(_._1),
+      keepInFiles = inFiles, placeholderIfEmpty = snap.entries.isEmpty)
     StagedAppend(entries, nextPhys.json, nextMapping, vintageOf(snap))
   }
+
+  /** Default CAS-attempt budget for [[withRetry]]. 40 attempts under
+    * the capped-exponential backoff is ~75 s of worst-case patience —
+    * far past the point where contention is the explanation and
+    * something is actually wrong with the table. */
+  val DefaultCommitAttempts: Int = 40
 
   /** Retry loop for optimistic writers: `attempt` receives the fresh
     * latest snapshot (None for an uninitialized table) and either commits
@@ -2024,12 +2050,6 @@ object TxLog {
     * in the spirit of Delta's minutes-scale commit retries; retries stay
     * cheap because staged data files are reused across attempts
     * (stage-once — a retry is manifest work only). */
-  /** Default CAS-attempt budget for [[withRetry]]. 40 attempts under
-    * the capped-exponential backoff is ~75 s of worst-case patience —
-    * far past the point where contention is the explanation and
-    * something is actually wrong with the table. */
-  val DefaultCommitAttempts: Int = 40
-
   def withRetry[T](root: String, maxAttempts: Int = DefaultCommitAttempts)(
       attempt: Option[Snapshot] => Option[T]): Option[T] = {
     var i = 0
@@ -2052,6 +2072,24 @@ object TxLog {
     None // unreachable
   }
 
+  /** [[withRetry]] for the writers that need an existing table: every
+    * attempt gets the fresh snapshot and commits. */
+  private def withTable[T](root: String, op: String)(attempt: Snapshot => T): T =
+    withRetry(root)(snapOpt => Some(attempt(initialized(root, op, snapOpt)))).get
+
+  /** The one uninitialized-table refusal: writers that change an existing
+    * table never create it implicitly — that would silently mint a table
+    * on a typo'd path. */
+  private def initialized(root: String, op: String,
+      snap: Option[Snapshot]): Snapshot =
+    snap.getOrElse(throw new IllegalStateException(
+      s"$op on uninitialized txlog $root — create the table first " +
+        "(init, or CREATE TABLE ... AS SELECT)"))
+
+  /** The note transform of a writer's optional `note` tag. */
+  private def noted(note: String): Set[String] => Set[String] =
+    ns => if (note.isEmpty) ns else ns + note
+
   /** Plain transactional append — SQL `INSERT INTO txlog.<root>
     * <select>`. No idempotence ledger: re-running the statement appends
     * again (SQL semantics; effectively-once sinks use [[appendOnce]] /
@@ -2063,13 +2101,8 @@ object TxLog {
     * path). */
   def insertInto(spark: SparkSession, root: String, df: DataFrame): Long = {
     val staged = new StagedBox(None)
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"INSERT INTO uninitialized txlog $root — " +
-          "CREATE TABLE ... AS SELECT first"))
-      Some(commitAppendNotes(spark, root, df, snap.version, identity,
-        Some(staged)))
-    }.get
+    withTable(root, "INSERT INTO")(snap =>
+      commitAppendNotes(spark, root, df, snap.version, identity, Some(staged)))
   }
 
   /** Whole-table data replace — SQL `INSERT OVERWRITE txlog.<root>
@@ -2082,12 +2115,8 @@ object TxLog {
     * INSERT OVERWRITE keeps them). `cdc_full` attribution: the feed
     * sees removed live rows as deletes, the new frame as inserts. */
   def insertOverwrite(spark: SparkSession, root: String, df: DataFrame): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"INSERT OVERWRITE uninitialized txlog $root — " +
-          "CREATE TABLE ... AS SELECT first"))
-      Some(commitOverwrite(spark, root, df, snap.version))
-    }.get
+    withTable(root, "INSERT OVERWRITE")(snap =>
+      commitOverwrite(spark, root, df, snap.version))
 
   /** Keyed last-write-wins MERGE as one transactional commit: survivors
     * (anti-join) ∪ batch, published as a full overwrite version. Returns
@@ -2109,17 +2138,20 @@ object TxLog {
         val current = read(spark, root, snap.version)
         val merged = current.join(batch.select(key), Seq(key), "left_anti")
           .unionByName(batch)
-        // precise change rows when the table opted in: replaced rows are
-        // pre-image deletes, the whole batch post-image inserts
-        Some(commitOverwriteNotes(spark, root, merged, snap.version,
-          ns => if (note.isEmpty) ns else ns + note,
-          v => cdcKvFor(root, snap.notes, v,
-            current.join(batch.select(key), Seq(key), "left_semi")
-              .withColumn("_change_type", lit("delete"))
-              .unionByName(batch.withColumn("_change_type", lit("insert")),
-                allowMissingColumns = true))))
+        Some(commitOverwriteNotes(spark, root, merged, snap.version, noted(note),
+          Some(() => upsertChanges(current, batch, key))))
     }.get
   }
+
+  /** An upsert's exact changed rows, for change_feed tables: the
+    * replaced rows as pre-image deletes, the whole batch as post-image
+    * inserts. */
+  private def upsertChanges(current: DataFrame, batch: DataFrame,
+      key: String): DataFrame =
+    current.join(batch.select(key), Seq(key), "left_semi")
+      .withColumn("_change_type", lit("delete"))
+      .unionByName(batch.withColumn("_change_type", lit("insert")),
+        allowMissingColumns = true)
 
   /** One conditional-MERGE clause: `cond` (None = unconditional) gates
     * `action` for its category; within a category the FIRST clause whose
@@ -2179,7 +2211,7 @@ object TxLog {
     * The plan is ONE full-outer hash join on the key plus a projection —
     * the SQL-MERGE minimum; at 100 TB the join shuffles both sides once
     * on the key and everything downstream is narrow. Commits one
-    * copy-on-write version; change attribution follows [[cdcKvFor]]:
+    * copy-on-write version; change attribution follows [[attribution]]:
     * exact commit-time change files (`cdc_files`) when the table sets
     * `change_feed=true`, the coarse `cdc_full` marker otherwise. A
     * partial merge that loses the publish CAS to a logically DISJOINT
@@ -2237,13 +2269,7 @@ object TxLog {
       if (r.isNullAt(0)) None
       else Some(col(key) >= lit(r.get(0)) && col(key) <= lit(r.get(1)))
     }.toOption.flatten
-    def conjunctsOf(c: Column): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      scala.util.Try(Stats.splitConjuncts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(spark, c)))
-        .getOrElse(Seq.empty)
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"mergeInto on uninitialized txlog $root"))
+    withTable(root, "mergeInto") { snap =>
       // STATS-PRUNED PARTIAL MERGE (the Delta MERGE file-pruning shape):
       // the conjuncts bound every target row the merge can touch — the
       // scope ∧ the source key range without BY-SOURCE clauses (a file
@@ -2255,10 +2281,10 @@ object TxLog {
       // only those rewrite and everything else carries by reference: a
       // day's batch merged into a key-clustered 100 TB table rewrites
       // that day's files, not the table.
-      val scopeConjuncts = targetScope.map(conjunctsOf)
+      val scopeConjuncts = targetScope.map(conjunctsOf(spark, _))
       val rangeConjuncts =
         if (notMatchedBySource.nonEmpty) Seq.empty
-        else keyRange.map(conjunctsOf).getOrElse(Seq.empty)
+        else keyRange.map(conjunctsOf(spark, _)).getOrElse(Seq.empty)
       val conjuncts = scopeConjuncts.getOrElse(Seq.empty) ++ rangeConjuncts
       val (rewriteEntries, carried) =
         snap.entries.partition(entryCouldMatch(snap, conjuncts))
@@ -2313,27 +2339,18 @@ object TxLog {
       // PRESENT in the (in-scope) target. NULL-keyed source rows never
       // match anything (legal — they fall to NOT MATCHED), and duplicate
       // keys that only fire NOT MATCHED are standard MERGE's legal
-      // multi-row INSERT.
-      // SQL MERGE's multi-match refusal runs CONCURRENTLY with the
-      // result staging (r18): both derive from the same pinned inputs,
-      // and the refusal only has to fire BEFORE the publish — a refused
-      // attempt abandons its staged dir as a vacuumable orphan, exactly
-      // a CAS loser's. Previously this check was its own job in series
-      // ahead of the staging job on every MERGE commit.
-      val dupF = {
-        import scala.concurrent.ExecutionContext.Implicits.global
-        scala.concurrent.Future {
-          source.select(col(key))
-            .join(target.select(col(key)).distinct(), Seq(key), "left_semi")
-            .groupBy(col(key)).count()
-            .filter(col("count") > 1).limit(1).count() > 0
-        }
+      // multi-row INSERT. The check runs CONCURRENTLY with the result
+      // staging: both derive from the same pinned inputs, and it only
+      // has to fire BEFORE the publish — a refused attempt abandons its
+      // staged dir as a vacuumable orphan, exactly a CAS loser's.
+      val noMultiMatch = prePublish(root, "MERGE multi-match check") {
+        require(source.select(col(key))
+          .join(target.select(col(key)).distinct(), Seq(key), "left_semi")
+          .groupBy(col(key)).count()
+          .filter(col("count") > 1).limit(1).count() == 0,
+          s"mergeInto: multiple source rows match one target " +
+            s"$key — SQL MERGE refuses a multi-match")
       }
-      def requireNoDup(): Unit = require(
-        !scala.concurrent.Await.result(dupF,
-          scala.concurrent.duration.Duration.Inf),
-        s"mergeInto: multiple source rows match one target " +
-          s"$key — SQL MERGE refuses a multi-match")
       // ONE full-outer join: target columns ride bare, the source row as
       // a single struct column (no name collisions, and the presence
       // test is one null check per side)
@@ -2420,65 +2437,23 @@ object TxLog {
             .withColumn("_change_type", lit("insert")))
       }
       if (!usePartial)
-        Some(commitOverwriteNotes(spark, root, out, snap.version,
-          ns => if (note.isEmpty) ns else ns + note,
-          v => cdcKvFor(root, snap.notes, v, changes),
-          gate = () => requireNoDup()))
+        commitOverwriteNotes(spark, root, out, snap.version, noted(note),
+          Some(() => changes), gate = noMultiMatch)
       else {
-        // partial publish under the carried schema + mapping (the
-        // deleteCow/updateWhere mixed-commit shape): candidates rewrite
-        // merged, every pruned file carries by reference. With schema
-        // evolution in play toPhysical appends the new columns to the
-        // committed physical schema (fresh physical names under
-        // mapping) — the exact additive-append commit shape, so carried
-        // old-vintage files surface them as NULL
+        // partial publish (the deleteCow/updateWhere mixed-commit shape):
+        // candidates rewrite merged, every pruned file carries by
+        // reference. With schema evolution in play toPhysical appends the
+        // new columns to the committed physical schema (fresh physical
+        // names under mapping) — the exact additive-append commit shape,
+        // so carried old-vintage files surface them as NULL
         enforceConstraints(spark, out, snap.notes, "mergeInto")
-        val physPrev = parseSchema(effectiveSchemaJson(spark, root, snap))
-        val (physDf, physNext, mapNext) = toPhysical(out, snap, physPrev)
-        val inFiles = partDataInFiles(snap.partCols, Some(physPrev))
-        val staged =
-          if (snap.partCols.nonEmpty)
-            stagePartitioned(spark, root, physDf, snap.partCols.map(_._1),
-              keepInFiles = inFiles, placeholderIfEmpty = false)
-          else stageData(spark, root, physDf)
-        // change files write ONCE; a rebased publish re-pins the marker
-        // to the actual commit version without rewriting the dir (the
-        // rows are version-free — _commit_version attaches at read)
-        val cdcDir =
-          if (wantsChangeFiles(snap.notes)) Some(writeCdcFiles(root, changes))
-          else None
-        requireNoDup()
-        Some(publishRmw(root, snap,
-          victims = rewriteEntries, staged = staged,
-          readConjuncts = Some(conjuncts),
-          notesFn = ns => if (note.isEmpty) ns else ns + note,
-          cdcKv = v => cdcDir match {
-            case Some(d) => Map("cdc_files" -> s"$v:$d")
-            case None => Map("cdc_full" -> v.toString)
-          },
-          schemaJson = Some(physNext.json), mapping = Some(mapNext)))
+        rewritePartial(spark, root, snap,
+          parseSchema(effectiveSchemaJson(spark, root, snap)), rewriteEntries, out,
+          conjuncts, noted(note), () => changes, gate = noMultiMatch)
       }
-    }.get
+    }
   }
 
-  /** Partition-scoped keyed MERGE: only the partitions the batch touches
-    * are read and rewritten; every other file is carried into the new
-    * manifest BY REFERENCE — never opened, never copied. One transactional
-    * commit covers all touched partitions (the per-partition-swap form
-    * this replaces committed them one by one, so a crash mid-sequence
-    * could land half a batch). Returns per-partition stats, ordered by
-    * partition name. NULL and empty-string partition values both map to
-    * the hive default partition, matching Spark's partitioned writer.
-    *
-    * PRECONDITION — keys must not migrate across partitions: the merge is
-    * partition-scoped, so a key whose partition value CHANGES between
-    * batches leaves its old row in an untouched partition the anti-join
-    * never reads — the key ends up duplicated across partitions (a
-    * whole-table [[upsert]] would have removed it). Same contract as a
-    * partition-scoped Delta `MERGE` whose condition pins the partition:
-    * use a partition column that is functionally determined by the key
-    * (e.g. `lang` of a document id), or fall back to [[upsert]] when keys
-    * can move. */
   /** Partition-column types whose Row value `toString` matches Spark's
     * hive partition-path rendering exactly. Matching touched partitions
     * compares batch VALUES against manifest strings decoded from the
@@ -2503,6 +2478,24 @@ object TxLog {
         "stable across value/path forms (use string, integral, boolean or date)")
   }
 
+  /** Partition-scoped keyed MERGE: only the partitions the batch touches
+    * are read and rewritten; every other file is carried into the new
+    * manifest BY REFERENCE — never opened, never copied. One transactional
+    * commit covers all touched partitions (the per-partition-swap form
+    * this replaces committed them one by one, so a crash mid-sequence
+    * could land half a batch). Returns per-partition stats, ordered by
+    * partition name. NULL and empty-string partition values both map to
+    * the hive default partition, matching Spark's partitioned writer.
+    *
+    * PRECONDITION — keys must not migrate across partitions: the merge is
+    * partition-scoped, so a key whose partition value CHANGES between
+    * batches leaves its old row in an untouched partition the anti-join
+    * never reads — the key ends up duplicated across partitions (a
+    * whole-table [[upsert]] would have removed it). Same contract as a
+    * partition-scoped Delta `MERGE` whose condition pins the partition:
+    * use a partition column that is functionally determined by the key
+    * (e.g. `lang` of a document id), or fall back to [[upsert]] when keys
+    * can move. */
   def upsertPartitioned(spark: SparkSession, root: String, batch0: DataFrame,
       key: String, partCol: String, note: String = ""): Seq[PartStats] =
     upsertPartitioned(spark, root, batch0, key, Seq(partCol), note)
@@ -2623,16 +2616,6 @@ object TxLog {
           val afterCounts = tupleCounts(merged)
           val fresh = stagePartitioned(spark, root, physDf, partCols,
             keepInFiles = inFiles, placeholderIfEmpty = keep.isEmpty)
-          // change files write ONCE; a rebased publish re-pins the marker
-          val cdcDir =
-            if (wantsChangeFiles(snap.notes))
-              Some(writeCdcFiles(root,
-                current.join(batch.select(key), Seq(key), "left_semi")
-                  .withColumn("_change_type", lit("delete"))
-                  .unionByName(
-                    batch.withColumn("_change_type", lit("insert")),
-                    allowMissingColumns = true)))
-            else None
           // CAS loss to a commit outside the touched partitions (an
           // append/upsert of OTHER partitions, a metadata commit)
           // rebases — the write scope is exact partition membership, so
@@ -2640,14 +2623,10 @@ object TxLog {
           publishRmw(root, snap,
             victims = rewrite, staged = fresh,
             readConjuncts = None,
-            notesFn = ns => if (note.isEmpty) ns else ns + note,
-            cdcKv = v => cdcDir match {
-              case Some(d) => Map("cdc_files" -> s"$v:$d")
-              case None => Map("cdc_full" -> v.toString)
-            },
-            schemaJson = Some(nextPhys.json),
-            mapping = Some(nextMapping),
-            interloperHot = Some(e => touchedTags.contains(e.part)))
+            notesFn = noted(note),
+            changes = Some(() => upsertChanges(current, batch, key)),
+            interloperHot = Some(e => touchedTags.contains(e.part)))(
+            schemaJson = Some(nextPhys.json), mapping = nextMapping)
           Some(touched.sortBy(partName).map { pv =>
             PartStats(partName(pv), beforeCounts.getOrElse(pv, 0L),
               afterCounts.getOrElse(pv, 0L), batchCounts.getOrElse(pv, 0L))
@@ -2676,9 +2655,7 @@ object TxLog {
 
   private def deleteCow(spark: SparkSession, root: String, victim: Column,
       note: String): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"delete on uninitialized txlog $root"))
+    withTable(root, "delete") { snap =>
       // SQL DELETE semantics: only rows where the predicate is TRUE are
       // removed; NULL-predicate rows survive. A bare `!victim` would drop
       // them too (!NULL is NULL, and filter keeps only TRUE).
@@ -2692,94 +2669,64 @@ object TxLog {
       // files and rewriting the lake. Unprunable predicates (no
       // col-vs-literal conjuncts, no stats) keep the whole-table
       // rewrite: absence of stats changes cost, never semantics.
-      val conjuncts = scala.util.Try(Stats.splitConjuncts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(spark, victim)))
-        .getOrElse(Seq.empty)
+      val conjuncts = conjunctsOf(spark, victim)
       val (rewrite, carried) =
         snap.entries.partition(entryCouldMatch(snap, conjuncts))
       if (rewrite.isEmpty) {
         // no file can contain a victim: metadata-only version bump
         // preserves the every-delete-commits contract at zero data I/O
-        Some(publish(root, snap.version, snap.entries, snap.partCols,
-          if (note.isEmpty) snap.notes else snap.notes + note,
-          snap.schemaJson, snap.mapping, snap.retired,
-          parentEntries = Some(snap.entries)))
+        publish(root, snap)(notes = noted(note)(snap.notes))
       } else if (carried.isEmpty) {
         val survivors = read(spark, root, snap.version)
           .filter(not(victim <=> lit(true)))
-        Some(commitOverwriteNotes(spark, root, survivors, snap.version,
-          ns => if (note.isEmpty) ns else ns + note,
-          v => cdcKvFor(root, snap.notes, v,
-            read(spark, root, snap.version).filter(victim <=> lit(true))
-              .withColumn("_change_type", lit("delete")))))
+        commitOverwriteNotes(spark, root, survivors, snap.version, noted(note),
+          Some(() => read(spark, root, snap.version).filter(victim <=> lit(true))
+            .withColumn("_change_type", lit("delete"))))
       } else {
-        // partial rewrite under the UNCHANGED schema + mapping (a mixed
-        // commit, like commitAppend — never the overwrite path, which
-        // may reset both): candidates read LOGICAL, victims dropped,
-        // survivors restaged PHYSICAL to the table's layout vintage
+        // candidates read LOGICAL, victims dropped
         val physPrev = parseSchema(effectiveSchemaJson(spark, root, snap))
-        val inFiles = partDataInFiles(snap.partCols, Some(physPrev))
         val candPhys = readEntriesOf(spark, root, snap, rewrite, Some(physPrev))
         val candLogical =
           if (snap.mapping.isEmpty) candPhys
           else applyMapping(candPhys, snap, physPrev)
-        val survivors = candLogical.filter(not(victim <=> lit(true)))
-        val (physDf, _, _) = toPhysical(survivors, snap, physPrev)
-        val staged =
-          if (snap.partCols.nonEmpty)
-            // carried.nonEmpty here (the carried-empty case went through
-            // the overwrite path above), so a zero-survivor restage needs
-            // no schema placeholder
-            stagePartitioned(spark, root, physDf, snap.partCols.map(_._1),
-              keepInFiles = inFiles, placeholderIfEmpty = false)
-          else stageData(spark, root, physDf)
-        // change files write ONCE; a rebased publish re-pins the marker
-        val cdcDir =
-          if (wantsChangeFiles(snap.notes))
-            Some(writeCdcFiles(root, candLogical.filter(victim <=> lit(true))
-              .withColumn("_change_type", lit("delete"))))
-          else None
-        // CAS loss to a logically disjoint commit (an append whose rows
-        // cannot match the delete predicate, a metadata commit) REBASES
-        // instead of re-running the rewrite — same shape as the partial
-        // MERGE (see publishRmw)
-        Some(publishRmw(root, snap,
-          victims = rewrite, staged = staged,
-          readConjuncts = Some(conjuncts),
-          notesFn = ns => if (note.isEmpty) ns else ns + note,
-          cdcKv = v => cdcDir match {
-            case Some(d) => Map("cdc_files" -> s"$v:$d")
-            case None => Map("cdc_full" -> v.toString)
-          },
-          schemaJson = Some(physPrev.json)))
+        rewritePartial(spark, root, snap, physPrev, rewrite,
+          candLogical.filter(not(victim <=> lit(true))), conjuncts, noted(note),
+          () => candLogical.filter(victim <=> lit(true))
+            .withColumn("_change_type", lit("delete")))
       }
-    }.get
+    }
 
-  /** MERGE-ON-READ targeted delete — deletion vectors (the Delta/Iceberg
-    * v2 position-delete shape). Instead of rewriting every file that
-    * holds a victim row (copy-on-write: O(candidate file bytes) written
-    * for possibly a handful of rows), the commit records the victims'
-    * (file, row-index) positions in a small parquet SIDECAR and points
-    * each touched entry's `dv` field at it; [[readEntriesOf]] anti-joins
-    * the positions out of every subsequent scan. Cost model at 100 TB:
-    * a targeted delete writes O(deleted rows), not O(files straddling
-    * the predicate) — the difference between a compliance-delete of one
-    * user's rows costing kilobytes vs rewriting a terabyte tier. Reads
-    * pay one broadcast anti-join while vectors are live; [[compact]] /
-    * OPTIMIZE purges them (restages survivors, drops the dv), restoring
-    * zero-overhead scans — the standard MoR maintenance contract.
-    *
-    * Semantics are identical to [[delete]] (SQL DELETE: TRUE-predicate
-    * rows go, NULL-predicate rows survive; every call commits a version;
-    * stats-pruning narrows the candidate set). Repeated MoR deletes
-    * ACCUMULATE: each commit writes one fresh sidecar carrying the
-    * touched files' prior positions plus the new victims (prior sidecars
-    * remain referenced only by untouched entries and age out via
-    * pruneHistory + vacuum). A file whose every row is deleted drops
-    * from the manifest outright when footer stats prove it empty.
-    * Requires the manifest-fed read layout (committed schema + sizes;
-    * partition columns in the files) — legacy adopted layouts keep
-    * copy-on-write. */
+  /** The stats-pruning conjuncts of a predicate — empty (prune nothing)
+    * when it cannot be split. */
+  private def conjunctsOf(spark: SparkSession, c: Column)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    scala.util.Try(Stats.splitConjuncts(
+      org.apache.spark.sql.graftbridge.Bridge.expression(spark, c)))
+      .getOrElse(Seq.empty)
+
+  /** The PARTIAL REWRITE commit of DELETE, UPDATE and MERGE: `out`, the
+    * logical rows replacing the `victims` the statement read, restages
+    * PHYSICAL to the table's layout vintage — a mixed commit like
+    * commitAppend, never the overwrite path, which may reset schema and
+    * mapping — and every other file carries by reference. The carried
+    * files keep the table non-empty, so a zero-row restage needs no
+    * schema placeholder. A CAS loss to a logically disjoint commit (an
+    * append whose rows cannot match `readConjuncts`, a metadata commit)
+    * REBASES instead of re-running the rewrite (see [[publishRmw]]). */
+  private def rewritePartial(spark: SparkSession, root: String, snap: Snapshot,
+      physPrev: org.apache.spark.sql.types.StructType, victims: Seq[FileEntry],
+      out: DataFrame,
+      readConjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      notesFn: Set[String] => Set[String], changes: () => DataFrame,
+      gate: () => Unit = () => ()): Long = {
+    val (physDf, physNext, mapNext) = toPhysical(out, snap, physPrev)
+    val staged = stage(spark, root, physDf, snap.partCols.map(_._1),
+      keepInFiles = partDataInFiles(snap.partCols, Some(physPrev)),
+      placeholderIfEmpty = false)
+    publishRmw(root, snap, victims, staged, Some(readConjuncts), notesFn,
+      Some(changes), gate = gate)(schemaJson = Some(physNext.json), mapping = mapNext)
+  }
+
   /** CHANGE ATTRIBUTION — what lets [[readChanges]] never refuse a
     * rewrite commit this code wrote. Three version-PINNED kv markers
     * (the value names the committing version, so the copies the note
@@ -2818,15 +2765,6 @@ object TxLog {
 
   private def wantsChangeFiles(notes: Set[String]): Boolean =
     kvOf(notes).get("change_feed").contains("true")
-
-  /** Attribution kv for a rewrite commit publishing version `next`:
-    * precise change files when the table opted in (`changes` is then
-    * materialized and written), the coarse full-diff marker otherwise. */
-  private def cdcKvFor(root: String, notes: Set[String], next: Long,
-      changes: => DataFrame): Map[String, String] =
-    if (wantsChangeFiles(notes))
-      Map("cdc_files" -> s"$next:${writeCdcFiles(root, changes)}")
-    else Map("cdc_full" -> next.toString)
 
   /** Typed refusal from the MERGE-ON-READ writers ([[deleteMoR]] /
     * [[updateMoR]]) for statements or table layouts MoR cannot express —
@@ -2922,7 +2860,33 @@ object TxLog {
     }.reduce(_.unionByName(_))
   }
 
-  /** `kvFn` — replaced `kv:` properties derived from the attempt's FRESH
+  /** MERGE-ON-READ targeted delete — deletion vectors (the Delta/Iceberg
+    * v2 position-delete shape). Instead of rewriting every file that
+    * holds a victim row (copy-on-write: O(candidate file bytes) written
+    * for possibly a handful of rows), the commit records the victims'
+    * (file, row-index) positions in a small parquet SIDECAR and points
+    * each touched entry's `dv` field at it; [[readEntriesOf]] anti-joins
+    * the positions out of every subsequent scan. Cost model at 100 TB:
+    * a targeted delete writes O(deleted rows), not O(files straddling
+    * the predicate) — the difference between a compliance-delete of one
+    * user's rows costing kilobytes vs rewriting a terabyte tier. Reads
+    * pay one broadcast anti-join while vectors are live; [[compact]] /
+    * OPTIMIZE purges them (restages survivors, drops the dv), restoring
+    * zero-overhead scans — the standard MoR maintenance contract.
+    *
+    * Semantics are identical to [[delete]] (SQL DELETE: TRUE-predicate
+    * rows go, NULL-predicate rows survive; every call commits a version;
+    * stats-pruning narrows the candidate set). Repeated MoR deletes
+    * ACCUMULATE: each commit writes one fresh sidecar carrying the
+    * touched files' prior positions plus the new victims (prior sidecars
+    * remain referenced only by untouched entries and age out via
+    * pruneHistory + vacuum). A file whose every row is deleted drops
+    * from the manifest outright when footer stats prove it empty.
+    * Requires the manifest-fed read layout (committed schema + sizes;
+    * partition columns in the files) — legacy adopted layouts keep
+    * copy-on-write.
+    *
+    * `kvFn` — replaced `kv:` properties derived from the attempt's FRESH
     * snapshot and published atomically with the delete (the
     * [[commitAppendKv]] discipline: a CAS loss re-runs the derivation, so
     * a maintained counter — an index's `kv:n` — can never commit against
@@ -3010,122 +2974,115 @@ object TxLog {
       note: String, kvFn: Snapshot => Map[String, String],
       pruneWith: Column, selectVictims: DataFrame => DataFrame,
       adds: Option[DataFrame] = None): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"delete on uninitialized txlog $root"))
-      val schema = snap.schemaJson.map(parseSchema)
-      if (!(snap.partCols.isEmpty || partDataInFiles(snap.partCols, schema)))
-        throw new MoRUnsupportedException(
-          s"deleteMoR: legacy partition layout at $root cannot carry deletion " +
-            "vectors — a full overwrite upgrades the layout, or use delete()")
-      if (!(schema.isDefined && snap.entries.forall(_.size.isDefined)))
-        throw new MoRUnsupportedException(
-          s"deleteMoR: table at $root predates the manifest-fed read layout")
-      val conjuncts = scala.util.Try(Stats.splitConjuncts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(spark, pruneWith)))
-        .getOrElse(Seq.empty)
-      val cand = snap.entries.filter(entryCouldMatch(snap, conjuncts))
+    withTable(root, "delete") { snap =>
+      val phys = morSchema(root, snap, "deleteMoR", "delete")
+      val cand = snap.entries.filter(entryCouldMatch(snap, conjunctsOf(spark, pruneWith)))
       // replaceKeysMoR adds stage CONCURRENTLY with the victim-position
-      // jobs below — staged files are invisible until the publish, so a
-      // refusal/CAS loss strands only a vacuumable orphan dir; all
-      // append gates (additive schema, widening, constraints) run
-      // inside stageAppend, per attempt
-      val stagedAddsF = adds.map { a =>
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val f = scala.concurrent.Future(stageAppend(spark, root, a, snap))
-        // a refusal (gate, budget) or CAS loss below abandons this
-        // future — correct (the orphan dir is unreferenced and
-        // vacuumable) but a silent swallow of staging errors otherwise;
-        // surface them
-        f.failed.foreach(e => System.err.println(
-          s"graft.TxLog: abandoned replaceKeysMoR stage at $root failed: $e"))
-        f
-      }
-      def stagedAdds(): Option[StagedAppend] = stagedAddsF.map(f =>
-        scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
+      // jobs below; all append gates (additive schema, widening,
+      // constraints) run inside stageAppend, per attempt
+      val stagedAdds = adds.map(a =>
+        prePublish(root, "replaceKeysMoR stage")(stageAppend(spark, root, a, snap)))
       // kvFn derives from the PINNED snapshot alone (it may run Spark
       // jobs — the index fold's count maintenance does), so it runs
-      // CONCURRENTLY with the victim/sidecar jobs below instead of
-      // adding its own job to the attempt's sequential chain (r18; the
-      // d17 sync commit paid it in series). A kvFn failure surfaces at
-      // the pre-publish Await — still strictly before anything becomes
-      // visible; an attempt abandoned earlier (budget refusal, CAS loss)
-      // just drops the future's result.
-      val notesOutF = {
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val f = scala.concurrent.Future(kvMerge(
-          if (note.isEmpty) snap.notes else snap.notes + note, kvFn(snap)))
-        f.failed.foreach(e => System.err.println(
-          s"graft.TxLog: abandoned MoR kvFn at $root failed: $e"))
-        f
-      }
-      def notesOut: Set[String] = scala.concurrent.Await.result(notesOutF,
-        scala.concurrent.duration.Duration.Inf)
-      def publishWith(entries: Seq[FileEntry]): Long =
-        stagedAdds() match {
-          case None => publish(root, snap.version, entries, snap.partCols,
-            notesOut, snap.schemaJson, snap.mapping, snap.retired,
-            parentEntries = Some(snap.entries))
-          case Some(st) => publish(root, snap.version,
-            entries ++ st.entries, snap.partCols, notesOut,
-            Some(st.nextPhysJson), st.nextMapping, snap.retired,
-            parentEntries = Some(snap.entries))
+      // concurrently too instead of adding its own job to the attempt's
+      // sequential chain
+      val notesOut = prePublish(root, "MoR kvFn")(
+        kvMerge(noted(note)(snap.notes), kvFn(snap)))
+      val next =
+        if (cand.isEmpty) None
+        else dvCommit(spark, root, snap, cand,
+          selectVictims(withPositions(spark, root, snap, cand, Some(phys))),
+          "deleteMoR", keepOne = true)
+      val st = stagedAdds.map(_())
+      publish(root, snap)(
+        entries = next.getOrElse(snap.entries) ++ st.toSeq.flatMap(_.entries),
+        notes = notesOut(),
+        schemaJson = st.fold(snap.schemaJson)(a => Some(a.nextPhysJson)),
+        mapping = st.fold(snap.mapping)(_.nextMapping))
+    }
+
+  /** The MERGE-ON-READ layout gate of [[deleteMoR]] and [[updateMoR]]:
+    * deletion vectors need the manifest-fed read layout (committed schema
+    * and sizes; partition columns in the files). Returns the committed
+    * physical schema; the typed refusal names `cow`, the copy-on-write
+    * writer that can carry the statement instead. */
+  private def morSchema(root: String, snap: Snapshot, op: String,
+      cow: String): org.apache.spark.sql.types.StructType = {
+    val schema = snap.schemaJson.map(parseSchema)
+    if (!(snap.partCols.isEmpty || partDataInFiles(snap.partCols, schema)))
+      throw new MoRUnsupportedException(
+        s"$op: legacy partition layout at $root cannot carry deletion " +
+          s"vectors — a full overwrite upgrades the layout, or use $cow()")
+    if (!(schema.isDefined && snap.entries.forall(_.size.isDefined)))
+      throw new MoRUnsupportedException(
+        s"$op: table at $root predates the manifest-fed read layout")
+    schema.get
+  }
+
+  /** `entries`' rows under their LOGICAL names plus each row's scan
+    * position ([[DvFileCol]], [[DvPosCol]]), with the entries' own
+    * deletion vectors applied — so a MoR writer evaluates victims on
+    * live rows only and an already-deleted row never re-enters a
+    * sidecar; strip the vectors first to read raw positions. */
+  private def withPositions(spark: SparkSession, root: String, snap: Snapshot,
+      entries: Seq[FileEntry],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val pos = readEntriesOf(spark, root, snap, entries, schema, keepPos = true)
+    if (snap.mapping.isEmpty) pos
+    else pos.select((schema.get.fields.map(f =>
+      col(f.name).as(snap.mapping.getOrElse(f.name, f.name))) :+
+      col(DvFileCol) :+ col(DvPosCol)).toSeq: _*)
+  }
+
+  /** Scan path → manifest path of `entries`: the broadcast dimension
+    * that maps [[withPositions]]' file column to sidecar paths. */
+  private def pathDim(spark: SparkSession, root: String,
+      entries: Seq[FileEntry]): DataFrame = {
+    import spark.implicits._
+    entries.map(e => (absNorm(root, e.path), e.path)).toDF(DvFileCol, "f")
+  }
+
+  /** THE DELETION-VECTOR COMMIT shared by [[deleteMoR]] and
+    * [[updateMoR]]: `victims` (rows of [[withPositions]] over the
+    * candidates `cand`) become positions in ONE new sidecar, which also
+    * carries the candidates' prior positions ([[carryPriorDvPositions]])
+    * under the [[writeDvSidecar]] budget. None when no new position
+    * landed: the sidecar is removed again (a CAS-loser-shaped orphan
+    * otherwise) and the caller publishes a metadata-only bump. Else the
+    * parent's entry list with every candidate re-pointed at the new
+    * sidecar, and a file whose every row is now deleted dropped when its
+    * footer stats prove it. `keepOne` guards a commit that adds no file:
+    * it never publishes an empty file list (readSnapshot's contract) —
+    * if every entry proved fully deleted, they all stay, vectored to
+    * zero live rows. */
+  private def dvCommit(spark: SparkSession, root: String, snap: Snapshot,
+      cand: Seq[FileEntry], victims: DataFrame, op: String,
+      keepOne: Boolean): Option[Seq[FileEntry]] = {
+    val newPos = victims.join(broadcast(pathDim(spark, root, cand)), Seq(DvFileCol))
+      .select(col("f"), col(DvPosCol).as("p"))
+    val prior = cand.filter(_.dv.isDefined)
+    val priorRows = prior.map(_.dv.get._2).sum
+    val allPos =
+      if (prior.isEmpty) newPos
+      else newPos.unionByName(carryPriorDvPositions(spark, root, prior))
+    val (dvFile, counts) = writeDvSidecar(spark, root, allPos, cand, priorRows, op)
+    if (counts.values.sum == priorRows) {
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$root/$dvFile").getParentFile)
+      None
+    } else {
+      def vectored(e: FileEntry, c: Long) = e.copy(dv = Some((dvFile, c)))
+      val next = snap.entries.flatMap { e =>
+        counts.get(e.path) match {
+          case None => Some(e)
+          case Some(c) if e.stats.exists(_.rows == c) => None // all gone
+          case Some(c) => Some(vectored(e, c))
         }
-      def bump(): Long = publishWith(snap.entries)
-      if (cand.isEmpty) Some(bump())
-      else {
-        val physPrev = schema.get
-        // candidates read DV-APPLIED (keepPos threads the scan position
-        // columns through): an already-deleted row must not re-enter the
-        // sidecar, and victims are evaluated on live rows only
-        val candPos = readEntriesOf(spark, root, snap, cand, schema,
-          keepPos = true)
-        val logical =
-          if (snap.mapping.isEmpty) candPos
-          else candPos.select((physPrev.fields.map(f =>
-            col(f.name).as(snap.mapping.getOrElse(f.name, f.name))) :+
-            col(DvFileCol) :+ col(DvPosCol)).toSeq: _*)
-        import spark.implicits._
-        val dim = cand.map(e => (absNorm(root, e.path), e.path))
-          .toDF(DvFileCol, "f")
-        val victims = selectVictims(logical)
-          .join(broadcast(dim), Seq(DvFileCol))
-          .select(col("f"), col(DvPosCol).as("p"))
-        val prior = cand.filter(_.dv.isDefined)
-        val priorRows = prior.map(_.dv.get._2).sum
-        val allPos =
-          if (prior.isEmpty) victims
-          else victims.unionByName(carryPriorDvPositions(spark, root, prior))
-        val (dvFile, counts) =
-          writeDvSidecar(spark, root, allPos, cand, priorRows, "deleteMoR")
-        if (counts.values.sum == priorRows) {
-          // zero new victims: metadata-only bump; the staged sidecar is a
-          // CAS-loser-shaped orphan, reclaimed by vacuum
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(s"$root/$dvFile").getParentFile)
-          Some(bump())
-        } else {
-          val next = snap.entries.flatMap { e =>
-            counts.get(e.path) match {
-              case None => Some(e)
-              case Some(c) if e.stats.exists(_.rows == c) => None // all gone
-              case Some(c) => Some(e.copy(dv = Some((dvFile, c))))
-            }
-          }
-          // never publish an empty file list (readSnapshot's contract):
-          // if every entry proved fully deleted, keep them dv'd instead —
-          // reads apply the vectors to an exact zero rows
-          val entries =
-            if (next.nonEmpty) next
-            else snap.entries.map(e => counts.get(e.path) match {
-              case Some(c) => e.copy(dv = Some((dvFile, c)))
-              case None => e
-            })
-          Some(publishWith(entries))
-        }
       }
-    }.get
+      Some(if (next.nonEmpty || !keepOne) next
+        else snap.entries.map(e => counts.get(e.path).fold(e)(vectored(e, _))))
+    }
+  }
 
   /** MERGE-ON-READ targeted UPDATE — the [[deleteMoR]] machinery
     * extended with the replacement rows: ONE commit records the matched
@@ -3148,35 +3105,13 @@ object TxLog {
   def updateMoR(spark: SparkSession, root: String, cond: Column,
       assignments: Seq[(String, Column)], note: String = ""): Long = {
     require(assignments.nonEmpty, "updateMoR: no SET assignments")
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"update on uninitialized txlog $root"))
-      val schema = snap.schemaJson.map(parseSchema)
-      if (!(snap.partCols.isEmpty || partDataInFiles(snap.partCols, schema)))
-        throw new MoRUnsupportedException(
-          s"updateMoR: legacy partition layout at $root cannot carry deletion " +
-            "vectors — a full overwrite upgrades the layout, or use updateWhere()")
-      if (!(schema.isDefined && snap.entries.forall(_.size.isDefined)))
-        throw new MoRUnsupportedException(
-          s"updateMoR: table at $root predates the manifest-fed read layout")
-      val physPrev = schema.get
-      val conjuncts = scala.util.Try(Stats.splitConjuncts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(spark, cond)))
-        .getOrElse(Seq.empty)
-      val cand = snap.entries.filter(entryCouldMatch(snap, conjuncts))
-      def bump(): Long = publish(root, snap.version, snap.entries,
-        snap.partCols, if (note.isEmpty) snap.notes else snap.notes + note,
-        snap.schemaJson, snap.mapping, snap.retired,
-        parentEntries = Some(snap.entries))
-      if (cand.isEmpty) Some(bump())
+    withTable(root, "update") { snap =>
+      val phys = morSchema(root, snap, "updateMoR", "updateWhere")
+      val cand = snap.entries.filter(entryCouldMatch(snap, conjunctsOf(spark, cond)))
+      def bump(): Long = publish(root, snap)(notes = noted(note)(snap.notes))
+      if (cand.isEmpty) bump()
       else {
-        val candPos = readEntriesOf(spark, root, snap, cand, schema,
-          keepPos = true)
-        val logical =
-          if (snap.mapping.isEmpty) candPos
-          else candPos.select((physPrev.fields.map(f =>
-            col(f.name).as(snap.mapping.getOrElse(f.name, f.name))) :+
-            col(DvFileCol) :+ col(DvPosCol)).toSeq: _*)
+        val logical = withPositions(spark, root, snap, cand, Some(phys))
         assignments.foreach { case (c, _) =>
           require(logical.columns.exists(_.equalsIgnoreCase(c)),
             s"updateMoR: no column $c")
@@ -3203,73 +3138,35 @@ object TxLog {
             throw new MoRUnsupportedException(
               "updateMoR: retyping SET — the appended rows must stay " +
                 "schema-uniform with the files they replace; use updateWhere")
-          import spark.implicits._
-          val dim = cand.map(e => (absNorm(root, e.path), e.path))
-            .toDF(DvFileCol, "f")
-          val newPos = victims.join(broadcast(dim), Seq(DvFileCol))
-            .select(col("f"), col(DvPosCol).as("p"))
-          val prior = cand.filter(_.dv.isDefined)
-          val priorRows = prior.map(_.dv.get._2).sum
-          val allPos =
-            if (prior.isEmpty) newPos
-            else newPos.unionByName(carryPriorDvPositions(spark, root, prior))
           // the replacement rows STAGE concurrently with the
-          // position/sidecar jobs (r18 — the replaceKeysMoR discipline):
-          // staged files are invisible until the publish references
-          // them, so the zero-new-victims bump path or a CAS loss
-          // strands only a vacuumable orphan dir. The CHECK-constraint
-          // gate runs inside the future, before any staging I/O, and a
-          // violation surfaces at the pre-publish Await (the bump path
-          // never publishes `updated` rows — with zero victims the
+          // position/sidecar jobs (the replaceKeysMoR discipline). The
+          // CHECK-constraint gate runs inside the work, before any
+          // staging I/O, and a violation refuses at the await (the bump
+          // path never publishes `updated` rows — with zero victims the
           // frame is empty and cannot violate anything). The retype
           // gate above stays synchronous so the property-routed
           // copy-on-write fallback never pays staging.
-          val stagedF = {
-            import scala.concurrent.ExecutionContext.Implicits.global
-            val f = scala.concurrent.Future {
-              enforceConstraints(spark, updated, snap.notes, "updateMoR")
-              val (physDf, _, _) = toPhysical(updated, snap, physPrev)
-              if (snap.partCols.nonEmpty)
-                stagePartitioned(spark, root, physDf, snap.partCols.map(_._1),
-                  keepInFiles = true, placeholderIfEmpty = false)
-              else stageData(spark, root, physDf)
-            }
-            f.failed.foreach(e => System.err.println(
-              s"graft.TxLog: abandoned updateMoR stage at $root failed: $e"))
-            f
+          val staged = prePublish(root, "updateMoR stage") {
+            enforceConstraints(spark, updated, snap.notes, "updateMoR")
+            val (physDf, _, _) = toPhysical(updated, snap, phys)
+            stage(spark, root, physDf, snap.partCols.map(_._1),
+              placeholderIfEmpty = false)
           }
-          val (dvFile, counts) =
-            writeDvSidecar(spark, root, allPos, cand, priorRows, "updateMoR")
-          if (counts.values.sum == priorRows) {
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$root/$dvFile").getParentFile)
-            Some(bump())
-          } else {
-            val staged = scala.concurrent.Await.result(stagedF,
-              scala.concurrent.duration.Duration.Inf)
-            val next = snap.entries.flatMap { e =>
-              counts.get(e.path) match {
-                case None => Some(e)
-                case Some(c) if e.stats.exists(_.rows == c) => None
-                case Some(c) => Some(e.copy(dv = Some((dvFile, c))))
-              }
-            }
-            // version-pinned CDC marker: THIS commit's added files hold
-            // only post-image rows (never carried survivors), so the
-            // change feed may attribute it row-level even when a fully
-            // updated file drops (adds + removes in one commit — the
-            // shape readChanges otherwise refuses as a rewrite)
-            val marked = kvMerge(
-              if (note.isEmpty) snap.notes else snap.notes + note,
-              Map("cdc_rowlevel" -> (snap.version + 1).toString))
-            Some(publish(root, snap.version, next ++ staged, snap.partCols,
-              marked,
-              snap.schemaJson, snap.mapping, snap.retired,
-              parentEntries = Some(snap.entries)))
+          dvCommit(spark, root, snap, cand, victims, "updateMoR", keepOne = false) match {
+            case None => bump()
+            case Some(next) =>
+              // version-pinned CDC marker: THIS commit's added files hold
+              // only post-image rows (never carried survivors), so the
+              // change feed may attribute it row-level even when a fully
+              // updated file drops (adds + removes in one commit — the
+              // shape readChanges otherwise refuses as a rewrite)
+              publish(root, snap)(entries = next ++ staged(),
+                notes = kvMerge(noted(note)(snap.notes),
+                  Map("cdc_rowlevel" -> (snap.version + 1).toString)))
           }
         } finally victims.unpersist()
       }
-    }.get
+    }
   }
 
   /** Metadata-only table-property commit (`ALTER TABLE ... SET
@@ -3278,13 +3175,8 @@ object TxLog {
     * version, zero data I/O. */
   def setProperties(root: String, kv: Map[String, String]): Long = {
     require(kv.nonEmpty, "setProperties: no properties")
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"setProperties on uninitialized txlog $root"))
-      Some(publish(root, snap.version, snap.entries, snap.partCols,
-        kvMerge(snap.notes, kv), snap.schemaJson, snap.mapping, snap.retired,
-        parentEntries = Some(snap.entries)))
-    }.get
+    withTable(root, "setProperties")(snap =>
+      publish(root, snap)(notes = kvMerge(snap.notes, kv)))
   }
 
   /** ANALYZE TABLE (the Spark/Delta `ANALYZE TABLE ... COMPUTE
@@ -3303,8 +3195,7 @@ object TxLog {
     * a catalog. Returns the published version. */
   def analyzeTable(spark: SparkSession, root: String,
       columns: Seq[String] = Seq.empty): Long = {
-    val snap = snapshot(root).getOrElse(throw new IllegalStateException(
-      s"analyzeTable on uninitialized txlog $root"))
+    val snap = initialized(root, "analyzeTable", snapshot(root))
     val df = readSnapshot(spark, root, snap)
     val all = df.schema.fields.map(_.name).toSeq
     val cols = if (columns.isEmpty) all else columns.map { c =>
@@ -3433,31 +3324,21 @@ object TxLog {
     require(name.matches("[A-Za-z0-9_-]+"), s"unsafe constraint name: $name")
     require(!exprSql.exists(c => c == '\n' || c == '\r'),
       "multi-line constraint expression")
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"addConstraint on uninitialized txlog $root"))
+    withTable(root, "addConstraint") { snap =>
       enforceConstraints(spark, readSnapshot(spark, root, snap),
         Set(s"kv:$ChkPrefix$name:$exprSql"), s"addConstraint $name")
-      Some(publish(root, snap.version, snap.entries, snap.partCols,
-        kvMerge(snap.notes, Map(s"$ChkPrefix$name" -> exprSql)),
-        snap.schemaJson, snap.mapping, snap.retired,
-        parentEntries = Some(snap.entries)))
-    }.get
+      publish(root, snap)(notes = kvMerge(snap.notes, Map(s"$ChkPrefix$name" -> exprSql)))
+    }
   }
 
   /** Remove a CHECK constraint — metadata-only commit. */
   def dropConstraint(root: String, name: String): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"dropConstraint on uninitialized txlog $root"))
+    withTable(root, "dropConstraint") { snap =>
       require(constraintsOf(snap.notes).contains(name),
         s"dropConstraint: no constraint $name " +
           s"(have ${constraintsOf(snap.notes).keys.toSeq.sorted.mkString(", ")})")
-      Some(publish(root, snap.version, snap.entries, snap.partCols,
-        snap.notes.filterNot(_.startsWith(s"kv:$ChkPrefix$name:")),
-        snap.schemaJson, snap.mapping, snap.retired,
-        parentEntries = Some(snap.entries)))
-    }.get
+      publish(root, snap)(notes = snap.notes.filterNot(_.startsWith(s"kv:$ChkPrefix$name:")))
+    }
 
   /** Column names (lowercased leaf attributes) a constraint expression
     * references — what gates rename/drop of constrained columns. */
@@ -3853,18 +3734,9 @@ object TxLog {
   private def rowsAtPositions(spark: SparkSession, root: String,
       snap: Snapshot, entries: Seq[FileEntry],
       positions: DataFrame): DataFrame = {
-    val schema = snap.schemaJson.map(parseSchema)
-    val stripped = entries.map(_.copy(dv = None))
-    val pos = readEntriesOf(spark, root, snap, stripped, schema, keepPos = true)
-    val logical =
-      if (snap.mapping.isEmpty) pos
-      else pos.select((schema.get.fields.map(f =>
-        col(f.name).as(snap.mapping.getOrElse(f.name, f.name))) :+
-        col(DvFileCol) :+ col(DvPosCol)).toSeq: _*)
-    import spark.implicits._
-    val dim = entries.map(e => (absNorm(root, e.path), e.path))
-      .toDF(DvFileCol, "f")
-    logical.join(broadcast(dim), Seq(DvFileCol))
+    val logical = withPositions(spark, root, snap, entries.map(_.copy(dv = None)),
+      snap.schemaJson.map(parseSchema))
+    logical.join(broadcast(pathDim(spark, root, entries)), Seq(DvFileCol))
       .join(broadcast(positions.withColumnRenamed("p", DvPosCol)),
         Seq("f", DvPosCol), "left_semi")
       .drop(DvFileCol, DvPosCol, "f")
@@ -3882,9 +3754,7 @@ object TxLog {
     * no-op if redelivered after the restore). */
   def restore(spark: SparkSession, root: String, toVersion: Long,
       note: String = "restore"): Long =
-    withRetry(root) { snapOpt =>
-      val cur = snapOpt.getOrElse(
-        throw new IllegalStateException(s"restore on uninitialized txlog $root"))
+    withTable(root, "restore") { cur =>
       val target = snapshot(root, toVersion).getOrElse(
         throw new IllegalArgumentException(
           s"restore: version $toVersion is not retained at $root"))
@@ -3918,13 +3788,11 @@ object TxLog {
       // rollback removes are pre-image deletes, files it brings back are
       // post-image inserts, carried entries are untouched rows — so the
       // coarse full-diff attribution is exact here
-      Some(publish(root, cur.version, target.entries,
-        target.partCols,
-        kvMerge(cur.notes + note,
-          Map("cdc_full" -> (cur.version + 1).toString)),
-        target.schemaJson, target.mapping, target.retired,
-        parentEntries = Some(cur.entries)))
-    }.get
+      publish(root, cur)(entries = target.entries,
+        notes = kvMerge(cur.notes + note, Map("cdc_full" -> (cur.version + 1).toString)),
+        partCols = target.partCols, schemaJson = target.schemaJson,
+        mapping = target.mapping, retired = target.retired)
+    }
 
   /** Transactional targeted UPDATE: rows where `cond` is TRUE get the
     * assignments applied, every other row survives byte-identical —
@@ -3951,9 +3819,7 @@ object TxLog {
         // text; see [[MoRUnsupportedException]])
         case _: MoRUnsupportedException =>
       }
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"update on uninitialized txlog $root"))
+    withTable(root, "update") { snap =>
       def applyAssignments(df: DataFrame): DataFrame = {
         assignments.foreach { case (c, _) =>
           require(df.columns.exists(_.equalsIgnoreCase(c)),
@@ -3973,18 +3839,13 @@ object TxLog {
       // UNCHANGED schema + mapping. A SET that retypes a column forces
       // the whole-table path (mixed parquet vintages of one physical
       // column would not read uniformly) — detected by schema compare.
-      val conjuncts = scala.util.Try(Stats.splitConjuncts(
-        org.apache.spark.sql.graftbridge.Bridge.expression(spark, cond)))
-        .getOrElse(Seq.empty)
+      val conjuncts = conjunctsOf(spark, cond)
       val (rewrite, carried) =
         snap.entries.partition(entryCouldMatch(snap, conjuncts))
       if (rewrite.isEmpty) {
         // validate the assignments even when nothing can match
         applyAssignments(read(spark, root, snap.version))
-        Some(publish(root, snap.version, snap.entries, snap.partCols,
-          if (note.isEmpty) snap.notes else snap.notes + note,
-          snap.schemaJson, snap.mapping, snap.retired,
-          parentEntries = Some(snap.entries)))
+        publish(root, snap)(notes = noted(note)(snap.notes))
       } else {
         lazy val physPrev = parseSchema(effectiveSchemaJson(spark, root, snap))
         lazy val candPhys = readEntriesOf(spark, root, snap, rewrite, Some(physPrev))
@@ -4012,42 +3873,17 @@ object TxLog {
         }
         if (carried.isEmpty || !sameTypes) {
           val whole = applyAssignments(read(spark, root, snap.version))
-          Some(commitOverwriteNotes(spark, root, whole, snap.version,
-            ns => if (note.isEmpty) ns else ns + note,
-            v => cdcKvFor(root, snap.notes, v,
-              changesOf(read(spark, root, snap.version)))))
+          commitOverwriteNotes(spark, root, whole, snap.version, noted(note),
+            Some(() => changesOf(read(spark, root, snap.version))))
         } else {
           // CHECK constraints validate the assignments' output — only
           // the restaged candidates can have changed
           enforceConstraints(spark, updated, snap.notes, "updateWhere")
-          val (physDf, _, _) = toPhysical(updated, snap, physPrev)
-          val inFiles = partDataInFiles(snap.partCols, Some(physPrev))
-          val staged =
-            if (snap.partCols.nonEmpty)
-              // carried.nonEmpty on this branch — no placeholder needed
-              stagePartitioned(spark, root, physDf, snap.partCols.map(_._1),
-                keepInFiles = inFiles, placeholderIfEmpty = false)
-            else stageData(spark, root, physDf)
-          // change files write ONCE; a rebased publish re-pins the marker
-          val cdcDir =
-            if (wantsChangeFiles(snap.notes))
-              Some(writeCdcFiles(root, changesOf(candLogical)))
-            else None
-          // CAS loss to a logically disjoint commit rebases instead of
-          // re-running the rewrite — same shape as the partial MERGE
-          // and DELETE (see publishRmw)
-          Some(publishRmw(root, snap,
-            victims = rewrite, staged = staged,
-            readConjuncts = Some(conjuncts),
-            notesFn = ns => if (note.isEmpty) ns else ns + note,
-            cdcKv = v => cdcDir match {
-              case Some(d) => Map("cdc_files" -> s"$v:$d")
-              case None => Map("cdc_full" -> v.toString)
-            },
-            schemaJson = Some(physPrev.json)))
+          rewritePartial(spark, root, snap, physPrev, rewrite, updated, conjuncts,
+            noted(note), () => changesOf(candLogical))
         }
       }
-    }.get
+    }
   }
 
   /** Effectively-once tagged fold (the incremental-rollup discipline on
@@ -4241,9 +4077,7 @@ object TxLog {
     * new version BY REFERENCE, and a table with no over-fragmented
     * partition is the same metadata-only no-op. */
   def compact(spark: SparkSession, root: String, targetFiles: Int): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"compact on uninitialized txlog $root"))
+    withTable(root, "compact") { snap =>
       val target = targetFiles.max(1)
       snap.partCols match {
         case Seq() =>
@@ -4252,7 +4086,7 @@ object TxLog {
           // restaged files hold survivors only, the sidecars age out via
           // pruneHistory + vacuum)
           if (snap.files.size <= target && !snap.entries.exists(_.dv.isDefined))
-            Some(snap.version)
+            snap.version
           else {
             // PHYSICAL-level rewrite (matching the partitioned path):
             // survivors read dv-applied under PHYSICAL names, so the
@@ -4268,20 +4102,16 @@ object TxLog {
             // rebases (the interloper simply stays unpacked): a nightly
             // OPTIMIZE racing a stream of appends costs one manifest
             // retry, never a re-run of the rewrite
-            Some(publishRmw(root, snap,
-              victims = snap.entries, staged = staged,
-              readConjuncts = None,
-              notesFn = ns => ns + "compact",
-              cdcKv = v => Map("cdc_noop" -> v.toString),
-              schemaJson = snap.schemaJson,
-              interloperHot = Some(_ => false)))
+            publishRmw(root, snap, victims = snap.entries, staged = staged,
+              readConjuncts = None, notesFn = _ + "compact", changes = None,
+              interloperHot = Some(_ => false))()
           }
         case pcs =>
           val byPart = snap.entries.groupBy(_.part)
           val fragParts = byPart.collect {
             case (pv, es) if es.size > target || es.exists(_.dv.isDefined) => pv
           }.toSet
-          if (fragParts.isEmpty) Some(snap.version)
+          if (fragParts.isEmpty) snap.version
           else {
             val (rewrite, keep) = snap.entries.partition(e => fragParts(e.part))
             // per-fragmented-partition bin-pack in ONE job: a
@@ -4314,16 +4144,12 @@ object TxLog {
             // so the mapping/retired layers carry through unchanged.
             // Output depends only on the fragmented partitions' files —
             // any interleaved commit that leaves them untouched rebases.
-            Some(publishRmw(root, snap,
-              victims = rewrite, staged = fresh,
-              readConjuncts = None,
-              notesFn = ns => ns + "compact",
-              cdcKv = v => Map("cdc_noop" -> v.toString),
-              schemaJson = snap.schemaJson,
-              interloperHot = Some(_ => false)))
+            publishRmw(root, snap, victims = rewrite, staged = fresh,
+              readConjuncts = None, notesFn = _ + "compact", changes = None,
+              interloperHot = Some(_ => false))()
           }
       }
-    }.get
+    }
 
   /** Multi-dimensional clustering rewrite — `OPTIMIZE ... ZORDER BY`, the
     * layout move that makes the manifest's footer statistics SELECTIVE on
@@ -4346,9 +4172,7 @@ object TxLog {
     * stats themselves, never from this layout. */
   def cluster(spark: SparkSession, root: String, cols: Seq[String],
       targetFiles: Int = 8): Long =
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(
-        throw new IllegalStateException(s"cluster on uninitialized txlog $root"))
+    withTable(root, "cluster") { snap =>
       val target = targetFiles.max(1)
       val src = read(spark, root, snap.version)
       val partNames = snap.partCols.map(_._1)
@@ -4382,26 +4206,17 @@ object TxLog {
       // the output dirs carry the clustering signature in their names
       // (`c-z<sig>-`): [[clusterIncremental]] recognizes already-sorted
       // generations from the paths alone
-      val staged =
-        if (partNames.nonEmpty)
-          stagePartitioned(spark, root, ordered, partNames, keepInFiles = true,
-            dirPrefix = zDirPrefix(cols))
-        else stageData(spark, root, ordered, dirPrefix = zDirPrefix(cols))
+      val staged = stage(spark, root, ordered, partNames, dirPrefix = zDirPrefix(cols))
       val rebaseSafe = snap.mapping.isEmpty && snap.retired.isEmpty &&
         (snap.partCols.isEmpty ||
           partDataInFiles(snap.partCols, snap.schemaJson.map(parseSchema)))
-      Some(publishRmw(root, snap,
-        victims = snap.entries, staged = staged,
-        readConjuncts = None,
-        notesFn = ns => ns + "cluster",
-        cdcKv = v => Map("cdc_noop" -> v.toString),
+      publishRmw(root, snap, victims = snap.entries, staged = staged,
+        readConjuncts = None, notesFn = _ + "cluster", changes = None,
+        interloperHot = if (rebaseSafe) Some((_: FileEntry) => false) else None)(
         schemaJson = Some(fileSchemaJson(ordered, Seq.empty)),
-        mapping = Some(Map.empty), retired = Some(Set.empty),
-        interloperHot =
-          if (rebaseSafe) Some((_: FileEntry) => false) else None,
-        partCols = Some(partNames.map(pc =>
-          (pc, ordered.schema(pc).dataType)))))
-    }.get
+        mapping = Map.empty, retired = Set.empty,
+        partCols = partNames.map(pc => (pc, ordered.schema(pc).dataType)))
+    }
 
   /** Shared [[cluster]]/[[clusterIncremental]] gate: orderable scalar
     * data columns only, at most 7 (63-bit z-value). */
@@ -4521,9 +4336,7 @@ object TxLog {
     def keptGenerations(snap: Snapshot): Int = snap.entries.iterator
       .filter(e => e.path.startsWith(zPrefix) && e.dv.isEmpty)
       .map(_.path.split('/')(1)).toSet.size
-    withRetry(root) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"clusterIncremental on uninitialized txlog $root"))
+    withTable(root, "clusterIncremental") { snap =>
       // promotion decided INSIDE the CAS attempt, against the very
       // snapshot the fold would commit over — the old outside-the-loop
       // check could defer promotion a run, or promote against a stale
@@ -4532,13 +4345,13 @@ object TxLog {
       // re-reads; a fold attempt that loses its CAS re-enters here and
       // RE-DECIDES against the fresh snapshot.
       if (victimsOf(snap).nonEmpty && keptGenerations(snap) >= maxGenerations)
-        Some(cluster(spark, root, cols, targetFiles))
+        cluster(spark, root, cols, targetFiles)
       else {
       val partNames = snap.partCols.map(_._1)
       validateClusterCols(read(spark, root, snap.version), partNames, cols)
       val target = targetFiles.max(1)
       val victims = victimsOf(snap)
-      if (victims.isEmpty) Some(snap.version)
+      if (victims.isEmpty) snap.version
       else {
         // the tail reads PHYSICAL (mapping carries, exactly compact's
         // rewrite level), so the clustering keys translate logical →
@@ -4553,26 +4366,18 @@ object TxLog {
           case n => n
         }
         val ordered = zOrderFrame(src, physCols, partNames, rows, target)
-        val staged =
-          if (partNames.nonEmpty)
-            stagePartitioned(spark, root, ordered, partNames,
-              keepInFiles =
-                partDataInFiles(snap.partCols, snap.schemaJson.map(parseSchema)),
-              dirPrefix = zDirPrefix(cols))
-          else stageData(spark, root, ordered, dirPrefix = zDirPrefix(cols))
+        val staged = stage(spark, root, ordered, partNames,
+          keepInFiles = partDataInFiles(snap.partCols, snap.schemaJson.map(parseSchema)),
+          dirPrefix = zDirPrefix(cols))
         // output depends only on the tail: ANY interleaved commit that
         // leaves the victims untouched rebases (its files just join the
         // next run's tail)
-        Some(publishRmw(root, snap,
-          victims = victims, staged = staged,
-          readConjuncts = None,
-          notesFn = ns => ns + "cluster",
-          cdcKv = v => Map("cdc_noop" -> v.toString),
-          schemaJson = snap.schemaJson,
-          interloperHot = Some(_ => false)))
+        publishRmw(root, snap, victims = victims, staged = staged,
+          readConjuncts = None, notesFn = _ + "cluster", changes = None,
+          interloperHot = Some(_ => false))()
       }
       }
-    }.get
+    }
   }
 
   private val ZBits = 8 // 256 rank buckets per clustered dimension

@@ -67,7 +67,7 @@ class EdgeCaseSpec extends SparkSpec {
     // → kept_chunks 0 and clean_fp = md5("") on BOTH engines (the oracle
     // coalesces DuckDB's NULL-on-empty list aggregate)
     val text = (1 to 10).map(i => s"b$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-d9-edge").toString
+    val dir = freshRoot("graft-d9-edge")
     (0 until 4).map(i => (i.toLong, text, "en", "s", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -84,7 +84,7 @@ class EdgeCaseSpec extends SparkSpec {
     import spark.implicits._
     // doc-atomic packing: a 1300-token doc overhangs its bin; the next doc
     // starts in the bin where its own first token falls
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur6-edge").toString
+    val dir = freshRoot("graft-cur6-edge")
     Seq(
       (0L, (1 to 1300).map(i => s"t$i").mkString(" ")),
       (1L, (1 to 100).map(i => s"u$i").mkString(" ")))
@@ -127,7 +127,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("round-5 operators degrade gracefully on empty inputs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty5").toString
+    val dir = freshRoot("graft-empty5")
     // empty documents / events / lineitem / orders / supplier fixtures
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -219,7 +219,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("t13 PMI: single-token docs fabricate no bigrams; exact integer score") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t13").toString
+    val dir = freshRoot("graft-t13")
     // five "alpha beta" docs (the only pair at the count floor) plus a
     // single-token doc — Spark's sequence(0, -1) DESCENDS, so an unguarded
     // bigram transform would fabricate (solo, null) rows here

@@ -46,7 +46,7 @@ class AggregateSpec extends SparkSpec {
 
   test("a14: regression family recovers an exact line (slope 2, intercept 1)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-a14").toString
+    val dir = freshRoot("graft-a14")
     // y = 2x + 1 exactly: corr = r² = 1, covar_samp = 2, covar_pop = 4/3
     Seq(("A", 1.0, 3.0), ("A", 2.0, 5.0), ("A", 3.0, 7.0))
       .toDF("l_returnflag", "l_quantity", "l_extendedprice")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.{Paths, SparkSpec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -19,7 +17,7 @@ class CurationSpec extends SparkSpec {
   /** Write a planted corpus as `<tmp>/documents.parquet` so the QueryDef
     * runs against it exactly as against the driver's testdata. */
   private def corpusDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft-curation").toString
+    val dir = freshRoot("graft-curation")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

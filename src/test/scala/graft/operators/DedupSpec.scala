@@ -244,7 +244,7 @@ class DedupSpec extends SparkSpec {
     // structurally cannot.
     val small = (1 to 10).map(i => s"a$i").mkString(" ")
     val big = small + " " + (1 to 30).map(i => s"z$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-d11").toString
+    val dir = freshRoot("graft-d11")
     Seq((1L, small, "en", "s", small.length.toLong),
         (2L, big, "en", "s", big.length.toLong),
         (3L, (1 to 12).map(i => s"q$i").mkString(" "), "en", "s", 10L))
@@ -267,7 +267,7 @@ class DedupSpec extends SparkSpec {
     val runA = (1 to 8).map(i => s"A$i").mkString(" ")
     val runB = (1 to 8).map(i => s"B$i").mkString(" ")
     val mid = (1 to 4).map(i => s"m$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-d13").toString
+    val dir = freshRoot("graft-d13")
     Seq(
       (1L, s"$runA $mid $runB"),
       (2L, s"$runA " + (1 to 6).map(i => s"x$i").mkString(" ")),
@@ -298,7 +298,7 @@ class DedupSpec extends SparkSpec {
     // "viral" (df=70 > DfCap=64) and nothing else: the stopword guard
     // drops it, so NO pair forms from a term that carries no identity
     // signal — without the cap this would be C(70,2) join rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft-d14").toString
+    val dir = freshRoot("graft-d14")
     (Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma delta")) ++

@@ -12,7 +12,7 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     // suppliers 1,2,3 all sell to customer 10 (the hub); supplier 1 also
     // sells to customers 11,12. Orders o (100+c) belong to customer c.
-    val dir = java.nio.file.Files.createTempDirectory("graft-g1").toString
+    val dir = freshRoot("graft-g1")
     val sales = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L), (1L, 12L))
     sales.zipWithIndex.map { case ((s, c), i) => (s, 1000L + i) }
       .toDF("l_suppkey", "l_orderkey")
@@ -57,7 +57,7 @@ class GraphSpec extends SparkSpec {
 
   test("triangle count: K4 yields 4, a pendant edge adds none, sub-floor pairs are not edges") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-g2").toString
+    val dir = freshRoot("graft-g2")
     // K4 over suppliers 1-4 (each pair shares MinCoOrders orders), supplier
     // 5 linked to 1 at the floor (edge, no triangle), supplier 6 linked to
     // 1 by a single shared order (below the floor: NOT an edge)
@@ -91,7 +91,7 @@ class GraphSpec extends SparkSpec {
 
   test("g3 BFS: path graph stratifies one node per hop; non-qty-1 edges are excluded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-g3").toString
+    val dir = freshRoot("graft-g3")
     // path s1 - c10 - s2 - c11 - s3 via quantity-1 lineitems, plus a
     // quantity-5 edge s1 - c99 that must NOT be traversed
     val li = Seq((1L, 1L, 1.0), (2L, 2L, 1.0), (3L, 2L, 1.0), (4L, 3L, 1.0),

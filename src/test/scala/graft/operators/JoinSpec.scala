@@ -114,7 +114,7 @@ class JoinSpec extends SparkSpec {
 
   test("j15 q21 shape: sole-blame supplier counted; shared blame, single-supplier, and open orders excluded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-j15").toString
+    val dir = freshRoot("graft-j15")
     // order 1 (F): s1 returns, s2/s3 clean  → s1 is sole-blame, counted
     // order 2 (F): s1 AND s2 return         → shared blame, nobody counted
     // order 3 (F): s1 returns, sole supplier → no co-supplier, excluded
@@ -145,7 +145,7 @@ class JoinSpec extends SparkSpec {
 
   test("j19: per-part 20%-of-average threshold admits only the small-quantity row") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-j19").toString
+    val dir = freshRoot("graft-j19")
     Seq((1L, "Brand#1", 5), (2L, "Brand#2", 5))
       .toDF("p_partkey", "p_brand", "p_size")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
@@ -181,7 +181,7 @@ class JoinSpec extends SparkSpec {
 
   test("j23: decorrelated min-cost window — per-part minimum, no rescan join") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-j23").toString
+    val dir = freshRoot("graft-j23")
     Seq((1L, "alpha", "PROMO", 10), (2L, "beta", "PROMO", 10),
       (3L, "gamma", "OTHER", 10))
       .toDF("p_partkey", "p_name", "p_type", "p_size")
@@ -239,7 +239,7 @@ class JoinSpec extends SparkSpec {
     }
     // j25 semantics: distinct supplier count ignores duplicate lines
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-j25").toString
+    val dir = freshRoot("graft-j25")
     Seq((1L, "Brand#2", "T", 5)).toDF("p_partkey", "p_brand", "p_type", "p_size")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
     Seq((7L, "ex"), (8L, "in")).toDF("s_suppkey", "s_name")

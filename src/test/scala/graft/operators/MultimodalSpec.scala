@@ -171,7 +171,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("mm4 frame sampling: every 4th frame id, from header-decoded frame counts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm4").toString
+    val dir = freshRoot("graft-mm4")
     // video ids (doc_id % 3 == 2): 2 → 3 frames, 5 → 6, 8 → 9; doc 3 is
     // audio (frames = 0) and must not emit rows
     Seq((2L, "aa"), (3L, "bb"), (5L, "cc"), (8L, "dd"))

@@ -1201,4 +1201,62 @@ class TxLogModelSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((1L, "a"), (2L, "b"), (7L, "n"), (3000000000L, "w")))
   }
+
+  test("pre-publish gate fault matrix: a failure in each concurrent " +
+      "pre-publish job refuses the commit and strands only vacuumable orphans") {
+    // one case per job the commit seam starts before its CAS, each driven
+    // through the public API on its own table of 200 rows in 4 files
+    // (id-ranged, so footer stats prune): (name, CHECK constraint the
+    // table carries, the failing statement, what its refusal says)
+    val cases: Seq[(String, Option[String], String => Unit, String)] = Seq(
+      ("updateMoR assignment violating CHECK", Some("v >= 0"),
+        r => TxLog.updateMoR(spark, r, col("id") <= 10, Seq("v" -> lit(-1))),
+        "CHECK constraint"),
+      ("replaceKeysMoR adds violating CHECK", Some("v >= 0"),
+        r => TxLog.replaceKeysMoR(spark, r, "id", Seq(3L, 4L).toDF("id"),
+          Seq((3L, -3)).toDF("id", "v")),
+        "CHECK constraint"),
+      ("deleteMoR kvFn throwing", None,
+        r => TxLog.deleteMoR(spark, r, col("id") === 7L,
+          kvFn = _ => throw new IllegalStateException("kvFn refused")),
+        "kvFn refused"),
+      ("partial mergeInto with a multi-matching source", None,
+        r => TxLog.mergeInto(spark, r, Seq((5L, 50), (5L, 51)).toDF("id", "v"),
+          "id", matched = Seq(TxLog.MergeClause(None, TxLog.MergeUpdate()))),
+        "multi-match"))
+    cases.foreach { case (name, chk, fault, refusal) =>
+      val root = freshRoot("txlog-model-gate")
+      TxLog.init(spark, root,
+        (1L to 200L).map(i => (i, i.toInt)).toDF("id", "v")
+          .repartitionByRange(4, col("id")))
+      chk.foreach(TxLog.addConstraint(spark, root, "v_nonneg", _))
+      def dataDirs() = Option(new java.io.File(s"$root/data").listFiles())
+        .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).toSet
+      def rows() = TxLog.read(spark, root).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq
+      val (v0, rows0, dirs0) = (TxLog.currentVersion(root), rows(), dataDirs())
+      val e = intercept[Exception](fault(root))
+      assert(e.getMessage.contains(refusal), s"$name: refused with $e")
+      assert(TxLog.currentVersion(root) === v0, s"$name: a version landed")
+      assert(rows() === rows0, s"$name: the table's rows changed")
+      val orphans = dataDirs() -- dirs0
+      assert(orphans.nonEmpty && orphans.forall(d =>
+        d.startsWith("c-") || d.startsWith("dv-")),
+        s"$name: expected staged c-*/dv-* orphans, saw $orphans")
+      // every retained manifest references only files that exist, both
+      // before the sweep and after it
+      def assertNoDangling(when: String): Unit =
+        (TxLog.earliestVersion(root).get to TxLog.currentVersion(root)).foreach { v =>
+          val refs = TxLog.snapshot(root, v).get.entries
+            .flatMap(en => en.path +: en.dv.map(_._1).toSeq)
+          val missing = refs.filterNot(p => new java.io.File(s"$root/$p").isFile)
+          assert(missing.isEmpty, s"$name: v$v references missing $missing $when")
+        }
+      assertNoDangling("before vacuum")
+      assert(TxLog.vacuum(root, graceMs = 0L) === orphans.size, name)
+      assert(dataDirs() === dirs0, s"$name: vacuum left ${dataDirs()}")
+      assertNoDangling("after vacuum")
+      assert(rows() === rows0, s"$name: vacuum changed the rows")
+    }
+  }
 }

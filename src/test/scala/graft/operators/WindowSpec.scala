@@ -163,7 +163,7 @@ class WindowSpec extends SparkSpec {
 
   test("w10 weighted MA: hand-computed numerator/denominator at the partition head") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-w10").toString
+    val dir = freshRoot("graft-w10")
     // one supplier, three rows in series order; prices 1.00 / 2.00 / 3.00
     Seq(
       (7L, 101L, 1, 11L, java.sql.Date.valueOf("1995-01-01"), 1.00),
@@ -183,7 +183,7 @@ class WindowSpec extends SparkSpec {
 
   test("w12 EMA: checksums match an independent BigInt recomputation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-w12").toString
+    val dir = freshRoot("graft-w12")
     // one supplier, 34 rows, price i.00 at day i — 3 full-history rows
     val rows = (1 to 34).map { i =>
       (7L, 100L + i, 1, 10L + i,

@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
 
   test("e10 WAU: one (user, day) activity contributes to exactly its 7 report days") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-e10").toString
+    val dir = freshRoot("graft-e10")
     val day = java.time.LocalDate.of(2024, 3, 1)
     val nanos = day.toEpochDay * 86400L * 1000000000L
     // user 1 twice on one day (dedup to one pair); user 2 three days later
@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpec {
 
   test("e8 funnel: strict ordering, first-touch attribution, and the conversion window") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-e8").toString
+    val dir = freshRoot("graft-e8")
     val t0 = 1700000000L * 1000000000L // epoch NANOS (raw events.ts unit)
     val hour = 3600L * 1000000000L
     // u1 converts fully in-window; u2's only click precedes its first view
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkSpec {
 
   test("e9 retention: hand-built two-cohort matrix") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-e9").toString
+    val dir = freshRoot("graft-e9")
     def ts(day: Int): Long = // epoch NANOS (raw events.ts unit), noon UTC
       (java.time.LocalDate.of(2024, 1, 1).plusDays(day).toEpochDay * 86400L
         + 43200L) * 1000000000L
@@ -546,7 +546,7 @@ class StreamingSpec extends SparkSpec {
     // cardinalities tightly, so every verdict row must be TRUE and the
     // estimates must be strictly wider than any single day once windows
     // overlap (proving the range frame really unions across days)
-    val dir = java.nio.file.Files.createTempDirectory("graft-e11").toString
+    val dir = freshRoot("graft-e11")
     val t0 = 1700000000L * 1000000000L
     val day = 86400L * 1000000000L
     val rows = for (d <- 0L until 10L; u <- 0L until 10L)
