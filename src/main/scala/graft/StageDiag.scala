@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -14,6 +16,13 @@ import scala.collection.mutable.ArrayBuffer
   *   env SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all cores),
   *   SPARK_GRAFT_DIAG_REPS (default 2; stages printed for the LAST rep so
   *   codegen/JIT warmup does not pollute the read).
+  *
+  * Spark runs broadcast and subquery builds on its own thread pool
+  * (`SQLExecution.withThreadLocalCaptured`), so their stages carry that
+  * pool's call site (`CompletableFuture.java`). Such a stage is named
+  * after the SQL execution that owns it instead: its job carries the
+  * execution id it was started under, and the execution's start event
+  * carries the action's call site.
   */
 object StageDiag {
   private case class St(id: Int, name: String, ms: Long, tasks: Int,
@@ -26,13 +35,29 @@ object StageDiag {
 
     val stages = ArrayBuffer.empty[St]
     spark.sparkContext.addSparkListener(new SparkListener {
+      // listener-bus thread only: plain maps suffice
+      private val execOfStage = scala.collection.mutable.Map.empty[Int, Long]
+      private val execSite = scala.collection.mutable.Map.empty[Long, String]
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSite(s.executionId) = s.description
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => e.stageIds.foreach(execOfStage(_) = id.toLong))
+      private def nameOf(stageId: Int, site: String): String =
+        if (!site.contains("CompletableFuture.java")) site
+        else execOfStage.get(stageId).fold(site)(id =>
+          s"pool, exec $id: ${execSite.getOrElse(id, "?")}")
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
         val m = i.taskMetrics
         val ms = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s)
           .getOrElse(-1L)
+        val name = nameOf(i.stageId, i.name.takeWhile(_ != '\n')).take(90)
+        execOfStage.remove(i.stageId)
         stages.synchronized {
-          stages += St(i.stageId, i.name.takeWhile(_ != '\n').take(90), ms,
+          stages += St(i.stageId, name, ms,
             i.numTasks,
             m.inputMetrics.bytesRead / 1e6,
             m.shuffleReadMetrics.totalBytesRead / 1e6,

@@ -254,7 +254,7 @@ object IvfIndex {
           val assigned = Similarity.assignTo(nv,
             s.read.parquet(s"$idx/${kv("centroids")}"), Similarity.AssignR)
             .repartition(col("list_id")) // one file per touched list
-          Some(TxLog.commitAppendKv(s, root, assigned, snap.version, "",
+          Some(TxLog.commitAppendKv(s, root, assigned, snap, "",
             Map("n" -> (prev + nNew).toString)))
       }
       ()

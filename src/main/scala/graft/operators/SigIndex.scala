@@ -359,22 +359,18 @@ object SigIndex {
           val prev = TxLog.kvOf(snap.notes).getOrElse("n",
             throw new IllegalStateException(s"$idx: committed table has no kv:n"))
             .toLong
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
           // the batch STAGES concurrently with the gate (the ingestBatch
           // overlap): staged files are invisible until the publish
           // references them, so a gate refusal or a CAS loss leaves only
           // an unreferenced vacuumable dir — and the attempt pays
-          // max(stage, gate), not their sum
+          // max(stage, gate), not their sum. A gate refusal below
+          // abandons the stage — sound (the orphan dir is unreferenced,
+          // vacuum reclaims it); its errors are logged, not swallowed
           val rows = indexRows(sh,
             Dedup.signatureBands(Dedup.minhashSignature(sh)), parts = 8)
-          val stagedF = Future(TxLog.stageAppend(s, root, rows, snap))
-          // a gate refusal below abandons the stage — sound (the orphan
-          // dir is unreferenced, vacuum reclaims it) but otherwise a
-          // silent swallow of staging errors; surface them
-          stagedF.failed.foreach(e => System.err.println(
-            s"graft.SigIndex: abandoned append stage at $root failed: $e"))
+          val staged = TxLog.forked(
+            s"graft.SigIndex: abandoned append stage at $root failed")(
+            TxLog.stageAppend(s, root, rows, snap))
           // disjointness + batch count in ONE action: the overlap side is
           // a map-only semi-join of the pinned band scan against the
           // broadcast batch ids (never corpus × batch), cross-joined with
@@ -387,10 +383,9 @@ object SigIndex {
           val cnts = ovlAgg.crossJoin(b.agg(count(lit(1)).as("n"))).collect()(0)
           require(cnts.getAs[Long]("ovl") == 0L,
             s"append overlaps ${cnts.getAs[Long]("ovl")} indexed doc_ids")
-          val staged = Await.result(stagedF, Duration.Inf)
-          Some(TxLog.commitAppendKv(s, root, rows, snap.version, t,
+          Some(TxLog.commitAppendKv(s, root, rows, snap, t,
             Map("n" -> (prev + cnts.getAs[Long]("n")).toString) ++ extraKv,
-            preStaged = Some(staged)))
+            preStaged = Some(staged())))
       }
       ()
     } finally { sh.unpersist(); b.unpersist() }
@@ -466,11 +461,20 @@ object SigIndex {
     * per micro-batch rides this one for free. CollectMetrics is an
     * optimizer barrier, so the candidate join's (band, bh) filter cannot
     * be pushed below the count. Returns (pairs, overlapping band rows).
+    *
+    * The join keys on ONE long, `xxhash64(band, bh)`: a one-long-key
+    * broadcast builds as a LongHashedRelation sized to its rows, where
+    * the (band, bh) pair built a page-backed UnsafeHashedRelation — a
+    * whole Tungsten page per executor per probe, outside the memory
+    * manager's accounting (TxLog's `DvKeyCol` doc has the mechanism). A
+    * hash collision can only add a candidate pair, and [[verifyPairs]]
+    * checks every candidate exactly.
     */
   private def candidatesPinned(s: SparkSession, idx: String, version: Long,
       nbands: DataFrame, batchIds: Option[DataFrame])
       : (Array[(Long, Long)], Long) = {
-    val nb = nbands.select(col("band"), col("bh"), col("doc_id").as("new_id"))
+    def bandKey = xxhash64(col("band"), col("bh")).as("bk")
+    val nb = nbands.select(bandKey, col("doc_id").as("new_id"))
     // AQE EMPTY-RELATION GUARD (observation-hang hazard): an EMPTY
     // broadcast side — an empty replayed batch, or every doc under 3
     // words so the batch has zero bands — lets AQE's empty-relation
@@ -499,8 +503,8 @@ object SigIndex {
           .drop("ovl")
       case _ => scan0
     }
-    val cand = scan.select(col("band"), col("bh"), col("doc_id").as("old_id"))
-      .join(broadcast(nb), Seq("band", "bh"))
+    val cand = scan.select(bandKey, col("doc_id").as("old_id"))
+      .join(broadcast(nb), Seq("bk"))
       .select("old_id", "new_id").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val ovl = obs.fold(0L)(_.get("ovl_rows") match {
@@ -513,17 +517,23 @@ object SigIndex {
   /** The probe's verification plan: exact shingle Jaccard for the
     * collected candidate pairs, against the PINNED postings.
     *
-    * One exchange total. The candidate ids are a local relation (no
-    * job to build their broadcast), the postings scan is pruned twice —
-    * an `IN` literal when the candidate set is small enough for
-    * row-group skipping, plus the broadcast left-semi join that carries
-    * the general case — and the batch shingles join BROADCAST onto the
-    * candidate postings (batch-bounded by contract), so intersection
-    * and |old| sizes fall out of a single map-side pass + one grouped
-    * aggregation. The old shape (union + shuffled self-join + three
-    * shuffled size joins, Dedup.exactJaccard) paid ~6 exchanges on
-    * candidate-bounded data; at micro-batch scale the fixed per-stage
-    * latency dominated the whole probe (the d15 drift). */
+    * The candidate ids are a local relation (no job to build their
+    * broadcast), the postings scan is pruned twice — an `IN` literal
+    * when the candidate set is small enough for row-group skipping, plus
+    * the broadcast left-semi join that carries the general case — and
+    * the verification joins per-document shingle SETS on the long ids:
+    * the candidate old documents' sets (one grouped aggregation) fan out
+    * to their pairs and meet the batch's candidate sets (broadcast,
+    * batch-bounded by contract), and |old ∩ new| is
+    * `size(array_intersect(...))`. Every broadcast keys on one long id,
+    * so each builds as a LongHashedRelation sized to its rows; the
+    * earlier (new_id, g) marking join and its separate |new| sizes
+    * broadcast built a page-backed relation per probe and one broadcast
+    * more (TxLog's `DvKeyCol` doc has the mechanism). The shuffled shape
+    * (union + shuffled self-join + three shuffled size joins,
+    * Dedup.exactJaccard) paid ~6 exchanges on candidate-bounded data; at
+    * micro-batch scale the fixed per-stage latency dominated the whole
+    * probe (the d15 drift) — it stays only as the above-budget tier. */
   private def verifyPairs(s: SparkSession, idx: String, version: Long,
       nsh: DataFrame, cand: Array[(Long, Long)]): DataFrame = {
     if (cand.isEmpty) return emptyPairs(s)
@@ -575,22 +585,17 @@ object SigIndex {
         .select(col("a_id").as("old_id"), col("b_id").as("new_id"),
           round(col("jac"), 6).cast("double").as("jaccard"))
     }
-    val newSh = nshCand.select(col("doc_id").as("new_id"), col("g"),
-      lit(1).as("hit"))
-    val nbSizes = nshCand.groupBy("doc_id").agg(count(lit(1)).as("nb"))
-      .select(col("doc_id").as("new_id"), col("nb"))
-    // fan each candidate-old posting out to its pairs (broadcast, map
-    // side), mark shingles the new doc shares (broadcast left join —
-    // shingles are distinct per doc, so at most one match per row):
-    // count(*) per pair = |sh(old)|, count(hit) = |sh(old) ∩ sh(new)|
-    oldPost
+    // shingles are distinct per document (Curation.grams), so each
+    // list is its set: size = |sh(doc)|, and array_intersect's size is
+    // |sh(old) ∩ sh(new)| exactly
+    val newSets = nshCand.groupBy("doc_id").agg(collect_list(col("g")).as("nsh"))
+      .select(col("doc_id").as("new_id"), col("nsh"))
+    oldPost.groupBy("doc_id").agg(collect_list(col("g")).as("osh"))
       .join(broadcast(pairsDf), Seq("doc_id"))
-      .join(broadcast(newSh), Seq("new_id", "g"), "left_outer")
-      .groupBy("doc_id", "new_id")
-      .agg(count(lit(1)).as("na"), count(col("hit")).as("c"))
-      .join(broadcast(nbSizes), Seq("new_id"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
+      .join(broadcast(newSets), Seq("new_id"))
+      .withColumn("c", size(array_intersect(col("osh"), col("nsh"))))
+      .withColumn("jac", col("c").cast("double") /
+        (size(col("osh")) + size(col("nsh")) - col("c")))
       .filter(col("jac") >= Dedup.Tau)
       .select(col("doc_id").as("old_id"), col("new_id"),
         round(col("jac"), 6).cast("double").as("jaccard"))
@@ -706,7 +711,8 @@ object SigIndex {
           import scala.concurrent.ExecutionContext.Implicits.global
           import scala.concurrent.duration.Duration
           val rows = indexRows(sh, nb, parts = 8)
-          val stagedF = Future {
+          val staged = TxLog.forked(
+            s"graft.SigIndex: abandoned ingest stage at $root failed") {
             timedPhase("stage") {
               TxLog.stageAppend(s, tableRoot(idx), rows, snap)
             }
@@ -746,14 +752,13 @@ object SigIndex {
           // publish a count computed from a version it didn't read —
           // the stale-kv hazard commitAppendKv documents.
           val batchN = Await.result(nF, Duration.Inf)
-          val staged = Await.result(stagedF, Duration.Inf)
           timedPhase("publish_cas") {
             TxLog.appendOnceMonotoneKv(s, root, "batch", batchId, rows,
               kvFn = fresh => Map("n" -> (TxLog.kvOf(fresh.getOrElse(
                 throw new IllegalStateException(
                   s"ingestBatch($idx): index vanished mid-commit")).notes)("n")
                 .toLong + batchN).toString),
-              preStaged = Some(staged))
+              preStaged = Some(staged()))
           }
           ()
         } finally { nb.unpersist(); sh.unpersist() }

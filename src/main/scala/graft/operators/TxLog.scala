@@ -469,6 +469,30 @@ object TxLog {
     * re-stages; a rebase republishes the already-staged files). */
   private[graft] val dataStages: ThreadLocal[java.lang.Long] =
     ThreadLocal.withInitial(() => java.lang.Long.valueOf(0L))
+  private val counters = Seq(manifestParses, logListings, dataStages)
+
+  /** Run `work` on the global pool and return its await. The counters
+    * above are thread-local, so the work counts on the pool thread; the
+    * await adds those counts to the awaiting thread's, so a writer's
+    * counters include the staging it forked. A failure is logged as
+    * `failed` (an attempt that ends before the await abandons the
+    * future, and its failure would otherwise be no one's exception). */
+  private[graft] def forked[T](failed: => String)(work: => T): () => T = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def now() = counters.map(_.get.longValue)
+    val f = scala.concurrent.Future {
+      val before = now()
+      val r = work
+      (r, now().zip(before).map { case (a, b) => a - b })
+    }
+    f.failed.foreach(e => System.err.println(s"$failed: $e"))
+    () => {
+      val (r, counted) = scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf)
+      counters.zip(counted).foreach { case (c, n) => c.set(c.get + n) }
+      r
+    }
+  }
   /** Test-only race injector: fired (once — the hook clears itself or
     * the spec swaps it) immediately before a rebasable publish attempt,
     * ON the writer's thread, so a spec can deterministically interleave
@@ -525,12 +549,16 @@ object TxLog {
     * files keep the base's order; adds append in commit order — a
     * deterministic total order, same as the full encoding would have
     * recorded. Throws when the chain is broken (a base was pruned without
-    * a checkpoint — pruneHistory's ordering makes that unreachable). */
-  private def resolveEntries(root: String, v: Long, m: Manifest): Seq[FileEntry] = {
+    * a checkpoint — pruneHistory's ordering makes that unreachable).
+    * `known`, a checkpoint the caller already parsed, serves its version
+    * without a second parse. */
+  private def resolveEntries(root: String, v: Long, m: Manifest,
+      known: Option[Checkpoint] = None): Seq[FileEntry] = {
     if (!m.delta) return m.entries
+    def ckAt(u: Long) = known.filter(_.version == u).orElse(parseCk(root, u))
     // a checkpoint AT v is the resolved state after applying v itself —
     // the floor version left by pruneHistory resolves through its own ck
-    parseCk(root, v) match {
+    ckAt(v) match {
       case Some(ck) => return ck.entries
       case None => ()
     }
@@ -538,7 +566,7 @@ object TxLog {
     var u = v - 1
     var base: Seq[FileEntry] = null
     while (base == null && u >= 1) {
-      parseCk(root, u) match {
+      ckAt(u) match {
         case Some(ck) => base = ck.entries
         case None =>
           parseManifest(manifestPath(root, u)) match {
@@ -565,16 +593,21 @@ object TxLog {
     * manifest at or above the floor. Falls back to the full-directory
     * listing only when the fast path finds nothing (no checkpoint yet,
     * or a stale checkpoint whose floor manifest was pruned). */
-  def currentVersion(root: String): Long = {
-    val fast = readCheckpoint(root).flatMap { ck =>
-      val latest = probeLatest(root, ck.version)
-      (latest to ck.version by -1)
-        .find(v => parseManifest(manifestPath(root, v)).isDefined)
-    }
-    fast.getOrElse(
-      allVersions(root).reverse
-        .find(v => parseManifest(manifestPath(root, v)).isDefined)
-        .getOrElse(0L))
+  def currentVersion(root: String): Long = latestManifest(root).fold(0L)(_._2)
+
+  /** [[currentVersion]]'s search, returning what it parsed: the newest
+    * checkpoint it read (when the fast path found the version) and the
+    * newest complete manifest with its version — so [[snapshot]] pins
+    * the latest version without parsing its manifest (or that
+    * checkpoint) a second time. */
+  private def latestManifest(
+      root: String): Option[(Option[Checkpoint], Long, Manifest)] = {
+    def newest(ck: Option[Checkpoint], vs: Seq[Long]) = vs.iterator
+      .flatMap(v => parseManifest(manifestPath(root, v)).map((ck, v, _)))
+      .nextOption()
+    readCheckpoint(root)
+      .flatMap(ck => newest(Some(ck), probeLatest(root, ck.version) to ck.version by -1))
+      .orElse(newest(None, allVersions(root).reverse))
   }
 
   /** Highest existing (complete or torn) manifest version reachable by
@@ -629,9 +662,11 @@ object TxLog {
   /** Pin a snapshot of version `v` (default: latest). None for a table
     * with no committed version. */
   def snapshot(root: String, v: Long = -1L): Option[Snapshot] = {
-    val ver = if (v >= 0) v else currentVersion(root)
-    parseManifest(manifestPath(root, ver)).map { m =>
-      Snapshot(ver, resolveEntries(root, ver, m), m.notes, m.partCols,
+    val pinned =
+      if (v >= 0) parseManifest(manifestPath(root, v)).map((None, v, _))
+      else latestManifest(root)
+    pinned.map { case (ck, ver, m) =>
+      Snapshot(ver, resolveEntries(root, ver, m, ck), m.notes, m.partCols,
         m.schemaJson, m.timestampMs, m.mapping, m.retired)
     }
   }
@@ -754,8 +789,16 @@ object TxLog {
       relaxNullability(s).asInstanceOf[org.apache.spark.sql.types.StructType])
     if (snap.partCols.isEmpty || partDataInFiles(snap.partCols, schema)) {
       val needDv = keepPos || entries.exists(_.dv.isDefined)
-      // merge-on-read deletion vectors: materialize the scan's file path
-      // + in-file row index as ordinary columns, anti-join the entries'
+      val manifestFed =
+        schema.isDefined && entries.nonEmpty && entries.forall(_.size.isDefined)
+      // the manifest-fed relation is what hands each file its ordinal;
+      // the MoR writers refuse every other layout ([[morSchema]]), so no
+      // vector can reach the explicit-path reader
+      require(manifestFed || !needDv,
+        "deletion vectors on a table without the manifest-fed read layout")
+      if (needDv) requireDvKeyBounds(entries)
+      // merge-on-read deletion vectors: materialize each row's position
+      // key ([[DvKeyCol]]) as an ordinary column, anti-join the entries'
       // recorded positions out, drop the bookkeeping. Filters and the
       // anti-join commute (both only remove rows), so the application
       // point is transparent to every consumer.
@@ -763,7 +806,7 @@ object TxLog {
         if (!needDv) raw
         else {
           val applied = applyDv(spark, root, withPos(raw), entries)
-          if (keepPos) applied else applied.drop(DvFileCol, DvPosCol)
+          if (keepPos) applied else applied.drop(DvKeyCol)
         }
       finish {
       // single-relation path. With a committed schema AND manifest-
@@ -773,7 +816,7 @@ object TxLog {
       // file (and beyond the parallel-discovery threshold launches a
       // whole distributed listing job per query: O(files) metadata I/O
       // that a 10⁵-file table pays in minutes).
-      if (schema.isDefined && entries.nonEmpty && entries.forall(_.size.isDefined))
+      if (manifestFed)
         org.apache.spark.sql.graftbridge.Bridge.manifestParquetRelation(spark,
           entries.map(e => (s"$root/${e.path}", e.size.get)), schema.get,
           sizeHint = statsSizeHint(snap, schema.get,
@@ -788,7 +831,8 @@ object TxLog {
             val conjuncts = filters.flatMap(Stats.splitConjuncts)
             val matched = entries.map(entryCouldMatch(snap, conjuncts))
             i => matched(i)
-          })
+          },
+          ordinalCol = Some(DvOrdCol).filter(_ => needDv))
       else readFiles(spark, entries.map(e => s"$root/${e.path}"), schema)
       }
     } else {
@@ -800,30 +844,76 @@ object TxLog {
     }
   }
 
-  /** Bookkeeping columns for deletion-vector application: the scan's
-    * normalized absolute file path and in-file row index (Spark's hidden
-    * `_metadata` file columns, materialized as ordinary columns so they
-    * survive joins and projections). Underscored names outside any
-    * user-facing namespace. */
-  private val DvFileCol = "__dv_file"
-  private val DvPosCol = "__dv_pos"
+  /** THE DELETION-VECTOR POSITION KEY: a row's (file, in-file row
+    * index) as ONE long, `ordinal << DvRowBits | row_index`. The ordinal
+    * is the file's index in the read's entry list, assigned on the
+    * driver: the manifest-fed relation hands it to every row of the file
+    * as a per-file constant ([[DvOrdCol]], a partition value), and
+    * [[sidecarKeys]] maps a sidecar's manifest paths to it. Every
+    * broadcast join of the MoR read and commit paths keys on this one
+    * integral column, so Spark builds it as a LongHashedRelation sized
+    * to its rows. A string or two-column key builds an
+    * UnsafeHashedRelation instead, whose executor-side copy allocates a
+    * whole Tungsten page (8 MB in a 2 GB JVM, up to 64 MB by Spark's
+    * page-size rule) through a memory manager nothing accounts for, and
+    * holds it until the cleaner drops the broadcast — per broadcast, for
+    * a few hundred positions. 40 row-index bits (10¹² rows per file)
+    * leave 23 for the ordinal, so keys stay non-negative. Underscored
+    * names outside any user-facing namespace. */
+  private val DvKeyCol = "__dv_key"
+  private val DvOrdCol = "__dv_ord"
+  private val DvRowBits = 40
 
-  /** `_metadata.file_path` renders with or without the `file:` scheme
-    * depending on which FileIndex listed the file (the manifest-fed
-    * index hands schemeless paths, InMemoryFileIndex qualifies them);
-    * normalize both to plain absolute paths so they join against
-    * [[absNorm]]. */
+  private def dvKey(ordinal: Column, rowIndex: Column): Column =
+    shiftleft(ordinal, DvRowBits).bitwiseOR(rowIndex)
+
+  /** The bounds of the [[DvKeyCol]] encoding for a read over `entries`:
+    * every ordinal and every recorded row count must fit its bits. */
+  private def requireDvKeyBounds(entries: Seq[FileEntry]): Unit = {
+    require(entries.size.toLong < (1L << (63 - DvRowBits)),
+      s"deletion-vector read over ${entries.size} files exceeds the " +
+        s"${63 - DvRowBits}-bit file ordinal of the position key")
+    require(entries.forall(_.stats.forall(_.rows <= (1L << DvRowBits))),
+      s"a file exceeds the $DvRowBits-bit row index of the position key")
+  }
+
+  /** Each entry's ordinal — its index in `entries` — by manifest path,
+    * for the entries `keep` selects. */
+  private def ordinalsOf(entries: Seq[FileEntry],
+      keep: FileEntry => Boolean = _ => true): Map[String, Long] =
+    entries.iterator.zipWithIndex
+      .collect { case (e, i) if keep(e) => e.path -> i.toLong }.toMap
+
+  /** The scan side of the key: the relation's per-file ordinal and
+    * `_metadata.row_index` folded into [[DvKeyCol]] — arithmetic only,
+    * no per-row string work. */
   private def withPos(raw: DataFrame): DataFrame = raw
-    .withColumn(DvFileCol,
-      regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-    .withColumn(DvPosCol, col("_metadata.row_index"))
+    .withColumn(DvKeyCol, dvKey(col(DvOrdCol), col("_metadata.row_index")))
+    .drop(DvOrdCol)
 
-  /** Normalized absolute path of a manifest-relative file — the join key
-    * [[withPos]] produces on the scan side. */
-  private def absNorm(root: String, rel: String): String =
-    java.nio.file.Paths.get(root, rel).toAbsolutePath.normalize.toString
+  /** The sidecar side of the key: (f: manifest path, p: row index)
+    * positions as [[DvKeyCol]] over `ordinals`. A row whose path has no
+    * ordinal drops out — a stale position of a file since rewritten or
+    * dropped. The lookup is a hash map captured in the closure, O(1) per
+    * row (an `element_at` over a map literal scans the map per row). */
+  private def sidecarKeys(positions: DataFrame,
+      ordinals: Map[String, Long]): DataFrame = {
+    val ordinalOf = udf((f: String) => ordinals.get(f))
+    positions.select(dvKey(ordinalOf(col("f")), col("p")).as(DvKeyCol))
+      .filter(col(DvKeyCol).isNotNull)
+  }
 
-  /** DV sidecar row budget under which the positions frame broadcasts;
+  /** A [[DvKeyCol]] key back to its sidecar row (f, p), given the
+    * entries whose ordinals the key was built over: an array index, O(1)
+    * per row. */
+  private def sidecarRow(key: Column, entries: Seq[FileEntry]): Seq[Column] = Seq(
+    element_at(typedLit(entries.map(_.path)),
+      (shiftright(key, DvRowBits) + 1).cast("int")).as("f"),
+    key.bitwiseAND(lit((1L << DvRowBits) - 1)).as("p"))
+
+  /** DV sidecar row budget under which the positions frame broadcasts —
+    * one long per position ([[DvKeyCol]]), so the broadcast is a
+    * LongHashedRelation of about 16 bytes a row, not a Tungsten page;
     * beyond it the anti-join falls back to a shuffle join (still exact —
     * a lake that accumulated hundreds of millions of undeleted positions
     * should compact, not broadcast). System-property override
@@ -854,12 +944,12 @@ object TxLog {
       org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** Anti-join the deletion-vector positions of `entries` out of a scan
-    * that already carries [[DvFileCol]]/[[DvPosCol]]. The sidecars store
+    * that already carries [[DvKeyCol]]. The sidecars store
     * manifest-RELATIVE file paths (a copied/restored log keeps working);
-    * a driver-built (rel → abs) dimension — O(dv'd entries), data the
-    * manifest already holds in RAM — maps them to the scan's key and
-    * simultaneously drops STALE sidecar rows (positions of files since
-    * rewritten or dropped: the inner join keeps live entries only). The
+    * [[sidecarKeys]] maps them to the dv'd entries' ordinals and drops
+    * STALE sidecar rows (positions of files since rewritten or dropped).
+    * The join keys on the one long [[DvKeyCol]], so its broadcast is a
+    * LongHashedRelation, not a page-backed one (see [[DvKeyCol]]). The
     * positions side broadcasts below [[DvBroadcastRows]] (the manifest
     * knows the exact count without touching storage). */
   private def applyDv(spark: SparkSession, root: String, pos: DataFrame,
@@ -867,16 +957,12 @@ object TxLog {
     val dvd = entries.filter(_.dv.isDefined)
     if (dvd.isEmpty) return pos
     val sidecars = dvd.map(_.dv.get._1).distinct
-    import spark.implicits._
-    val dim = dvd.map(e => (e.path, absNorm(root, e.path)))
-      .toDF("f", DvFileCol)
-    val positions = readFiles(spark,
-      sidecars.map(p => s"$root/$p"), Some(DvSidecarSchema))
-      .join(broadcast(dim), Seq("f"))
-      .select(col(DvFileCol), col("p").as(DvPosCol))
+    val positions = sidecarKeys(readFiles(spark,
+      sidecars.map(p => s"$root/$p"), Some(DvSidecarSchema)),
+      ordinalsOf(entries, _.dv.isDefined))
     val dvRows = dvd.map(_.dv.get._2).sum
     val right = if (dvRows <= DvBroadcastRows) broadcast(positions) else positions
-    pos.join(right, Seq(DvFileCol, DvPosCol), "left_anti")
+    pos.join(right, Seq(DvKeyCol), "left_anti")
   }
 
   /** Partition-PRUNED read: the manifest ENTRY LIST is filtered by
@@ -1368,14 +1454,11 @@ object TxLog {
     * await (a refusal, a zero-victim bump, a CAS loss) abandons the
     * future: its staged output is an unreferenced directory that
     * [[vacuum]] reclaims like a CAS loser's, and its failure — no longer
-    * anyone's exception — is logged instead of swallowed. */
-  private def prePublish[T](root: String, what: String)(work: => T): () => T = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val f = scala.concurrent.Future(work)
-    f.failed.foreach(e => System.err.println(
-      s"graft.TxLog: pre-publish $what at $root failed: $e"))
-    () => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-  }
+    * anyone's exception — is logged instead of swallowed. The await
+    * carries the work's counter counts to the writer's thread
+    * ([[forked]]). */
+  private def prePublish[T](root: String, what: String)(work: => T): () => T =
+    forked(s"graft.TxLog: pre-publish $what at $root failed")(work)
 
   /** Why the loser's staged commit CANNOT rebase onto `fresh` — None
     * when every premise its job ran under still holds there:
@@ -1490,7 +1573,7 @@ object TxLog {
           s"replaceTable($root): table is partitioned on " +
             s"${snap.partCols.map(_._1)}, caller asked for $partCols — " +
             "partition layout is fixed at creation")
-        Some(commitOverwriteNotes(spark, root, df, snap.version, _ => base))
+        Some(commitOverwriteNotes(spark, root, df, snap, _ => base))
     }.get
   }
 
@@ -1802,7 +1885,9 @@ object TxLog {
     * the hive writer, preserving the manifest partition metadata. */
   def commitOverwrite(spark: SparkSession, root: String, df: DataFrame,
       expected: Long, note: String = ""): Long =
-    commitOverwriteNotes(spark, root, df, expected, noted(note))
+    commitOverwriteNotes(spark, root, df,
+      snapshot(root, expected).getOrElse(Genesis.copy(version = expected)),
+      noted(note))
 
   /** [[commitOverwrite]] with a note-set TRANSFORM — the overwrite
     * sibling of [[commitAppendNotes]]; what lets [[replaceTable]] RESET
@@ -1816,10 +1901,10 @@ object TxLog {
     * `gate` is the caller's pre-publish check (mergeInto's concurrent
     * multi-match refusal). */
   private def commitOverwriteNotes(spark: SparkSession, root: String,
-      df: DataFrame, expected: Long, notesFn: Set[String] => Set[String],
+      df: DataFrame, parent: Snapshot, notesFn: Set[String] => Set[String],
       changes: Option[() => DataFrame] = None,
       gate: () => Unit = () => ()): Long = {
-    val parent = snapshot(root, expected).getOrElse(Genesis.copy(version = expected))
+    val expected = parent.version
     val partCols = parent.partCols.map(_._1)
     partCols.foreach(pc => requireStablePartType(df, pc, "commitOverwrite"))
     // CHECK constraints validate the replacing frame — against the
@@ -1859,7 +1944,8 @@ object TxLog {
     * `df` staged as new files — no existing byte is read or rewritten. */
   def commitAppend(spark: SparkSession, root: String, df: DataFrame,
       expected: Long, note: String = ""): Long =
-    commitAppendNotes(spark, root, df, expected, noted(note))
+    commitAppendNotes(spark, root, df,
+      initialized(root, "append", snapshot(root, expected)), noted(note))
 
   /** [[commitAppend]] carrying replaced `kv:` properties (and optionally
     * a tag) in the same publish — the version-PINNED form a
@@ -1870,9 +1956,9 @@ object TxLog {
     * ([[appendOnce]]'s kv merge alone can't promise that — its retry
     * keeps the caller's stale values.) */
   def commitAppendKv(spark: SparkSession, root: String, df: DataFrame,
-      expected: Long, tag: String, kv: Map[String, String],
+      parent: Snapshot, tag: String, kv: Map[String, String],
       preStaged: Option[StagedAppend] = None): Long =
-    commitAppendNotes(spark, root, df, expected,
+    commitAppendNotes(spark, root, df, parent,
       ns => kvMerge(if (tag.isEmpty) ns else ns + tag, kv),
       preStaged.map(ps => new StagedBox(Some(ps))))
 
@@ -1894,9 +1980,8 @@ object TxLog {
     * also the stronger correctness choice for a non-deterministic batch:
     * the rows that commit are the rows that were checked, once. */
   private def commitAppendNotes(spark: SparkSession, root: String, df: DataFrame,
-      expected: Long, notesFn: Set[String] => Set[String],
+      snap: Snapshot, notesFn: Set[String] => Set[String],
       staged: Option[StagedBox] = None): Long = {
-    val snap = initialized(root, "append", snapshot(root, expected))
     val st = staged.flatMap(_.st).filter(_.vintage == vintageOf(snap))
       .getOrElse {
         val s = stageAppend(spark, root, df, snap)
@@ -2102,7 +2187,7 @@ object TxLog {
   def insertInto(spark: SparkSession, root: String, df: DataFrame): Long = {
     val staged = new StagedBox(None)
     withTable(root, "INSERT INTO")(snap =>
-      commitAppendNotes(spark, root, df, snap.version, identity, Some(staged)))
+      commitAppendNotes(spark, root, df, snap, identity, Some(staged)))
   }
 
   /** Whole-table data replace — SQL `INSERT OVERWRITE txlog.<root>
@@ -2116,7 +2201,7 @@ object TxLog {
     * sees removed live rows as deletes, the new frame as inserts. */
   def insertOverwrite(spark: SparkSession, root: String, df: DataFrame): Long =
     withTable(root, "INSERT OVERWRITE")(snap =>
-      commitOverwrite(spark, root, df, snap.version))
+      commitOverwriteNotes(spark, root, df, snap, identity))
 
   /** Keyed last-write-wins MERGE as one transactional commit: survivors
     * (anti-join) ∪ batch, published as a full overwrite version. Returns
@@ -2135,10 +2220,10 @@ object TxLog {
       case None =>
         Some(init(spark, root, batch, note))
       case Some(snap) =>
-        val current = read(spark, root, snap.version)
+        val current = readSnapshot(spark, root, snap)
         val merged = current.join(batch.select(key), Seq(key), "left_anti")
           .unionByName(batch)
-        Some(commitOverwriteNotes(spark, root, merged, snap.version, noted(note),
+        Some(commitOverwriteNotes(spark, root, merged, snap, noted(note),
           Some(() => upsertChanges(current, batch, key))))
     }.get
   }
@@ -2291,7 +2376,7 @@ object TxLog {
       val usePartial = carried.nonEmpty
       val targetAll =
         if (usePartial) readVersionSubset(spark, root, snap, rewriteEntries)
-        else read(spark, root, snap.version)
+        else readSnapshot(spark, root, snap)
       // row-level scope split within the candidate files: out-of-scope
       // rows (predicate FALSE or NULL — SQL condition-not-true) pass
       // through untouched; the merge sees only the in-scope rows
@@ -2437,7 +2522,7 @@ object TxLog {
             .withColumn("_change_type", lit("insert")))
       }
       if (!usePartial)
-        commitOverwriteNotes(spark, root, out, snap.version, noted(note),
+        commitOverwriteNotes(spark, root, out, snap, noted(note),
           Some(() => changes), gate = noMultiMatch)
       else {
         // partial publish (the deleteCow/updateWhere mixed-commit shape):
@@ -2677,10 +2762,10 @@ object TxLog {
         // preserves the every-delete-commits contract at zero data I/O
         publish(root, snap)(notes = noted(note)(snap.notes))
       } else if (carried.isEmpty) {
-        val survivors = read(spark, root, snap.version)
+        val survivors = readSnapshot(spark, root, snap)
           .filter(not(victim <=> lit(true)))
-        commitOverwriteNotes(spark, root, survivors, snap.version, noted(note),
-          Some(() => read(spark, root, snap.version).filter(victim <=> lit(true))
+        commitOverwriteNotes(spark, root, survivors, snap, noted(note),
+          Some(() => readSnapshot(spark, root, snap).filter(victim <=> lit(true))
             .withColumn("_change_type", lit("delete"))))
       } else {
         // candidates read LOGICAL, victims dropped
@@ -2851,14 +2936,11 @@ object TxLog {
     * had live rows (silent data loss). Grouping by each entry's own
     * sidecar pointer reads every position exactly once. */
   private def carryPriorDvPositions(spark: SparkSession, root: String,
-      prior: Seq[FileEntry]): DataFrame = {
-    import spark.implicits._
+      prior: Seq[FileEntry]): DataFrame =
     prior.groupBy(_.dv.get._1).toSeq.map { case (sc, es) =>
       readFiles(spark, Seq(s"$root/$sc"), Some(DvSidecarSchema))
-        .join(broadcast(es.map(e => Tuple1(e.path)).toDF("f")),
-          Seq("f"), "left_semi")
+        .filter(col("f").isin(es.map(_.path): _*))
     }.reduce(_.unionByName(_))
-  }
 
   /** MERGE-ON-READ targeted delete — deletion vectors (the Delta/Iceberg
     * v2 position-delete shape). Instead of rewriting every file that
@@ -2870,8 +2952,9 @@ object TxLog {
     * a targeted delete writes O(deleted rows), not O(files straddling
     * the predicate) — the difference between a compliance-delete of one
     * user's rows costing kilobytes vs rewriting a terabyte tier. Reads
-    * pay one broadcast anti-join while vectors are live; [[compact]] /
-    * OPTIMIZE purges them (restages survivors, drops the dv), restoring
+    * pay one broadcast anti-join on the one-long position key
+    * ([[DvKeyCol]], so no Tungsten page per read) while vectors are
+    * live; [[compact]] / OPTIMIZE purges them (restages survivors, drops the dv), restoring
     * zero-overhead scans — the standard MoR maintenance contract.
     *
     * Semantics are identical to [[delete]] (SQL DELETE: TRUE-predicate
@@ -3019,8 +3102,8 @@ object TxLog {
     schema.get
   }
 
-  /** `entries`' rows under their LOGICAL names plus each row's scan
-    * position ([[DvFileCol]], [[DvPosCol]]), with the entries' own
+  /** `entries`' rows under their LOGICAL names plus each row's position
+    * key ([[DvKeyCol]], ordinals = indices into `entries`), with the entries' own
     * deletion vectors applied — so a MoR writer evaluates victims on
     * live rows only and an already-deleted row never re-enters a
     * sidecar; strip the vectors first to read raw positions. */
@@ -3031,20 +3114,15 @@ object TxLog {
     if (snap.mapping.isEmpty) pos
     else pos.select((schema.get.fields.map(f =>
       col(f.name).as(snap.mapping.getOrElse(f.name, f.name))) :+
-      col(DvFileCol) :+ col(DvPosCol)).toSeq: _*)
-  }
-
-  /** Scan path → manifest path of `entries`: the broadcast dimension
-    * that maps [[withPositions]]' file column to sidecar paths. */
-  private def pathDim(spark: SparkSession, root: String,
-      entries: Seq[FileEntry]): DataFrame = {
-    import spark.implicits._
-    entries.map(e => (absNorm(root, e.path), e.path)).toDF(DvFileCol, "f")
+      col(DvKeyCol)).toSeq: _*)
   }
 
   /** THE DELETION-VECTOR COMMIT shared by [[deleteMoR]] and
     * [[updateMoR]]: `victims` (rows of [[withPositions]] over the
-    * candidates `cand`) become positions in ONE new sidecar, which also
+    * candidates `cand`) become positions in ONE new sidecar — their keys
+    * decode to (f, p) by an array index over `cand` ([[sidecarRow]]), no
+    * join, where a broadcast join on the scan's file path used to build
+    * a page-backed relation per commit — which also
     * carries the candidates' prior positions ([[carryPriorDvPositions]])
     * under the [[writeDvSidecar]] budget. None when no new position
     * landed: the sidecar is removed again (a CAS-loser-shaped orphan
@@ -3058,8 +3136,7 @@ object TxLog {
   private def dvCommit(spark: SparkSession, root: String, snap: Snapshot,
       cand: Seq[FileEntry], victims: DataFrame, op: String,
       keepOne: Boolean): Option[Seq[FileEntry]] = {
-    val newPos = victims.join(broadcast(pathDim(spark, root, cand)), Seq(DvFileCol))
-      .select(col("f"), col(DvPosCol).as("p"))
+    val newPos = victims.select(sidecarRow(col(DvKeyCol), cand): _*)
     val prior = cand.filter(_.dv.isDefined)
     val priorRows = prior.map(_.dv.get._2).sum
     val allPos =
@@ -3125,7 +3202,7 @@ object TxLog {
           // Built (and the retype gate run) BEFORE any staging I/O, so a
           // refusal costs nothing and the property-routed updateWhere
           // fallback to copy-on-write is cheap.
-          val original = victims.drop(DvFileCol, DvPosCol)
+          val original = victims.drop(DvKeyCol)
           val updated = original.select(original.columns.map { c =>
             assignments.find(_._1.equalsIgnoreCase(c)) match {
               case Some((_, e)) => e.as(c)
@@ -3730,17 +3807,16 @@ object TxLog {
 
   /** The LOGICAL rows of `entries` (read RAW — vectors stripped) at the
     * given (f, p) positions: how the change feed materializes deleted /
-    * resurrected rows from a position diff. */
+    * resurrected rows from a position diff. One semi-join on the long
+    * [[DvKeyCol]]. */
   private def rowsAtPositions(spark: SparkSession, root: String,
       snap: Snapshot, entries: Seq[FileEntry],
-      positions: DataFrame): DataFrame = {
-    val logical = withPositions(spark, root, snap, entries.map(_.copy(dv = None)),
+      positions: DataFrame): DataFrame =
+    withPositions(spark, root, snap, entries.map(_.copy(dv = None)),
       snap.schemaJson.map(parseSchema))
-    logical.join(broadcast(pathDim(spark, root, entries)), Seq(DvFileCol))
-      .join(broadcast(positions.withColumnRenamed("p", DvPosCol)),
-        Seq("f", DvPosCol), "left_semi")
-      .drop(DvFileCol, DvPosCol, "f")
-  }
+      .join(broadcast(sidecarKeys(positions, ordinalsOf(entries))),
+        Seq(DvKeyCol), "left_semi")
+      .drop(DvKeyCol)
 
   /** Metadata-only RESTORE (Delta `RESTORE TABLE ... TO VERSION AS OF`):
     * publishes a NEW version whose file list, schema, partition metadata
@@ -3844,7 +3920,7 @@ object TxLog {
         snap.entries.partition(entryCouldMatch(snap, conjuncts))
       if (rewrite.isEmpty) {
         // validate the assignments even when nothing can match
-        applyAssignments(read(spark, root, snap.version))
+        applyAssignments(readSnapshot(spark, root, snap))
         publish(root, snap)(notes = noted(note)(snap.notes))
       } else {
         lazy val physPrev = parseSchema(effectiveSchemaJson(spark, root, snap))
@@ -3872,9 +3948,9 @@ object TxLog {
             .unionByName(post.withColumn("_change_type", lit("insert")))
         }
         if (carried.isEmpty || !sameTypes) {
-          val whole = applyAssignments(read(spark, root, snap.version))
-          commitOverwriteNotes(spark, root, whole, snap.version, noted(note),
-            Some(() => changesOf(read(spark, root, snap.version))))
+          val whole = applyAssignments(readSnapshot(spark, root, snap))
+          commitOverwriteNotes(spark, root, whole, snap, noted(note),
+            Some(() => changesOf(readSnapshot(spark, root, snap))))
         } else {
           // CHECK constraints validate the assignments' output — only
           // the restaged candidates can have changed
@@ -3899,8 +3975,8 @@ object TxLog {
       case None =>
         init(spark, root, merge(None), tag); Some(true)
       case Some(snap) =>
-        commitOverwrite(spark, root,
-          merge(Some(read(spark, root, snap.version))), snap.version, tag)
+        commitOverwriteNotes(spark, root,
+          merge(Some(readSnapshot(spark, root, snap))), snap, noted(tag))
         Some(true)
     }.get
   }
@@ -3922,7 +3998,7 @@ object TxLog {
       case None =>
         initWith(spark, root, df, Seq.empty, kvMerge(Set(tag), kv)); Some(true)
       case Some(snap) =>
-        commitAppendNotes(spark, root, df, snap.version,
+        commitAppendNotes(spark, root, df, snap,
           ns => kvMerge(ns + tag, kv), Some(staged))
         Some(true)
     }.get
@@ -4005,7 +4081,7 @@ object TxLog {
           snap.notes(s"$prefix-$id") =>
         Some(false)
       case Some(snap) =>
-        commitAppendNotes(spark, root, df, snap.version, ns =>
+        commitAppendNotes(spark, root, df, snap, ns =>
           kvMerge(ns.filterNot { n =>
             n.startsWith(s"hw:$prefix:") ||
               (n.startsWith(s"$prefix-") && scala.util.Try(
@@ -4174,7 +4250,7 @@ object TxLog {
       targetFiles: Int = 8): Long =
     withTable(root, "cluster") { snap =>
       val target = targetFiles.max(1)
-      val src = read(spark, root, snap.version)
+      val src = readSnapshot(spark, root, snap)
       val partNames = snap.partCols.map(_._1)
       validateClusterCols(src, partNames, cols)
       // row count for the sample fraction: exact from manifest stats when
@@ -4348,7 +4424,7 @@ object TxLog {
         cluster(spark, root, cols, targetFiles)
       else {
       val partNames = snap.partCols.map(_._1)
-      validateClusterCols(read(spark, root, snap.version), partNames, cols)
+      validateClusterCols(readSnapshot(spark, root, snap), partNames, cols)
       val target = targetFiles.max(1)
       val victims = victimsOf(snap)
       if (victims.isEmpty) snap.version

@@ -80,15 +80,28 @@ object Bridge {
     * row count is known (the transaction log's ANALYZE stats). The hint
     * feeds `FileIndex.sizeInBytes`, so Spark's own join planning
     * (broadcast threshold, AQE initial plan) consumes it with no custom
-    * rule — the Delta `TahoeFileIndex` stats shape. */
+    * rule — the Delta `TahoeFileIndex` stats shape.
+    *
+    * `ordinalCol`: when set, the relation gains a LONG partition column
+    * of that name whose value is each file's index in `files` — a
+    * per-file constant the scan appends to every row with no per-row
+    * work (the reader fills partition values per batch). What lets a
+    * deletion-vector read key its positions on one long instead of on
+    * the file path string. Partition filters on it are honoured here, as
+    * Spark's own file indexes do (the scan does not re-apply them). */
   def manifestParquetRelation(spark: SparkSession,
       files: Seq[(String, Long)],
       schema: org.apache.spark.sql.types.StructType,
       judge: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
         => Int => Boolean = _ => _ => true,
-      sizeHint: Option[Long] = None): DataFrame = {
+      sizeHint: Option[Long] = None,
+      ordinalCol: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import org.apache.hadoop.fs.{FileStatus, Path}
+    val partSchema = StructType(ordinalCol.toSeq.map(StructField(_, LongType, nullable = false)))
     val statuses = files.map { case (p, len) =>
       // mtime 0 is safe: nothing consults it (no FileStatusCache — the
       // index is immutable by construction, manifests reference
@@ -104,28 +117,28 @@ object Bridge {
       // file that cannot contain a matching row. No opt-in API needed:
       // any .filter over a txlog read skips, including spark.sql text.
       // An empty filter set (or a keep-all judge) lists everything.
-      override def listFiles(
-          partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-          dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-          : Seq[PartitionDirectory] = {
-        val filters = partitionFilters ++ dataFilters
-        val kept =
-          if (filters.isEmpty) statuses
-          else {
-            val keep = judge(filters)
-            statuses.zipWithIndex.collect { case (st, i) if keep(i) => st }
-          }
-        Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
-          kept))
+      override def listFiles(partitionFilters: Seq[Expression],
+          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+        val keep = if (dataFilters.isEmpty) (_: Int) => true else judge(dataFilters)
+        val kept = statuses.indices.filter(keep)
+        if (ordinalCol.isEmpty)
+          Seq(PartitionDirectory(InternalRow.empty, kept.map(statuses).toArray))
+        else {
+          val onOrdinal = Predicate.createInterpreted(
+            partitionFilters.reduceOption(And).getOrElse(Literal.TrueLiteral)
+              .transform { case a: AttributeReference =>
+                BoundReference(0, LongType, nullable = false) })
+          kept.map(i => PartitionDirectory(InternalRow(i.toLong), Array(statuses(i))))
+            .filter(d => onOrdinal.eval(d.values))
+        }
       }
       override def inputFiles: Array[String] = files.map(_._1).toArray
       override def refresh(): Unit = ()
       override def sizeInBytes: Long = sizeHint.getOrElse(files.map(_._2).sum)
-      override def partitionSchema: org.apache.spark.sql.types.StructType =
-        new org.apache.spark.sql.types.StructType()
+      override def partitionSchema: StructType = partSchema
     }
     val rel = HadoopFsRelation(index,
-      partitionSchema = new org.apache.spark.sql.types.StructType(),
+      partitionSchema = partSchema,
       dataSchema = schema, bucketSpec = None,
       fileFormat = new parquet.ParquetFileFormat(),
       options = Map.empty)(spark)

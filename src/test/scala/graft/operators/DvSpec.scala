@@ -468,9 +468,8 @@ class DvSpec extends SparkSpec {
       withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val got = TxLog.read(spark, root)
         val plan = got.queryExecution.executedPlan.toString
-        // the ANTI join must not broadcast (the rel→abs dim join inside
-        // the positions frame keeps its explicit broadcast — that side
-        // is O(dv'd entries), always small)
+        // the ANTI join must not broadcast (the positions frame itself
+        // has no join: its keys come from a path → ordinal lookup)
         val antiLines = plan.linesIterator.filter(_.contains("LeftAnti")).toSeq
         assert(antiLines.nonEmpty)
         assert(antiLines.forall(!_.contains("BroadcastHashJoin")),
@@ -697,5 +696,42 @@ class DvSpec extends SparkSpec {
     assert(v2 === v + 1)
     assert(TxLog.read(spark, root)
       .filter(col("doc_id") === 888888L).count() === 1L)
+  }
+
+  test("positions key on the file as well as the row index: files sharing " +
+      "deleted row indices keep their own rows, broadcast and shuffled") {
+    val root = freshRoot("dv-ordinal")
+    // three 100-row files, ids 100k + i at row index i of file k, so
+    // every file holds the same row indices
+    TxLog.init(spark, root, spark.range(0L, 300L, 1L, 3).toDF("id"))
+    assert(TxLog.snapshot(root).get.entries.size === 3)
+    def victims(k: Long) =
+      col("id") >= 100L * k && col("id") < 100L * (k + 1) && col("id") % 10 === 3
+    def ids = TxLog.read(spark, root).collect().map(_.getLong(0)).toSet
+    def check(deleted: Set[Long]): Unit = {
+      val want = (0L until 300L).toSet -- deleted
+      assert(ids === want)
+      val prev = sys.props.get("graft.dv.broadcastRows")
+      try {
+        sys.props("graft.dv.broadcastRows") = "0"
+        withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          assert(!TxLog.read(spark, root).queryExecution.executedPlan.toString
+            .linesIterator.exists(l => l.contains("LeftAnti") && l.contains("Broadcast")))
+          assert(ids === want)
+        }
+      } finally prev match {
+        case Some(v) => sys.props("graft.dv.broadcastRows") = v
+        case None => sys.props.remove("graft.dv.broadcastRows")
+      }
+    }
+    // the middle file alone: its neighbours keep row indices 3, 13, ...
+    TxLog.deleteMoR(spark, root, victims(1))
+    assert(TxLog.snapshot(root).get.entries.count(_.dv.isDefined) === 1)
+    val mid = (100L until 200L).filter(_ % 10 == 3).toSet
+    check(mid)
+    // then the last file at the same indices, through its own sidecar
+    TxLog.deleteMoR(spark, root, victims(2))
+    assert(TxLog.snapshot(root).get.entries.count(_.dv.isDefined) === 2)
+    check(mid ++ (200L until 300L).filter(_ % 10 == 3))
   }
 }

@@ -871,4 +871,35 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.vacuum(root, graceMs = 0L) >= 1)
     assert(TxLog.read(spark, root).count() === n0 + 25)
   }
+
+  test("staging forked before the publish counts on the writer's thread: " +
+      "one updateMoR, one data stage") {
+    val root = freshRoot("txlog-count-mor")
+    import spark.implicits._
+    TxLog.init(spark, root,
+      (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s").repartition(2))
+    TxLog.dataStages.set(0L)
+    TxLog.updateMoR(spark, root, col("id") % 10 === 0, Seq("s" -> lit("u")))
+    // the replacement rows stage inside the pre-publish future; the
+    // await carries that stage to this thread's counter
+    assert(TxLog.dataStages.get.longValue === 1L)
+    assert(TxLog.read(spark, root).filter(col("s") === "u").count() === 10L)
+  }
+
+  test("upsert and append parse the pinned manifest once") {
+    val root = freshRoot("txlog-parse-once")
+    import spark.implicits._
+    TxLog.init(spark, root, (0L until 100L).map(k => (k, s"v$k")).toDF("id", "s"))
+    // latest is a full manifest and no checkpoint exists yet, so pinning
+    // the snapshot is one parse; the merge read and the commit reuse it
+    TxLog.manifestParses.set(0L)
+    TxLog.upsert(spark, root,
+      (90L until 110L).map(k => (k, s"u$k")).toDF("id", "s"), "id")
+    assert(TxLog.manifestParses.get.longValue === 1L)
+    TxLog.manifestParses.set(0L)
+    TxLog.insertInto(spark, root,
+      (200L until 210L).map(k => (k, s"a$k")).toDF("id", "s"))
+    assert(TxLog.manifestParses.get.longValue === 1L)
+    assert(TxLog.read(spark, root).count() === 120L)
+  }
 }
