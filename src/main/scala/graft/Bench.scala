@@ -2,16 +2,13 @@ package graft
 
 /** Benchmark harness (replaces the reference's chrono/cudaEvent timing at
   * stockify.cu:214-246). Runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
-  *
-  * Each query is fully materialized through the `noop` sink — unlike
-  * `.count()`, which lets Catalyst prune the work down to row counting,
-  * noop executes the complete physical plan and discards rows, so the
-  * timing covers scan + shuffle + compute exactly as a real write would.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line; each timing is one
+  * [[SparkEntry.timeNoop]] run, the complete physical plan through the
+  * `noop` sink.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+    val sfDir = SparkEntry.sfDir
     val cpus = GraftSession.cpus
     val spark = GraftSession.build("graft-bench", cpus)
 
@@ -19,17 +16,9 @@ object Bench {
     // footers) so per-query numbers measure the queries, not session startup.
     SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
 
-    // Pre-compile EVERY query's generated code against the smallest scale
-    // factor: janino's class cache is keyed by generated source, so this
-    // one cheap pass (6k-row tables) absorbs the first-run codegen compile
-    // + JIT cost of the heavy pipelines, and the timed sf pass below
-    // measures steady-state execution — what a long-running cluster does —
-    // instead of compilation. Skipped when already benching the smallest sf.
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 benches a subset in isolation
     // (diagnosing one query's time without the rest of the suite's JVM).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val defs = (SparkEntry.allDefs ++ SparkEntry.benchOnlyDefs)
-      .filter(d => only.forall(_.contains(d.name)))
+    val defs = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
 
     // HOST-HEALTH CANARY: a fixed, data-free, codegen'd workload whose
     // wall time depends only on the host's available CPU — measured at
@@ -48,42 +37,23 @@ object Bench {
     canaryOnce() // JIT warm; discarded
     val canaryStart = (1 to 3).map(_ => canaryOnce()).min
 
+    // Pre-compile EVERY query's generated code against the smallest scale
+    // factor: janino's class cache is keyed by generated source, so this
+    // one cheap pass (6k-row tables) absorbs the first-run codegen compile
+    // + JIT cost of the heavy pipelines, and the timed sf pass below
+    // measures steady-state execution — what a long-running cluster does —
+    // instead of compilation. Skipped when already benching the smallest sf.
     val warmDir = Paths.sf("sf0.001")
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      defs.foreach { d =>
-        try d.run(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+      defs.foreach(d => scala.util.Try(SparkEntry.timeNoop(spark, d, warmDir)))
+
+    def timeOnce(d: QueryDef): (Double, Boolean) =
+      try (SparkEntry.timeNoop(spark, d, sfDir), true)
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
+          (-1.0, false)
       }
-    }
-
-    // Drift-gate self-test hook: SPARK_GRAFT_INJECT_SLOW="name:sec"
-    // sleeps inside the named query's timing, so one run can prove the
-    // drifter/budget alarms still trip on a real slowdown (the alarms
-    // must never be tuned so defensively that an injected 2x sails by).
-    val injectSlow: Map[String, Double] = sys.env.get("SPARK_GRAFT_INJECT_SLOW")
-      .map(_.split(",").flatMap(_.split(":") match {
-        case Array(n, s) => Some(n -> s.toDouble)
-        case _ => None
-      }).toMap).getOrElse(Map.empty)
-
-    def timeOnce(d: QueryDef): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      injectSlow.get(d.name).foreach(s => Thread.sleep((s * 1000).toLong))
-      val ok =
-        try { d.run(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
-            false
-        }
-      // drop caches a query left behind (s2 persists lineitem; the dedup
-      // pipelines persist shingle/tf frames) so each timing reads its own
-      // sources — without this, every query after s2 scans the in-memory
-      // mirror and the i2/i5 layout comparison stops measuring layouts
-      spark.catalog.clearCache()
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
 
     // Per-query regression gate: the prior round's per-query times live in
     // BENCH_BASELINE.json (flat {"name": sec}, refreshed each round by
@@ -104,8 +74,7 @@ object Bench {
         } finally src.close()
       }
     }
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
-    val baseline: Map[String, Double] = loadFlat(baselinePath)
+    val baseline: Map[String, Double] = loadFlat("BENCH_BASELINE.json")
     // Frozen cross-round anchor (committed once, never regenerated): the
     // per-round BENCH_BASELINE refresh is individually justified but
     // could compound drift invisibly; the anchor ratio makes total drift

@@ -5,35 +5,28 @@ package graft
   * the source of the PLANS.md audit sections.
   *
   * Usage: runMain graft.Explain <name> [<name> ...]
-  * (env SPARK_GRAFT_SF_DIR overrides the default sf0.01 dir;
+  * (env SPARK_GRAFT_SF_DIR overrides the default sf0.1 dir;
   *  env SPARK_GRAFT_PLAN_DIR, when set, additionally writes each query's
   *  explain("formatted") text to <dir>/<name>.txt — the optimization
-  *  rounds' plans/rNN before/after evidence;
-  *  env SPARK_GRAFT_PLAN_SUFFIX appends to the file stem, e.g. "_before")
+  *  rounds' plans/rNN before/after evidence, one dir per side)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.01"))
+    val sfDir = SparkEntry.sfDir
+    val defs = SparkEntry.select(Some(args.mkString(",")))
     val spark = GraftSession.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     planDir.foreach(d => new java.io.File(d).mkdirs())
-    val qs = SparkEntry.queries ++
-      SparkEntry.benchOnlyDefs.map(d => d.name -> d.run).toMap
-    for (name <- args) {
-      println(s"\n## $name\n")
-      qs.get(name) match {
-        case Some(run) =>
-          val qe = run(spark, sfDir).queryExecution
-          println(qe.executedPlan.toString)
-          planDir.foreach { d =>
-            val txt = qe.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            val f = new java.io.PrintWriter(s"$d/$name$suffix.txt")
-            try f.write(txt) finally f.close()
-          }
-        case None => println(s"(unknown query: $name)")
+    for (d <- defs) {
+      println(s"\n## ${d.name}\n")
+      val qe = d.run(spark, sfDir).queryExecution
+      println(qe.executedPlan.toString)
+      planDir.foreach { dir =>
+        val txt = qe.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        val f = new java.io.PrintWriter(s"$dir/${d.name}.txt")
+        try f.write(txt) finally f.close()
       }
       spark.catalog.clearCache()
     }

@@ -79,8 +79,15 @@ object ScalingBench {
     "g2_triangle_count", "g3_bfs_hops")
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+    val base = SparkEntry.sfDir
     val spark = GraftSession.build("graft-scaling-bench")
+
+    /** `t` ×k, each replica's `keys` moved into its own disjoint range. */
+    def shifted(t: DataFrame, keys: Seq[String], k: Int): DataFrame =
+      (0 until k).map { r =>
+        keys.foldLeft(t)((df, c) =>
+          df.withColumn(c, col(c) + lit(r * 1000000000L)))
+      }.reduce(_ unionByName _)
 
     def replicate(df: DataFrame, idCol: String, k: Int,
         perturb: Boolean): DataFrame =
@@ -110,17 +117,12 @@ object ScalingBench {
       val dir = s"${Paths.work}/scaling/fact-x$k"
       val marker = new java.io.File(s"$dir/lineitem.parquet/_SUCCESS")
       if (!marker.exists()) {
-        def shifted(t: DataFrame, keys: Seq[String]): DataFrame =
-          (0 until k).map { r =>
-            keys.foldLeft(t)((df, c) =>
-              df.withColumn(c, col(c) + lit(r * 1000000000L)))
-          }.reduce(_ unionByName _)
-        shifted(sources.Tables.orders(spark, base), Seq("o_orderkey"))
+        shifted(sources.Tables.orders(spark, base), Seq("o_orderkey"), k)
           .write.mode("overwrite").parquet(s"$dir/orders.parquet")
         // restore the raw-nanos long `ts` the Tables.events reader derives
         // from (writing the derived TIMESTAMP back would make the reread
         // re-derive `ts div 1000` on a TIMESTAMP and fail analysis)
-        shifted(sources.Tables.events(spark, base), Seq("event_id", "user_id"))
+        shifted(sources.Tables.events(spark, base), Seq("event_id", "user_id"), k)
           .withColumn("ts", expr("unix_micros(ts) * 1000")).drop("ts_us")
           .write.mode("overwrite").parquet(s"$dir/events.parquet")
         Seq("customer", "supplier", "part", "nation", "region").foreach { t =>
@@ -130,7 +132,7 @@ object ScalingBench {
         // the completeness marker (lineitem/_SUCCESS) is written LAST: a
         // crash mid-build leaves an unmarked corpus that rebuilds, never a
         // half corpus accepted forever
-        shifted(sources.Tables.lineitem(spark, base), Seq("l_orderkey"))
+        shifted(sources.Tables.lineitem(spark, base), Seq("l_orderkey"), k)
           .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       }
       dir
@@ -142,35 +144,28 @@ object ScalingBench {
     // (SPARK_GRAFT_MULTS=1,4,8,16 for the sf1-equivalent certification)
     val mults = sys.env.get("SPARK_GRAFT_MULTS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 2, 4))
-    // dev filter: restrict any tier's roster to a comma-separated subset
-    // (the ×32/×64 certification spot-checks the top-cost queries without
-    // paying for the full roster at every multiple)
-    val onlyQ = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def timeTier(tier: String, roster0: Seq[String], dirFor: Int => String,
+    // SPARK_GRAFT_ONLY restricts the tiers' rosters to a comma-separated
+    // subset (the ×32/×64 certification spot-checks the top-cost queries
+    // without paying for the full roster at every multiple); a tier none
+    // of whose queries is selected is skipped
+    val rosters = Queries ++ FactQueries ++ GraphQueries
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"),
+      (SparkEntry.allDefs ++ SparkEntry.benchOnlyDefs).filter(d => rosters.contains(d.name)))
+    // SPARK_GRAFT_REPS (default 2 = cold+warm): more reps for dedicated
+    // curve adjudications — this host's noisy episodes can inflate any
+    // single rep, so outlier re-runs are prescribed min-of-3; "warm"
+    // reports the min of the non-cold reps and the analyzer's
+    // min(cold, warm) is then the min over all reps
+    val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2).max(2)
+    def timeTier(tier: String, roster: Seq[String], dirFor: Int => String,
         counts: String => String): Unit = {
-      val roster = roster0.filter(n => onlyQ.forall(_.contains(n)))
-      if (roster.isEmpty) return
-      val defs = (SparkEntry.allDefs ++ SparkEntry.benchOnlyDefs)
-        .filter(d => roster.contains(d.name))
+      val defs = selected.filter(d => roster.contains(d.name))
         .sortBy(d => roster.indexOf(d.name))
+      if (defs.isEmpty) return
       mults.foreach { k =>
         val dir = dirFor(k)
-        // SPARK_GRAFT_REPS (default 2 = cold+warm): more reps for
-        // dedicated curve adjudications — this host's noisy episodes can
-        // inflate any single rep, so outlier re-runs are prescribed
-        // min-of-3; "warm" reports the min of the non-cold reps and the
-        // analyzer's min(cold, warm) is then the min over all reps
-        val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2).max(2)
         val parts = defs.map { d =>
-          def once: Double = {
-            val t0 = System.nanoTime()
-            d.run(spark, dir).write.mode("overwrite").format("noop").save()
-            val t = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            t
-          }
-          val times = (1 to reps).map(_ => once)
+          val times = (1 to reps).map(_ => SparkEntry.timeNoop(spark, d, dir))
           s""""${d.name}":{"cold":${fmt(times.head)},"warm":${fmt(times.tail.min)}}"""
         }
         println(s"""{"tier":"$tier","mult":$k,${counts(dir)},"queries":{${parts.mkString(",")}}}""")
@@ -183,41 +178,33 @@ object ScalingBench {
       val dir = s"${Paths.work}/scaling/graph-x$k"
       val marker = new java.io.File(s"$dir/lineitem.parquet/_SUCCESS")
       if (!marker.exists()) {
-        def shifted(t: DataFrame, keys: Seq[String]): DataFrame =
-          (0 until k).map { r =>
-            keys.foldLeft(t)((df, c) =>
-              df.withColumn(c, col(c) + lit(r * 1000000000L)))
-          }.reduce(_ unionByName _)
-        shifted(sources.Tables.orders(spark, base), Seq("o_orderkey", "o_custkey"))
+        shifted(sources.Tables.orders(spark, base), Seq("o_orderkey", "o_custkey"), k)
           .write.mode("overwrite").parquet(s"$dir/orders.parquet")
         // marker table last (same crash-consistency argument as the fact corpus)
-        shifted(sources.Tables.lineitem(spark, base), Seq("l_orderkey", "l_suppkey"))
+        shifted(sources.Tables.lineitem(spark, base), Seq("l_orderkey", "l_suppkey"), k)
           .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       }
       dir
     }
 
-    // dev filter: comma-separated tier names (unset = all)
-    val tiers = sys.env.get("SPARK_GRAFT_TIERS")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set("corpus", "fact", "graph"))
-    if (tiers("corpus")) timeTier("corpus", Queries, ensureCorpus, dir => {
+    timeTier("corpus", Queries, ensureCorpus, dir => {
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
       val nVecs = spark.read.parquet(s"$dir/embeddings.parquet").count()
       s""""docs":$nDocs,"vecs":$nVecs"""
     })
-    if (tiers("fact")) timeTier("fact", FactQueries, ensureFactCorpus, dir => {
+    timeTier("fact", FactQueries, ensureFactCorpus, dir => {
       val nLi = spark.read.parquet(s"$dir/lineitem.parquet").count()
       val nEv = spark.read.parquet(s"$dir/events.parquet").count()
       s""""lineitem":$nLi,"events":$nEv"""
     })
-    if (tiers("graph")) timeTier("graph", GraphQueries, ensureGraphCorpus, dir => {
+    timeTier("graph", GraphQueries, ensureGraphCorpus, dir => {
       val nLi = spark.read.parquet(s"$dir/lineitem.parquet").count()
       // g2's own graph census per multiple: the co-supply graph keeps a
       // CONSTANT MinCoOrders edge floor while the data grows, so
       // edges/wedges can legitimately grow superlinearly — emitting
       // n_nodes/n_edges/n_triangles beside the timings separates that
       // data densification from plan behavior when adjudicating the curve
-      val g2 = SparkEntry.allDefs.find(_.name == "g2_triangle_count").get
+      val g2 = SparkEntry.select(Some("g2_triangle_count")).head
         .run(spark, dir).collect().head
       s""""lineitem":$nLi,"g2_nodes":${g2.getLong(0)},"g2_edges":${g2.getLong(1)},"g2_triangles":${g2.getLong(2)}"""
     })

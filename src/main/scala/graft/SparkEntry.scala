@@ -57,6 +57,38 @@ object SparkEntry {
     operators.IvfIndex.rawDefs ++
     operators.Quantization.rawDefs
 
+  /** The test tables the benchmark and diagnostic mains read:
+    * `SPARK_GRAFT_SF_DIR`, else sf0.1. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
+
+  /** The defs of `defs` named in the comma-separated `names`, in registry
+    * order; every def when `names` is None. Each name is trimmed, and a
+    * list that names no query or names one `defs` lacks is refused,
+    * listing the unknown names, so a typo fails instead of running
+    * nothing. */
+  def select(names: Option[String],
+      defs: Seq[QueryDef] = allDefs ++ benchOnlyDefs): Seq[QueryDef] =
+    names.fold(defs) { list =>
+      val want = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = want -- defs.map(_.name)
+      require(want.nonEmpty, s"no query named in '$list'")
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      defs.filter(d => want(d.name))
+    }
+
+  /** Runs `d` on the tables at `sfDir` through the `noop` sink, then drops
+    * the caches it left behind, and returns the wall seconds. Unlike
+    * `count()`, which lets Catalyst prune the work down to row counting,
+    * noop executes the complete physical plan and discards the rows. The
+    * cache drop (s2 persists lineitem; the dedup pipelines persist
+    * shingle and tf frames) makes each run read its own sources. */
+  def timeNoop(spark: SparkSession, d: QueryDef, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    try d.run(spark, sfDir).write.mode("overwrite").format("noop").save()
+    finally spark.catalog.clearCache()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Flagship query on the sf0.001 test tables; driver smoke-checks rows>0.
     * TPC-H Q1 shape: scan → grouped partial/final agg → tiny sort. */
   def entry(spark: SparkSession): DataFrame =

@@ -14,7 +14,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Usage: runMain graft.StageDiag <name> [<name> ...]
   *   env SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all cores),
-  *   SPARK_GRAFT_DIAG_REPS (default 2; stages printed for the LAST rep so
+  *   SPARK_GRAFT_REPS (default 2; stages printed for the LAST rep so
   *   codegen/JIT warmup does not pollute the read).
   *
   * Spark runs broadcast and subquery builds on its own thread pool
@@ -29,8 +29,9 @@ object StageDiag {
     inputMb: Double, shReadMb: Double, shWriteMb: Double, spillMb: Double)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Paths.sf("sf0.1"))
-    val reps = sys.env.getOrElse("SPARK_GRAFT_DIAG_REPS", "2").toInt
+    val sfDir = SparkEntry.sfDir
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val defs = SparkEntry.select(Some(args.mkString(",")))
     val spark = GraftSession.build("graft-stagediag")
 
     val stages = ArrayBuffer.empty[St]
@@ -67,35 +68,22 @@ object StageDiag {
       }
     })
 
-    val qs = SparkEntry.queries ++
-      SparkEntry.benchOnlyDefs.map(d => d.name -> d.run).toMap
-    for (name <- args) {
-      qs.get(name) match {
-        case None => println(s"(unknown query: $name)")
-        case Some(run) =>
-          // warm at the smallest sf (codegen cache), like Bench
-          try run(spark, Paths.sf("sf0.001"))
-            .write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-          var wall = 0.0
-          for (rep <- 1 to reps) {
-            stages.synchronized(stages.clear())
-            val t0 = System.nanoTime()
-            run(spark, sfDir).write.mode("overwrite").format("noop").save()
-            wall = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            println(f"[diag] $name rep$rep wall=$wall%.3f s")
-          }
-          val snap = stages.synchronized(stages.toVector)
-          val total = snap.map(_.ms).sum / 1e3
-          println(f"[diag] $name stages=${snap.size} stage-ms-sum=$total%.3f s (last rep)")
-          println(f"[diag] ${"id"}%4s ${"ms"}%7s ${"tasks"}%5s ${"inMB"}%8s " +
-            f"${"shRdMB"}%8s ${"shWrMB"}%8s ${"spill"}%6s  name")
-          snap.sortBy(-_.ms).take(25).foreach { s =>
-            println(f"[diag] ${s.id}%4d ${s.ms}%7d ${s.tasks}%5d ${s.inputMb}%8.1f " +
-              f"${s.shReadMb}%8.1f ${s.shWriteMb}%8.1f ${s.spillMb}%6.1f  ${s.name}")
-          }
+    for (d <- defs) {
+      // warm at the smallest sf (codegen cache), like Bench
+      scala.util.Try(SparkEntry.timeNoop(spark, d, Paths.sf("sf0.001")))
+      for (rep <- 1 to reps) {
+        stages.synchronized(stages.clear())
+        val wall = SparkEntry.timeNoop(spark, d, sfDir)
+        println(f"[diag] ${d.name} rep$rep wall=$wall%.3f s")
+      }
+      val snap = stages.synchronized(stages.toVector)
+      val total = snap.map(_.ms).sum / 1e3
+      println(f"[diag] ${d.name} stages=${snap.size} stage-ms-sum=$total%.3f s (last rep)")
+      println(f"[diag] ${"id"}%4s ${"ms"}%7s ${"tasks"}%5s ${"inMB"}%8s " +
+        f"${"shRdMB"}%8s ${"shWrMB"}%8s ${"spill"}%6s  name")
+      snap.sortBy(-_.ms).take(25).foreach { s =>
+        println(f"[diag] ${s.id}%4d ${s.ms}%7d ${s.tasks}%5d ${s.inputMb}%8.1f " +
+          f"${s.shReadMb}%8.1f ${s.shWriteMb}%8.1f ${s.spillMb}%6.1f  ${s.name}")
       }
     }
     spark.stop()

@@ -1,21 +1,19 @@
 package graft
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.build("graft-verify")
-    new java.io.File(outDir).mkdirs()
     // dev subset filter (same contract as Bench): comma-separated names;
     // unset = the full registry (what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def keep(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val defs = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.allDefs)
+    val spark = GraftSession.build("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    defs.foreach { d =>
+      try d.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${d.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
       }
       finally spark.catalog.clearCache() // per-query cache isolation
     }
@@ -31,8 +29,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = defs.collect { case QueryDef(k, _, Some(v)) => s"${q(k)}: ${q(v)}" }
+      .mkString("{", ",", "}")
     java.nio.file.Files.writeString(java.nio.file.Path.of(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

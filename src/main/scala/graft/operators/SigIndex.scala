@@ -518,13 +518,13 @@ object SigIndex {
     * collected candidate pairs, against the PINNED postings.
     *
     * The candidate ids are a local relation (no job to build their
-    * broadcast), the postings scan is pruned twice — an `IN` literal
-    * when the candidate set is small enough for row-group skipping, plus
-    * the broadcast left-semi join that carries the general case — and
-    * the verification joins per-document shingle SETS on the long ids:
-    * the candidate old documents' sets (one grouped aggregation) fan out
-    * to their pairs and meet the batch's candidate sets (broadcast,
-    * batch-bounded by contract), and |old ∩ new| is
+    * broadcast), the postings scan is pruned once — an `IN` literal
+    * when the candidate set is small enough for row-group skipping, a
+    * broadcast left-semi join above that — and the verification joins
+    * per-document shingle SETS on the long ids: the candidate old
+    * documents' sets (one grouped aggregation) fan out to their pairs
+    * and meet the batch's candidate sets (broadcast, batch-bounded by
+    * contract), and |old ∩ new| is
     * `size(array_intersect(...))`. Every broadcast keys on one long id,
     * so each builds as a LongHashedRelation sized to its rows; the
     * earlier (new_id, g) marking join and its separate |new| sizes
@@ -539,23 +539,19 @@ object SigIndex {
     if (cand.isEmpty) return emptyPairs(s)
     import s.implicits._
     val pairsDf = cand.toSeq.toDF("doc_id", "new_id") // doc_id = old side
-    val oldIds = cand.map(_._1).distinct.toSeq
-    val pruned0 = postingsAt(s, idx, version)
-    val pruned = if (oldIds.size <= 1000)
-      pruned0.where(col("doc_id").isin(oldIds: _*)) else pruned0
-    val oldPost = pruned.join(broadcast(oldIds.toDF("doc_id")),
-      Seq("doc_id"), "left_semi")
+    // one id prune per side: an `IN` literal when the ids are few
+    // enough for row-group skipping, else a broadcast left-semi join
+    def onlyIds(df: DataFrame, ids: Seq[Long]): DataFrame =
+      if (ids.size <= 1000) df.where(col("doc_id").isin(ids: _*))
+      else df.join(broadcast(ids.toDF("doc_id")), Seq("doc_id"), "left_semi")
+    val oldPost = onlyIds(postingsAt(s, idx, version), cand.map(_._1).distinct.toSeq)
     // the broadcast NEW side carries only CANDIDATE new docs' shingles —
-    // the driver already holds the candidate ids, so the same
-    // isin/semi-join pruning the postings side gets applies here too:
-    // the broadcast is candidate-bounded, not batch-bounded (a batch of
-    // long documents would otherwise broadcast every shingle of every
-    // doc, candidates or not — a memory cliff the old shuffled plan
-    // didn't have)
-    val newIds = cand.map(_._2).distinct.toSeq
-    val nshCand = (if (newIds.size <= 1000)
-      nsh.where(col("doc_id").isin(newIds: _*)) else nsh)
-      .join(broadcast(newIds.toDF("doc_id")), Seq("doc_id"), "left_semi")
+    // the candidate ids are already collected, so the same pruning
+    // the postings side gets applies here too: the broadcast is
+    // candidate-bounded, not batch-bounded (a batch of long documents
+    // would otherwise broadcast every shingle of every doc, candidates
+    // or not — a memory cliff the old shuffled plan didn't have)
+    val nshCand = onlyIds(nsh, cand.map(_._2).distinct.toSeq)
     // SIZE GUARD on the broadcast side: the bound so far is candidate
     // DOC count, not shingle VOLUME — a batch of very long documents
     // with many band collisions could push the newSh broadcast past
@@ -601,6 +597,49 @@ object SigIndex {
         round(col("jac"), 6).cast("double").as("jaccard"))
   }
 
+  /** Per-phase wall-time telemetry for [[ingestBatch]] — the sig_ingest
+    * drift adjudication wants a MEASUREMENT of which phase got slow, not
+    * another inference. Phases OVERLAP by design (the disjointness
+    * count, the stage and the probe run concurrently), so phase sums
+    * legitimately exceed the batch wall: each series answers "which
+    * phase moved", never "where did the wall go". Negligible overhead
+    * (a nanoTime pair and a bounded-buffer add per phase per batch);
+    * the benchmark's `ingest` workload drains it after each signature
+    * stream via [[phaseP50s]] and records the p50s as its `sig.*`
+    * samples. Process-global and single-consumer by design (a
+    * diagnostic, not an API): buffers cap at the newest [[PhaseCap]]
+    * samples so a resident ingest query never grows it unboundedly, and
+    * concurrent ingests in one JVM mix their samples — drain it only
+    * where one ingest runs at a time. */
+  private val PhaseCap = 4096
+  private val phaseTimes =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.ArrayDeque[Double]]()
+
+  private def timedPhase[T](name: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      val q = phaseTimes.computeIfAbsent(name,
+        _ => new java.util.ArrayDeque[Double]())
+      q.synchronized {
+        q.addLast((System.nanoTime() - t0) / 1e9)
+        while (q.size > PhaseCap) q.pollFirst()
+      }
+    }
+  }
+
+  /** Drain the phase telemetry: name → (p50 seconds, samples). */
+  def phaseP50s(): Map[String, (Double, Int)] = {
+    import scala.jdk.CollectionConverters._
+    val out = phaseTimes.asScala.toMap.map { case (k, q) =>
+      val xs = q.synchronized(q.asScala.toSeq).sorted
+      k -> (if (xs.isEmpty) 0.0 else xs(xs.size / 2), xs.size)
+    }
+    phaseTimes.clear()
+    out
+  }
+
   /** One streaming-ingest micro-batch, IDEMPOTENT under at-least-once
     * replay (foreachBatch re-delivers a batch whenever the checkpoint
     * commit didn't land). Per-batch Spark actions: the candidate scan
@@ -631,48 +670,6 @@ object SigIndex {
     *      leaves NO committed version — the replay simply bootstraps
     *      again (same publish, same content).
     */
-  /** Per-phase wall-time telemetry for [[ingestBatch]] — the sig_ingest
-    * drift adjudication wants a MEASUREMENT of which phase got slow, not
-    * another inference. Phases OVERLAP by design (the disjointness
-    * count, the stage and the probe run concurrently), so phase sums
-    * legitimately exceed the batch wall: each series answers "which
-    * phase moved", never "where did the wall go". Negligible overhead
-    * (a nanoTime pair and a bounded-buffer add per phase per batch);
-    * StreamBench drains it after the ingest run via [[phaseP50s]].
-    * Process-global and single-consumer by design (a diagnostic, not an
-    * API): buffers cap at the newest [[PhaseCap]] samples so a resident
-    * ingest query never grows it unboundedly, and concurrent ingests in
-    * one JVM mix their samples — run the bench alone, as its script
-    * does. */
-  private val PhaseCap = 4096
-  private val phaseTimes =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.ArrayDeque[Double]]()
-
-  private def timedPhase[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    try f
-    finally {
-      val q = phaseTimes.computeIfAbsent(name,
-        _ => new java.util.ArrayDeque[Double]())
-      q.synchronized {
-        q.addLast((System.nanoTime() - t0) / 1e9)
-        while (q.size > PhaseCap) q.pollFirst()
-      }
-    }
-  }
-
-  /** Drain the phase telemetry: name → (p50 seconds, samples). */
-  def phaseP50s(): Map[String, (Double, Int)] = {
-    import scala.jdk.CollectionConverters._
-    val out = phaseTimes.asScala.toMap.map { case (k, q) =>
-      val xs = q.synchronized(q.asScala.toSeq).sorted
-      k -> (if (xs.isEmpty) 0.0 else xs(xs.size / 2), xs.size)
-    }
-    phaseTimes.clear()
-    out
-  }
-
   private[operators] def ingestBatch(s: SparkSession, idx: String,
       pairsSink: String, batch: DataFrame, batchId: Long): Unit = {
     val root = tableRoot(idx)

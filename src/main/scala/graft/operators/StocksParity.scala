@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * 5,613,300-row stocks dataset (stockify.cu main(): the six filters
   * :229-452, the global sum :476-481, the three 10-row rolling windows
   * :513-615) — closing the "intent implemented but the literal data never
-  * hash-checked" gap. StocksCompatSpec covers row counts and StocksBench
-  * covers timings; these queries make the reference workload part of the
-  * driver's DuckDB differential gate.
+  * hash-checked" gap. StocksCompatSpec covers row counts and Bench times
+  * them; these queries make the reference workload part of the DuckDB
+  * differential gate.
   *
   * Both engines read the SAME materialized Parquet
   * (Tables.ensureStocksParquet; the oracle via read_parquet on the

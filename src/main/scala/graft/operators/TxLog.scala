@@ -3478,23 +3478,6 @@ object TxLog {
     }
   }
 
-  /** Incremental read (file-level change feed for APPEND-ONLY ranges):
-    * the rows added between `fromVersion` (exclusive) and `toVersion`
-    * (inclusive, default latest) — exactly the frames a downstream
-    * incremental consumer (near-dup index append, rollup fold, feature
-    * backfill) wants to process per cycle without rescanning the table.
-    * Resolved from the manifests alone: the files present in `to` but
-    * not in `from`, read under `to`'s schema pin and column mapping.
-    * Refuses LOUDLY when ANY version in the range removed or rewrote a
-    * file or touched a deletion vector (an overwrite/upsert/delete
-    * landed inside it) — verified per version, not just at the
-    * endpoints, so a file added and rewritten strictly INSIDE the range
-    * refuses too instead of surfacing its survivors as "appends". Those
-    * semantics need a row-level diff the caller must opt into
-    * ([[readChanges]]), not a silent wrong answer.
-    * Streaming-sink tables ([[streamingSink]], [[appendOnceMonotone]],
-    * [[commitAppend]], partition-minting [[upsertPartitioned]] batches
-    * that touch only NEW partitions) are append-only by construction. */
   /** Once-ever memo of CLEAN append-only steps: (root, v) present ⟺
     * version v was verified to neither remove/rewrite a file, change a
     * deletion vector, nor add a dv-born file relative to v-1. Manifests
@@ -3531,6 +3514,23 @@ object TxLog {
     appendStepMemo.keysIterator.filter(_._1 == root)
       .foreach(appendStepMemo.remove)
 
+  /** Incremental read (file-level change feed for APPEND-ONLY ranges):
+    * the rows added between `fromVersion` (exclusive) and `toVersion`
+    * (inclusive, default latest) — exactly the frames a downstream
+    * incremental consumer (near-dup index append, rollup fold, feature
+    * backfill) wants to process per cycle without rescanning the table.
+    * Resolved from the manifests alone: the files present in `to` but
+    * not in `from`, read under `to`'s schema pin and column mapping.
+    * Refuses LOUDLY when ANY version in the range removed or rewrote a
+    * file or touched a deletion vector (an overwrite/upsert/delete
+    * landed inside it) — verified per version, not just at the
+    * endpoints, so a file added and rewritten strictly INSIDE the range
+    * refuses too instead of surfacing its survivors as "appends". Those
+    * semantics need a row-level diff the caller must opt into
+    * ([[readChanges]]), not a silent wrong answer.
+    * Streaming-sink tables ([[streamingSink]], [[appendOnceMonotone]],
+    * [[commitAppend]], partition-minting [[upsertPartitioned]] batches
+    * that touch only NEW partitions) are append-only by construction. */
   def readAppended(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long = -1L): DataFrame = {
     // fromVersion 0 is the GENESIS baseline (nothing yet) — what a
@@ -3550,81 +3550,61 @@ object TxLog {
       throw new IllegalStateException(s"no committed version at $root"))
     require(to.version >= fromV,
       s"readAppended: $toVersion precedes $fromVersion")
-    // The append-only proof must hold PER VERSION, not just at the
+    // The append-only proof holds PER VERSION, not just at the
     // endpoints: a file added at v and rewritten (COW delete/update) or
-    // fully dropped at v' with fromV < v < v' <= to is invisible to the
-    // endpoint diff below — absent from BOTH baselines — so the range
-    // would silently surface the rewrite's survivor file as "appends"
-    // while the delete itself vanished. That blind spot was first closed
-    // for genesis (fromVersion 0) replays, where the baseline is empty;
-    // the same class survives on every other multi-version range
-    // (reachable from appends-mode stream batches whenever
-    // maxVersionsPerBatch or a catch-up batch spans >1 version), so the
-    // walk now covers them all. Manifest header parses only, no data
-    // I/O: paths may only accumulate, a pre-existing entry's deletion
-    // vector may never change, and a newborn file may not carry one.
-    // Single-step ranges skip the walk — there the endpoint diff IS the
-    // per-version check.
-    if (to.version - fromV > 1) {
-      // each STEP (v-1 → v) is a pure function of two immutable
-      // manifests, so a clean verdict memoizes per (root, v) — the
-      // TrieMap below. A consumer tailing a high-commit-rate table
-      // re-walks its catch-up range on every batch; without the memo
-      // every walk re-parses every manifest in the range (the feed
-      // source's addedBytesMemo closed the same hole on its side).
-      ((fromV + 1) to to.version).foreach { v =>
-        if (!appendStepMemo.contains((root, v))) {
-          val sv =
-            if (v == to.version) to
-            else snapshot(root, v).getOrElse(
-              throw new IllegalArgumentException(
-                s"readAppended: version $v is not retained at $root — an " +
-                  s"append-only proof over ($fromV, ${to.version}] needs " +
-                  "every manifest in the range"))
-          val prevDv: Map[String, Option[(String, Long)]] =
-            (if (v - 1 == fromV) fromEntries
-             else if (v <= 1) Seq.empty
-             else snapshot(root, v - 1).getOrElse(
-               throw new IllegalArgumentException(
-                 s"readAppended: version ${v - 1} is not retained at $root " +
-                   s"— an append-only proof over ($fromV, ${to.version}] " +
-                   "needs every manifest in the range"))
-               .entries).map(e => e.path -> e.dv).toMap
-          val paths = sv.entries.map(_.path).toSet
-          val rem = prevDv.keysIterator.filterNot(paths).size
-          require(rem == 0,
-            s"readAppended: version $v removed or rewrote $rem " +
-              "file(s) — not an append-only range (use readChanges for " +
-              "rewrite ranges)")
-          val dvBad = sv.entries.count(e =>
-            prevDv.get(e.path).map(_ != e.dv).getOrElse(e.dv.isDefined))
-          require(dvBad == 0,
-            s"readAppended: version $v changed or introduced the deletion " +
-              s"vector of $dvBad file(s) — a delete landed in the range; " +
-              "not append-only (use readChanges)")
-          if (appendStepMemo.size >= AppendStepMemoCap) appendStepMemo.clear()
-          appendStepMemo.putIfAbsent((root, v), true)
-          ()
-        }
+    // fully dropped at v' with fromV < v < v' <= to is absent from BOTH
+    // endpoint manifests, so an endpoint diff would silently surface the
+    // rewrite's survivor file as "appends" while the delete itself
+    // vanished (reachable from appends-mode stream batches whenever
+    // maxVersionsPerBatch or a catch-up batch spans >1 version). Manifest
+    // header parses only, no data I/O: paths may only accumulate, a
+    // pre-existing entry's deletion vector may never change, and a
+    // newborn file may not carry one. Every range walks, single steps
+    // included — there the one step's manifests, `to` and `fromEntries`,
+    // are already in hand, so the walk parses nothing more.
+    //
+    // Each STEP (v-1 → v) is a pure function of two immutable
+    // manifests, so a clean verdict memoizes per (root, v) — the
+    // TrieMap above. A consumer tailing a high-commit-rate table
+    // re-walks its catch-up range on every batch; without the memo
+    // every walk re-parses every manifest in the range (the feed
+    // source's addedBytesMemo closed the same hole on its side).
+    ((fromV + 1) to to.version).foreach { v =>
+      if (!appendStepMemo.contains((root, v))) {
+        val sv =
+          if (v == to.version) to
+          else snapshot(root, v).getOrElse(
+            throw new IllegalArgumentException(
+              s"readAppended: version $v is not retained at $root — an " +
+                s"append-only proof over ($fromV, ${to.version}] needs " +
+                "every manifest in the range"))
+        val prevDv: Map[String, Option[(String, Long)]] =
+          (if (v - 1 == fromV) fromEntries
+           else if (v <= 1) Seq.empty
+           else snapshot(root, v - 1).getOrElse(
+             throw new IllegalArgumentException(
+               s"readAppended: version ${v - 1} is not retained at $root " +
+                 s"— an append-only proof over ($fromV, ${to.version}] " +
+                 "needs every manifest in the range"))
+             .entries).map(e => e.path -> e.dv).toMap
+        val paths = sv.entries.map(_.path).toSet
+        val rem = prevDv.keysIterator.filterNot(paths).size
+        require(rem == 0,
+          s"readAppended: version $v removed or rewrote $rem " +
+            "file(s) — not an append-only range (use readChanges for " +
+            "rewrite ranges)")
+        val dvBad = sv.entries.count(e =>
+          prevDv.get(e.path).map(_ != e.dv).getOrElse(e.dv.isDefined))
+        require(dvBad == 0,
+          s"readAppended: version $v changed or introduced the deletion " +
+            s"vector of $dvBad file(s) — a delete landed in the range; " +
+            "not append-only (use readChanges)")
+        if (appendStepMemo.size >= AppendStepMemoCap) appendStepMemo.clear()
+        appendStepMemo.putIfAbsent((root, v), true)
+        ()
       }
     }
     val fromPaths = fromEntries.map(_.path).toSet
-    val removed = fromPaths -- to.entries.map(_.path).toSet
-    require(removed.isEmpty,
-      s"readAppended: versions $fromV..${to.version} removed or " +
-        s"rewrote ${removed.size} file(s) — not an append-only range " +
-        "(use read + a keyed diff for rewrite ranges)")
-    // merge-on-read deletes leave paths in place but change the entry's
-    // deletion vector — just as much a non-append as a rewrite. A file
-    // both ADDED and dv'd inside the range carries a dv with no `from`
-    // counterpart; catch both shapes.
-    val fromDv = fromEntries.map(e => e.path -> e.dv).toMap
-    val dvChanged = to.entries.filter(e =>
-      fromDv.get(e.path).map(_ != e.dv).getOrElse(e.dv.isDefined))
-    require(dvChanged.isEmpty,
-      s"readAppended: versions $fromV..${to.version} changed the " +
-        s"deletion vector of ${dvChanged.size} file(s) — a delete landed in " +
-        "the range; not append-only (use read + a keyed diff)")
     val added = to.entries.filterNot(e => fromPaths(e.path))
     val schema = to.schemaJson.map(parseSchema)
     val phys =

@@ -34,8 +34,8 @@ object Tables {
     spark.read.schema(stockSchema).option("header", "false").csv(path)
 
   /** Unzip the reference's stocks.csv.zip into target/ once and return
-    * the csv path (shared by StocksCompatSpec and StocksBench — one copy
-    * of the unzip logic). Extracts to a temp name and atomically moves
+    * the csv path (shared by StocksCompatSpec and the stk queries' Parquet
+    * materialization — one copy of the unzip logic). Extracts to a temp name and atomically moves
     * into place, so an interrupted run can never leave a partial file
     * that the exists() fast-path would silently reuse. */
   def ensureStocksCsv(): String = synchronized {

@@ -564,9 +564,9 @@ object Streams {
     * file stream source requires a directory, not a single file) with the
     * same projected schema as the batch loader (ts_us BIGINT +
     * ts TIMESTAMP), so batch and stream share every transformation above.
-    * `maxFilesPerTrigger` caps files per micro-batch (StreamBench uses 1
-    * to get one batch per staged file; Trigger.AvailableNow respects
-    * source rate limits). */
+    * `maxFilesPerTrigger` caps files per micro-batch (1 gives one batch
+    * per staged file, as the benchmark's `ingest` streams use it;
+    * Trigger.AvailableNow respects source rate limits). */
   def eventsStream(s: SparkSession, filesDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

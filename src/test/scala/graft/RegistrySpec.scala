@@ -105,22 +105,57 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
+  test("the query lookup trims each name of a comma-separated list") {
+    val got = SparkEntry.select(Some(" w0_moving_avg_compat, d7_dedup_clusters ,"))
+    assert(got.map(_.name).toSet === Set("w0_moving_avg_compat", "d7_dedup_clusters"))
+    assert(SparkEntry.select(None).size ===
+      (SparkEntry.allDefs ++ SparkEntry.benchOnlyDefs).size)
+  }
+
+  test("the query lookup refuses an unknown name, listing it, and a list naming none") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Some("w0_moving_avg_compat,d7_dedup_cluster,q0"))
+    }
+    assert(e.getMessage.contains("d7_dedup_cluster, q0"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
+    // Verify's registry holds no bench-only raw form
+    val raw = SparkEntry.benchOnlyDefs.head.name
+    assert(SparkEntry.select(Some(raw)).map(_.name) === Seq(raw))
+    intercept[IllegalArgumentException](SparkEntry.select(Some(raw), SparkEntry.allDefs))
+  }
+
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+    }
+
+  private val srcDir = new java.io.File(new java.io.File(Paths.work).getParentFile, "src")
+
   test("every fixed path comes from graft.Paths: no absolute literal elsewhere in src") {
     // a hard-coded root would make a checkout elsewhere write into this
     // one; the needle is split so this file does not match itself
     val needle = "\"/" + "root/"
-    val src = new java.io.File(new java.io.File(Paths.work).getParentFile, "src")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
-      }
-    val files = scalaFiles(src)
-    assert(files.exists(_.getName == "Paths.scala"), s"no sources scanned under $src")
+    val files = scalaFiles(srcDir)
+    assert(files.exists(_.getName == "Paths.scala"), s"no sources scanned under $srcDir")
     val offenders = for {
       f <- files if f.getName != "Paths.scala"
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
       if line.contains(needle)
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the engine and its mains name exactly six SPARK_GRAFT_ knobs") {
+    val knob = "SPARK_GRAFT_[A-Z_]+".r
+    val files = scalaFiles(new java.io.File(srcDir, "main"))
+    assert(files.exists(_.getName == "Bench.scala"), s"no sources scanned under $srcDir/main")
+    val named = files.flatMap(f => knob.findAllIn(
+      java.nio.file.Files.readString(f.toPath)).map(_ -> f.getName)).toSet
+    val knobs = named.map(_._1)
+    assert(knobs === Set("CPUS", "SF_DIR", "ONLY", "REPS", "MULTS", "PLAN_DIR")
+      .map("SPARK_GRAFT_" + _),
+      s"${knobs.size} knobs: " + named.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (k, fs) => s"$k (${fs.map(_._2).toSeq.sorted.mkString(", ")})" }
+        .mkString(", "))
   }
 }

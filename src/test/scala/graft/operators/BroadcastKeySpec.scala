@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -115,9 +116,18 @@ class BroadcastKeySpec extends SparkSpec {
     val idx = freshRoot("bk-sig")
     SigIndex.build(b1, idx)
     val sink = freshRoot("bk-sig-pairs")
-    val Seq(probe, ingest) = guard(
+    val plans = Seq(
       "probe" -> plansOf(SigIndex.probe(spark, idx, b2).count()),
       "ingestBatch" -> plansOf(SigIndex.ingestBatch(spark, idx, sink, b2, 1L)))
+    val Seq(probe, ingest) = guard(plans: _*)
     assert(probe >= 2 && ingest >= 2, s"probe $probe, ingestBatch $ingest broadcasts")
+    // a few candidate ids per side, far under 1000: the `IN` literal prunes
+    // each side alone, so no id semi-join broadcast repeats it
+    val semis = plans.flatMap { case (what, ps) =>
+      ps.flatMap(broadcastJoins).filter(j => j.joinType == LeftSemi &&
+        j.leftKeys.exists(_.references.exists(_.name == "doc_id")))
+        .map(j => s"$what: broadcast ${j.joinType} on ${j.leftKeys.mkString(", ")}")
+    }
+    assert(semis.isEmpty, semis.mkString("\n"))
   }
 }

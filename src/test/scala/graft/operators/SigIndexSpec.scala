@@ -224,11 +224,25 @@ class SigIndexSpec extends SparkSpec {
   }
 
   test("probe plan prunes the postings scan behind a semi join (non-candidates never leave the index)") {
+    // up to 1000 candidate ids the prune is an IN literal, pushed into
+    // the postings scan itself
     val dir = freshRoot("sigidx-plan")
     SigIndex.build(docs.filter(col("doc_id") % 5 =!= 0), dir)
-    val plan = SigIndex.probe(spark, dir, docs.filter(col("doc_id") % 5 === 0))
+    val small = SigIndex.probe(spark, dir, docs.filter(col("doc_id") % 5 === 0))
       .queryExecution.executedPlan.toString
+    assert(small.contains("In(doc_id, ["), s"plan:\n$small")
+    // past that, a broadcast left-semi join on the ids carries it: 1,100
+    // documents each duplicated once under a new id, sharing no shingle
+    // with any other, give 1,100 candidate ids per side
+    import spark.implicits._
+    def corpus(base: Long) = (0 until 1100).map(i =>
+      (base + i, (1 to 5).map(w => s"w${i}x$w").mkString(" "))).toDF("doc_id", "text")
+    val big = freshRoot("sigidx-plan-big")
+    SigIndex.build(corpus(0L), big)
+    val probed = SigIndex.probe(spark, big, corpus(100000L))
+    val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), s"plan:\n$plan")
+    assert(probed.count() === 1100L)
   }
 
   test("streaming ingest: micro-batches probe-then-append; emitted pairs cover the cross-batch near-dups") {

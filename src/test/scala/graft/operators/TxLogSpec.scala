@@ -902,4 +902,26 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.manifestParses.get.longValue === 1L)
     assert(TxLog.read(spark, root).count() === 120L)
   }
+
+  test("readAppended's one append-only proof parses no more manifests than before") {
+    val root = freshRoot("txlog-appended-parses")
+    import spark.implicits._
+    TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
+    (2L to 5L).foreach(k =>
+      TxLog.appendOnce(spark, root, s"b$k", Seq((k, "x")).toDF("id", "s"))) // v2..v5
+    // one step: the two endpoints are the whole proof
+    TxLog.manifestParses.set(0L)
+    val one = TxLog.readAppended(spark, root, 4L, 5L)
+    val single = TxLog.manifestParses.get.longValue
+    // three steps (1, 4]: the endpoints plus the interior manifests
+    TxLog.manifestParses.set(0L)
+    val three = TxLog.readAppended(spark, root, 1L, 4L)
+    val multi = TxLog.manifestParses.get.longValue
+    assert(one.count() === 1L && three.count() === 3L)
+    // the counts measured when a single step ran an endpoint diff and
+    // only longer ranges walked: the walk now proves both, and a single
+    // step already holds both of its manifests
+    assert(single === 9L, s"single step parsed $single manifests")
+    assert(multi === 15L, s"three steps parsed $multi manifests")
+  }
 }
