@@ -87,8 +87,9 @@ object TxLog {
     * partition column in `p`-header order, '/'-joined — unambiguous
     * because escapePathName escapes '/' inside values; the joined string
     * round-trips through the manifest's own encode/decode like any
-    * single value. */
-  /** `dv` — the entry's DELETION VECTOR (merge-on-read delete state):
+    * single value.
+    *
+    * `dv` — the entry's DELETION VECTOR (merge-on-read delete state):
     * (sidecar rel path, deleted-row count). The sidecar is a parquet
     * file of (f: rel data-file path, p: row index) pairs; reads
     * anti-join the file's positions out, so a MoR delete never rewrites
@@ -430,8 +431,9 @@ object TxLog {
   /** Parsed manifest content (version-independent). `partCol` carries
     * the committed partition type when the manifest recorded one
     * (`p\tname\ttype`); bare `p\tname` headers (pre-typed manifests)
-    * read as STRING — exactly what those tables stored. */
-  /** `mapping` is the column-mapping layer (the Delta column-mapping
+    * read as STRING — exactly what those tables stored.
+    *
+    * `mapping` is the column-mapping layer (the Delta column-mapping
     * shape, name-based): physical (in-file) column name → logical
     * (user-visible) name, for exactly the columns whose two names
     * differ. The committed schema (`s`) always carries PHYSICAL names in
@@ -440,8 +442,9 @@ object TxLog {
     * `retired` lists physical names dropped from the schema but still
     * present in old data files: a later re-add of the same logical name
     * must mint a FRESH physical name, or old files would resurrect the
-    * dropped column's values instead of surfacing NULL. */
-  /** `delta = true` marks an INCREMENTAL manifest: `entries` is empty and
+    * dropped column's values instead of surfacing NULL.
+    *
+    * `delta = true` marks an INCREMENTAL manifest: `entries` is empty and
     * the version's file list is parent's − `removes` + `adds` (headers —
     * notes, schema, mapping, partition metadata — always ride complete in
     * every manifest; only the FILE LIST is delta-encoded, because it is
@@ -639,24 +642,18 @@ object TxLog {
       nFiles: Int, notes: Set[String])
 
   /** Commit history over the RETAINED versions, newest first (Delta's
-    * `DESCRIBE HISTORY`). A full-listing audit over exactly the manifests
-    * that still exist, folded forward once: the oldest retained version
-    * resolves through its base, and each later delta applies to its
-    * parent's file list, so every manifest is parsed once — O(versions),
-    * not a walk back to a checkpoint per version. A version whose parent
-    * is torn resolves on its own, as a snapshot would. */
+    * `DESCRIBE HISTORY`): one [[steps]] walk over exactly the manifests
+    * that still exist, so every manifest is parsed once — O(versions),
+    * not a walk back to a checkpoint per version. The oldest retained
+    * version resolves through its base; a torn version is skipped, and
+    * the one after it resolves on its own, as a snapshot would. */
   def history(root: String): Seq[HistoryEntry] = {
-    var parent: Option[(Long, Seq[FileEntry])] = None
-    allVersions(root).flatMap { v =>
-      parseManifest(manifestPath(root, v)).map { m =>
-        val entries = parent match {
-          case Some((u, es)) if m.delta && u == v - 1 => applyDelta(es, m)
-          case _ => resolveEntries(root, v, m)
-        }
-        parent = Some(v -> entries)
-        HistoryEntry(v, m.timestampMs, entries.size, m.notes)
-      }
-    }.reverse
+    val vs = allVersions(root)
+    if (vs.isEmpty) Seq.empty
+    else steps(root, vs.head - 1, vs.last, anchored = false)(_ => ())._2
+      .map { case (_, s) =>
+        HistoryEntry(s.version, s.timestampMs, s.entries.size, s.notes)
+      }.toSeq.reverse
   }
 
   /** Pin a snapshot of version `v` (default: latest). None for a table
@@ -665,10 +662,52 @@ object TxLog {
     val pinned =
       if (v >= 0) parseManifest(manifestPath(root, v)).map((None, v, _))
       else latestManifest(root)
-    pinned.map { case (ck, ver, m) =>
-      Snapshot(ver, resolveEntries(root, ver, m, ck), m.notes, m.partCols,
-        m.schemaJson, m.timestampMs, m.mapping, m.retired)
-    }
+    pinned.map { case (ck, ver, m) => pin(ver, m, resolveEntries(root, ver, m, ck)) }
+  }
+
+  /** Version `v`'s snapshot from its manifest and resolved file list. */
+  private def pin(v: Long, m: Manifest, entries: Seq[FileEntry]): Snapshot =
+    Snapshot(v, entries, m.notes, m.partCols, m.schemaJson, m.timestampMs,
+      m.mapping, m.retired)
+
+  /** THE FORWARD VERSION WALK of every multi-version reader ([[history]],
+    * [[readAppended]], [[readChanges]], the `txlog-feed` source): the
+    * resolved floor `from`, and each version in (`from`, `to`] with its
+    * parent as lazy (parent, current) pairs in version order. `from`
+    * resolves ONCE; then each manifest in the range is parsed exactly
+    * once and a delta applies to the previous step's file list (a full
+    * manifest replaces it) — the Delta log-replay shape, O(chain to
+    * `from` + range) parses, where resolving each version on its own
+    * cost O(range × chain).
+    *
+    * [[Genesis]] stands in for a floor with no manifest: version 0, and
+    * any `from` when `anchored` is false (a pruned log's pre-retention
+    * floor — the feed source's synthetic `earliest` anchor, the history
+    * audit — or a caller that never reads the parent). The first step
+    * then resolves through its own base. `missing(v)` is called on a
+    * version with no complete manifest, an anchored `from` included:
+    * throw the caller's typed "not retained" refusal, or return to skip
+    * the version (the next one then resolves on its own). */
+  private[graft] def steps(root: String, from: Long, to: Long,
+      anchored: Boolean = true)(
+      missing: Long => Unit): (Snapshot, Iterator[(Snapshot, Snapshot)]) = {
+    val base =
+      if (from == 0L || !anchored) Genesis
+      else snapshot(root, from).getOrElse { missing(from); Genesis }
+    var parent = base
+    (base, (from + 1 to to).iterator.flatMap { v =>
+      parseManifest(manifestPath(root, v)) match {
+        case None => missing(v); None
+        case Some(m) =>
+          val entries =
+            if (!m.delta) m.entries
+            else if (parent.version == v - 1) applyDelta(parent.entries, m)
+            else resolveEntries(root, v, m)
+          val step = (parent, pin(v, m, entries))
+          parent = step._2
+          Some(step)
+      }
+    })
   }
 
   private def parseSchema(j: String): org.apache.spark.sql.types.StructType =
@@ -754,11 +793,6 @@ object TxLog {
     if (snap.mapping.isEmpty) phys else applyMapping(phys, snap, schema.get)
   }
 
-  /** The one physical read shape for a snapshot's (possibly pruned)
-    * entry list: single-relation tables — unpartitioned, or partitioned
-    * with the columns riding IN the files ([[partDataInFiles]]) — read
-    * as ONE explicit-file relation; legacy partitioned layouts fall back
-    * to the per-partition literal-attach union. */
   /** Deep-relax nullability for SCAN schemas: a parquet file can always
     * contain nulls, so a committed schema that claims non-nullable must
     * never reach a scan — whole-stage codegen trusts the claim, skips
@@ -780,6 +814,11 @@ object TxLog {
     }
   }
 
+  /** The one physical read shape for a snapshot's (possibly pruned)
+    * entry list: single-relation tables — unpartitioned, or partitioned
+    * with the columns riding IN the files ([[partDataInFiles]]) — read
+    * as ONE explicit-file relation; legacy partitioned layouts fall back
+    * to the per-partition literal-attach union. */
   private def readEntriesOf(spark: SparkSession, root: String, snap: Snapshot,
       entries0: Seq[FileEntry],
       schema0: Option[org.apache.spark.sql.types.StructType],
@@ -1135,11 +1174,6 @@ object TxLog {
     Stats.attach(root, parts)
   }
 
-  /** Stage `df` (which must carry `partCol`) as one immutable data
-    * directory in hive layout; the partition value of each file is
-    * recovered from its directory name into the manifest entry. The
-    * hive writer drops the partition column from the data files — [[read]]
-    * re-attaches it from the manifest. */
   /** Walk a hive layout `c1=v1/c2=v2/…/part-*.parquet` of nesting depth
     * `partCols.size` under `dir`, recovering each file's partition tuple
     * from its directory chain. Shared by [[stagePartitioned]] and
@@ -1183,7 +1217,13 @@ object TxLog {
     partCols.nonEmpty && schema.exists(st =>
       partCols.forall(pc => st.fields.exists(_.name.equalsIgnoreCase(pc._1))))
 
-  /** Stage `df` hive-partitioned. `keepInFiles` selects the layout:
+  /** Stage `df` (which must carry `partCol`) as one immutable data
+    * directory in hive layout; the partition value of each file is
+    * recovered from its directory name into the manifest entry. The
+    * hive writer drops the partition column from the data files — [[read]]
+    * re-attaches it from the manifest.
+    *
+    * `keepInFiles` selects the layout:
     * true (all newly created tables, every full overwrite) duplicates
     * each partition column under a [[ShadowPrefix]] name and partitions
     * by the shadows, so the data files KEEP the real columns — reads
@@ -1290,12 +1330,6 @@ object TxLog {
     Files.createDirectories(logDir(root))
     val expected = parent.version
     val next = expected + 1
-    // a GENESIS publish means this root is a fresh (or re-created) log:
-    // any append-step verdicts memoized for a previous incarnation of
-    // the same path are stale — drop them before version numbers start
-    // repeating (the harness's freshRoot really does delete + re-init
-    // fixed paths inside one JVM, so this is not hypothetical)
-    if (next == 1L) invalidateAppendSteps(root)
     // drop STALE version-pinned attribution markers (the four exact
     // marker KEYS — never a prefix match, so a user property that merely
     // lives in the `cdc_` namespace with a numeric-leading value, e.g.
@@ -3478,41 +3512,31 @@ object TxLog {
     }
   }
 
-  /** Once-ever memo of CLEAN append-only steps: (root, v) present ⟺
-    * version v was verified to neither remove/rewrite a file, change a
-    * deletion vector, nor add a dv-born file relative to v-1. Manifests
-    * are immutable and a LIVE log never reuses a version number, so a
-    * verdict only goes stale when the whole table directory is deleted
-    * and the path re-initialized — every in-library path to that state
-    * flows through a GENESIS publish (version 1), which
-    * [[invalidateAppendSteps]] hooks (and [[freshRoot]] belt-and-braces
-    * on delete); an EXTERNAL rm of a directory this process then reads
-    * WITHOUT re-initializing is outside the contract (the feed source's
-    * addedBytesMemo makes the same assumption). Refusals are NOT
-    * memoized: a dirty range throws with fresh context every time (and
-    * is terminal for its caller anyway). Wholesale clear past the cap
-    * bounds a pathological many-tables process.
-    *
-    * ACCEPTED process-history dependence: a range whose INTERIOR
-    * manifest was pruned AFTER its step was memoized still succeeds in
-    * this JVM (the proof came from immutable manifests — it is sound
-    * forever), while a fresh process, unable to re-derive it, raises the
-    * typed 'not retained' refusal for the same call. Both outcomes are
-    * correct; the asymmetry is the price of not forcing interior
-    * manifests to outlive their proofs. Callers that need
-    * process-portable behavior should retain the interior manifests
-    * (pruneHistory keepLast covering their read window) — then the two
-    * paths agree. */
-  private val appendStepMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Boolean]
-  private val AppendStepMemoCap = 1 << 16
-
-  /** Drop every memoized append-step verdict for `root` — called when a
-    * path's version numbering can restart (genesis publish; explicit
-    * table-directory delete). */
-  private def invalidateAppendSteps(root: String): Unit =
-    appendStepMemo.keysIterator.filter(_._1 == root)
-      .foreach(appendStepMemo.remove)
+  /** The change feeds' [[steps]] over (`fromVersion`, `toVersion`]
+    * (`toVersion` negative: the latest; `fromVersion` 0: the GENESIS
+    * baseline, nothing yet — what a stream anchored at
+    * `startingVersion=earliest` on an unpruned log replays), with their
+    * shared refusals: an unretained floor, no committed head, a head that
+    * precedes the floor — all before a step is walked — and, worded by
+    * `gap(from, v, to)`, a missing manifest inside the range. Negative
+    * versions resolve to the latest, as [[snapshot]] does, so the
+    * precedes refusal compares RESOLVED versions. */
+  private def feedSteps(root: String, op: String, fromVersion: Long,
+      toVersion: Long)(gap: (Long, Long, Long) => String)
+      : (Snapshot, Iterator[(Snapshot, Snapshot)]) = {
+    val fromV = if (fromVersion < 0) currentVersion(root) else fromVersion
+    val toV = if (toVersion < 0) currentVersion(root) else toVersion
+    def headless = new IllegalStateException(s"no committed version at $root")
+    val walk = steps(root, fromV, toV) { v =>
+      if (v == fromV) throw new IllegalArgumentException(
+        s"$op: version $fromVersion is not retained at $root")
+      if (v == toV || currentVersion(root) < toV) throw headless
+      throw new IllegalArgumentException(gap(fromV, v, toV))
+    }
+    if (toV < 1L) throw headless
+    require(toV >= fromV, s"$op: $toVersion precedes $fromVersion")
+    walk
+  }
 
   /** Incremental read (file-level change feed for APPEND-ONLY ranges):
     * the rows added between `fromVersion` (exclusive) and `toVersion`
@@ -3530,87 +3554,52 @@ object TxLog {
     * ([[readChanges]]), not a silent wrong answer.
     * Streaming-sink tables ([[streamingSink]], [[appendOnceMonotone]],
     * [[commitAppend]], partition-minting [[upsertPartitioned]] batches
-    * that touch only NEW partitions) are append-only by construction. */
+    * that touch only NEW partitions) are append-only by construction.
+    *
+    * Cost: one [[steps]] walk — O(chain to `fromVersion` + range)
+    * manifest parses, no data I/O — then one read of the added files.
+    * Every call re-derives its proof from the retained manifests, so a
+    * range with a pruned interior version refuses alike in every
+    * process. */
   def readAppended(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long = -1L): DataFrame = {
-    // fromVersion 0 is the GENESIS baseline (nothing yet) — what a
-    // stream anchored at startingVersion=earliest on an unpruned log
-    // replays: every retained file is "appended since nothing"
-    val fromSnap: Option[Snapshot] =
-      if (fromVersion == 0L) None
-      else Some(snapshot(root, fromVersion).getOrElse(
-        throw new IllegalArgumentException(
-          s"readAppended: version $fromVersion is not retained at $root")))
-    val fromEntries = fromSnap.map(_.entries).getOrElse(Seq.empty)
-    // compare RESOLVED versions (snapshot treats negatives as "current"):
-    // the raw-arg compare would let readAppended(-1, olderV) slip past
-    // the precedes refusal and silently return an empty frame
-    val fromV = fromSnap.map(_.version).getOrElse(0L)
-    val to = snapshot(root, toVersion).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    require(to.version >= fromV,
-      s"readAppended: $toVersion precedes $fromVersion")
+    val (from, walk) = feedSteps(root, "readAppended", fromVersion, toVersion) {
+      (f, v, t) => s"readAppended: version $v is not retained at $root — an " +
+        s"append-only proof over ($f, $t] needs every manifest in the range"
+    }
     // The append-only proof holds PER VERSION, not just at the
     // endpoints: a file added at v and rewritten (COW delete/update) or
-    // fully dropped at v' with fromV < v < v' <= to is absent from BOTH
+    // fully dropped at v' with from < v < v' <= to is absent from BOTH
     // endpoint manifests, so an endpoint diff would silently surface the
     // rewrite's survivor file as "appends" while the delete itself
     // vanished (reachable from appends-mode stream batches whenever
-    // maxVersionsPerBatch or a catch-up batch spans >1 version). Manifest
-    // header parses only, no data I/O: paths may only accumulate, a
-    // pre-existing entry's deletion vector may never change, and a
-    // newborn file may not carry one. Every range walks, single steps
-    // included — there the one step's manifests, `to` and `fromEntries`,
-    // are already in hand, so the walk parses nothing more.
-    //
-    // Each STEP (v-1 → v) is a pure function of two immutable
-    // manifests, so a clean verdict memoizes per (root, v) — the
-    // TrieMap above. A consumer tailing a high-commit-rate table
-    // re-walks its catch-up range on every batch; without the memo
-    // every walk re-parses every manifest in the range (the feed
-    // source's addedBytesMemo closed the same hole on its side).
-    ((fromV + 1) to to.version).foreach { v =>
-      if (!appendStepMemo.contains((root, v))) {
-        val sv =
-          if (v == to.version) to
-          else snapshot(root, v).getOrElse(
-            throw new IllegalArgumentException(
-              s"readAppended: version $v is not retained at $root — an " +
-                s"append-only proof over ($fromV, ${to.version}] needs " +
-                "every manifest in the range"))
-        val prevDv: Map[String, Option[(String, Long)]] =
-          (if (v - 1 == fromV) fromEntries
-           else if (v <= 1) Seq.empty
-           else snapshot(root, v - 1).getOrElse(
-             throw new IllegalArgumentException(
-               s"readAppended: version ${v - 1} is not retained at $root " +
-                 s"— an append-only proof over ($fromV, ${to.version}] " +
-                 "needs every manifest in the range"))
-             .entries).map(e => e.path -> e.dv).toMap
-        val paths = sv.entries.map(_.path).toSet
-        val rem = prevDv.keysIterator.filterNot(paths).size
-        require(rem == 0,
-          s"readAppended: version $v removed or rewrote $rem " +
-            "file(s) — not an append-only range (use readChanges for " +
-            "rewrite ranges)")
-        val dvBad = sv.entries.count(e =>
-          prevDv.get(e.path).map(_ != e.dv).getOrElse(e.dv.isDefined))
-        require(dvBad == 0,
-          s"readAppended: version $v changed or introduced the deletion " +
-            s"vector of $dvBad file(s) — a delete landed in the range; " +
-            "not append-only (use readChanges)")
-        if (appendStepMemo.size >= AppendStepMemoCap) appendStepMemo.clear()
-        appendStepMemo.putIfAbsent((root, v), true)
-        ()
-      }
+    // maxVersionsPerBatch or a catch-up batch spans >1 version). Paths
+    // may only accumulate, a pre-existing entry's deletion vector may
+    // never change, and a newborn file may not carry one.
+    val to = walk.foldLeft(from) { case (_, (prev, sv)) =>
+      val v = sv.version
+      val prevDv = prev.entries.map(e => e.path -> e.dv).toMap
+      val paths = sv.entries.map(_.path).toSet
+      val rem = prevDv.keysIterator.filterNot(paths).size
+      require(rem == 0,
+        s"readAppended: version $v removed or rewrote $rem " +
+          "file(s) — not an append-only range (use readChanges for " +
+          "rewrite ranges)")
+      val dvBad = sv.entries.count(e =>
+        prevDv.get(e.path).map(_ != e.dv).getOrElse(e.dv.isDefined))
+      require(dvBad == 0,
+        s"readAppended: version $v changed or introduced the deletion " +
+          s"vector of $dvBad file(s) — a delete landed in the range; " +
+          "not append-only (use readChanges)")
+      sv
     }
-    val fromPaths = fromEntries.map(_.path).toSet
+    val fromPaths = from.entries.map(_.path).toSet
     val added = to.entries.filterNot(e => fromPaths(e.path))
     val schema = to.schemaJson.map(parseSchema)
     val phys =
       if (added.isEmpty)
         // schema-correct empty frame: no files were added in the range
-        read(spark, root, to.version).limit(0)
+        readSnapshot(spark, root, to).limit(0)
       else readEntriesOf(spark, root, to, added, schema)
     if (to.mapping.isEmpty || added.isEmpty) phys
     else applyMapping(phys, to, schema.get)
@@ -3647,31 +3636,22 @@ object TxLog {
     *
     * Cost: O(changed files + changed positions) per version in the
     * range — append-only versions read exactly their new files, MoR
-    * deletes read exactly the victim positions' rows. Each version's
-    * rows read under that version's own schema + mapping; frames align
-    * by name with later-added columns surfacing NULL. */
+    * deletes read exactly the victim positions' rows — over one
+    * [[steps]] walk, O(chain to `fromVersion` + range) manifest parses.
+    * Each version's rows read under that version's own schema +
+    * mapping; frames align by name with later-added columns surfacing
+    * NULL. */
   def readChanges(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long = -1L): DataFrame = {
-    val to = snapshot(root, toVersion).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root")).version
-    // fromVersion 0 is the GENESIS baseline: version 1's "parent" is the
-    // empty table, so its files flow as plain inserts — the
-    // startingVersion=earliest replay on an unpruned log
-    require(fromVersion == 0L || snapshot(root, fromVersion).isDefined,
-      s"readChanges: version $fromVersion is not retained at $root")
-    require(to >= fromVersion, s"readChanges: $toVersion precedes $fromVersion")
-    val frames = ((fromVersion + 1) to to).flatMap { v =>
-      val prevOpt: Option[Snapshot] =
-        if (v == 1L) None
-        else Some(snapshot(root, v - 1).getOrElse(
-          throw new IllegalStateException(
-            s"readChanges: version ${v - 1} is not retained at $root")))
-      // a genesis (fromVersion 0) anchor bypasses the head require, so a
-      // pruned history must refuse HERE with the same typed message —
-      // never an untyped None.get
-      val cur = snapshot(root, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"readChanges: version $v is not retained at $root"))
+    // a genesis (fromVersion 0) floor has no manifest to be missing, so a
+    // pruned history refuses inside the walk with the same typed message
+    val (from, walk) = feedSteps(root, "readChanges", fromVersion, toVersion) {
+      (_, v, _) => s"readChanges: version $v is not retained at $root"
+    }
+    var to = from
+    val frames = walk.flatMap { case (prev, cur) =>
+      to = cur
+      val v = cur.version
       val kv = kvOf(cur.notes)
       def tag(df: DataFrame, t: String): DataFrame = df
         .withColumn("_change_type", lit(t))
@@ -3688,11 +3668,10 @@ object TxLog {
           Seq(spark.read.parquet(s"$root/$dir")
             .withColumn("_commit_version", lit(v)))
         case None =>
-          val prevEntries = prevOpt.map(_.entries).getOrElse(Seq.empty)
-          val prevByPath = prevEntries.map(e => e.path -> e).toMap
+          val prevByPath = prev.entries.map(e => e.path -> e).toMap
           val curByPath = cur.entries.map(e => e.path -> e).toMap
           val added = cur.entries.filterNot(e => prevByPath.contains(e.path))
-          val removed = prevEntries.filterNot(e => curByPath.contains(e.path))
+          val removed = prev.entries.filterNot(e => curByPath.contains(e.path))
           // `cdc_rowlevel` (updateMoR) certifies the commit's added files
           // hold ONLY post-image rows; `cdc_full` certifies removed files'
           // live rows are pre-image deletes and added files post-image
@@ -3715,8 +3694,7 @@ object TxLog {
             else Some(tag(readVersionSubset(spark, root, cur, added), "insert"))
           val dropDeletes =
             if (removed.isEmpty) None
-            // removed.nonEmpty implies a real parent (genesis removes nothing)
-            else Some(tag(readVersionSubset(spark, root, prevOpt.get, removed),
+            else Some(tag(readVersionSubset(spark, root, prev, removed),
               "delete"))
           // ALL of the version's dv-changed files diff as ONE frame pair:
           // positions carry (f, p), so the except and the row fetch key on
@@ -3755,9 +3733,9 @@ object TxLog {
             }
           inserts.toSeq ++ dropDeletes.toSeq ++ dvFrames
       }
-    }
+    }.toVector
     if (frames.isEmpty)
-      readSnapshot(spark, root, snapshot(root, to).get).limit(0)
+      readSnapshot(spark, root, to).limit(0)
         .withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L))
     else frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
@@ -4640,9 +4618,6 @@ object TxLog {
   private[operators] def freshRoot(dir: String, tag: String): String = {
     val root = s"${graft.Paths.work}/graft-maint/${new java.io.File(dir).getName}/$tag"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    // this path's next incarnation restarts version numbering — stale
-    // append-step verdicts must not certify the new log's ranges
-    invalidateAppendSteps(root)
     root
   }
 

@@ -106,8 +106,9 @@ final class TxLogStreamRetentionException(
   * At 100 TB this source moves only each batch's CHANGED rows (O(feed),
   * never O(table)): the per-version cost model is readChanges' —
   * appended files read once, MoR deletes read exactly the victim
-  * positions — and the admission check itself is O(versions) manifest
-  * header parses, no data I/O. */
+  * positions — and each trigger's admission, byte cap and batch gates
+  * are each one [[TxLog.steps]] walk: O(chain to the floor + range)
+  * manifest parses, no data I/O, nothing memoized across triggers. */
 class TxLogFeedProvider extends StreamSourceProvider with DataSourceRegister {
   override def shortName(): String = "txlog-feed"
 
@@ -224,11 +225,12 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
       case other => other.json.trim.toLong
     }
 
-  /** Why version `v` cannot be represented under the pinned stream
+  /** Why version `sv` cannot be represented under the pinned stream
     * schema — None when it can. Adopted / pre-schema vintages (either
     * side lacking a committed schema) skip the check: inference governs
     * there, exactly as it does for batch reads. */
-  private def inadmissible(v: Long, sv: TxLog.Snapshot): Option[String] = {
+  private def inadmissible(sv: TxLog.Snapshot): Option[String] = {
+    val v = sv.version
     val lvOpt = TxLog.logicalSchemaOf(sv)
     (pinLogical, lvOpt) match {
       case (Some(lp), Some(lv)) =>
@@ -265,56 +267,63 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
   // the new suffix each trigger (manifest header parses, no data I/O)
   @volatile private var admittedThrough: Long = start0
 
+  private def retention(v: Long) =
+    new TxLogStreamRetentionException(o.root, v, TxLog.earliestVersion(o.root))
+
+  /** [[TxLog.steps]] over (from, to], refusing a missing manifest with
+    * the typed retention error. `anchored = false` never resolves `from`
+    * itself: the walks that only read each version's own schema, and the
+    * first batch of a synthetic `earliest` stream, whose anchor has no
+    * manifest by construction (its first version diffs against empty). */
+  private def steps(from: Long, to: Long, anchored: Boolean) =
+    TxLog.steps(o.root, from, to, anchored)(v => throw retention(v))._2
+
   /** Cap `end` at the last admissible version in (from, end]; throw the
     * typed schema error when from+1 itself refuses (no progress is
     * possible — the contract is a loud restart, not a stall). */
   private def admit(from: Long, end: Long): Long = {
     var v = math.max(from, admittedThrough)
-    while (v < end) {
-      val next = v + 1
-      val sv = TxLog.snapshot(o.root, next).getOrElse(
-        throw new TxLogStreamRetentionException(o.root, next,
-          TxLog.earliestVersion(o.root)))
-      inadmissible(next, sv) match {
+    val walk = steps(v, end, anchored = false)
+    while (walk.hasNext) {
+      val sv = walk.next()._2
+      inadmissible(sv) match {
         case Some(why) =>
-          if (next == from + 1)
-            throw new TxLogStreamSchemaChangedException(o.root, next, why)
+          if (sv.version == from + 1)
+            throw new TxLogStreamSchemaChangedException(o.root, sv.version, why)
           return v
-        case None => v = next
+        case None => v = sv.version
       }
     }
     if (v > admittedThrough) admittedThrough = v
     v
   }
 
-  /** Typed retention gate: the batch floor's manifest must still exist —
-    * readChanges resolves each version against its parent, so a pruned
-    * floor would otherwise surface as an untyped internal error (or,
-    * worse, a fresh-start fallback that silently skips the range). The
-    * two manifest-less floors get the equivalent check on the version
-    * they actually anchor: genesis (from 0) requires version 1 retained
-    * (a pruned prefix makes the replay unrecoverable), and a synthetic
-    * `earliest` anchor requires its snapshot version from+1 retained (a
-    * further prune moved the earliest truth past it) — so the retention
-    * refusal is uniformly TYPED, never an internal reader error.
-    * `isFirst` = the engine passed NO start offset, i.e. this is the
-    * stream's very first batch (or its checkpoint replay) — the ONLY
-    * place the synthetic floor may apply: a LATER batch whose floor
-    * happens to equal a freshly re-resolved anchor (crash-replay of an
-    * uncommitted range after a further prune re-anchored `earliest`)
-    * must take the strict path, else already-delivered rows would
-    * silently re-deliver as the synthesized snapshot. */
-  private def requireRetained(from: Long, isFirst: Boolean): Unit = {
+  /** The typed retention refusal for a batch floor that is no longer
+    * retained — None when it is. readChanges resolves each version
+    * against its parent, so a pruned floor would otherwise surface as an
+    * untyped internal error (or, worse, a fresh-start fallback that
+    * silently skips the range). The two manifest-less floors get the
+    * equivalent check on the version they actually anchor: genesis
+    * (from 0) requires version 1 retained (a pruned prefix makes the
+    * replay unrecoverable), and a synthetic `earliest` anchor requires
+    * its snapshot version from+1 retained (a further prune moved the
+    * earliest truth past it) — so the retention refusal is uniformly
+    * TYPED, never an internal reader error. `isFirst` = the engine passed
+    * NO start offset, i.e. this is the stream's very first batch (or its
+    * checkpoint replay) — the ONLY place the synthetic floor may apply: a
+    * LATER batch whose floor happens to equal a freshly re-resolved
+    * anchor (crash-replay of an uncommitted range after a further prune
+    * re-anchored `earliest`) must take the strict path, else
+    * already-delivered rows would silently re-deliver as the synthesized
+    * snapshot. */
+  private def unretainedFloor(from: Long,
+      isFirst: Boolean): Option[TxLogStreamRetentionException] = {
     val probe: Option[Long] =
       if (isFirst && o.anchorSynth) Some(from + 1)
-      else if (from == 0L) {
-        if (TxLog.earliestVersion(o.root).exists(_ > 1L)) Some(1L) else None
-      } else Some(from)
-    probe.foreach { v =>
-      if (TxLog.snapshot(o.root, v).isEmpty)
-        throw new TxLogStreamRetentionException(o.root, v,
-          TxLog.earliestVersion(o.root))
-    }
+      else if (from == 0L) Some(1L).filter(_ =>
+        TxLog.earliestVersion(o.root).exists(_ > 1L))
+      else Some(from)
+    probe.filter(v => TxLog.snapshot(o.root, v).isEmpty).map(retention)
   }
 
   // ADMISSION CONTROL (the FileStreamSource pattern): `latestOffset`
@@ -334,35 +343,6 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
       : org.apache.spark.sql.connector.read.streaming.ReadLimit =
     org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
 
-  // bytes of data files first referenced at each version — manifests
-  // are immutable, so each version's value is computed once ever (the
-  // byteCap walk would otherwise re-parse the same manifests and
-  // rebuild O(entries) path sets on every trigger)
-  private val addedBytesMemo =
-    scala.collection.concurrent.TrieMap.empty[Long, Long]
-
-  private def addedBytesAt(v: Long): Long =
-    addedBytesMemo.getOrElseUpdate(v, {
-      val sv = TxLog.snapshot(o.root, v).getOrElse(
-        throw new TxLogStreamRetentionException(o.root, v,
-          TxLog.earliestVersion(o.root)))
-      // the baseline is EMPTY (count every file of v) only where the
-      // contract says so: genesis, and the synthetic `earliest` anchor's
-      // own snapshot version — which the first batch really does deliver
-      // in full. Anywhere else a missing v-1 manifest is a genuine prune
-      // hole in a walk that is contiguous from a retained floor: raise
-      // the typed retention error rather than silently inflating the
-      // estimate (an inflated batch would under-fill triggers forever).
-      val prevPaths: Set[String] =
-        if (v <= 1 || (o.anchorSynth && v == start0 + 1)) Set.empty
-        else TxLog.snapshot(o.root, v - 1)
-          .map(_.entries.map(_.path).toSet).getOrElse(
-            throw new TxLogStreamRetentionException(o.root, v - 1,
-              TxLog.earliestVersion(o.root)))
-      sv.entries.iterator
-        .filterNot(e => prevPaths(e.path)).flatMap(_.size).sum
-    })
-
   /** Cap `end` so the versions in (from, end] together reference at most
     * `budget` NEW data-file bytes (footer sizes from the manifests — no
     * data I/O), always admitting at least one version: offsets are
@@ -370,18 +350,25 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
     * one batch (the Delta `maxBytesPerTrigger` soft-cap shape). The
     * metric is the bytes of files first referenced at each version —
     * exactly what an appends-mode batch reads, and the dominant term of
-    * a changes-mode one (MoR deletes read only victim positions). A
-    * missing manifest in the range raises the same TYPED retention
-    * error the plain admission path does — a silent `return` here would
-    * stall the query forever instead of the loud restart contract. */
-  private def byteCap(from: Long, end: Long, budget: Long): Long = {
+    * a changes-mode one (MoR deletes read only victim positions). The
+    * walk stops at the first version past the budget, and a missing
+    * manifest in the range raises the same TYPED retention error the
+    * plain admission path does — a silent `return` here would stall the
+    * query forever instead of the loud restart contract. The baseline
+    * is EMPTY (every file of the version counts) only where the contract
+    * says so: genesis, and the synthetic `earliest` anchor's own snapshot
+    * version, which the first batch really does deliver in full. */
+  private def byteCap(from: Long, end: Long, budget: Long,
+      isFirst: Boolean): Long = {
     var acc = 0L
-    var v = from
-    while (v < end) {
-      val added = addedBytesAt(v + 1)
-      if (v > from && acc + added > budget) return v
+    val walk = steps(from, end, anchored = !(isFirst && o.anchorSynth))
+    while (walk.hasNext) {
+      val (prev, sv) = walk.next()
+      val prevPaths = prev.entries.map(_.path).toSet
+      val added = sv.entries.iterator
+        .filterNot(e => prevPaths(e.path)).flatMap(_.size).sum
+      if (sv.version > from + 1 && acc + added > budget) return sv.version - 1
       acc += added
-      v += 1
     }
     end
   }
@@ -391,14 +378,15 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
       : org.apache.spark.sql.connector.read.streaming.Offset = {
     val from = Option(start).map(versionOf).getOrElse(start0)
-    requireRetained(from, isFirst = Option(start).isEmpty)
+    val isFirst = Option(start).isEmpty
+    unretainedFloor(from, isFirst).foreach(e => throw e)
     val avail = availableCeiling.getOrElse(TxLog.currentVersion(o.root))
     val end0 = o.maxVersionsPerBatch match {
       case Some(n) if avail - from > n => from + n
       case _ => avail
     }
     val end = o.maxBytesPerBatch match {
-      case Some(b) if end0 > from => byteCap(from, end0, b)
+      case Some(b) if end0 > from => byteCap(from, end0, b, isFirst)
       case _ => end0
     }
     val admitted = if (end <= from) from else admit(from, end)
@@ -445,38 +433,19 @@ class TxLogFeedSource(spark: SparkSession, o: TxLogFeedSource.Opts)
     // checkpoint-replayed ranges bypass latestOffset: re-run the typed
     // gates here, LAZILY (see failingBatch) — recovery failures surface
     // as the same loud contracts as live ones exactly when the range is
-    // genuinely re-executed. The manifest-less floors (genesis, the
-    // synthetic earliest anchor) probe the version they actually anchor,
-    // mirroring requireRetained — uniformly typed, never a reader error.
-    // FIRST batch only (start == None): a crash-replayed LATER range
-    // whose floor equals a freshly re-resolved anchor (prune advanced
-    // `earliest` between sessions) must refuse on its pruned floor, not
-    // re-deliver the snapshot as duplicates
+    // genuinely re-executed. FIRST batch only (start == None): a
+    // crash-replayed LATER range whose floor equals a freshly re-resolved
+    // anchor (prune advanced `earliest` between sessions) must refuse on
+    // its pruned floor, not re-deliver the snapshot as duplicates
     val synthFloor = start.isEmpty && o.anchorSynth
-    val floorProbe: Option[Long] =
-      if (synthFloor) Some(from + 1)
-      else if (from == 0L) {
-        if (TxLog.earliestVersion(o.root).exists(_ > 1L)) Some(1L) else None
-      } else Some(from)
-    floorProbe.foreach { v =>
-      if (TxLog.snapshot(o.root, v).isEmpty)
-        return failingBatch(new TxLogStreamRetentionException(o.root, v,
-          TxLog.earliestVersion(o.root)))
-    }
-    var v = from + 1
-    while (v <= to) {
-      TxLog.snapshot(o.root, v) match {
-        case None =>
-          return failingBatch(new TxLogStreamRetentionException(o.root, v,
-            TxLog.earliestVersion(o.root)))
-        case Some(sv) =>
-          val bad = inadmissible(v, sv)
-          if (bad.isDefined)
-            return failingBatch(
-              new TxLogStreamSchemaChangedException(o.root, v, bad.get))
-      }
-      v += 1
-    }
+    val refusal: Option[Throwable] = unretainedFloor(from, start.isEmpty)
+      .orElse(
+        try steps(from, to, anchored = false).flatMap { case (_, sv) =>
+          inadmissible(sv).map(
+            new TxLogStreamSchemaChangedException(o.root, sv.version, _))
+        }.nextOption()
+        catch { case e: TxLogStreamRetentionException => Some(e) })
+    if (refusal.isDefined) return failingBatch(refusal.get)
     val batch =
       if (synthFloor) {
         // first batch of a pruned-log `earliest` stream: the anchor's

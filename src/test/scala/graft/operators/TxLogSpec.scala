@@ -909,19 +909,59 @@ class TxLogSpec extends SparkSpec {
     TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
     (2L to 5L).foreach(k =>
       TxLog.appendOnce(spark, root, s"b$k", Seq((k, "x")).toDF("id", "s"))) // v2..v5
-    // one step: the two endpoints are the whole proof
+    // one step: resolving the floor v4 walks its delta chain to v1 (4
+    // parses), then the step parses v5
     TxLog.manifestParses.set(0L)
     val one = TxLog.readAppended(spark, root, 4L, 5L)
     val single = TxLog.manifestParses.get.longValue
-    // three steps (1, 4]: the endpoints plus the interior manifests
+    // three steps (1, 4]: the full floor v1, then v2, v3, v4 once each
     TxLog.manifestParses.set(0L)
     val three = TxLog.readAppended(spark, root, 1L, 4L)
     val multi = TxLog.manifestParses.get.longValue
     assert(one.count() === 1L && three.count() === 3L)
-    // the counts measured when a single step ran an endpoint diff and
-    // only longer ranges walked: the walk now proves both, and a single
-    // step already holds both of its manifests
-    assert(single === 9L, s"single step parsed $single manifests")
-    assert(multi === 15L, s"three steps parsed $multi manifests")
+    // 9 and 15 when every step resolved both of its versions on its own
+    assert(single === 5L, s"single step parsed $single manifests")
+    assert(multi === 4L, s"three steps parsed $multi manifests")
+  }
+
+  test("change feeds parse O(chain to the floor + range) manifests at two range sizes") {
+    val root = freshRoot("txlog-feed-walk")
+    import spark.implicits._
+    val r = 4L
+    val from = 12L // two deltas past the ck-10 checkpoint, at both sizes
+    TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
+    (2L to from + 8 * r).foreach(k =>
+      TxLog.insertInto(spark, root, Seq((k, "x")).toDF("id", "s")))
+    val bound = (n: Long) => n + TxLog.CheckpointInterval + 2
+    Seq(r, 8 * r).foreach { n =>
+      def parses(read: => org.apache.spark.sql.DataFrame): Long = {
+        TxLog.manifestParses.set(0L)
+        val df = read
+        val counted = TxLog.manifestParses.get.longValue
+        assert(df.count() === n)
+        counted
+      }
+      val appended = parses(TxLog.readAppended(spark, root, from, from + n))
+      val changes = parses(TxLog.readChanges(spark, root, from, from + n))
+      assert(appended <= bound(n) && changes <= bound(n),
+        s"range $n: readAppended parsed $appended, readChanges $changes " +
+          s"manifests (bound ${bound(n)})")
+    }
+  }
+
+  test("readAppended refuses a pruned range in every process alike") {
+    val root = freshRoot("txlog-appended-pruned")
+    import spark.implicits._
+    TxLog.init(spark, root, Seq((1L, "a")).toDF("id", "s")) // v1
+    (2L to 5L).foreach(k =>
+      TxLog.appendOnce(spark, root, s"b$k", Seq((k, "x")).toDF("id", "s"))) // v2..v5
+    assert(TxLog.readAppended(spark, root, 0L).count() === 5L)
+    TxLog.pruneHistory(root, keepLast = 2)
+    // the first call's proof of (0, 5] must not outlive the manifests it
+    // read: a fresh process cannot re-derive it, so neither may this one
+    val e = intercept[IllegalArgumentException] {
+      TxLog.readAppended(spark, root, 0L)
+    }
+    assert(e.getMessage.contains("version 1 is not retained"), e.getMessage)
   }
 }
